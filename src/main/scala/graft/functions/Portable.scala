@@ -15,6 +15,16 @@ package graft.functions
   *
   * Every builder returns a SQL string for one engine; callers interpolate
   * the same Scala constants into both, so the two sides can't drift.
+  *
+  * The token-array fingerprints come in the same pairs:
+  *
+  *  - set fingerprint ([[setFpSpark]] / [[setFpDuck]]): md5 of the sorted
+  *    distinct tokens joined by single spaces — the exact-dedup key of
+  *    q40 and everything keyed on it;
+  *  - chunk fingerprint ([[chunkFpSpark]] / [[chunkFpDuck]]): one md5 per
+  *    consecutive `k`-token chunk (the last chunk may be short), optionally
+  *    with the chunk's token count `ln` — the keep-first/span key of q49
+  *    and its descendants.
   */
 object Portable {
 
@@ -76,4 +86,47 @@ object Portable {
   /** Exact dot — DuckDB side. */
   def qdotDuck(a: String, b: String, dims: Int): String =
     s"CAST(list_sum([$a[i] * $b[i] for i in range(1, ${dims + 1})]) AS BIGINT)"
+
+  // ---- token-array fingerprints -------------------------------------------
+
+  /** Set fingerprint of a token array — Spark side. */
+  def setFpSpark(toks: String): String =
+    s"md5(array_join(array_sort(array_distinct($toks)), ' '))"
+
+  /** Set fingerprint of a token array — DuckDB side. */
+  def setFpDuck(toks: String): String =
+    s"md5(array_to_string(list_sort(list_distinct($toks)), ' '))"
+
+  /** Chunk fingerprints of token array `t` at width `k` — Spark side: an
+    * array with one entry per chunk i = 0 .. ceil(size(t) / k) - 1, each
+    * the md5 of tokens [i*k, i*k + k) joined by single spaces. `k` is a
+    * SQL expression (a lambda variable works); an integer-literal width
+    * stays a literal (`10.0` in the chunk count, `10L` in `ln`) instead
+    * of going through casts. With `ln`, each entry is instead
+    * `struct(lead..., fp, ln)` where `ln = least(k, size(t) - i*k)` is
+    * the chunk's token count.
+    */
+  def chunkFpSpark(t: String, k: String, ln: Boolean = false,
+      lead: Seq[String] = Nil): String = {
+    val isLit = k.forall(_.isDigit)
+    val kDouble = if (isLit) s"$k.0" else s"cast($k as double)"
+    val kLong = if (isLit) s"${k}L" else s"cast($k as bigint)"
+    val fp = s"md5(array_join(slice($t, i * $k + 1, $k), ' '))"
+    val body =
+      if (!ln) fp
+      else (lead :+ s"$fp AS fp" :+ s"least($kLong, size($t) - i * $k) AS ln")
+        .mkString("struct(", ", ", ")")
+    s"transform(sequence(0, cast(ceil(size($t) / $kDouble) as int) - 1), " +
+      s"i -> $body)"
+  }
+
+  /** Chunk fingerprints — DuckDB side: the same chunks as
+    * [[chunkFpSpark]], always as a list of `{pos, fp, ln}` structs (`pos`
+    * = i); the oracle picks the fields it needs.
+    */
+  def chunkFpDuck(t: String, k: String): String =
+    s"""[{'pos': i,
+        'fp': md5(array_to_string($t[(i*$k+1):(i*$k+$k)], ' ')),
+        'ln': least($k, len($t) - i*$k)}
+      for i in range(0, CAST(ceil(len($t) / ($k * 1.0)) AS INT))]"""
 }

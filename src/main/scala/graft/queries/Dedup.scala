@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.Exact
-import graft.functions.Portable.{h64Spark, h64Duck, P}
+import graft.functions.Portable.{h64Spark, h64Duck, P, chunkFpSpark,
+  chunkFpDuck, setFpSpark, setFpDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -86,6 +87,12 @@ object Dedup {
   // shuffled or re-hashed. Hash collisions (~260k shingles vs 2^60) are
   // negligible, and the oracle hashes identically, so candidate sets and
   // Jaccard values still match exactly.
+
+  /** q40's normalized content fingerprint of `text` (the set fingerprint
+    * of its lowercased space-split tokens), one per engine.
+    */
+  private val textFp = expr(setFpSpark("split(lower(text), ' ')"))
+  private val textFpDuck = setFpDuck("string_split(lower(text), ' ')")
 
   /** Word 3-gram shingle hash set, SORTED ascending — order is invisible
     * to minhash/bands/set-cardinality but lets the verify intersection run
@@ -619,9 +626,7 @@ object Dedup {
   private[graft] def ladderS1(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
     docs
-      .withColumn("rep", min(col("doc_id")).over(Window.partitionBy(
-        md5(array_join(array_sort(array_distinct(
-          split(lower(col("text")), " "))), " ")))))
+      .withColumn("rep", min(col("doc_id")).over(Window.partitionBy(textFp)))
       .filter(col("doc_id") === col("rep")).select(col("doc_id"))
       .cache()
   }
@@ -632,21 +637,39 @@ object Dedup {
     */
   private[graft] def ladderS2(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-    docs.join(ladderS1(s, d), "doc_id")
-      .withColumn("t", split(lower(col("text")), " "))
-      .select(col("doc_id"), posexplode(expr(
-        """transform(sequence(0, cast(ceil(size(t) / 10.0) as int) - 1),
-           i -> md5(array_join(slice(t, i * 10 + 1, 10), ' ')))"""))
-        .as(Seq("pos", "fp")))
+    chunkProfile(docs.join(ladderS1(s, d), "doc_id"))
+      .filter(col("n_kept") * 2 >= col("n_chunks"))
+      .select(col("doc_id"))
+      .cache() // consumed by the output ladder AND stage 3 (see s1)
+  }
+
+  /** q49's keep-first chunk profile of `docs` (doc_id, text): per doc,
+    * its 10-token chunk count and how many of those chunks are the
+    * first corpus-wide occurrence (min (doc_id, pos)) of their
+    * fingerprint. Emits (doc_id, n_chunks, n_kept).
+    */
+  private def chunkProfile(docs: DataFrame): DataFrame =
+    docs.withColumn("t", split(lower(col("text")), " "))
+      .select(col("doc_id"),
+        posexplode(expr(chunkFpSpark("t", "10"))).as(Seq("pos", "fp")))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("fp")).orderBy(col("doc_id"), col("pos"))))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_chunks"),
         sum(when(col("rk") === 1, 1L).otherwise(0L)).as("n_kept"))
-      .filter(col("n_kept") * 2 >= col("n_chunks"))
-      .select(col("doc_id"))
-      .cache() // consumed by the output ladder AND stage 3 (see s1)
-  }
+
+  /** DuckDB mirror of [[chunkProfile]] over relation `toks` (doc_id,
+    * t = the lowercased tokens): a query emitting (doc_id, n_chunks,
+    * n_kept).
+    */
+  private def chunkProfileDuck(toks: String): String =
+    s"""SELECT doc_id, COUNT(*) AS n_chunks,
+          CAST(SUM(CASE WHEN rk = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
+        FROM (SELECT doc_id, row_number() OVER (
+              PARTITION BY u.fp ORDER BY doc_id, u.pos) AS rk
+            FROM (SELECT doc_id, unnest(${chunkFpDuck("t", "10")}) AS u
+              FROM $toks) z) r
+        GROUP BY doc_id"""
 
   /** q382 stage-3 input: shingled stage-2 survivors (cached — candidate
     * generation AND verify both consume it).
@@ -738,6 +761,43 @@ object Dedup {
       col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
   }
 
+  /** q346's two stratum histograms (bucket, n), before the query
+    * checkpoints them: the background pair sample at the
+    * [[BandPlanOffsets]] doc-id offsets, and the verified (J >= 0.8)
+    * MinHash ∪ n-gram candidate pairs. Each is a 20-bucket count, so its
+    * own plan shows whether the count combines map-side.
+    */
+  private[graft] def bandPlanHists(s: SparkSession,
+      d: String): (DataFrame, DataFrame) = {
+    val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
+      .cache() // feeds the bg pair sample AND both candidate strata
+    val a = sh.select(col("doc_id").as("ida"), col("shingles").as("sh_a"))
+    val b = sh.select(col("doc_id").as("idb"), col("shingles").as("sh_b"))
+    val bucketed = least(lit(19), floor(col("i").cast("double")
+      / (col("la") + col("lb") - col("i")) * 20).cast("int"))
+    val bg = a
+      .select(col("ida"), col("sh_a"),
+        explode(lit(BandPlanOffsets.toArray)).as("off"))
+      .join(b, col("idb") === col("ida") + col("off"))
+      .withColumn("la", size(col("sh_a")))
+      .withColumn("lb", size(col("sh_b")))
+      .withColumn("i", expr("sorted_intersect_count(sh_a, sh_b)"))
+    val cu = minhashCandidates(sh).unionByName(ngramCandidates(sh))
+      .distinct()
+    val hi = cu
+      .join(a.withColumnRenamed("ida", "doc_a"), "doc_a")
+      .join(b.withColumnRenamed("idb", "doc_b"), "doc_b")
+      .withColumn("la", size(col("sh_a")))
+      .withColumn("lb", size(col("sh_b")))
+      .withColumn("i", expr("sorted_intersect_count(sh_a, sh_b)"))
+      .withColumn("j", col("i").cast("double")
+        / (col("la") + col("lb") - col("i")))
+      .filter(col("j") >= 0.8)
+    def hist(pr: DataFrame) = pr.select(bucketed.as("bucket"))
+      .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
+    (hist(bg), hist(hi))
+  }
+
   val all: Seq[QuerySpec] = Seq(
 
     // ---- exact dedup by normalized content fingerprint --------------------
@@ -746,16 +806,12 @@ object Dedup {
     // groupBy — the 100 TB plan is a single shuffle on the fingerprint.
     QuerySpec(
       "q40_dedup_exact",
-      Some("""SELECT md5(array_to_string(
-            list_sort(list_distinct(string_split(lower(text), ' '))), ' '))
-            AS fp_norm,
+      Some(s"""SELECT $textFpDuck AS fp_norm,
           MIN(doc_id) AS rep_doc, COUNT(*) AS n_docs
         FROM documents GROUP BY 1"""),
       (s, d) =>
         t(s, d, "documents")
-          .groupBy(md5(array_join(
-            array_sort(array_distinct(split(lower(col("text")), " "))), " "))
-            .as("fp_norm"))
+          .groupBy(textFp.as("fp_norm"))
           .agg(min(col("doc_id")).as("rep_doc"),
             count(lit(1)).as("n_docs"))),
 
@@ -772,34 +828,11 @@ object Dedup {
     // candidates exactly linear in corpus size.
     QuerySpec(
       "q49_chunk_dedup",
-      Some("""WITH d AS (
+      Some(s"""WITH d AS (
           SELECT doc_id, string_split(lower(text), ' ') AS t
-          FROM documents),
-        ch AS (SELECT doc_id, u.pos AS pos, u.fp AS fp FROM (
-            SELECT doc_id,
-              unnest([{'pos': i,
-                  'fp': md5(array_to_string(t[(i*10+1):(i*10+10)], ' '))}
-                for i in range(0, CAST(ceil(len(t) / 10.0) AS INT))]) AS u
-            FROM d) z),
-        rk AS (SELECT doc_id, pos, fp,
-            row_number() OVER (PARTITION BY fp ORDER BY doc_id, pos) AS rk
-          FROM ch)
-        SELECT doc_id, COUNT(*) AS n_chunks,
-          CAST(SUM(CASE WHEN rk = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        FROM rk GROUP BY doc_id"""),
-      (s, d) =>
-        t(s, d, "documents")
-          .withColumn("t", split(lower(col("text")), " "))
-          .select(col("doc_id"), posexplode(expr(
-            """transform(sequence(0, cast(ceil(size(t) / 10.0) as int) - 1),
-               i -> md5(array_join(slice(t, i * 10 + 1, 10), ' ')))"""))
-            .as(Seq("pos", "fp")))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("fp"))
-              .orderBy(col("doc_id"), col("pos"))))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_chunks"),
-            sum(when(col("rk") === 1, 1L).otherwise(0L)).as("n_kept"))),
+          FROM documents)
+        ${chunkProfileDuck("d")}"""),
+      (s, d) => chunkProfile(t(s, d, "documents"))),
 
     // ---- MinHash + LSH banding near-dup -----------------------------------
     // shingle → 16 portable minhashes → 4 bands of 4 → band-bucket self-join
@@ -907,10 +940,8 @@ object Dedup {
     // same fp partitioning — AQE broadcasts the ledger when it is small.
     QuerySpec(
       "q58_incremental_dedup",
-      Some("""WITH fps AS (
-          SELECT doc_id, lang, n_chars,
-            md5(array_to_string(list_sort(list_distinct(
-              string_split(lower(text), ' '))), ' ')) AS fp
+      Some(s"""WITH fps AS (
+          SELECT doc_id, lang, n_chars, $textFpDuck AS fp
           FROM documents),
         ledger AS (SELECT DISTINCT fp FROM fps WHERE doc_id < 250),
         fresh AS (
@@ -923,9 +954,7 @@ object Dedup {
         WHERE rk = 1"""),
       (s, d) => {
         val fps = t(s, d, "documents")
-          .select(col("doc_id"), col("lang"), col("n_chars"),
-            md5(array_join(array_sort(array_distinct(
-              split(lower(col("text")), " "))), " ")).as("fp"))
+          .select(col("doc_id"), col("lang"), col("n_chars"), textFp.as("fp"))
         val ledger = fps.filter(col("doc_id") < 250).select(col("fp"))
         fps.filter(col("doc_id") >= 250)
           .join(ledger, Seq("fp"), "left_anti")
@@ -1409,10 +1438,7 @@ object Dedup {
           SELECT doc_id, string_split(lower(text), ' ') AS t
           FROM documents),
         ch AS (SELECT doc_id, u.pos AS pos, u.fp AS fp FROM (
-            SELECT doc_id,
-              unnest([{'pos': i,
-                  'fp': md5(array_to_string(t[(i*10+1):(i*10+10)], ' '))}
-                for i in range(0, CAST(ceil(len(t) / 10.0) AS INT))]) AS u
+            SELECT doc_id, unnest(${chunkFpDuck("t", "10")}) AS u
             FROM d) z),
         keep AS (SELECT fp FROM (SELECT fp,
             COUNT(DISTINCT doc_id) AS ndoc FROM ch GROUP BY 1)
@@ -1434,9 +1460,7 @@ object Dedup {
       (s, d) => {
         val ch = t(s, d, "documents")
           .withColumn("t", split(lower(col("text")), " "))
-          .select(col("doc_id"), posexplode(expr(
-            """transform(sequence(0, cast(ceil(size(t) / 10.0) as int) - 1),
-               i -> md5(array_join(slice(t, i * 10 + 1, 10), ' ')))"""))
+          .select(col("doc_id"), posexplode(expr(chunkFpSpark("t", "10")))
             .as(Seq("pos", "fp")))
           .cache() // feeds the df cap AND both pair sides
         val keep = ch.groupBy(col("fp"))
@@ -1564,14 +1588,12 @@ object Dedup {
     // no window over the corpus.
     QuerySpec(
       "q332_dup_substring_mass",
-      Some("""WITH dd AS (
+      Some(s"""WITH dd AS (
           SELECT doc_id, string_split(lower(text), ' ') AS t
           FROM documents),
         ch AS (SELECT doc_id, nt, u.fp AS fp, u.ln AS ln FROM (
             SELECT doc_id, len(t) AS nt,
-              unnest([{'fp': md5(array_to_string(t[(i*10+1):(i*10+10)], ' ')),
-                  'ln': least(10, len(t) - i*10)}
-                for i in range(0, CAST(ceil(len(t) / 10.0) AS INT))]) AS u
+              unnest(${chunkFpDuck("t", "10")}) AS u
             FROM dd) z),
         fpd AS (SELECT fp, COUNT(DISTINCT doc_id) AS nd
           FROM ch GROUP BY 1),
@@ -1588,12 +1610,8 @@ object Dedup {
         val ch = t(s, d, "documents")
           .withColumn("t", split(lower(col("text")), " "))
           .select(col("doc_id"), size(col("t")).cast("long").as("nt"),
-            posexplode(expr(
-              """transform(sequence(0, cast(ceil(size(t) / 10.0) as int) - 1),
-                 i -> struct(
-                   md5(array_join(slice(t, i * 10 + 1, 10), ' ')) AS fp,
-                   least(10L, size(t) - i * 10) AS ln))"""))
-            .as(Seq("pos", "c")))
+            posexplode(expr(chunkFpSpark("t", "10", ln = true)))
+              .as(Seq("pos", "c")))
           .select(col("doc_id"), col("nt"),
             col("c.fp").as("fp"), col("c.ln").as("ln"))
         val fpd = ch.groupBy(col("fp"))
@@ -1673,9 +1691,7 @@ object Dedup {
     // back is fp-keyed; the rollup is |langs| groups.
     QuerySpec(
       "q338_crosslang_contamination",
-      Some("""WITH f AS (SELECT doc_id, lang,
-            md5(array_to_string(list_sort(list_distinct(
-              string_split(lower(text), ' '))), ' ')) AS fp
+      Some(s"""WITH f AS (SELECT doc_id, lang, $textFpDuck AS fp
           FROM documents),
         ml AS (SELECT fp FROM f GROUP BY fp
           HAVING COUNT(DISTINCT lang) > 1)
@@ -1685,9 +1701,7 @@ object Dedup {
         FROM f JOIN ml USING (fp) GROUP BY lang"""),
       (s, d) => {
         val f = t(s, d, "documents")
-          .select(col("doc_id"), col("lang"),
-            md5(array_join(array_sort(array_distinct(
-              split(lower(col("text")), " "))), " ")).as("fp"))
+          .select(col("doc_id"), col("lang"), textFp.as("fp"))
           .cache() // cluster detection + the join back
         val ml = f.groupBy(col("fp"))
           .agg(countDistinct(col("lang")).as("nl"))
@@ -1785,44 +1799,16 @@ object Dedup {
           $layoutRows""")
       },
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
-          .cache() // feeds the bg pair sample AND both candidate strata
-        val a = sh.select(col("doc_id").as("ida"), col("shingles").as("sh_a"))
-        val b = sh.select(col("doc_id").as("idb"), col("shingles").as("sh_b"))
-        def bucketed(pr: DataFrame): org.apache.spark.sql.Column =
-          least(lit(19), floor(col("i").cast("double")
-            / (col("la") + col("lb") - col("i")) * 20).cast("int"))
-        val bg = a
-          .select(col("ida"), col("sh_a"),
-            explode(lit(BandPlanOffsets.toArray)).as("off"))
-          .join(b, col("idb") === col("ida") + col("off"))
-          .withColumn("la", size(col("sh_a")))
-          .withColumn("lb", size(col("sh_b")))
-          .withColumn("i", expr("sorted_intersect_count(sh_a, sh_b)"))
-        val histBg = bg.select(bucketed(bg).as("bucket"))
-          .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-          // <=20 rows; every layout's weighted sum re-reads it. EAGER
-          // (not cache): the 5 layouts x 4 scalar frames below are all
-          // broadcast builds, and 20 concurrent builds racing an
-          // unmaterialized cache each re-execute the full stratum
-          // pipeline (measured: q346 2.4 -> 8.2 s when an eager action
-          // upstream shifted the race timing; eager-materializing both
-          // histograms removes the race class entirely).
-          .localCheckpoint(true)
-        val cu = minhashCandidates(sh).unionByName(ngramCandidates(sh))
-          .distinct()
-        val hi = cu
-          .join(a.withColumnRenamed("ida", "doc_a"), "doc_a")
-          .join(b.withColumnRenamed("idb", "doc_b"), "doc_b")
-          .withColumn("la", size(col("sh_a")))
-          .withColumn("lb", size(col("sh_b")))
-          .withColumn("i", expr("sorted_intersect_count(sh_a, sh_b)"))
-          .withColumn("j", col("i").cast("double")
-            / (col("la") + col("lb") - col("i")))
-          .filter(col("j") >= 0.8)
-        val histHi = hi.select(bucketed(hi).as("bucket"))
-          .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-          .localCheckpoint(true) // <=4 rows (buckets 16..19); see histBg
+        // <=20 and <=4 rows (buckets 16..19); every layout's weighted sum
+        // re-reads them. EAGER (not cache): the 5 layouts x 4 scalar
+        // frames below are all broadcast builds, and 20 concurrent builds
+        // racing an unmaterialized cache each re-execute the full stratum
+        // pipeline (measured: q346 2.4 -> 8.2 s when an eager action
+        // upstream shifted the race timing; eager-materializing both
+        // histograms removes the race class entirely).
+        val (bgHist, hiHist) = bandPlanHists(s, d)
+        val histBg = bgHist.localCheckpoint(true)
+        val histHi = hiHist.localCheckpoint(true)
         val tbg = histBg.agg(sum(col("n")).as("tnbg"))
         val thi = histHi.agg(coalesce(sum(col("n")), lit(0L)).as("tnhi"))
         BandLayouts.map { case (bb, rr) =>
@@ -1996,14 +1982,12 @@ object Dedup {
     // that composite key, then a 3-group rollup.
     QuerySpec(
       "q349_dedup_grain_ladder",
-      Some("""WITH g AS (SELECT doc_id, u.grain AS grain, u.fp AS fp FROM (
+      Some(s"""WITH g AS (SELECT doc_id, u.grain AS grain, u.fp AS fp FROM (
           SELECT doc_id, unnest([
             {'grain': '1_raw', 'fp': md5(text)},
             {'grain': '2_bag', 'fp': md5(array_to_string(
               list_sort(string_split(lower(text), ' ')), ' '))},
-            {'grain': '3_set', 'fp': md5(array_to_string(
-              list_sort(list_distinct(string_split(lower(text), ' '))),
-              ' '))}]) AS u
+            {'grain': '3_set', 'fp': $textFpDuck}]) AS u
           FROM documents) z),
         cl AS (SELECT grain, fp, COUNT(*) AS n FROM g GROUP BY 1, 2)
         SELECT grain,
@@ -2020,9 +2004,7 @@ object Dedup {
             lit("1_raw"), md5(col("text")),
             lit("2_bag"), md5(array_join(
               array_sort(split(lower(col("text")), " ")), " ")),
-            lit("3_set"), md5(array_join(
-              array_sort(array_distinct(split(lower(col("text")), " "))),
-              " ")))).as(Seq("grain", "fp")))
+            lit("3_set"), textFp)).as(Seq("grain", "fp")))
           .groupBy(col("grain"), col("fp"))
           .agg(count(lit(1)).as("n"))
           .groupBy(col("grain"))
@@ -2197,16 +2179,13 @@ object Dedup {
     // back on the same key, an 33-group rollup; no self-join, no window.
     QuerySpec(
       "q379_dup_mass_curve",
-      Some("""WITH dd AS (
+      Some(s"""WITH dd AS (
           SELECT doc_id, string_split(lower(text), ' ') AS t
           FROM documents),
         kk AS (SELECT unnest([10, 20, 40]) AS k),
         ch AS (SELECT doc_id, k, nt, u.fp AS fp, u.ln AS ln FROM (
             SELECT doc_id, k, len(t) AS nt,
-              unnest([{'fp': md5(array_to_string(t[(i*k+1):(i*k+k)], ' ')),
-                  'ln': least(k, len(t) - i*k)}
-                for i in range(0, CAST(ceil(len(t) / (k * 1.0)) AS INT))])
-                AS u
+              unnest(${chunkFpDuck("t", "k")}) AS u
             FROM dd, kk) z),
         fpd AS (SELECT k, fp, COUNT(DISTINCT doc_id) AS nd
           FROM ch GROUP BY 1, 2),
@@ -2224,14 +2203,8 @@ object Dedup {
         val ch = t(s, d, "documents")
           .withColumn("t", split(lower(col("text")), " "))
           .select(col("doc_id"), size(col("t")).cast("long").as("nt"),
-            explode(expr(
-              """flatten(transform(array(10, 20, 40), k ->
-                 transform(
-                   sequence(0,
-                     cast(ceil(size(t) / cast(k as double)) as int) - 1),
-                   i -> struct(k AS k,
-                     md5(array_join(slice(t, i * k + 1, k), ' ')) AS fp,
-                     least(cast(k as bigint), size(t) - i * k) AS ln))))"""))
+            explode(expr("flatten(transform(array(10, 20, 40), k -> " +
+              chunkFpSpark("t", "k", ln = true, lead = Seq("k AS k")) + "))"))
               .as("c"))
           .select(col("doc_id"), col("nt"), col("c.k").as("k"),
             col("c.fp").as("fp"), col("c.ln").as("ln"))
@@ -2280,28 +2253,14 @@ object Dedup {
     QuerySpec(
       "q382_dedup_ladder", {
         val mix = "(doc_id * 2654435761) % 4294967296"
-        Some(s"""WITH s1fp AS (SELECT doc_id, md5(array_to_string(
-              list_sort(list_distinct(string_split(lower(text), ' '))), ' '))
-              AS fpn
+        Some(s"""WITH s1fp AS (SELECT doc_id, $textFpDuck AS fpn
             FROM documents),
           s1 AS (SELECT doc_id FROM (SELECT doc_id,
               MIN(doc_id) OVER (PARTITION BY fpn) AS rep FROM s1fp) z
             WHERE doc_id = rep),
           d2 AS (SELECT d.doc_id, string_split(lower(d.text), ' ') AS t
             FROM documents d JOIN s1 ON s1.doc_id = d.doc_id),
-          ch2 AS (SELECT doc_id, u.pos AS pos, u.fp AS fp FROM (
-              SELECT doc_id,
-                unnest([{'pos': i,
-                    'fp': md5(array_to_string(t[(i*10+1):(i*10+10)], ' '))}
-                  for i in range(0, CAST(ceil(len(t) / 10.0) AS INT))]) AS u
-              FROM d2) z),
-          rk2 AS (SELECT doc_id, fp,
-              row_number() OVER (PARTITION BY fp ORDER BY doc_id, pos) AS rk
-            FROM ch2),
-          prof AS (SELECT doc_id, COUNT(*) AS n_chunks,
-              CAST(SUM(CASE WHEN rk = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_kept
-            FROM rk2 GROUP BY doc_id),
+          prof AS (${chunkProfileDuck("d2")}),
           s2 AS (SELECT doc_id FROM prof WHERE n_kept * 2 >= n_chunks),
           docs AS (SELECT d.doc_id, string_split(lower(d.text), ' ') AS toks
             FROM documents d JOIN s2 ON s2.doc_id = d.doc_id),
@@ -2402,29 +2361,19 @@ object Dedup {
         Some(s"""WITH newd AS (SELECT doc_id, text FROM documents
               WHERE doc_id >= 250),
           oldd AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
-          fpn AS (SELECT doc_id, md5(array_to_string(
-              list_sort(list_distinct(string_split(lower(text), ' '))), ' '))
-              AS fpv
-            FROM newd),
-          fpo AS (SELECT DISTINCT md5(array_to_string(
-              list_sort(list_distinct(string_split(lower(text), ' '))), ' '))
-              AS fpv
-            FROM oldd),
+          fpn AS (SELECT doc_id, $textFpDuck AS fpv FROM newd),
+          fpo AS (SELECT DISTINCT $textFpDuck AS fpv FROM oldd),
           g1 AS (SELECT doc_id FROM fpn
             WHERE EXISTS (SELECT 1 FROM fpo WHERE fpo.fpv = fpn.fpv)),
           tn AS (SELECT doc_id, string_split(lower(text), ' ') AS t
             FROM newd),
           to2 AS (SELECT doc_id, string_split(lower(text), ' ') AS t
             FROM oldd),
-          cn2 AS (SELECT doc_id, u AS cfp FROM (
-              SELECT doc_id,
-                unnest([md5(array_to_string(t[(i*10+1):(i*10+10)], ' '))
-                  for i in range(0, CAST(ceil(len(t) / 10.0) AS INT))]) AS u
+          cn2 AS (SELECT doc_id, u.fp AS cfp FROM (
+              SELECT doc_id, unnest(${chunkFpDuck("t", "10")}) AS u
               FROM tn) z),
-          co2 AS (SELECT DISTINCT u AS cfp FROM (
-              SELECT unnest([md5(array_to_string(t[(i*10+1):(i*10+10)], ' '))
-                  for i in range(0, CAST(ceil(len(t) / 10.0) AS INT))]) AS u
-              FROM to2) z),
+          co2 AS (SELECT DISTINCT u.fp AS cfp FROM (
+              SELECT unnest(${chunkFpDuck("t", "10")}) AS u FROM to2) z),
           g2 AS (SELECT doc_id FROM (
               SELECT cn2.doc_id, COUNT(*) AS n_chunks,
                 CAST(SUM(CASE WHEN co2.cfp IS NOT NULL THEN 1 ELSE 0 END)
@@ -2471,9 +2420,7 @@ object Dedup {
         val newDocs = docs.filter(col("doc_id") >= 250)
         val oldDocs = docs.filter(col("doc_id") < 250)
         // gate 1 — exact fingerprint membership (q40's key, q58's gate)
-        def fpOf(df: DataFrame) = df.select(col("doc_id"),
-          md5(array_join(array_sort(array_distinct(
-            split(lower(col("text")), " "))), " ")).as("fpv"))
+        def fpOf(df: DataFrame) = df.select(col("doc_id"), textFp.as("fpv"))
         val g1 = fpOf(newDocs)
           .join(fpOf(oldDocs).select(col("fpv")).distinct(), Seq("fpv"),
             "left_semi")
@@ -2482,9 +2429,7 @@ object Dedup {
         // grain, corpus-membership form)
         def chunksOf(df: DataFrame) = df
           .withColumn("t", split(lower(col("text")), " "))
-          .select(col("doc_id"), explode(expr(
-            """transform(sequence(0, cast(ceil(size(t) / 10.0) as int) - 1),
-               i -> md5(array_join(slice(t, i * 10 + 1, 10), ' ')))"""))
+          .select(col("doc_id"), explode(expr(chunkFpSpark("t", "10")))
             .as("cfp"))
         val corpusChunks = chunksOf(oldDocs).select(col("cfp")).distinct()
           .withColumn("hit", lit(1L))
@@ -2561,14 +2506,11 @@ object Dedup {
     // in corpus tokens.
     QuerySpec(
       "q384_longest_dup_span",
-      Some("""WITH d AS (
+      Some(s"""WITH d AS (
           SELECT doc_id, string_split(lower(text), ' ') AS t
           FROM documents),
         ch AS (SELECT doc_id, u.pos AS pos, u.fp AS fp FROM (
-            SELECT doc_id,
-              unnest([{'pos': i,
-                  'fp': md5(array_to_string(t[(i*10+1):(i*10+10)], ' '))}
-                for i in range(0, CAST(ceil(len(t) / 10.0) AS INT))]) AS u
+            SELECT doc_id, unnest(${chunkFpDuck("t", "10")}) AS u
             FROM d) z),
         rk AS (SELECT doc_id, pos,
             row_number() OVER (PARTITION BY fp ORDER BY doc_id, pos) > 1
@@ -2593,9 +2535,7 @@ object Dedup {
       (s, d) => {
         val ch = t(s, d, "documents")
           .withColumn("t", split(lower(col("text")), " "))
-          .select(col("doc_id"), posexplode(expr(
-            """transform(sequence(0, cast(ceil(size(t) / 10.0) as int) - 1),
-               i -> md5(array_join(slice(t, i * 10 + 1, 10), ' ')))"""))
+          .select(col("doc_id"), posexplode(expr(chunkFpSpark("t", "10")))
             .as(Seq("pos", "fp")))
         val rk = ch.withColumn("is_dup", row_number().over(
             Window.partitionBy(col("fp")).orderBy(col("doc_id"), col("pos")))

@@ -736,8 +736,7 @@ object Selection {
         val hFp = Portable.h64Duck("'sp:' || fp")
         val hDoc = Portable.h64Duck("'sp:' || CAST(doc_id AS VARCHAR)")
         Some(s"""WITH fps AS (SELECT doc_id,
-            md5(array_to_string(list_sort(list_distinct(
-              string_split(lower(text), ' '))), ' ')) AS fp
+            ${Portable.setFpDuck("string_split(lower(text), ' ')")} AS fp
           FROM documents),
         lab AS (SELECT doc_id, fp,
             CASE WHEN ($hFp) % 10 < 8 THEN 'train' ELSE 'test' END
@@ -758,8 +757,7 @@ object Selection {
         val hDoc = Portable.h64Spark("concat('sp:', cast(doc_id as string))")
         val lab = t(s, d, "documents")
           .select(col("doc_id"),
-            md5(array_join(array_sort(array_distinct(
-              split(lower(col("text")), " "))), " ")).as("fp"))
+            expr(Portable.setFpSpark("split(lower(text), ' ')")).as("fp"))
           .select(col("doc_id"), col("fp"),
             when(expr(hFp) % 10 < 8, "train").otherwise("test")
               .as("split"),
@@ -899,8 +897,7 @@ object Selection {
         Some(s"""WITH $gateDuckCte,
           meta AS (SELECT doc_id, source FROM (
               SELECT doc_id, source,
-                md5(array_to_string(list_sort(list_distinct(
-                  string_split(lower(text), ' '))), ' ')) AS fp
+                ${Portable.setFpDuck("string_split(lower(text), ' ')")} AS fp
               FROM documents) z
             WHERE ($hFp) % 10 < 8),
           sel AS (SELECT g.doc_id, m.source, g.n_tokens
@@ -928,8 +925,7 @@ object Selection {
         val hFp = Portable.h64Spark("concat('sp:', fp)")
         val meta = t(s, d, "documents")
           .select(col("doc_id"), col("source"),
-            md5(array_join(array_sort(array_distinct(
-              split(lower(col("text")), " "))), " ")).as("fp"))
+            expr(Portable.setFpSpark("split(lower(text), ' ')")).as("fp"))
           .filter(expr(hFp) % 10 < 8) // train side of the cluster split
           .select(col("doc_id"), col("source"))
         val st = g.join(meta, "doc_id")
@@ -1129,11 +1125,8 @@ object Selection {
           FROM documents),
         ch AS (SELECT doc_id, source, u.pos AS pos, u.fp AS fp,
             u.ln AS ln FROM (
-            SELECT doc_id, source,
-              unnest([{'pos': i,
-                  'fp': md5(array_to_string(t[(i*10+1):(i*10+10)], ' ')),
-                  'ln': least(10, len(t) - i*10)}
-                for i in range(0, CAST(ceil(len(t) / 10.0) AS INT))]) AS u
+            SELECT doc_id, source, unnest(${Portable.chunkFpDuck("t", "10")})
+              AS u
             FROM dd) z),
         rk AS (SELECT source, ln,
             row_number() OVER (PARTITION BY fp ORDER BY doc_id, pos)
@@ -1158,11 +1151,7 @@ object Selection {
         val ch = t(s, d, "documents")
           .withColumn("t", split(lower(col("text")), " "))
           .select(col("doc_id"), col("source"), posexplode(expr(
-            """transform(sequence(0, cast(ceil(size(t) / 10.0) as int) - 1),
-               i -> struct(
-                 md5(array_join(slice(t, i * 10 + 1, 10), ' ')) AS fp,
-                 least(10L, size(t) - i * 10) AS ln))"""))
-            .as(Seq("pos", "c")))
+            Portable.chunkFpSpark("t", "10", ln = true))).as(Seq("pos", "c")))
           .select(col("doc_id"), col("source"), col("pos"),
             col("c.fp").as("fp"), col("c.ln").as("ln"))
         val st = ch

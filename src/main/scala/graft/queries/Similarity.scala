@@ -150,6 +150,19 @@ object Similarity {
     (if (withSig) base.withColumn("sig", expr(sigSpark)) else base).cache()
   }
 
+  /** [[quantized]] with signatures, materialized ONCE with its lineage
+    * cut: the 48-plane sig tree is ~3k literal nodes, and every
+    * downstream reuse of a cached-but-unbroken plan re-canonicalizes it
+    * (cache lookup) and re-analyzes it per join — measured as the
+    * dominant driver-side cost of the trie-ANN family (5.3 -> 1.8 s on
+    * q400's frames). The rebuilt LogicalRDD (stats dropped — the
+    * ComponentStream discipline) is 1 node.
+    */
+  private def quantizedSigCut(s: SparkSession, d: String): DataFrame = {
+    val ck = quantized(s, d, withSig = true).localCheckpoint(true)
+    s.createDataFrame(ck.rdd, ck.schema)
+  }
+
   private[graft] val duckQuantCte =
     s"""e AS (SELECT vec_id, ${qvecDuck("embedding", Dims)} AS qv
          FROM embeddings),
@@ -2782,6 +2795,62 @@ object Similarity {
         coalesce(col("n_hit"), lit(0L)).as("n_hit"))
   }
 
+  /** DuckDB mirror of [[elasticStop]], taking the same inputs as CTE
+    * names: `probes` (q_id, rk, joinKeys...), `corpusCells` (vec_id,
+    * joinKeys...) and the query set `qs` (q_id, q_qv, q_nsq), with the
+    * quantized corpus `en` in scope. Emits the chain firstrk → newat →
+    * cume → chosen → candset → scored → etop → exacttop → hits → nc →
+    * grid, ending in `grid(q_id, probes_used, n_cand, n_hit)`.
+    * `nCells` = (relation, expression) adds an `n_cells` column: the
+    * relation is cross-joined into `grid` and the expression read from
+    * it.
+    */
+  private def duckElasticStop(probes: String, corpusCells: String,
+      joinKeys: Seq[String], qs: String, quota: Int, ceiling: Int,
+      nCells: Option[(String, String)] = None): String = {
+    val on = joinKeys.map(k => s"c.$k = p.$k").mkString(" AND ")
+    val (cellsCol, cellsJoin) = nCells.fold(("", "")) {
+      case (rel, e) => (s"$e AS n_cells,", s"CROSS JOIN $rel")
+    }
+    s"""firstrk AS (SELECT p.q_id, c.vec_id, MIN(p.rk) AS frk
+        FROM $probes p JOIN $corpusCells c ON $on
+        WHERE c.vec_id <> p.q_id GROUP BY 1, 2),
+      newat AS (SELECT q_id, frk, CAST(COUNT(*) AS BIGINT) AS n_new
+        FROM firstrk GROUP BY 1, 2),
+      cume AS (SELECT q_id, frk, SUM(n_new) OVER (PARTITION BY q_id
+          ORDER BY frk) AS cum FROM newat),
+      chosen AS (SELECT q_id,
+          MIN(CASE WHEN cum >= $quota THEN frk END) AS rmet,
+          MAX(frk) AS rmax
+        FROM cume GROUP BY 1),
+      candset AS (SELECT f.q_id, f.vec_id FROM firstrk f
+        JOIN chosen ch ON ch.q_id = f.q_id
+          AND f.frk <= COALESCE(ch.rmet, ch.rmax)),
+      scored AS (SELECT cs.q_id, cs.vec_id, $duckAnnCosQ AS c
+        FROM candset cs JOIN en e ON e.vec_id = cs.vec_id
+             JOIN $qs q ON q.q_id = cs.q_id),
+      etop AS (SELECT q_id, vec_id FROM (
+          SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
+              ORDER BY c DESC, vec_id) AS rk FROM scored) z
+        WHERE rk <= $K),
+      ${duckExactTop(qs)},
+      hits AS (SELECT t.q_id, CAST(COUNT(*) AS BIGINT) AS n_hit
+        FROM etop t JOIN exacttop x
+          ON x.q_id = t.q_id AND x.vec_id = t.vec_id GROUP BY 1),
+      nc AS (SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_cand
+        FROM candset GROUP BY 1),
+      grid AS (SELECT q.q_id, $cellsCol
+          CAST(COALESCE(ch.rmet + 1, $ceiling) AS BIGINT)
+            AS probes_used,
+          COALESCE(nc.n_cand, 0) AS n_cand,
+          COALESCE(h.n_hit, 0) AS n_hit
+        FROM $qs q
+        $cellsJoin
+        LEFT JOIN chosen ch ON ch.q_id = q.q_id
+        LEFT JOIN nc ON nc.q_id = q.q_id
+        LEFT JOIN hits h ON h.q_id = q.q_id)"""
+  }
+
   /** The adaptive serving grid's frames (q400): the 48-plane signature
     * corpus assigned to a FLAT grid of 2^maxd cells with
     * maxd = clamp(bitlength(n / [[IvfServeOccupancy]]),
@@ -2802,14 +2871,7 @@ object Similarity {
   private def ivfServeFrames(s: SparkSession, d: String,
       occupancy: Int = IvfServeOccupancy): AnnFrames = {
     graft.expressions.GraftExtensions.ensureRegistered(s)
-    // materialize the signature projection ONCE and cut its lineage:
-    // the 48-plane sig tree is ~3k literal nodes, and every downstream
-    // reuse of a cached-but-unbroken plan re-canonicalizes it (cache
-    // lookup) and re-analyzes it per join — measured as the dominant
-    // driver-side cost of the trie-ANN family. The rebuilt LogicalRDD
-    // (stats dropped — the ComponentStream discipline) is 1 node.
-    val ck = quantized(s, d, withSig = true).localCheckpoint(true)
-    val sg = s.createDataFrame(ck.rdd, ck.schema)
+    val sg = quantizedSigCut(s, d)
     val n = sg.agg(count(lit(1)).as("n_src"))
     val maxdCol = greatest(lit(IvfServeFloorDepth), least(lit(Planes),
       length(bin(expr(s"n_src div $occupancy"))).cast("int")))
@@ -2926,55 +2988,8 @@ object Similarity {
       probesrk AS (SELECT q_id, rk,
           psig & ((CAST(1 AS BIGINT) << maxd) - 1) AS cell
         FROM sigs, smd WHERE rk < $ceiling),
-      firstrk AS (SELECT p.q_id, c.vec_id, MIN(p.rk) AS frk
-        FROM probesrk p JOIN corpus c ON c.cell = p.cell
-        WHERE c.vec_id <> p.q_id GROUP BY 1, 2),
-      newat AS (SELECT q_id, frk, CAST(COUNT(*) AS BIGINT) AS n_new
-        FROM firstrk GROUP BY 1, 2),
-      cume AS (SELECT q_id, frk, SUM(n_new) OVER (PARTITION BY q_id
-          ORDER BY frk) AS cum FROM newat),
-      chosen AS (SELECT q_id,
-          MIN(CASE WHEN cum >= $quota THEN frk END) AS rmet,
-          MAX(frk) AS rmax
-        FROM cume GROUP BY 1),
-      candset AS (SELECT f.q_id, f.vec_id FROM firstrk f
-        JOIN chosen ch ON ch.q_id = f.q_id
-          AND f.frk <= COALESCE(ch.rmet, ch.rmax)),
-      scored AS (SELECT cs.q_id, cs.vec_id,
-          CAST(${qdotDuck("q.q_qv", "e.qv", Dims)} AS DOUBLE)
-            / (sqrt(CAST(q.q_nsq AS DOUBLE))
-              * sqrt(CAST(e.nsq AS DOUBLE))) AS c
-        FROM candset cs JOIN en e ON e.vec_id = cs.vec_id
-             JOIN qraw q ON q.q_id = cs.q_id),
-      etop AS (SELECT q_id, vec_id FROM (
-          SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-              ORDER BY c DESC, vec_id) AS rk FROM scored) z
-        WHERE rk <= $K),
-      exacttop AS (SELECT q_id, vec_id FROM (
-          SELECT q.q_id, e.vec_id, row_number() OVER (
-              PARTITION BY q.q_id ORDER BY
-                CAST(${qdotDuck("q.q_qv", "e.qv", Dims)} AS DOUBLE)
-                  / (sqrt(CAST(q.q_nsq AS DOUBLE))
-                    * sqrt(CAST(e.nsq AS DOUBLE))) DESC, e.vec_id)
-            AS rk
-          FROM qraw q, en e WHERE e.vec_id <> q.q_id) z
-        WHERE rk <= $K),
-      hits AS (SELECT t.q_id, CAST(COUNT(*) AS BIGINT) AS n_hit
-        FROM etop t JOIN exacttop x
-          ON x.q_id = t.q_id AND x.vec_id = t.vec_id GROUP BY 1),
-      nc AS (SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_cand
-        FROM candset GROUP BY 1),
-      grid AS (SELECT q.q_id,
-          (CAST(1 AS BIGINT) << smd.maxd) AS n_cells,
-          CAST(COALESCE(ch.rmet + 1, $ceiling) AS BIGINT)
-            AS probes_used,
-          COALESCE(nc.n_cand, 0) AS n_cand,
-          COALESCE(h.n_hit, 0) AS n_hit
-        FROM qraw q
-        CROSS JOIN smd
-        LEFT JOIN chosen ch ON ch.q_id = q.q_id
-        LEFT JOIN nc ON nc.q_id = q.q_id
-        LEFT JOIN hits h ON h.q_id = q.q_id)"""
+      ${duckElasticStop("probesrk", "corpus", Seq("cell"), "qraw", quota,
+        ceiling, Some(("smd", "(CAST(1 AS BIGINT) << smd.maxd)")))}"""
   }
 
   /** Learned-centroid serving IVF (q401): a deterministic k-means
@@ -3106,54 +3121,8 @@ object Similarity {
           SELECT q_id, cid, row_number() OVER (PARTITION BY q_id
               ORDER BY d2, cid) AS rk FROM qd) z
         WHERE rk <= $ceiling),
-      firstrk AS (SELECT p.q_id, a.vec_id, MIN(p.rk) AS frk
-        FROM prk p JOIN assign a ON a.cell = p.cell
-        WHERE a.vec_id <> p.q_id GROUP BY 1, 2),
-      newat AS (SELECT q_id, frk, CAST(COUNT(*) AS BIGINT) AS n_new
-        FROM firstrk GROUP BY 1, 2),
-      cume AS (SELECT q_id, frk, SUM(n_new) OVER (PARTITION BY q_id
-          ORDER BY frk) AS cum FROM newat),
-      chosen AS (SELECT q_id,
-          MIN(CASE WHEN cum >= $quota THEN frk END) AS rmet,
-          MAX(frk) AS rmax
-        FROM cume GROUP BY 1),
-      candset AS (SELECT f.q_id, f.vec_id FROM firstrk f
-        JOIN chosen ch ON ch.q_id = f.q_id
-          AND f.frk <= COALESCE(ch.rmet, ch.rmax)),
-      scored AS (SELECT cs.q_id, cs.vec_id,
-          CAST(${qdotDuck("q.q_qv", "e2.qv", Dims)} AS DOUBLE)
-            / (sqrt(CAST(q.q_nsq AS DOUBLE))
-              * sqrt(CAST(e2.nsq AS DOUBLE))) AS c
-        FROM candset cs JOIN en e2 ON e2.vec_id = cs.vec_id
-             JOIN qset q ON q.q_id = cs.q_id),
-      etop AS (SELECT q_id, vec_id FROM (
-          SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-              ORDER BY c DESC, vec_id) AS rk FROM scored) z
-        WHERE rk <= $K),
-      exacttop AS (SELECT q_id, vec_id FROM (
-          SELECT q.q_id, e2.vec_id, row_number() OVER (
-              PARTITION BY q.q_id ORDER BY
-                CAST(${qdotDuck("q.q_qv", "e2.qv", Dims)} AS DOUBLE)
-                  / (sqrt(CAST(q.q_nsq AS DOUBLE))
-                    * sqrt(CAST(e2.nsq AS DOUBLE))) DESC, e2.vec_id)
-            AS rk
-          FROM qset q, en e2 WHERE e2.vec_id <> q.q_id) z
-        WHERE rk <= $K),
-      hits AS (SELECT t.q_id, CAST(COUNT(*) AS BIGINT) AS n_hit
-        FROM etop t JOIN exacttop x
-          ON x.q_id = t.q_id AND x.vec_id = t.vec_id GROUP BY 1),
-      nc AS (SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_cand
-        FROM candset GROUP BY 1),
-      grid AS (SELECT q.q_id, CAST(nk.k AS BIGINT) AS n_cells,
-          CAST(COALESCE(ch.rmet + 1, $ceiling) AS BIGINT)
-            AS probes_used,
-          COALESCE(nc.n_cand, 0) AS n_cand,
-          COALESCE(h.n_hit, 0) AS n_hit
-        FROM qset q
-        CROSS JOIN nk
-        LEFT JOIN chosen ch ON ch.q_id = q.q_id
-        LEFT JOIN nc ON nc.q_id = q.q_id
-        LEFT JOIN hits h ON h.q_id = q.q_id)"""
+      ${duckElasticStop("prk", "assign", Seq("cell"), "qset", quota,
+        ceiling, Some(("nk", "CAST(nk.k AS BIGINT)")))}"""
 
   /** DuckDB mirror of [[ivfElastic]] — self-contained after the
     * quantized CTEs; emits `grid(q_id, probes_used, n_cand, n_hit)`.
@@ -3181,53 +3150,8 @@ object Similarity {
         FROM ql),
       prk AS (SELECT q_id, i - 1 AS rk, plist[i] AS cell
         FROM pls, (SELECT unnest(range(1, $ceiling + 1)) AS i) z),
-      firstrk AS (SELECT p.q_id, c.vec_id, MIN(p.rk) AS frk
-        FROM prk p JOIN cells c ON c.cell = p.cell
-        WHERE c.vec_id <> p.q_id GROUP BY 1, 2),
-      newat AS (SELECT q_id, frk, CAST(COUNT(*) AS BIGINT) AS n_new
-        FROM firstrk GROUP BY 1, 2),
-      cume AS (SELECT q_id, frk, SUM(n_new) OVER (PARTITION BY q_id
-          ORDER BY frk) AS cum FROM newat),
-      chosen AS (SELECT q_id,
-          MIN(CASE WHEN cum >= $quota THEN frk END) AS rmet,
-          MAX(frk) AS rmax
-        FROM cume GROUP BY 1),
-      candset AS (SELECT f.q_id, f.vec_id FROM firstrk f
-        JOIN chosen ch ON ch.q_id = f.q_id
-          AND f.frk <= COALESCE(ch.rmet, ch.rmax)),
-      scored AS (SELECT cs.q_id, cs.vec_id,
-          CAST(${qdotDuck("q.q_qv", "e.qv", Dims)} AS DOUBLE)
-            / (sqrt(CAST(q.q_nsq AS DOUBLE))
-              * sqrt(CAST(e.nsq AS DOUBLE))) AS c
-        FROM candset cs JOIN en e ON e.vec_id = cs.vec_id
-             JOIN pls q ON q.q_id = cs.q_id),
-      etop AS (SELECT q_id, vec_id FROM (
-          SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-              ORDER BY c DESC, vec_id) AS rk FROM scored) z
-        WHERE rk <= $K),
-      exacttop AS (SELECT q_id, vec_id FROM (
-          SELECT q.q_id, e.vec_id, row_number() OVER (
-              PARTITION BY q.q_id ORDER BY
-                CAST(${qdotDuck("q.q_qv", "e.qv", Dims)} AS DOUBLE)
-                  / (sqrt(CAST(q.q_nsq AS DOUBLE))
-                    * sqrt(CAST(e.nsq AS DOUBLE))) DESC, e.vec_id)
-            AS rk
-          FROM pls q, en e WHERE e.vec_id <> q.q_id) z
-        WHERE rk <= $K),
-      hits AS (SELECT t.q_id, CAST(COUNT(*) AS BIGINT) AS n_hit
-        FROM etop t JOIN exacttop x
-          ON x.q_id = t.q_id AND x.vec_id = t.vec_id GROUP BY 1),
-      nc AS (SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_cand
-        FROM candset GROUP BY 1),
-      grid AS (SELECT q.q_id,
-          CAST(COALESCE(ch.rmet + 1, $ceiling) AS BIGINT)
-            AS probes_used,
-          COALESCE(nc.n_cand, 0) AS n_cand,
-          COALESCE(h.n_hit, 0) AS n_hit
-        FROM pls q
-        LEFT JOIN chosen ch ON ch.q_id = q.q_id
-        LEFT JOIN nc ON nc.q_id = q.q_id
-        LEFT JOIN hits h ON h.q_id = q.q_id)"""
+      ${duckElasticStop("prk", "cells", Seq("cell"), "pls", quota,
+        ceiling)}"""
 
   /** Budget-parameterized trie-ANN recall audit, shared by q392 (one
     * budget) and q394 (the sweep) — and driven by ScaleProbe on the 10x
@@ -3260,10 +3184,9 @@ object Similarity {
     */
   private[graft] def semLeafPairs(s: SparkSession, d: String): DataFrame = {
     graft.expressions.GraftExtensions.ensureRegistered(s)
-    // lineage cut — see [[ivfServeFrames]] (the self-join below would
-    // otherwise canonicalize the 48-plane sig tree on BOTH sides)
-    val ck = quantized(s, d, withSig = true).localCheckpoint(true)
-    val sg = s.createDataFrame(ck.rdd, ck.schema)
+    // the self-join below would otherwise canonicalize the 48-plane sig
+    // tree on BOTH sides
+    val sg = quantizedSigCut(s, d)
     val leaf = trieLeafAdaptive(sg.select(col("vec_id"), col("sig")),
       CellOccupancy)
     // EAGER materialization, not cache(): both self-join sides below
@@ -3287,9 +3210,7 @@ object Similarity {
   private[graft] def trieLeafPairCandidates(s: SparkSession,
       d: String): DataFrame = {
     graft.expressions.GraftExtensions.ensureRegistered(s)
-    // lineage cut — see [[ivfServeFrames]]
-    val ck = quantized(s, d, withSig = true).localCheckpoint(true)
-    val sg = s.createDataFrame(ck.rdd, ck.schema)
+    val sg = quantizedSigCut(s, d)
     val leaf = trieLeafAdaptive(sg.select(col("vec_id"), col("sig")),
       CellOccupancy)
     leaf.select(col("vec_id").as("kept"), col("depth"), col("cell"))
@@ -3313,11 +3234,7 @@ object Similarity {
 
   private def trieAnnFrames(s: SparkSession, d: String): AnnFrames = {
     graft.expressions.GraftExtensions.ensureRegistered(s)
-    // lineage cut — see [[ivfServeFrames]]: measured 5.3 -> 1.8 s there
-    // and q392/q394/q395 pay the same repeated-canonicalization tax on
-    // the 48-plane sig tree
-    val ck = quantized(s, d, withSig = true).localCheckpoint(true)
-    val sg = s.createDataFrame(ck.rdd, ck.schema)
+    val sg = quantizedSigCut(s, d)
     val sgk = sg.select(col("vec_id"), col("sig"))
     val leaves = trieLeafAdaptive(sgk, CellOccupancy)
     val corpus = sg.select(col("vec_id")).join(leaves, "vec_id")
@@ -3412,19 +3329,18 @@ object Similarity {
     * same ranked-flip probe rule, the same adaptive ceiling, so q392
     * and q394 cannot drift from their Spark twins or each other.
     */
-  /** The exact-grid query/corpus cosine fragment every trie-ANN oracle
-    * shares (aliases `q` = qraw row, `e` = en row).
+  /** The exact-grid query/corpus cosine fragment every ANN oracle
+    * shares (aliases `q` = query-set row, `e` = en row).
     */
   private def duckAnnCosQ: String =
     s"""CAST(${qdotDuck("q.q_qv", "e.qv", Dims)} AS DOUBLE)
        / (sqrt(CAST(q.q_nsq AS DOUBLE)) * sqrt(CAST(e.nsq AS DOUBLE)))"""
 
-  /** The CTEs every trie-ANN oracle shares — the [[trieAnnFrames]] /
-    * [[exactTopK]] mirror: `corpus` (leaf per vector), `qraw` (query
-    * set + plane-confidence array), `ranked`/`sigs` (the ranked-flip
-    * probe signatures, rk = 0 the query's own), and `exacttop` (the
-    * audit ground truth). One definition, so q392/q394/q395 cannot
-    * drift on the probe rule.
+  /** The CTEs every trie-ANN oracle shares — the [[trieAnnFrames]]
+    * mirror: `corpus` (leaf per vector), `qraw` (query set +
+    * plane-confidence array) and `ranked`/`sigs` (the ranked-flip probe
+    * signatures, rk = 0 the query's own). One definition, so
+    * q392/q394/q395 cannot drift on the probe rule.
     */
   private def duckAnnBaseCtes: String = {
     val apList = (0 until Planes).map(p => s"abs(${projDuck(p)})")
@@ -3442,18 +3358,25 @@ object Similarity {
       sigs AS (SELECT q_id, 0 AS rk, sig AS psig FROM qraw
         UNION ALL
         SELECT q_id, rk, xor(sig, CAST(1 AS BIGINT) << pos) AS psig
-        FROM ranked),
-      exacttop AS (SELECT q_id, vec_id FROM (
+        FROM ranked)"""
+  }
+
+  /** [[exactTopK]]'s mirror: `exacttop(q_id, vec_id)`, the exact top-[[K]]
+    * per query of relation `qs` (q_id, q_qv, q_nsq) over `en` — the
+    * audit's ground truth.
+    */
+  private def duckExactTop(qs: String): String =
+    s"""exacttop AS (SELECT q_id, vec_id FROM (
           SELECT q.q_id, e.vec_id, row_number() OVER (
               PARTITION BY q.q_id ORDER BY $duckAnnCosQ DESC, e.vec_id)
             AS rk
-          FROM qraw q, en e WHERE e.vec_id <> q.q_id) z
+          FROM $qs q, en e WHERE e.vec_id <> q.q_id) z
         WHERE rk <= $K)"""
-  }
 
   private def duckTrieAnnCtes(budgets: Seq[Int]): String = {
     val cosQ = duckAnnCosQ
     s"""$duckAnnBaseCtes,
+      ${duckExactTop("qraw")},
       bud AS (SELECT unnest([${budgets.mkString(", ")}])
           AS probe_budget),
       probes AS (SELECT DISTINCT probe_budget, q_id, d AS depth,
@@ -3537,51 +3460,15 @@ object Similarity {
     * first-reaching rank, one cumulative window, per-query minimal
     * rank meeting the quota.
     */
-  private def duckTrieAnnElasticCtes(quota: Int, ceiling: Int): String = {
-    val cosQ = duckAnnCosQ
+  private def duckTrieAnnElasticCtes(quota: Int, ceiling: Int): String =
     s"""$duckAnnBaseCtes,
       probesrk AS (SELECT DISTINCT q_id, rk, d AS depth,
           psig & ((CAST(1 AS BIGINT) << d) - 1) AS cell
         FROM (SELECT s.q_id, s.rk, s.psig,
                 unnest(range(4, tmd.maxd + 1)) AS d
               FROM sigs s, tmd WHERE s.rk < $ceiling) y),
-      firstrk AS (SELECT p.q_id, c.vec_id, MIN(p.rk) AS frk
-        FROM probesrk p JOIN corpus c
-          ON c.depth = p.depth AND c.cell = p.cell
-        WHERE c.vec_id <> p.q_id GROUP BY 1, 2),
-      newat AS (SELECT q_id, frk, CAST(COUNT(*) AS BIGINT) AS n_new
-        FROM firstrk GROUP BY 1, 2),
-      cume AS (SELECT q_id, frk, SUM(n_new) OVER (PARTITION BY q_id
-          ORDER BY frk) AS cum FROM newat),
-      chosen AS (SELECT q_id,
-          MIN(CASE WHEN cum >= $quota THEN frk END) AS rmet,
-          MAX(frk) AS rmax
-        FROM cume GROUP BY 1),
-      candset AS (SELECT f.q_id, f.vec_id FROM firstrk f
-        JOIN chosen ch ON ch.q_id = f.q_id
-          AND f.frk <= COALESCE(ch.rmet, ch.rmax)),
-      scored AS (SELECT cs.q_id, cs.vec_id, $cosQ AS c
-        FROM candset cs JOIN en e ON e.vec_id = cs.vec_id
-             JOIN qraw q ON q.q_id = cs.q_id),
-      etop AS (SELECT q_id, vec_id FROM (
-          SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-              ORDER BY c DESC, vec_id) AS rk FROM scored) z
-        WHERE rk <= $K),
-      hits AS (SELECT t.q_id, CAST(COUNT(*) AS BIGINT) AS n_hit
-        FROM etop t JOIN exacttop x
-          ON x.q_id = t.q_id AND x.vec_id = t.vec_id GROUP BY 1),
-      nc AS (SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_cand
-        FROM candset GROUP BY 1),
-      grid AS (SELECT q.q_id,
-          CAST(COALESCE(ch.rmet + 1, $ceiling) AS BIGINT)
-            AS probes_used,
-          COALESCE(nc.n_cand, 0) AS n_cand,
-          COALESCE(h.n_hit, 0) AS n_hit
-        FROM qraw q
-        LEFT JOIN chosen ch ON ch.q_id = q.q_id
-        LEFT JOIN nc ON nc.q_id = q.q_id
-        LEFT JOIN hits h ON h.q_id = q.q_id)"""
-  }
+      ${duckElasticStop("probesrk", "corpus", Seq("depth", "cell"), "qraw",
+        quota, ceiling)}"""
 
   /** q386's greedy MMR unroll with K as a parameter (round-12 verdict
     * #7 — serving-realistic K is 20-50, not 5). Per stage, NO

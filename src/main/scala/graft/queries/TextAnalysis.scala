@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.Portable.{setFpDuck, setFpSpark}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -138,11 +139,9 @@ object TextAnalysis {
     // ---- document fingerprinting: content / normalized / rolling hash ------
     QuerySpec(
       "q33_fingerprint",
-      Some("""SELECT doc_id,
+      Some(s"""SELECT doc_id,
         md5(text) AS fp_content,
-        md5(array_to_string(
-          list_sort(list_distinct(string_split(lower(text), ' '))), ' '))
-          AS fp_normalized,
+        ${setFpDuck("string_split(lower(text), ' ')")} AS fp_normalized,
         list_reduce(list_concat([''], string_split(lower(text), ' ')),
           (acc, x) -> md5(concat(acc, x))) AS fp_rolling
         FROM documents"""),
@@ -150,9 +149,7 @@ object TextAnalysis {
         t(s, d, "documents").select(
           col("doc_id"),
           md5(col("text")).as("fp_content"),
-          md5(array_join(
-            array_sort(array_distinct(split(lower(col("text")), " "))), " "))
-            .as("fp_normalized"),
+          expr(setFpSpark("split(lower(text), ' ')")).as("fp_normalized"),
           expr("aggregate(split(lower(text), ' '), '', " +
             "(acc, x) -> md5(concat(acc, x)))").as("fp_rolling"))),
 

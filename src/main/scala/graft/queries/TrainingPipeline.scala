@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
-import graft.functions.Portable.h64Duck
+import graft.functions.Portable.{h64Duck, setFpDuck, setFpSpark}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -98,11 +98,10 @@ object TrainingPipeline {
     // ---- composed corpus filter: language + length gates, then dedup ------
     QuerySpec(
       "q82_corpus_filter",
-      Some("""WITH scored AS (
+      Some(s"""WITH scored AS (
           SELECT doc_id, lang, n_chars,
             len(string_split(lower(text), ' ')) AS n_toks,
-            md5(array_to_string(list_sort(list_distinct(
-              string_split(lower(text), ' '))), ' ')) AS fp
+            ${setFpDuck("string_split(lower(text), ' ')")} AS fp
           FROM documents),
         keep AS (
           SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rk
@@ -115,8 +114,7 @@ object TrainingPipeline {
           .withColumn("toks", split(lower(col("text")), " "))
           .select(col("doc_id"), col("lang"), col("n_chars"),
             size(col("toks")).cast("bigint").as("n_toks"),
-            md5(array_join(array_sort(array_distinct(col("toks"))), " "))
-              .as("fp"))
+            expr(setFpSpark("toks")).as("fp"))
           .filter(col("lang") === "en" && col("n_toks") >= 20
             && col("n_chars") <= 5000)
           .withColumn("rk", row_number().over(

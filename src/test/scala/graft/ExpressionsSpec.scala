@@ -130,4 +130,41 @@ class ExpressionsSpec extends SparkSpec {
            jaro_winkler(CAST(NULL AS STRING), 'x') AS nl""").head()
     assert(r.getDouble(0) == 0.9611111111111111 && r.isNullAt(1))
   }
+
+  test("chunk fingerprint: fp and ln per chunk match grouped(k) + MD5 at " +
+      "exact-multiple and one-over token counts") {
+    import spark.implicits._
+    val lens = Seq(1, 9, 10, 11, 20, 21)
+    def toks(n: Int) = (0 until n).map(i => s"w$i")
+    val docs = lens.map(n => (n, toks(n))).toDF("n", "t")
+    def md5Hex(x: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(x.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    for (k <- Seq(10, 20)) {
+      val want = lens.flatMap(n => toks(n).grouped(k).zipWithIndex.map {
+        case (g, i) => (n, i, md5Hex(g.mkString(" ")), g.size.toLong)
+      }).toSet
+      // literal width, with and without ln
+      val withLn = docs.select(col("n"), posexplode(expr(
+          Portable.chunkFpSpark("t", k.toString, ln = true)))
+          .as(Seq("pos", "c")))
+        .select(col("n"), col("pos"), col("c.fp"), col("c.ln"))
+        .as[(Int, Int, String, Long)].collect().toSet
+      assert(withLn == want, s"k = $k")
+      val plain = docs.select(col("n"), posexplode(expr(
+          Portable.chunkFpSpark("t", k.toString))).as(Seq("pos", "fp")))
+        .as[(Int, Int, String)].collect().toSet
+      assert(plain == want.map { case (n, i, fp, _) => (n, i, fp) },
+        s"k = $k")
+      // width as a lambda variable (q379's form)
+      val lambda = docs.select(col("n"), explode(expr(
+          s"transform(array($k), k -> " +
+            Portable.chunkFpSpark("t", "k", ln = true, lead = Seq("k AS k")) +
+            ")[0]")).as("c"))
+        .select(col("n"), col("c.k"), col("c.fp"), col("c.ln"))
+        .as[(Int, Int, String, Long)].collect().toSet
+      assert(lambda.map(_._2) == Set(k))
+      assert(lambda.map { case (n, _, fp, ln) => (n, fp, ln) } ==
+        want.map { case (n, _, fp, ln) => (n, fp, ln) }, s"k = $k")
+    }
+  }
 }

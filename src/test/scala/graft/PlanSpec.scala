@@ -1699,8 +1699,15 @@ class PlanSpec extends SparkSpec {
       "scalar frames broadcast — no CartesianProduct anywhere") {
     val p = plan("q346_lsh_band_planning")
     assert(!p.contains("CartesianProduct"), p)
-    assert(p.contains("partial_count"),
-      "histogram buckets must combine map-side:\n" + p)
+    // the query checkpoints both histograms, so their aggregates sit
+    // upstream of its Scan ExistingRDD: check each builder's own plan
+    val (bg, hi) = graft.queries.Dedup.bandPlanHists(spark, sfDir)
+    for (h <- Seq(bg, hi)) {
+      val hp = h.queryExecution.explainString(
+        ExplainMode.fromString("formatted"))
+      assert(hp.contains("partial_count"),
+        "histogram buckets must combine map-side:\n" + hp)
+    }
     assert(p.contains("BroadcastNestedLoopJoin")
         || p.contains("BroadcastHashJoin"),
       "the 1-row scalar frames must broadcast:\n" + p)
