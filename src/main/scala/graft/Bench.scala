@@ -187,12 +187,7 @@ object Bench {
     // Untimed warmup: JVM/codegen/session startup otherwise lands on
     // whichever query happens to run first (~4 s artifact).
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // Dev knob: SPARK_GRAFT_BENCH_ONLY=q25_range_join,q48_... times a
-    // subset (perf triage); the driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     // Repeat-sampling exists to shed GC outliers, which distort sub-second
     // measurements proportionally most; once a single run is this long the
     // median stops earning its 2x wall-clock cost (the 130-query suite

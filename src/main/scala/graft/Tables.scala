@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (reference src/glue_scripts/bronze_to_silver.py:44-45); we keep
   * infer-on-read here (parquet footers are authoritative for these
   * fixtures) and reserve explicit cast-on-read schemas for the taxi-trips
-  * ingest path (see [[graft.sources.TaxiSchema]]), where vendor type drift
+  * ingest path (see [[graft.pipeline.TaxiSchema]]), where vendor type drift
   * makes inference unsafe.
   */
 object Tables {

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -20,7 +19,7 @@ object GraftExtensions {
   private type Descriptor = (FunctionIdentifier, ExpressionInfo,
     Seq[Expression] => Expression)
 
-  private[expressions] val descriptors: Seq[Descriptor] = Seq(
+  private val descriptors: Seq[Descriptor] = Seq(
     (new FunctionIdentifier("qcosine"),
       new ExpressionInfo(classOf[QCosine].getName, "qcosine"),
       (args: Seq[Expression]) => {
@@ -54,13 +53,4 @@ object GraftExtensions {
         // AggregateExpression (standard registry convention).
         SimhashSig(args.head)
       }))
-
-  /** Late registration for sessions not built with the extension (e.g. a
-    * vanilla test session): idempotent, so queries can call it eagerly.
-    */
-  def ensureRegistered(spark: SparkSession): Unit =
-    descriptors.foreach { case (ident, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(ident.funcName, builder, "built-in")
-    }
 }

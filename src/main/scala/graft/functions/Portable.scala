@@ -42,14 +42,6 @@ object Portable {
     */
   val P: Long = 2147483647L
 
-  /** Order-independent sum of a double-valued lambda body over an array —
-    * Spark side. `body` sees the lambda variable `x`.
-    */
-  def decSumSpark(arr: String, body: String): String =
-    s"""cast(aggregate($arr, cast(0 as decimal(27,10)),
-        (acc, x) -> cast(acc + cast($body as decimal(27,10))
-          as decimal(27,10))) as double)"""
-
   // ---- quantized vector math ----------------------------------------------
   //
   // Embedding reductions use integer quantization instead of decimal sums:

@@ -19,7 +19,6 @@ import org.apache.spark.sql.functions._
   */
 final class Gold(spark: SparkSession, catalog: ZoneCatalog) {
 
-  def silverTable: String = s"${catalog.silver}/cleaned"
   def revenueTable: String = s"${catalog.gold}/revenue_by_payment_month"
   def zoneTable: String = s"${catalog.gold}/trips_by_zone"
 
@@ -27,7 +26,7 @@ final class Gold(spark: SparkSession, catalog: ZoneCatalog) {
     * the silver partitioning exists to serve).
     */
   def buildRevenueSummary(): DataFrame = {
-    val df = Gold.revenueRollup(spark.read.parquet(silverTable))
+    val df = Gold.revenueRollup(spark.read.parquet(catalog.silverCleaned))
     // One writer task per partition value: without this the rollup's N
     // shuffle partitions each open a file in every payment_type dir —
     // N x |values| tiny files at any scale (the small-file problem the
@@ -42,7 +41,7 @@ final class Gold(spark: SparkSession, catalog: ZoneCatalog) {
     * consumers' entry point).
     */
   def buildZoneSummary(): DataFrame = {
-    val df = Gold.zoneRollup(spark.read.parquet(silverTable))
+    val df = Gold.zoneRollup(spark.read.parquet(catalog.silverCleaned))
     df.write.mode(SaveMode.Overwrite).parquet(zoneTable)
     spark.read.parquet(zoneTable)
   }

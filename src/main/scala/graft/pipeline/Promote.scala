@@ -29,14 +29,13 @@ final class Promote(
     log: ProcessedLog,
     notifier: Notify = Notify.Logging) {
 
-  def bronzePrefix: String = s"${catalog.bronze}/nyc_taxi"
-  def silverTable: String = s"${catalog.silver}/cleaned"
+  def silverTable: String = catalog.silverCleaned
 
   /** List bronze parquet files (Hadoop FS — works for file:// and s3a://;
     * full URIs are preserved so object-store paths resolve correctly).
     */
   def listBronze(): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(bronzePrefix)
+    val p = new org.apache.hadoop.fs.Path(catalog.bronzeTaxi)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Seq.empty
     val it = fs.listFiles(p, true)
@@ -49,15 +48,6 @@ final class Promote(
     buf.toSeq.sorted
   }
 
-  /** The realized cleaning transform (the reference leaves a placeholder at
-    * bronze_to_silver.py:46): canonical-typed rows with valid fares, real
-    * trip durations, and a present partition key.
-    */
-  def clean(df: DataFrame): DataFrame =
-    df.filter(col("payment_type").isNotNull
-        && col("fare_amount") >= 0
-        && col("tpep_pickup_datetime") < col("tpep_dropoff_datetime"))
-
   /** One promote cycle. Returns the files processed this run. */
   def run(): Seq[String] = {
     import spark.implicits._
@@ -66,7 +56,7 @@ final class Promote(
     if (todo.isEmpty) return Seq.empty
 
     try {
-      val cleaned = clean(TaxiSchema.readTagged(spark, todo))
+      val cleaned = Promote.clean(TaxiSchema.readTagged(spark, todo))
       cleaned
         .write
         .mode(SaveMode.Overwrite)
@@ -91,6 +81,19 @@ final class Promote(
   }
 
   def readSilver(): DataFrame = spark.read.parquet(silverTable)
+}
+
+object Promote {
+
+  /** The realized cleaning transform (the reference leaves a placeholder at
+    * bronze_to_silver.py:46): canonical-typed rows with valid fares, real
+    * trip durations, and a present partition key. The batch and the
+    * streaming promote both apply it.
+    */
+  def clean(df: DataFrame): DataFrame =
+    df.filter(col("payment_type").isNotNull
+        && col("fare_amount") >= 0
+        && col("tpep_pickup_datetime") < col("tpep_dropoff_datetime"))
 }
 
 /** Best-effort notification sink — the reference's SNS publish swallows

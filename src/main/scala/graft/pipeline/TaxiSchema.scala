@@ -61,14 +61,7 @@ object TaxiSchema {
       .values.map(_.toSeq).toSeq
 
   /** Multi-file scan with cast-on-read: per-schema-group scan + normalize
-    * + union-by-name.
-    */
-  def read(spark: SparkSession, paths: Seq[String]): DataFrame =
-    groupBySchema(spark, paths)
-      .map(g => normalize(spark.read.parquet(g: _*)))
-      .reduce(_.unionByName(_))
-
-  /** Like [[read]], but tags every row with a deterministic id of its
+    * + union-by-name, every row tagged with a deterministic id of its
     * source file — the per-file partition key the promote commit protocol
     * overwrites by. `input_file_name()` is stable per file across reruns,
     * which is all the overwrite-by-src_id protocol needs.

@@ -18,8 +18,14 @@ final case class ZoneCatalog(root: String) {
   /** Control-plane state (ledgers, logs) lives beside the data zones. */
   val state: String = s"$root/state"
 
+  /** Prefix every taxi drop lands under (both promotes read it). */
+  val bronzeTaxi: String = s"$bronze/nyc_taxi"
+
+  /** The batch promote's silver table, which gold reads. */
+  val silverCleaned: String = s"$silver/cleaned"
+
   def bronzeKey(yearMonth: String, stamp: String): String =
-    s"$bronze/nyc_taxi/yellow_taxi_${yearMonth}_$stamp.parquet"
+    s"$bronzeTaxi/yellow_taxi_${yearMonth}_$stamp.parquet"
 
   def archiveKey(date: java.time.LocalDate, baseName: String): String =
     f"$archive/${date.getYear}%04d/${date.getMonthValue}%02d/${date.getDayOfMonth}%02d/$baseName"

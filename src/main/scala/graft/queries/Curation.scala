@@ -319,7 +319,6 @@ object Curation {
           MIN(qy) AS min_qty, MAX(qy) AS max_qty
         FROM g GROUP BY 1"""),
       (s, d) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         t(s, d, "lineitem")
           .select(floor(col("l_extendedprice")).cast("long").as("px"),
             floor(col("l_quantity")).cast("long").as("qy"))
@@ -1750,7 +1749,6 @@ object Curation {
           FROM pr
           WHERE jaro_winkler_similarity(name_a, name_b) >= 0.5"""),
       (s, d) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         val tk = t(s, d, "part").select(col("p_name")).distinct()
           .withColumn("toks", split(col("p_name"), " "))
           .select(col("p_name"),

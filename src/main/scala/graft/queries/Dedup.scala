@@ -251,7 +251,6 @@ object Dedup {
     * the near-dup queries.
     */
   private[graft] def shingled(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.GraftExtensions.ensureRegistered(s)
     withShingles(t(s, d, "documents"))
   }
 
@@ -382,7 +381,6 @@ object Dedup {
     */
   private[graft] def simhashSignatures(s: SparkSession,
       d: String): DataFrame = {
-    graft.expressions.GraftExtensions.ensureRegistered(s)
     t(s, d, "documents")
       .select(col("doc_id"),
         explode(split(lower(col("text")), " ")).as("tok"))
@@ -1227,7 +1225,6 @@ object Dedup {
             / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) >= 0.4"""),
       (s, d) => {
         import graft.functions.Portable.{qvecSpark, qnsqSpark}
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), col("label"),
             expr(qvecSpark("embedding")).as("qv"))
@@ -2304,7 +2301,6 @@ object Dedup {
           FROM fin WHERE stage >= 1""")
       },
       (s, d) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
         // stages 1-4 — the file-level ladder chains (probe-shared):
         // exact fingerprint, chunk keep-first, banded minhash + verify,
@@ -2415,7 +2411,6 @@ object Dedup {
           FROM sel""")
       },
       (s, d) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
         val newDocs = docs.filter(col("doc_id") >= 250)
         val oldDocs = docs.filter(col("doc_id") < 250)
@@ -2653,7 +2648,6 @@ object Dedup {
               AS naive_leak
           FROM sided"""),
       (s, d) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
           .cache()
         val lab = fullComponents(s, d, sh)
@@ -2780,7 +2774,6 @@ object Dedup {
           FROM sided s JOIN st ON st.split = s.split, tot""")
       },
       (s, d) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
           .cache()
         val lab = fullComponents(s, d, sh)
@@ -2875,7 +2868,6 @@ object Dedup {
               AS share_ppm
           FROM sided GROUP BY 1, 2"""),
       (s, d) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
           .cache()
         val edges = verifyJaccard(sh, minhashCandidates(sh), 0.8)
@@ -2921,7 +2913,6 @@ object Dedup {
     */
   private[graft] def incrementalComponents(s: SparkSession, d: String,
       boundary: Long): DataFrame = {
-    graft.expressions.GraftExtensions.ensureRegistered(s)
     val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
       .cache()
     // yesterday's ledger: components over the OLD subgraph only

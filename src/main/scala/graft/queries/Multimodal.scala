@@ -409,7 +409,6 @@ object Multimodal {
         FROM u, (SELECT unnest([1, 5]) AS k) kk""")
       },
       (s: SparkSession, d: String) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         val towers = imageTowers(s, d)
           .withColumn("nm", expr(Portable.qnsqSpark("m")))
         val emb = Tables.load(s, d, "embeddings")

@@ -83,7 +83,7 @@ object PipelineQueries {
             col("l_extendedprice").as("fare_amount"),
             col("l_tax").as("tip_amount"),
             col("l_quantity").as("trip_distance"))
-          .write.mode("overwrite").parquet(s"${cat.silver}/cleaned")
+          .write.mode("overwrite").parquet(cat.silverCleaned)
         new graft.pipeline.Gold(s, cat).buildRevenueSummary()
           .select(col("payment_type"), col("month"), col("n_trips"),
             col("total_fare"), col("total_tips"), col("avg_distance"))

@@ -143,7 +143,6 @@ object Similarity {
     */
   private def quantized(s: SparkSession, d: String,
       withSig: Boolean): DataFrame = {
-    graft.expressions.GraftExtensions.ensureRegistered(s)
     val base = t(s, d, "embeddings")
       .select(col("vec_id"), expr(qvecSpark("embedding")).as("qv"))
       .withColumn("nsq", expr(qnsqSpark("qv")))
@@ -1575,7 +1574,6 @@ object Similarity {
             (n_matches = 0) AS admitted, dup_of, n_matches
           FROM g"""),
       (s, d) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         // ONE cell definition shared with the streaming twin — see
         // quantCell4's header.
         val c = quantCell4(t(s, d, "embeddings")).cache()
@@ -1928,7 +1926,6 @@ object Similarity {
             LEFT JOIN k1 ON k1.q_id = qs.q_id
             LEFT JOIN cm ON cm.q_id = qs.q_id"""),
       (s, d) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         val (en, a0, a1) = lloydAssigns(s, d)
         def leg(asg: DataFrame, cidCol: String): DataFrame = {
           val cells = asg.select(col("vec_id"), col(cidCol).as("cell"))
@@ -2026,7 +2023,6 @@ object Similarity {
         FROM r1 JOIN r2 USING (b_id)
         WHERE r2.a_top = r1.q_id"""),
       (s, d) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         val el = t(s, d, "embeddings")
           .select(col("vec_id"), col("label"),
             expr(qvecSpark("embedding")).as("qv"))
@@ -2273,7 +2269,6 @@ object Similarity {
             CAST(MAX(n) AS BIGINT) AS max_occupancy
           FROM occ GROUP BY 1"""),
       (s, d) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         quantized(s, d, withSig = true)
           .select(col("vec_id"), explode(expr(
             """transform(sequence(4, 20), dd ->
@@ -2330,7 +2325,6 @@ object Similarity {
             COALESCE(m.n_matches, 0) AS n_matches
           FROM c LEFT JOIN m ON m.vec_id = c.vec_id"""),
       (s, d) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         val sg = quantized(s, d, withSig = true)
         val leaf = trieLeafAdaptive(sg.select(col("vec_id"), col("sig")),
           CellOccupancy)
@@ -2509,7 +2503,6 @@ object Similarity {
           FROM sided s, agg, ev""")
       },
       (s, d) => {
-        graft.expressions.GraftExtensions.ensureRegistered(s)
         // q391's semantic pair relation (same leaf, cosine >= threshold)
         val spairs = semLeafPairs(s, d)
         // q393's component-hash sides, verbatim. Cached: the band join
@@ -2722,7 +2715,6 @@ object Similarity {
     */
   private[graft] def ivfElastic(s: SparkSession, d: String,
       quota: Int, ceiling: Int): DataFrame = {
-    graft.expressions.GraftExtensions.ensureRegistered(s)
     val c = celled(s, d).cache()
     val qs = c.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
@@ -2870,7 +2862,6 @@ object Similarity {
     */
   private def ivfServeFrames(s: SparkSession, d: String,
       occupancy: Int = IvfServeOccupancy): AnnFrames = {
-    graft.expressions.GraftExtensions.ensureRegistered(s)
     val sg = quantizedSigCut(s, d)
     val n = sg.agg(count(lit(1)).as("n_src"))
     val maxdCol = greatest(lit(IvfServeFloorDepth), least(lit(Planes),
@@ -3018,7 +3009,6 @@ object Similarity {
     */
   private[graft] def ivfCentroidServe(s: SparkSession, d: String,
       quota: Int, ceiling: Int): DataFrame = {
-    graft.expressions.GraftExtensions.ensureRegistered(s)
     val en = quantized(s, d, withSig = false)
     val nk = en.agg(count(lit(1)).as("n"))
       .select(col("n"),
@@ -3183,7 +3173,6 @@ object Similarity {
     * query composes.
     */
   private[graft] def semLeafPairs(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.GraftExtensions.ensureRegistered(s)
     // the self-join below would otherwise canonicalize the 48-plane sig
     // tree on BOTH sides
     val sg = quantizedSigCut(s, d)
@@ -3209,7 +3198,6 @@ object Similarity {
 
   private[graft] def trieLeafPairCandidates(s: SparkSession,
       d: String): DataFrame = {
-    graft.expressions.GraftExtensions.ensureRegistered(s)
     val sg = quantizedSigCut(s, d)
     val leaf = trieLeafAdaptive(sg.select(col("vec_id"), col("sig")),
       CellOccupancy)
@@ -3233,7 +3221,6 @@ object Similarity {
       qs: DataFrame, sigsRk: DataFrame)
 
   private def trieAnnFrames(s: SparkSession, d: String): AnnFrames = {
-    graft.expressions.GraftExtensions.ensureRegistered(s)
     val sg = quantizedSigCut(s, d)
     val sgk = sg.select(col("vec_id"), col("sig"))
     val leaves = trieLeafAdaptive(sgk, CellOccupancy)
@@ -3489,7 +3476,6 @@ object Similarity {
     */
   private[graft] def mmrSelect(s: SparkSession, d: String,
       k: Int): DataFrame = {
-    graft.expressions.GraftExtensions.ensureRegistered(s)
     val en = quantized(s, d, withSig = false)
     val qs = en.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),

@@ -134,11 +134,6 @@ object SemDedupStream {
     */
   val AdaptiveDepth: Int = -1
 
-  /** The q380 grain — the floor [[AdaptiveDepth]] resolves against, and
-    * a valid explicit `maxDepth` for callers pinning the legacy depth.
-    */
-  val DefaultMaxDepth = 12
-
   /** One cell member held in state. */
   final case class Entry(vec_id: Long, qv: Array[Long], nsq: Long)
 

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.pipeline.{Promote, ZoneCatalog}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming bronze→silver: the idiomatic Spark replacement for the
@@ -30,7 +29,6 @@ final class StreamingPromote(
     catalog: ZoneCatalog,
     checkpoint: String) {
 
-  def bronzePrefix: String = s"${catalog.bronze}/nyc_taxi"
   def silverTable: String = s"${catalog.silver}/cleaned_stream"
 
   private def cleanedStream(maxFilesPerTrigger: Option[Int]): DataFrame = {
@@ -38,11 +36,7 @@ final class StreamingPromote(
       .schema(graft.pipeline.TaxiSchema.schema)
     val withOpts = maxFilesPerTrigger
       .map(n => reader.option("maxFilesPerTrigger", n)).getOrElse(reader)
-    withOpts
-      .parquet(bronzePrefix)
-      .filter(col("payment_type").isNotNull
-        && col("fare_amount") >= 0
-        && col("tpep_pickup_datetime") < col("tpep_dropoff_datetime"))
+    Promote.clean(withOpts.parquet(catalog.bronzeTaxi))
   }
 
   private def start(df: DataFrame, trigger: Trigger): StreamingQuery =

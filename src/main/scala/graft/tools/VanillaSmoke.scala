@@ -2,10 +2,11 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool: prove the driver-contract entry points survive a VANILLA
-  * SparkSession (no GraftSession conf, no extensions) — the environment a
-  * harness-side t1 smoke might construct. The flagship must not depend on
-  * the nanosAsLong conf (events) or registered native functions.
+/** Prove the flagship `SparkEntry.entry` survives a VANILLA SparkSession
+  * (no GraftSession conf, no extensions) — the environment an outside
+  * smoke test might construct, and the only vanilla-session contract: q01
+  * must not depend on the nanosAsLong conf (events) or the native
+  * functions, which reach sessions only through GraftSession's extensions.
   */
 object VanillaSmoke {
   def main(args: Array[String]): Unit = {

@@ -1,6 +1,5 @@
 package graft
 
-import graft.expressions.GraftExtensions
 import graft.functions.Portable
 import org.apache.spark.sql.functions._
 
@@ -12,7 +11,6 @@ import org.apache.spark.sql.functions._
 class ExpressionsSpec extends SparkSpec {
 
   test("qcosine == interpreted qdot/sqrt formulation on real embeddings") {
-    GraftExtensions.ensureRegistered(spark)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), expr(Portable.qvecSpark("embedding")).as("qv"))
       .withColumn("nsq", expr(Portable.qnsqSpark("qv")))
@@ -30,7 +28,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("qcosine is null-safe and available in spark.sql") {
-    GraftExtensions.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT qcosine(array(1L, 0L), array(1L, 0L), 1L, 1L) AS same,
          qcosine(array(1L, 0L), array(0L, 1L), 1L, 1L) AS orth,
@@ -42,7 +39,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("sorted_intersect_count == size(array_intersect) on sorted sets") {
-    GraftExtensions.ensureRegistered(spark)
     import spark.implicits._
     val rng = new scala.util.Random(11)
     val rows = Seq.fill(300)((
@@ -64,7 +60,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("morton2 == naive bit interleave, and orders 2-D rectangles") {
-    GraftExtensions.ensureRegistered(spark)
     // Reference: place bit i of x at 2i and bit i of y at 2i+1, one bit
     // at a time — the semantics the shift-mask spread must reproduce.
     def naive(x: Long, y: Long): Long =
@@ -98,7 +93,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("jaro_winkler matches the oracle-pinned battery bit-for-bit") {
-    GraftExtensions.ensureRegistered(spark)
     // Values measured from the DuckDB oracle's jaro_winkler_similarity
     // (see JaroWinkler's scaladoc): they pin the match window, the
     // INTEGER transposition halving, the >0.7 boost gate, the prefix cap

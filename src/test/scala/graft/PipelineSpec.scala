@@ -79,7 +79,7 @@ class PipelineSpec extends SparkSpec {
     // Simulate the reference's §3.2 hazard: the silver write succeeds but
     // the process dies before log.mark — i.e. run the write only.
     val todo = promote.listBronze()
-    promote.clean(TaxiSchema.readTagged(spark, todo))
+    Promote.clean(TaxiSchema.readTagged(spark, todo))
       .write.mode("overwrite").partitionBy("src_id", "payment_type")
       .parquet(promote.silverTable)
     assert(promote.readSilver().count() == 2)
@@ -140,7 +140,7 @@ class PipelineSpec extends SparkSpec {
 
   test("promote: failure marks files Failed and rethrows") {
     val (cat, log, promote) = freshPipeline()
-    // a corrupt "parquet" file → TaxiSchema.read throws
+    // a corrupt "parquet" file → TaxiSchema.readTagged throws
     val dir = java.nio.file.Paths.get(s"${cat.bronze}/nyc_taxi")
     java.nio.file.Files.createDirectories(dir)
     java.nio.file.Files.writeString(dir.resolve("bad.parquet"), "not parquet")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming._
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -32,6 +33,32 @@ class StreamingSpec extends SparkSpec {
       .outputMode(mode).trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     spark.table(name)
+  }
+
+  /** One taxi trip in [[graft.pipeline.TaxiSchema.schema]] order. */
+  private def trip(paymentType: java.lang.Long, fare: Double,
+      dropoff: String = "10:30:00", distance: Double = 0.0): Row =
+    Row(1, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"),
+      java.sql.Timestamp.valueOf(s"2024-01-01 $dropoff"),
+      1L, distance, 1L, "N", 1, 1, paymentType,
+      fare, 0.0, 0.5, 1.0, 0.0, 0.3, 11.8, 2.5, 0.0)
+
+  /** Land `rows` as one bronze drop. Production bronze layout is flat
+    * parquet FILES (Ingest.ingestFile copies single objects): stage a
+    * Spark write, then move its part file.
+    */
+  private def land(cat: graft.pipeline.ZoneCatalog, name: String,
+      rows: Seq[Row]): Unit = {
+    val staging = tmpDir("graft-staging")
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1),
+      graft.pipeline.TaxiSchema.schema)
+      .write.mode("overwrite").parquet(s"$staging/out")
+    val part = new java.io.File(s"$staging/out").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val dst = java.nio.file.Paths.get(s"${cat.bronzeTaxi}/$name")
+    java.nio.file.Files.createDirectories(dst.getParent)
+    java.nio.file.Files.move(part.toPath, dst)
   }
 
   test("tumbling window: streaming append == batch, up to the watermark") {
@@ -272,30 +299,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming promote: checkpoint processes each file exactly once") {
-    import org.apache.spark.sql.{Row, types => T}
     val cat = graft.pipeline.ZoneCatalog(tmpDir("graft-spromote"))
     val sp = new StreamingPromote(spark, cat, tmpDir("graft-ckpt"))
-
-    // Production bronze layout is flat parquet FILES (Ingest.ingestFile
-    // copies single objects): stage a Spark write, then move its part file.
-    def writeTrips(name: String, n: Int): Unit = {
-      val rows = (1 to n).map { i =>
-        Row(1, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"),
-          java.sql.Timestamp.valueOf("2024-01-01 10:30:00"),
-          1L, 0.0, 1L, "N", 1, 1, (i % 3 + 1).toLong,
-          10.0, 0.0, 0.5, 1.0, 0.0, 0.3, 11.8, 2.5, 0.0)
-      }
-      val staging = tmpDir("graft-staging")
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        graft.pipeline.TaxiSchema.schema)
-        .write.mode("overwrite").parquet(s"$staging/out")
-      val part = new java.io.File(s"$staging/out").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = java.nio.file.Paths.get(s"${cat.bronze}/nyc_taxi/$name")
-      java.nio.file.Files.createDirectories(dst.getParent)
-      java.nio.file.Files.move(part.toPath, dst)
-    }
+    def writeTrips(name: String, n: Int): Unit =
+      land(cat, name, (1 to n).map(i => trip((i % 3 + 1).toLong, 10.0)))
 
     writeTrips("f1.parquet", 4)
     sp.runAvailableNow()
@@ -308,26 +315,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming promote: maxFilesPerTrigger batches files (debounce analog)") {
-    import org.apache.spark.sql.Row
     val cat = graft.pipeline.ZoneCatalog(tmpDir("graft-sbatch"))
     val ckpt = tmpDir("graft-sbatch-ckpt")
     val sp = new StreamingPromote(spark, cat, ckpt)
-    def oneTrip(name: String): Unit = {
-      val staging = tmpDir("graft-sbatch-stage")
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(Row(1,
-          java.sql.Timestamp.valueOf("2024-01-01 10:00:00"),
-          java.sql.Timestamp.valueOf("2024-01-01 10:30:00"),
-          1L, 0.0, 1L, "N", 1, 1, 1L,
-          10.0, 0.0, 0.5, 1.0, 0.0, 0.3, 11.8, 2.5, 0.0)), 1),
-        graft.pipeline.TaxiSchema.schema)
-        .write.mode("overwrite").parquet(s"$staging/out")
-      val part = new java.io.File(s"$staging/out").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = java.nio.file.Paths.get(s"${cat.bronze}/nyc_taxi/$name")
-      java.nio.file.Files.createDirectories(dst.getParent)
-      java.nio.file.Files.move(part.toPath, dst)
-    }
+    def oneTrip(name: String): Unit = land(cat, name, Seq(trip(1L, 10.0)))
     oneTrip("a.parquet"); oneTrip("b.parquet"); oneTrip("c.parquet")
     sp.runAvailableNow(maxFilesPerTrigger = Some(1))
     assert(spark.read.parquet(sp.silverTable).count() == 3)
@@ -338,26 +329,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming promote: processing-time daemon bounds every batch") {
-    import org.apache.spark.sql.Row
     val cat = graft.pipeline.ZoneCatalog(tmpDir("graft-sdaemon"))
     val ckpt = tmpDir("graft-sdaemon-ckpt")
     val sp = new StreamingPromote(spark, cat, ckpt)
-    def oneTrip(name: String): Unit = {
-      val staging = tmpDir("graft-sdaemon-stage")
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(Row(1,
-          java.sql.Timestamp.valueOf("2024-01-01 10:00:00"),
-          java.sql.Timestamp.valueOf("2024-01-01 10:30:00"),
-          1L, 0.0, 1L, "N", 1, 1, 1L,
-          10.0, 0.0, 0.5, 1.0, 0.0, 0.3, 11.8, 2.5, 0.0)), 1),
-        graft.pipeline.TaxiSchema.schema)
-        .write.mode("overwrite").parquet(s"$staging/out")
-      val part = new java.io.File(s"$staging/out").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = java.nio.file.Paths.get(s"${cat.bronze}/nyc_taxi/$name")
-      java.nio.file.Files.createDirectories(dst.getParent)
-      java.nio.file.Files.move(part.toPath, dst)
-    }
+    def oneTrip(name: String): Unit = land(cat, name, Seq(trip(1L, 10.0)))
     (1 to 4).foreach(i => oneTrip(s"d$i.parquet"))
     // Long-running form: the caller owns the query; a short interval keeps
     // the test fast while the file cap does the rate limiting.
@@ -373,6 +348,31 @@ class StreamingSpec extends SparkSpec {
         s"every batch must respect maxFilesPerTrigger: ${perBatch.mkString(",")}")
       assert(perBatch.sum == 4)
     } finally q.stop()
+  }
+
+  test("streaming promote applies the batch clean rule") {
+    val cat = graft.pipeline.ZoneCatalog(tmpDir("graft-sclean"))
+    // trip_distance is the row id: 1-3 are valid (a zero fare and a
+    // one-second trip sit on the rules' edges), 4-6 each break one rule.
+    land(cat, "drop.parquet", Seq(
+      trip(1L, 10.0, distance = 1),
+      trip(2L, 0.0, distance = 2),
+      trip(3L, 7.5, dropoff = "10:00:01", distance = 3),
+      trip(null, 10.0, distance = 4),                      // no payment_type
+      trip(1L, -0.5, distance = 5),                        // negative fare
+      trip(2L, 10.0, dropoff = "10:00:00", distance = 6))) // zero duration
+    val sp = new StreamingPromote(spark, cat, tmpDir("graft-sclean-ckpt"))
+    sp.runAvailableNow()
+    val promote = new graft.pipeline.Promote(spark, cat,
+      new graft.pipeline.ProcessedLog(spark, s"${cat.state}/processed_log",
+        graft.pipeline.SystemClock))
+    assert(promote.run().size == 1)
+    def ids(table: String): Seq[Double] =
+      spark.read.parquet(table).select("trip_distance").collect()
+        .map(_.getDouble(0)).sorted.toSeq
+    assert(ids(sp.silverTable) == Seq(1.0, 2.0, 3.0),
+      "the stream must drop exactly the rows the batch clean rule drops")
+    assert(ids(promote.silverTable) == Seq(1.0, 2.0, 3.0))
   }
 
   test("snapshot upsert: streaming MERGE == batch latest-wins; replay of " +
@@ -740,7 +740,6 @@ class StreamingSpec extends SparkSpec {
       "batch new x new recomputation") {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.expressions.GraftExtensions.ensureRegistered(spark)
     val sfDir = "/root/testdata/sf0.001"
     // batch reference: q354's (vec_id, cell, admitted, dup_of, n_matches)
     val ref = queries.Registry.byName("q354_incremental_semdedup")
@@ -828,7 +827,6 @@ class StreamingSpec extends SparkSpec {
       "recomputation") {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.expressions.GraftExtensions.ensureRegistered(spark)
     val sfDir = "/root/testdata/sf0.001"
     val all = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -950,7 +948,6 @@ class StreamingSpec extends SparkSpec {
       "bounded, later arrivals still verify against the cap exemplars") {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.expressions.GraftExtensions.ensureRegistered(spark)
     // 120 near-identical vectors (same base + tiny id-proportional nudge
     // on one coordinate): all share every sign prefix, i.e. ONE hot
     // depth-12 storage cell — the adversarial shape whose state grew
@@ -1002,7 +999,6 @@ class StreamingSpec extends SparkSpec {
       "saturated cell the admission divergence is the measured trade") {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.expressions.GraftExtensions.ensureRegistered(spark)
     val cap = 8
     val dims = 64
     val threshold = queries.Similarity.SemThreshold // 0.4

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# All three gates in one run (mirrors the driver's t1/t2/bench):
+# Every gate in one run (tests, doc counts, oracle check, vanilla smoke, bench):
 #   bash tools/gate.sh
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -15,6 +15,9 @@ SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_verify" \
   2>&1 | grep -E '\[verify\]' || true
 python3 tools/check.py /root/testdata/sf0.01 /tmp/gate_verify | tail -1
+
+echo "== gate 2b: flagship under a vanilla session (no graft extensions)"
+sbt -batch "runMain graft.tools.VanillaSmoke" 2>&1 | grep -E '\[vanilla-smoke\]'
 
 echo "== gate 3: bench (sf0.1)"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
