@@ -16,7 +16,9 @@ package graft.functions
   * Every builder returns a SQL string for one engine; callers interpolate
   * the same Scala constants into both, so the two sides can't drift.
   *
-  * The token-array fingerprints come in the same pairs:
+  * Every text query tokenizes with [[toksSpark]] / [[toksDuck]] and
+  * builds word n-grams (shingles, bigrams) with [[ngramsSpark]] /
+  * [[ngramsDuck]]. The token-array fingerprints come in the same pairs:
   *
   *  - set fingerprint ([[setFpSpark]] / [[setFpDuck]]): md5 of the sorted
   *    distinct tokens joined by single spaces — the exact-dedup key of
@@ -78,6 +80,38 @@ object Portable {
   /** Exact dot — DuckDB side. */
   def qdotDuck(a: String, b: String, dims: Int): String =
     s"CAST(list_sum([$a[i] * $b[i] for i in range(1, ${dims + 1})]) AS BIGINT)"
+
+  // ---- tokens and word n-grams --------------------------------------------
+
+  /** Token array of a text expression — Spark side: lowercase, split on
+    * single spaces, empty tokens kept (callers that drop them filter).
+    */
+  def toksSpark(e: String): String = s"split(lower($e), ' ')"
+
+  /** Token array of a text expression — DuckDB side. */
+  def toksDuck(e: String): String = s"string_split(lower($e), ' ')"
+
+  /** Word `n`-grams of token array `t` — Spark side: entry i = 0 ..
+    * size(t) - n is `wrap` of tokens [i, i + n) joined by single spaces.
+    * Requires size(t) >= n: for a shorter array `sequence(0, size(t) - n)`
+    * counts down instead of coming out empty, so callers filter first.
+    */
+  def ngramsSpark(t: String, n: Int,
+      wrap: String => String = identity): String = {
+    val gram = (0 until n).map(j => if (j == 0) s"$t[i]" else s"$t[i+$j]")
+    s"transform(sequence(0, size($t) - $n), " +
+      s"i -> ${wrap(gram.mkString("concat_ws(' ', ", ", ", ")"))})"
+  }
+
+  /** Word `n`-grams — DuckDB side (1-indexed): the same entries in the
+    * same order as [[ngramsSpark]].
+    */
+  def ngramsDuck(t: String, n: Int,
+      wrap: String => String = identity): String = {
+    val gram = (0 until n).map(j => if (j == 0) s"$t[i]" else s"$t[i+$j]")
+    s"[${wrap(gram.mkString(" || ' ' || "))} " +
+      s"for i in range(1, len($t) - $n + 2)]"
+  }
 
   // ---- token-array fingerprints -------------------------------------------
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
+import graft.functions.Portable.{toksSpark, toksDuck, ngramsSpark, ngramsDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,8 +39,7 @@ object Corpus {
     */
   private[graft] def bm25Scores(s: SparkSession, d: String): DataFrame = {
     val tok = t(s, d, "documents")
-      .select(col("doc_id"),
-        explode(split(lower(col("text")), " ")).as("term"))
+      .select(col("doc_id"), explode(expr(toksSpark("text"))).as("term"))
     val dl = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
     val g = dl.agg(count(lit(1)).as("n"),
       sum(col("dl")).cast("long").as("t"))
@@ -69,8 +69,7 @@ object Corpus {
     */
   private[graft] val bm25DuckCte: String = {
     val inList = Bm25Terms.map(t => s"'$t'").mkString(", ")
-    s"""tok AS (SELECT doc_id,
-          unnest(string_split(lower(text), ' ')) AS term
+    s"""tok AS (SELECT doc_id, unnest(${toksDuck("text")}) AS term
         FROM documents),
       dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl
         FROM tok GROUP BY 1),
@@ -117,8 +116,7 @@ object Corpus {
     // tf·N caps int64 through ~9e12 docs × 1e6 tf.
     QuerySpec(
       "q145_tfidf",
-      Some("""WITH tok AS (SELECT doc_id,
-            unnest(string_split(lower(text), ' ')) AS term
+      Some(s"""WITH tok AS (SELECT doc_id, unnest(${toksDuck("text")}) AS term
           FROM documents),
         tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
           FROM tok GROUP BY 1, 2),
@@ -135,8 +133,7 @@ object Corpus {
       (s, d) => {
         val docs = t(s, d, "documents")
         val tf = docs
-          .select(col("doc_id"),
-            explode(split(lower(col("text")), " ")).as("term"))
+          .select(col("doc_id"), explode(expr(toksSpark("text"))).as("term"))
           .groupBy(col("doc_id"), col("term"))
           .agg(count(lit(1)).as("tf"))
         val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -184,11 +181,9 @@ object Corpus {
     // this plan already does.
     QuerySpec(
       "q149_bigrams",
-      Some("""WITH tok AS (SELECT doc_id, string_split(lower(text), ' ')
+      Some(s"""WITH tok AS (SELECT doc_id, ${toksDuck("text")}
             AS toks FROM documents),
-        bg AS (SELECT doc_id,
-            unnest([toks[i] || ' ' || toks[i+1]
-                    for i in range(1, len(toks))]) AS bigram
+        bg AS (SELECT doc_id, unnest(${ngramsDuck("toks", 2)}) AS bigram
           FROM tok WHERE len(toks) >= 2),
         pre AS (SELECT bigram, doc_id, CAST(COUNT(*) AS BIGINT) AS c
           FROM bg GROUP BY 1, 2)
@@ -198,12 +193,10 @@ object Corpus {
         ORDER BY n_occurrences DESC, bigram LIMIT 20"""),
       (s, d) =>
         t(s, d, "documents")
-          .withColumn("toks", split(lower(col("text")), " "))
+          .withColumn("toks", expr(toksSpark("text")))
           .filter(size(col("toks")) >= 2)
-          .select(col("doc_id"), explode(expr(
-            """transform(sequence(0, size(toks) - 2),
-               i -> concat(element_at(toks, i + 1), ' ',
-                           element_at(toks, i + 2)))""")).as("bigram"))
+          .select(col("doc_id"),
+            explode(expr(ngramsSpark("toks", 2))).as("bigram"))
           // two-level aggregate: (bigram, doc) partials collapse map-side
           // before the distinct count — the same pre-aggregate a 100 TB
           // run needs so no executor ever holds a doc-id set
@@ -340,8 +333,7 @@ object Corpus {
     // oov_rate is one int64->double divide.
     QuerySpec(
       "q158_oov_rate",
-      Some(s"""WITH tok AS (SELECT source,
-            unnest(string_split(lower(text), ' ')) AS term
+      Some(s"""WITH tok AS (SELECT source, unnest(${toksDuck("text")}) AS term
           FROM documents),
         tc AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS n
           FROM tok GROUP BY 1),
@@ -360,8 +352,7 @@ object Corpus {
               FROM oov GROUP BY 1) o ON o.source = s.source"""),
       (s, d) => {
         val tok = t(s, d, "documents")
-          .select(col("source"),
-            explode(split(lower(col("text")), " ")).as("term"))
+          .select(col("source"), explode(expr(toksSpark("text"))).as("term"))
         val st = tok.groupBy(col("source"), col("term"))
           .agg(count(lit(1)).as("n"))
           .cache() // vocab ranking, totals, and the oov branch all reuse it
@@ -468,11 +459,10 @@ object Corpus {
     // int64->double divide against the left source's chunk count.
     QuerySpec(
       "q171_source_overlap",
-      Some("""WITH tok AS (SELECT source, string_split(lower(text), ' ')
+      Some(s"""WITH tok AS (SELECT source, ${toksDuck("text")}
             AS toks FROM documents),
         ch AS (SELECT DISTINCT source,
-            md5(unnest([array_to_string(toks[i:i+4], ' ')
-                        for i in range(1, len(toks) - 3)])) AS fp
+            unnest(${ngramsDuck("toks", 5, e => s"md5($e)")}) AS fp
           FROM tok WHERE len(toks) >= 5),
         sz AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_chunks
           FROM ch GROUP BY 1),
@@ -486,11 +476,10 @@ object Corpus {
         FROM ov JOIN sz ON sz.source = ov.src_a"""),
       (s, d) => {
         val ch = t(s, d, "documents")
-          .withColumn("toks", split(lower(col("text")), " "))
+          .withColumn("toks", expr(toksSpark("text")))
           .filter(size(col("toks")) >= 5)
-          .select(col("source"), explode(expr(
-            """transform(sequence(1, size(toks) - 4),
-               i -> md5(concat_ws(' ', slice(toks, i, 5))))""")).as("fp"))
+          .select(col("source"),
+            explode(expr(ngramsSpark("toks", 5, e => s"md5($e)"))).as("fp"))
           .distinct()
           .cache() // feeds sizes AND both sides of the fingerprint join
         val sz = ch.groupBy(col("source")).agg(count(lit(1)).as("n_chunks"))
@@ -557,8 +546,7 @@ object Corpus {
     // document-frequency pass runs.
     QuerySpec(
       "q196_feature_hash",
-      Some(s"""WITH tok AS (SELECT doc_id,
-            unnest(string_split(lower(text), ' ')) AS term
+      Some(s"""WITH tok AS (SELECT doc_id, unnest(${toksDuck("text")}) AS term
           FROM documents)
         SELECT ${Portable.h64Duck("'feat:' || term")} % 256 AS bucket,
           CAST(COUNT(*) AS BIGINT) AS n_tokens,
@@ -568,8 +556,7 @@ object Corpus {
         FROM tok GROUP BY 1"""),
       (s, d) => {
         t(s, d, "documents")
-          .select(col("doc_id"),
-            explode(split(lower(col("text")), " ")).as("term"))
+          .select(col("doc_id"), explode(expr(toksSpark("text"))).as("term"))
           .groupBy((expr(Portable.h64Spark("concat('feat:', term)")) % 256)
             .as("bucket"))
           .agg(count(lit(1)).as("n_tokens"),
@@ -625,8 +612,7 @@ object Corpus {
     // variant of a common term" signal a normalizer acts on.
     QuerySpec(
       "q211_spell_candidates",
-      Some("""WITH tok AS (SELECT doc_id,
-            unnest(string_split(lower(text), ' ')) AS term
+      Some(s"""WITH tok AS (SELECT doc_id, unnest(${toksDuck("text")}) AS term
           FROM documents),
         vocab AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
           FROM tok WHERE length(term) BETWEEN 2 AND 24 GROUP BY 1),
@@ -652,7 +638,7 @@ object Corpus {
         FROM cand WHERE levenshtein(term_a, term_b) <= 2"""),
       (s, d) => {
         val vocab = t(s, d, "documents")
-          .select(explode(split(lower(col("text")), " ")).as("term"))
+          .select(explode(expr(toksSpark("text"))).as("term"))
           .filter(length(col("term")).between(2, 24))
           .groupBy(col("term")).agg(count(lit(1)).as("df"))
         // (p, q) deletion-position pairs: (0,0) identity, (0,q) single
@@ -707,11 +693,10 @@ object Corpus {
     // list (already sparsified by the floor).
     QuerySpec(
       "q221_pmi_collocations",
-      Some("""WITH tok AS (SELECT u.t AS term, u.i AS i, doc_id FROM (
+      Some(s"""WITH tok AS (SELECT u.t AS term, u.i AS i, doc_id FROM (
             SELECT doc_id, unnest([{'t': t[i], 'i': i}
                 for i in range(1, len(t) + 1)]) AS u
-            FROM (SELECT doc_id, string_split(lower(text), ' ') AS t
-              FROM documents) z) y),
+            FROM (SELECT doc_id, ${toksDuck("text")} AS t FROM documents) z) y),
         uni AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS c
           FROM tok GROUP BY 1),
         nn AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM uni),
@@ -734,7 +719,7 @@ object Corpus {
         FROM sc ORDER BY ratio DESC, term_a, term_b LIMIT 50"""),
       (s, d) => {
         val tok = t(s, d, "documents")
-          .withColumn("t", split(lower(col("text")), " "))
+          .withColumn("t", expr(toksSpark("text")))
           .select(col("doc_id"), posexplode(col("t")).as(Seq("i", "term")))
         val uni = tok.groupBy(col("term")).agg(count(lit(1)).as("c"))
         val nn = uni.agg(sum(col("c")).cast("long").as("n"))
@@ -778,14 +763,12 @@ object Corpus {
     // block-grain aggregate (GuardSpec's group-grain rule).
     QuerySpec(
       "q340_vocab_growth",
-      Some("""WITH dt AS (SELECT doc_id,
-            list_filter(string_split(lower(text), ' '), x -> x <> '')
+      Some(s"""WITH dt AS (SELECT doc_id,
+            list_filter(${toksDuck("text")}, x -> x <> '')
               AS t
           FROM documents),
         tk AS (SELECT doc_id, unnest(t) AS term FROM dt),
-        g3 AS (SELECT doc_id,
-            unnest([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-              for i in range(1, len(t) - 1)]) AS gram
+        g3 AS (SELECT doc_id, unnest(${ngramsDuck("t", 3)}) AS gram
           FROM dt WHERE len(t) >= 3),
         nb AS (SELECT fd // 50 AS g, CAST(COUNT(*) AS BIGINT) AS n_new
           FROM (SELECT term, MIN(doc_id) AS fd FROM tk GROUP BY term) z
@@ -808,12 +791,10 @@ object Corpus {
       (s, d) => {
         val dt = t(s, d, "documents")
           .select(col("doc_id"),
-            filter(split(lower(col("text")), " "), x => x =!= "").as("t"))
+            filter(expr(toksSpark("text")), x => x =!= "").as("t"))
         val tk = dt.select(col("doc_id"), explode(col("t")).as("term"))
         val g3 = dt.filter(size(col("t")) >= 3)
-          .select(col("doc_id"), explode(expr(
-            "transform(sequence(0, size(t) - 3), " +
-              "i -> concat_ws(' ', t[i], t[i+1], t[i+2]))")).as("gram"))
+          .select(col("doc_id"), explode(expr(ngramsSpark("t", 3))).as("gram"))
         val nb = tk.groupBy(col("term")).agg(min(col("doc_id")).as("fd"))
           .groupBy(expr("fd div 50").as("g"))
           .agg(count(lit(1)).as("n_new"))

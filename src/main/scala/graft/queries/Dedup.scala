@@ -3,7 +3,8 @@ package graft.queries
 import graft.Tables
 import graft.functions.Exact
 import graft.functions.Portable.{h64Spark, h64Duck, P, chunkFpSpark,
-  chunkFpDuck, setFpSpark, setFpDuck}
+  chunkFpDuck, setFpSpark, setFpDuck, toksSpark, toksDuck, ngramsSpark,
+  ngramsDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -91,8 +92,8 @@ object Dedup {
   /** q40's normalized content fingerprint of `text` (the set fingerprint
     * of its lowercased space-split tokens), one per engine.
     */
-  private val textFp = expr(setFpSpark("split(lower(text), ' ')"))
-  private val textFpDuck = setFpDuck("string_split(lower(text), ' ')")
+  private val textFp = expr(setFpSpark(toksSpark("text")))
+  private val textFpDuck = setFpDuck(toksDuck("text"))
 
   /** Word 3-gram shingle hash set, SORTED ascending — order is invisible
     * to minhash/bands/set-cardinality but lets the verify intersection run
@@ -100,13 +101,11 @@ object Dedup {
     * arrays are 0-indexed.
     */
   private val shinglesSpark =
-    "array_sort(array_distinct(transform(sequence(0, size(toks)-3), " +
-      s"i -> ${h64Spark("concat_ws(' ', toks[i], toks[i+1], toks[i+2])")})))"
+    s"array_sort(array_distinct(${ngramsSpark("toks", 3, h64Spark)}))"
 
   /** DuckDB mirror (1-indexed lists; range(a,b) = [a, b)). */
   private val shinglesDuck =
-    s"list_distinct([${h64Duck("toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]")} " +
-      "for i in range(1, len(toks)-1)])"
+    s"list_distinct(${ngramsDuck("toks", 3, h64Duck)})"
 
   /** Minhash k over the shingle hash set: pure integer arithmetic. */
   private def minhashSpark(k: Int): String = {
@@ -162,8 +161,7 @@ object Dedup {
     */
   private def simhashSigDuckCte: String =
     s"""docs AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS toks
-        FROM documents),
+        SELECT doc_id, ${toksDuck("text")} AS toks FROM documents),
       ths AS (SELECT doc_id,
           [${h64Duck("t")} for t in toks] AS ths FROM docs),
       sim AS (SELECT doc_id,
@@ -260,7 +258,7 @@ object Dedup {
     */
   private[graft] def withShingles(docs: DataFrame): DataFrame =
     docs
-      .withColumn("toks", split(lower(col("text")), " "))
+      .withColumn("toks", expr(toksSpark("text")))
       .filter(size(col("toks")) >= 3)
       .withColumn("shingles", expr(shinglesSpark))
 
@@ -280,8 +278,7 @@ object Dedup {
 
   private val shingledDuckCte =
     s"""docs AS (
-         SELECT doc_id, string_split(lower(text), ' ') AS toks
-         FROM documents),
+         SELECT doc_id, ${toksDuck("text")} AS toks FROM documents),
        sh AS (
          SELECT doc_id, $shinglesDuck AS shingles
          FROM docs WHERE len(toks) >= 3)"""
@@ -305,11 +302,9 @@ object Dedup {
   private[graft] def winnowedPrints(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
       .select(col("doc_id"), col("text"))
-      .withColumn("toks", split(lower(col("text")), " "))
+      .withColumn("toks", expr(toksSpark("text")))
       .filter(size(col("toks")) >= 3)
-      .withColumn("hs", expr("transform(sequence(0, size(toks)-3), " +
-        s"""i -> ${h64Spark(
-          "concat_ws(' ', toks[i], toks[i+1], toks[i+2])")})"""))
+      .withColumn("hs", expr(ngramsSpark("toks", 3, h64Spark)))
       .select(col("doc_id"), size(col("hs")).cast("long").as("n_grams"),
         explode(expr(
           """array_distinct(transform(
@@ -327,11 +322,8 @@ object Dedup {
     */
   private val winnowDuckCtes: String =
     s"""tk AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS toks
-        FROM documents),
-      hsd AS (SELECT doc_id,
-          [${h64Duck("toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]")}
-            for i in range(1, len(toks)-1)] AS hs
+        SELECT doc_id, ${toksDuck("text")} AS toks FROM documents),
+      hsd AS (SELECT doc_id, ${ngramsDuck("toks", 3, h64Duck)} AS hs
         FROM tk WHERE len(toks) >= 3),
       hm AS (SELECT doc_id, hs, len(hs) AS m FROM hsd),
       js AS (SELECT doc_id, hs, m,
@@ -382,8 +374,7 @@ object Dedup {
   private[graft] def simhashSignatures(s: SparkSession,
       d: String): DataFrame = {
     t(s, d, "documents")
-      .select(col("doc_id"),
-        explode(split(lower(col("text")), " ")).as("tok"))
+      .select(col("doc_id"), explode(expr(toksSpark("text"))).as("tok"))
       .select(col("doc_id"), expr(h64Spark("tok")).as("h"))
       .groupBy(col("doc_id"))
       .agg(expr("simhash_sig(h)").as("sig"))
@@ -647,7 +638,7 @@ object Dedup {
     * fingerprint. Emits (doc_id, n_chunks, n_kept).
     */
   private def chunkProfile(docs: DataFrame): DataFrame =
-    docs.withColumn("t", split(lower(col("text")), " "))
+    docs.withColumn("t", expr(toksSpark("text")))
       .select(col("doc_id"),
         posexplode(expr(chunkFpSpark("t", "10"))).as(Seq("pos", "fp")))
       .withColumn("rk", row_number().over(
@@ -827,8 +818,7 @@ object Dedup {
     QuerySpec(
       "q49_chunk_dedup",
       Some(s"""WITH d AS (
-          SELECT doc_id, string_split(lower(text), ' ') AS t
-          FROM documents)
+          SELECT doc_id, ${toksDuck("text")} AS t FROM documents)
         ${chunkProfileDuck("d")}"""),
       (s, d) => chunkProfile(t(s, d, "documents"))),
 
@@ -1432,8 +1422,7 @@ object Dedup {
     QuerySpec(
       "q212_shared_span",
       Some(s"""WITH d AS (
-          SELECT doc_id, string_split(lower(text), ' ') AS t
-          FROM documents),
+          SELECT doc_id, ${toksDuck("text")} AS t FROM documents),
         ch AS (SELECT doc_id, u.pos AS pos, u.fp AS fp FROM (
             SELECT doc_id, unnest(${chunkFpDuck("t", "10")}) AS u
             FROM d) z),
@@ -1456,7 +1445,7 @@ object Dedup {
         FROM runs GROUP BY 1, 2 HAVING MAX(run_len) >= 2"""),
       (s, d) => {
         val ch = t(s, d, "documents")
-          .withColumn("t", split(lower(col("text")), " "))
+          .withColumn("t", expr(toksSpark("text")))
           .select(col("doc_id"), posexplode(expr(chunkFpSpark("t", "10")))
             .as(Seq("pos", "fp")))
           .cache() // feeds the df cap AND both pair sides
@@ -1498,8 +1487,8 @@ object Dedup {
     QuerySpec(
       "q219_winnowing",
       Some(s"""WITH d AS (SELECT doc_id,
-            string_split(lower(text), ' ') AS t
-          FROM documents WHERE len(string_split(lower(text), ' ')) >= 3),
+            ${toksDuck("text")} AS t
+          FROM documents WHERE len(${toksDuck("text")}) >= 3),
         g AS (SELECT doc_id, u.pos AS pos, u.h AS h FROM (
             SELECT doc_id, unnest([{'pos': i,
                 'h': ${h64Duck("array_to_string(t[(i+1):(i+3)], ' ')")}}
@@ -1534,12 +1523,10 @@ object Dedup {
         FROM sel GROUP BY 1"""),
       (s, d) => {
         val g = t(s, d, "documents")
-          .withColumn("t", split(lower(col("text")), " "))
+          .withColumn("t", expr(toksSpark("text")))
           .filter(size(col("t")) >= 3)
-          .select(col("doc_id"), posexplode(expr(
-            "transform(sequence(0, size(t) - 3), i -> " +
-              h64Spark("concat_ws(' ', t[i], t[i+1], t[i+2])") + ")"))
-            .as(Seq("pos", "h")))
+          .select(col("doc_id"),
+            posexplode(expr(ngramsSpark("t", 3, h64Spark))).as(Seq("pos", "h")))
         val wd = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
         def fmin(a: Int, b: Int) = min(col("h")).over(wd.rowsBetween(a, b))
         val sel = g
@@ -1586,8 +1573,7 @@ object Dedup {
     QuerySpec(
       "q332_dup_substring_mass",
       Some(s"""WITH dd AS (
-          SELECT doc_id, string_split(lower(text), ' ') AS t
-          FROM documents),
+          SELECT doc_id, ${toksDuck("text")} AS t FROM documents),
         ch AS (SELECT doc_id, nt, u.fp AS fp, u.ln AS ln FROM (
             SELECT doc_id, len(t) AS nt,
               unnest(${chunkFpDuck("t", "10")}) AS u
@@ -1605,7 +1591,7 @@ object Dedup {
         FROM pd GROUP BY 1"""),
       (s, d) => {
         val ch = t(s, d, "documents")
-          .withColumn("t", split(lower(col("text")), " "))
+          .withColumn("t", expr(toksSpark("text")))
           .select(col("doc_id"), size(col("t")).cast("long").as("nt"),
             posexplode(expr(chunkFpSpark("t", "10", ln = true)))
               .as(Seq("pos", "c")))
@@ -1983,7 +1969,7 @@ object Dedup {
           SELECT doc_id, unnest([
             {'grain': '1_raw', 'fp': md5(text)},
             {'grain': '2_bag', 'fp': md5(array_to_string(
-              list_sort(string_split(lower(text), ' ')), ' '))},
+              list_sort(${toksDuck("text")}), ' '))},
             {'grain': '3_set', 'fp': $textFpDuck}]) AS u
           FROM documents) z),
         cl AS (SELECT grain, fp, COUNT(*) AS n FROM g GROUP BY 1, 2)
@@ -2000,7 +1986,7 @@ object Dedup {
           .select(col("doc_id"), explode(map(
             lit("1_raw"), md5(col("text")),
             lit("2_bag"), md5(array_join(
-              array_sort(split(lower(col("text")), " ")), " ")),
+              array_sort(expr(toksSpark("text"))), " ")),
             lit("3_set"), textFp)).as(Seq("grain", "fp")))
           .groupBy(col("grain"), col("fp"))
           .agg(count(lit(1)).as("n"))
@@ -2177,8 +2163,7 @@ object Dedup {
     QuerySpec(
       "q379_dup_mass_curve",
       Some(s"""WITH dd AS (
-          SELECT doc_id, string_split(lower(text), ' ') AS t
-          FROM documents),
+          SELECT doc_id, ${toksDuck("text")} AS t FROM documents),
         kk AS (SELECT unnest([10, 20, 40]) AS k),
         ch AS (SELECT doc_id, k, nt, u.fp AS fp, u.ln AS ln FROM (
             SELECT doc_id, k, len(t) AS nt,
@@ -2198,7 +2183,7 @@ object Dedup {
         FROM pd GROUP BY 1, 2"""),
       (s, d) => {
         val ch = t(s, d, "documents")
-          .withColumn("t", split(lower(col("text")), " "))
+          .withColumn("t", expr(toksSpark("text")))
           .select(col("doc_id"), size(col("t")).cast("long").as("nt"),
             explode(expr("flatten(transform(array(10, 20, 40), k -> " +
               chunkFpSpark("t", "k", ln = true, lead = Seq("k AS k")) + "))"))
@@ -2255,11 +2240,11 @@ object Dedup {
           s1 AS (SELECT doc_id FROM (SELECT doc_id,
               MIN(doc_id) OVER (PARTITION BY fpn) AS rep FROM s1fp) z
             WHERE doc_id = rep),
-          d2 AS (SELECT d.doc_id, string_split(lower(d.text), ' ') AS t
+          d2 AS (SELECT d.doc_id, ${toksDuck("d.text")} AS t
             FROM documents d JOIN s1 ON s1.doc_id = d.doc_id),
           prof AS (${chunkProfileDuck("d2")}),
           s2 AS (SELECT doc_id FROM prof WHERE n_kept * 2 >= n_chunks),
-          docs AS (SELECT d.doc_id, string_split(lower(d.text), ' ') AS toks
+          docs AS (SELECT d.doc_id, ${toksDuck("d.text")} AS toks
             FROM documents d JOIN s2 ON s2.doc_id = d.doc_id),
           sh AS (SELECT doc_id, $shinglesDuck AS shingles
             FROM docs WHERE len(toks) >= 3),
@@ -2361,9 +2346,9 @@ object Dedup {
           fpo AS (SELECT DISTINCT $textFpDuck AS fpv FROM oldd),
           g1 AS (SELECT doc_id FROM fpn
             WHERE EXISTS (SELECT 1 FROM fpo WHERE fpo.fpv = fpn.fpv)),
-          tn AS (SELECT doc_id, string_split(lower(text), ' ') AS t
+          tn AS (SELECT doc_id, ${toksDuck("text")} AS t
             FROM newd),
-          to2 AS (SELECT doc_id, string_split(lower(text), ' ') AS t
+          to2 AS (SELECT doc_id, ${toksDuck("text")} AS t
             FROM oldd),
           cn2 AS (SELECT doc_id, u.fp AS cfp FROM (
               SELECT doc_id, unnest(${chunkFpDuck("t", "10")}) AS u
@@ -2423,7 +2408,7 @@ object Dedup {
         // gate 2 — majority of chunks already known to the corpus (q49's
         // grain, corpus-membership form)
         def chunksOf(df: DataFrame) = df
-          .withColumn("t", split(lower(col("text")), " "))
+          .withColumn("t", expr(toksSpark("text")))
           .select(col("doc_id"), explode(expr(chunkFpSpark("t", "10")))
             .as("cfp"))
         val corpusChunks = chunksOf(oldDocs).select(col("cfp")).distinct()
@@ -2502,8 +2487,7 @@ object Dedup {
     QuerySpec(
       "q384_longest_dup_span",
       Some(s"""WITH d AS (
-          SELECT doc_id, string_split(lower(text), ' ') AS t
-          FROM documents),
+          SELECT doc_id, ${toksDuck("text")} AS t FROM documents),
         ch AS (SELECT doc_id, u.pos AS pos, u.fp AS fp FROM (
             SELECT doc_id, unnest(${chunkFpDuck("t", "10")}) AS u
             FROM d) z),
@@ -2529,7 +2513,7 @@ object Dedup {
         FROM prof LEFT JOIN longest ON longest.doc_id = prof.doc_id"""),
       (s, d) => {
         val ch = t(s, d, "documents")
-          .withColumn("t", split(lower(col("text")), " "))
+          .withColumn("t", expr(toksSpark("text")))
           .select(col("doc_id"), posexplode(expr(chunkFpSpark("t", "10")))
             .as(Seq("pos", "fp")))
         val rk = ch.withColumn("is_dup", row_number().over(

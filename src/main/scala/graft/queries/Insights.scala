@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
+import graft.functions.Portable.{toksSpark, toksDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,8 +35,7 @@ object Insights {
     // count symmetric without a second pass.
     QuerySpec(
       "q256_skipgram_cooc",
-      Some(s"""WITH sp AS (SELECT string_split(lower(text), ' ') AS ws
-            FROM documents),
+      Some(s"""WITH sp AS (SELECT ${toksDuck("text")} AS ws FROM documents),
         z AS (SELECT ws, j, unnest([1, 2, 3]) AS k FROM
           (SELECT ws, unnest(range(1, len(ws) + 1)) AS j FROM sp) y),
         p AS (SELECT least(ws[j], ws[j + k]) || ' '
@@ -47,7 +47,7 @@ object Insights {
         SELECT pair, cnt FROM c ORDER BY cnt DESC, pair LIMIT 20"""),
       (s, d) => {
         val sp = t(s, d, "documents")
-          .select(split(lower(col("text")), " ").as("ws"))
+          .select(expr(toksSpark("text")).as("ws"))
         val z = sp
           .select(col("ws"), explode(expr("sequence(1, size(ws))")).as("j"))
           .select(col("ws"), col("j"),
@@ -421,8 +421,7 @@ object Insights {
     // continuation with the word as tie-break.
     QuerySpec(
       "q265_kn_counts",
-      Some("""WITH sp AS (SELECT string_split(lower(text), ' ') AS ws
-            FROM documents),
+      Some(s"""WITH sp AS (SELECT ${toksDuck("text")} AS ws FROM documents),
         bg AS (SELECT ws[j] AS prev, ws[j + 1] AS w FROM
           (SELECT ws, unnest(range(1, len(ws))) AS j FROM sp) z
           WHERE ws[j] <> '' AND ws[j + 1] <> ''),
@@ -434,7 +433,7 @@ object Insights {
         FROM cc ORDER BY continuation DESC, w LIMIT 20"""),
       (s, d) => {
         val sp = t(s, d, "documents")
-          .select(split(lower(col("text")), " ").as("ws"))
+          .select(expr(toksSpark("text")).as("ws"))
           .filter(size(col("ws")) >= 2)
         val bg = sp
           .select(col("ws"), explode(expr("sequence(1, size(ws) - 1)"))
@@ -910,8 +909,8 @@ object Insights {
     // bounded. Top-10 most similar pairs, tie-broken by the pair.
     QuerySpec(
       "q289_stylometry",
-      Some("""WITH tok AS (SELECT source,
-            unnest(string_split(lower(text), ' ')) AS w FROM documents),
+      Some(s"""WITH tok AS (SELECT source,
+            unnest(${toksDuck("text")}) AS w FROM documents),
         t2 AS (SELECT source, w FROM tok WHERE w <> ''),
         topw AS (SELECT w FROM (SELECT w, COUNT(*) AS c FROM t2 GROUP BY 1)
           z ORDER BY c DESC, w LIMIT 20),
@@ -937,8 +936,7 @@ object Insights {
         LIMIT 10"""),
       (s, d) => {
         val t2 = t(s, d, "documents")
-          .select(col("source"),
-            explode(split(lower(col("text")), " ")).as("w"))
+          .select(col("source"), explode(expr(toksSpark("text"))).as("w"))
           .filter(col("w") =!= "")
           .cache() // feeds top-words, totals, and per-source counts
         val topw = t2.groupBy(col("w")).agg(count(lit(1)).as("c"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
+import graft.functions.Portable.{toksSpark, toksDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -189,7 +190,7 @@ object Mining {
     // bounded by the alphabet squared; top-k never sorts globally.
     QuerySpec(
       "q235_bpe_pairs",
-      Some("""WITH tok AS (SELECT unnest(string_split(lower(text), ' ')) AS w
+      Some(s"""WITH tok AS (SELECT unnest(${toksDuck("text")}) AS w
             FROM documents),
         t2 AS (SELECT w FROM tok WHERE length(w) >= 2),
         pr AS (SELECT substr(w, j, 2) AS pair FROM
@@ -199,7 +200,7 @@ object Mining {
         SELECT pair, cnt FROM c ORDER BY cnt DESC, pair LIMIT 20"""),
       (s, d) => {
         val tok = t(s, d, "documents")
-          .select(explode(split(lower(col("text")), " ")).as("w"))
+          .select(explode(expr(toksSpark("text"))).as("w"))
           .filter(length(col("w")) >= 2)
         val pr = tok
           .select(col("w"), explode(expr("sequence(1, length(w) - 1)"))
@@ -220,9 +221,9 @@ object Mining {
     // cumulative window reads 10 group-grain rows.
     QuerySpec(
       "q236_vocab_growth",
-      Some("""WITH bounds AS (SELECT CAST(MIN(doc_id) AS BIGINT) AS mn,
+      Some(s"""WITH bounds AS (SELECT CAST(MIN(doc_id) AS BIGINT) AS mn,
             CAST(MAX(doc_id) AS BIGINT) AS mx FROM documents),
-        tok AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
+        tok AS (SELECT doc_id, unnest(${toksDuck("text")}) AS term
           FROM documents),
         tk AS (SELECT term, CAST(MIN(doc_id) AS BIGINT) AS fd FROM tok
           WHERE term <> '' GROUP BY 1),
@@ -242,8 +243,7 @@ object Mining {
         val bounds = docs.agg(min(col("doc_id")).as("mn"),
           max(col("doc_id")).as("mx"))
         val tok = docs
-          .select(col("doc_id"), explode(split(lower(col("text")), " "))
-            .as("term"))
+          .select(col("doc_id"), explode(expr(toksSpark("text"))).as("term"))
           .filter(col("term") =!= "")
         val tk = tok.groupBy(col("term")).agg(min(col("doc_id")).as("fd"))
         val tb = tk.crossJoin(broadcast(bounds)) // 1-row min/max
@@ -352,8 +352,8 @@ object Mining {
     // grid against the count table.
     QuerySpec(
       "q239_naive_bayes",
-      Some("""WITH tok AS (SELECT lang,
-            unnest(string_split(lower(text), ' ')) AS term FROM documents),
+      Some(s"""WITH tok AS (SELECT lang,
+            unnest(${toksDuck("text")}) AS term FROM documents),
         t2 AS (SELECT lang, term FROM tok WHERE term <> ''),
         ct AS (SELECT lang, term, CAST(COUNT(*) AS BIGINT) AS c
           FROM t2 GROUP BY 1, 2),
@@ -372,8 +372,7 @@ object Mining {
         FROM j, v"""),
       (s, d) => {
         val ct = t(s, d, "documents")
-          .select(col("lang"), explode(split(lower(col("text")), " "))
-            .as("term"))
+          .select(col("lang"), explode(expr(toksSpark("text"))).as("term"))
           .filter(col("term") =!= "")
           .groupBy(col("lang"), col("term"))
           .agg(count(lit(1)).as("c"))
@@ -409,9 +408,9 @@ object Mining {
     QuerySpec(
       "q240_rand_proj", {
         val qv = Portable.qvecDuck("embedding", 64)
-        val cell = "CASE WHEN CAST('0x' || substring(md5(" +
-          "CAST(i - 1 AS VARCHAR) || '_' || CAST(j AS VARCHAR)), 1, 15) " +
-          "AS BIGINT) % 2 = 0 THEN qv[i] ELSE -qv[i] END"
+        val h = Portable.h64Duck(
+          "CAST(i - 1 AS VARCHAR) || '_' || CAST(j AS VARCHAR)")
+        val cell = s"CASE WHEN $h % 2 = 0 THEN qv[i] ELSE -qv[i] END"
         Some(s"""WITH e AS (SELECT vec_id, $qv AS qv FROM embeddings),
           pj AS (SELECT vec_id,
               [CAST(list_sum([$cell for i in range(1, 65)]) AS BIGINT)
@@ -423,8 +422,8 @@ object Mining {
           FROM pj""")
       },
       (s, d) => {
-        val sign = "cast(conv(substring(md5(concat(cast(i as string), " +
-          "'_', cast(j as string))), 1, 15), 16, 10) as bigint) % 2"
+        val sign = Portable.h64Spark(
+          "concat(cast(i as string), '_', cast(j as string))") + " % 2"
         val proj = s"""transform(sequence(0, 7), j ->
             aggregate(zip_with(qv, sequence(0, size(qv) - 1),
               (x, i) -> CASE WHEN $sign = 0 THEN x ELSE -x END),
@@ -582,7 +581,7 @@ object Mining {
         // Universe = word BIGRAMS: the fixture's unigram vocabulary is a
         // 31-word closed set every source fully covers (a degenerate
         // 1-round cover); bigrams discriminate sources properly.
-        Some(s"""WITH sp AS (SELECT source, string_split(lower(text), ' ')
+        Some(s"""WITH sp AS (SELECT source, ${toksDuck("text")}
               AS ws FROM documents),
           st AS MATERIALIZED (SELECT DISTINCT source,
               ws[j] || ' ' || ws[j + 1] AS term
@@ -593,7 +592,7 @@ object Mining {
       (s, d) => {
         import s.implicits._
         var rem = t(s, d, "documents")
-          .select(col("source"), split(lower(col("text")), " ").as("ws"))
+          .select(col("source"), expr(toksSpark("text")).as("ws"))
           .filter(size(col("ws")) >= 2)
           .select(col("source"), col("ws"),
             explode(expr("sequence(1, size(ws) - 1)")).as("j"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
+import graft.functions.Portable.{toksSpark, toksDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1010,7 +1011,7 @@ object Operations {
     // than its own partial agg.
     QuerySpec(
       "q300_overview_dashboard",
-      Some("""SELECT
+      Some(s"""SELECT
           (SELECT CAST(COUNT(*) AS BIGINT) FROM orders) AS n_orders,
           (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem) AS n_lineitems,
           (SELECT CAST(COUNT(*) AS BIGINT) FROM customer) AS n_customers,
@@ -1018,7 +1019,7 @@ object Operations {
             AS n_users,
           (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_docs,
           (SELECT CAST(COUNT(DISTINCT w) AS BIGINT) FROM
-            (SELECT unnest(string_split(lower(text), ' ')) AS w
+            (SELECT unnest(${toksDuck("text")}) AS w
              FROM documents) z WHERE w <> '') AS vocab,
           (SELECT CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
             AS BIGINT) FROM orders) AS revenue_cents"""),
@@ -1034,7 +1035,7 @@ object Operations {
             "n_users"),
           one(t(s, d, "documents").agg(count(lit(1))), "n_docs"),
           one(t(s, d, "documents")
-            .select(explode(split(lower(col("text")), " ")).as("w"))
+            .select(explode(expr(toksSpark("text"))).as("w"))
             .filter(col("w") =!= "")
             .agg(countDistinct(col("w"))), "vocab"),
           one(o.agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))

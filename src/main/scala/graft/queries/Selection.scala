@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
+import graft.functions.Portable.{toksSpark, toksDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -183,7 +184,7 @@ object Selection {
   private def gateFeatures(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
       .select(col("doc_id"), (col("lang") === "en").as("pos"),
-        explode(split(lower(col("text")), " ")).as("term"))
+        explode(expr(toksSpark("text"))).as("term"))
       .filter(col("term") =!= "")
       .groupBy(col("doc_id"), col("pos"),
         expr(gateBucketSpark("term")).as("bucket"))
@@ -229,7 +230,7 @@ object Selection {
   private val gateDuckCte: String = {
     val h = Portable.h64Duck("'qg:' || term")
     s"""tok AS (SELECT doc_id, lang = 'en' AS pos,
-          unnest(string_split(lower(text), ' ')) AS term
+          unnest(${toksDuck("text")}) AS term
         FROM documents),
       tf AS (SELECT doc_id, pos, ($h) % 256 AS bucket,
           CAST(COUNT(*) AS BIGINT) AS tf
@@ -288,7 +289,7 @@ object Selection {
     s"""v0 AS MATERIALIZED (
         SELECT regexp_replace(w, '(.)', '$bref', 'g') AS enc,
           CAST(COUNT(*) AS BIGINT) AS n
-        FROM (SELECT unnest(string_split(lower(text), ' ')) AS w
+        FROM (SELECT unnest(${toksDuck("text")}) AS w
           FROM documents) z
         WHERE length(w) >= 2 AND regexp_matches(w, '^[a-z]+$$')
         GROUP BY 1)$rounds"""
@@ -306,7 +307,7 @@ object Selection {
   private def bpeRun(s: SparkSession, d: String)
       : (Seq[DataFrame], DataFrame) = {
     var v = t(s, d, "documents")
-      .select(explode(split(lower(col("text")), " ")).as("w"))
+      .select(explode(expr(toksSpark("text"))).as("w"))
       .filter(length(col("w")) >= 2 && col("w").rlike("^[a-z]+$"))
       .groupBy(regexp_replace(col("w"), "(.)", "($1)").as("enc"))
       .agg(count(lit(1)).as("n"))
@@ -610,7 +611,7 @@ object Selection {
       "q320_token_budget",
       Some(s"""WITH st AS (SELECT source,
             CAST(COUNT(*) AS BIGINT) AS n_docs,
-            CAST(SUM(len(list_filter(string_split(lower(text), ' '),
+            CAST(SUM(len(list_filter(${toksDuck("text")},
               x -> x <> ''))) AS BIGINT) AS n_tokens
           FROM documents GROUP BY 1),
         w AS (SELECT source, n_docs, n_tokens,
@@ -629,7 +630,7 @@ object Selection {
         val st = t(s, d, "documents")
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"),
-            sum(size(filter(split(lower(col("text")), " "),
+            sum(size(filter(expr(toksSpark("text")),
               x => x =!= "")).cast("long")).cast("long").as("n_tokens"))
           .withColumn("wsq", floor(sqrt(col("n_tokens"))).cast("long"))
           .cache() // |sources| rows; feeds the denominator and the plan
@@ -658,7 +659,7 @@ object Selection {
     QuerySpec(
       "q321_chunk_packing",
       Some(s"""WITH dt AS (SELECT doc_id,
-            CAST(len(list_filter(string_split(lower(text), ' '),
+            CAST(len(list_filter(${toksDuck("text")},
               x -> x <> '')) AS BIGINT) AS nt
           FROM documents),
         pos AS (SELECT doc_id, nt,
@@ -684,7 +685,7 @@ object Selection {
       (s, d) => {
         val dt = t(s, d, "documents")
           .select(col("doc_id"),
-            size(filter(split(lower(col("text")), " "),
+            size(filter(expr(toksSpark("text")),
               x => x =!= "")).cast("long").as("nt"))
           .filter(col("nt") > 0)
           .withColumn("g", expr("doc_id div 4096"))
@@ -736,7 +737,7 @@ object Selection {
         val hFp = Portable.h64Duck("'sp:' || fp")
         val hDoc = Portable.h64Duck("'sp:' || CAST(doc_id AS VARCHAR)")
         Some(s"""WITH fps AS (SELECT doc_id,
-            ${Portable.setFpDuck("string_split(lower(text), ' ')")} AS fp
+            ${Portable.setFpDuck(toksDuck("text"))} AS fp
           FROM documents),
         lab AS (SELECT doc_id, fp,
             CASE WHEN ($hFp) % 10 < 8 THEN 'train' ELSE 'test' END
@@ -757,7 +758,7 @@ object Selection {
         val hDoc = Portable.h64Spark("concat('sp:', cast(doc_id as string))")
         val lab = t(s, d, "documents")
           .select(col("doc_id"),
-            expr(Portable.setFpSpark("split(lower(text), ' ')")).as("fp"))
+            expr(Portable.setFpSpark(toksSpark("text"))).as("fp"))
           .select(col("doc_id"), col("fp"),
             when(expr(hFp) % 10 < 8, "train").otherwise("test")
               .as("split"),
@@ -806,7 +807,7 @@ object Selection {
         val h = Portable.h64Duck("'qg:' || term")
         val hDoc = Portable.h64Duck("'ds:' || CAST(doc_id AS VARCHAR)")
         Some(s"""WITH tok AS (SELECT doc_id, lang = 'en' AS pos,
-            unnest(string_split(lower(text), ' ')) AS term
+            unnest(${toksDuck("text")}) AS term
           FROM documents),
         tf AS (SELECT doc_id, pos, ($h) % 256 AS bucket,
             CAST(COUNT(*) AS BIGINT) AS tf
@@ -897,7 +898,7 @@ object Selection {
         Some(s"""WITH $gateDuckCte,
           meta AS (SELECT doc_id, source FROM (
               SELECT doc_id, source,
-                ${Portable.setFpDuck("string_split(lower(text), ' ')")} AS fp
+                ${Portable.setFpDuck(toksDuck("text"))} AS fp
               FROM documents) z
             WHERE ($hFp) % 10 < 8),
           sel AS (SELECT g.doc_id, m.source, g.n_tokens
@@ -925,7 +926,7 @@ object Selection {
         val hFp = Portable.h64Spark("concat('sp:', fp)")
         val meta = t(s, d, "documents")
           .select(col("doc_id"), col("source"),
-            expr(Portable.setFpSpark("split(lower(text), ' ')")).as("fp"))
+            expr(Portable.setFpSpark(toksSpark("text"))).as("fp"))
           .filter(expr(hFp) % 10 < 8) // train side of the cluster split
           .select(col("doc_id"), col("source"))
         val st = g.join(meta, "doc_id")
@@ -1121,8 +1122,7 @@ object Selection {
     QuerySpec(
       "q344_effective_budget",
       Some(s"""WITH dd AS (
-          SELECT doc_id, source, string_split(lower(text), ' ') AS t
-          FROM documents),
+          SELECT doc_id, source, ${toksDuck("text")} AS t FROM documents),
         ch AS (SELECT doc_id, source, u.pos AS pos, u.fp AS fp,
             u.ln AS ln FROM (
             SELECT doc_id, source, unnest(${Portable.chunkFpDuck("t", "10")})
@@ -1149,7 +1149,7 @@ object Selection {
         FROM wt, mtot"""),
       (s, d) => {
         val ch = t(s, d, "documents")
-          .withColumn("t", split(lower(col("text")), " "))
+          .withColumn("t", expr(toksSpark("text")))
           .select(col("doc_id"), col("source"), posexplode(expr(
             Portable.chunkFpSpark("t", "10", ln = true))).as(Seq("pos", "c")))
           .select(col("doc_id"), col("source"), col("pos"),
@@ -1196,7 +1196,7 @@ object Selection {
                 AS n_sym
             FROM v$BpeRounds),
           lw AS (SELECT lang, w, CAST(COUNT(*) AS BIGINT) AS n_lw FROM (
-              SELECT lang, unnest(string_split(lower(text), ' ')) AS w
+              SELECT lang, unnest(${toksDuck("text")}) AS w
               FROM documents) z
             WHERE length(w) >= 2 AND regexp_matches(w, '^[a-z]+$$')
             GROUP BY 1, 2),
@@ -1217,8 +1217,7 @@ object Selection {
           .select(translate(col("enc"), "()", "").as("w"),
             size(bpeSymsOf(col("enc"))).cast("long").as("n_sym"))
         val lw = t(s, d, "documents")
-          .select(col("lang"),
-            explode(split(lower(col("text")), " ")).as("w"))
+          .select(col("lang"), explode(expr(toksSpark("text"))).as("w"))
           .filter(length(col("w")) >= 2 && col("w").rlike("^[a-z]+$"))
           .groupBy(col("lang"), col("w"))
           .agg(count(lit(1)).as("n_lw"))
@@ -1247,7 +1246,7 @@ object Selection {
     // integer (truncating division on nonneg operands).
     QuerySpec(
       "q364_vocab_mincount_sweep",
-      Some("""WITH w AS (SELECT unnest(string_split(lower(text), ' '))
+      Some(s"""WITH w AS (SELECT unnest(${toksDuck("text")})
             AS word FROM documents),
         wc AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS c
           FROM w WHERE word <> '' GROUP BY 1),
@@ -1263,7 +1262,7 @@ object Selection {
         FROM sw, tt GROUP BY t, total"""),
       (s, d) => {
         val wc = t(s, d, "documents")
-          .select(explode(split(lower(col("text")), " ")).as("word"))
+          .select(explode(expr(toksSpark("text"))).as("word"))
           .filter(col("word") =!= "")
           .groupBy(col("word")).agg(count(lit(1)).as("c"))
         val tt = wc.agg(sum(col("c")).as("total"))

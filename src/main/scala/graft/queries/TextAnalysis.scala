@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.Portable.{setFpDuck, setFpSpark}
+import graft.functions.Portable.{setFpDuck, setFpSpark, toksSpark, toksDuck}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -47,22 +47,22 @@ object TextAnalysis {
       "q30_text_stats",
       Some(s"""SELECT doc_id,
         CAST(length(text) AS BIGINT) AS n_chars_m,
-        CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
-        CAST(len(list_distinct(string_split(lower(text), ' '))) AS BIGINT)
+        CAST(len(${toksDuck("text")}) AS BIGINT) AS n_tokens,
+        CAST(len(list_distinct(${toksDuck("text")})) AS BIGINT)
           AS n_uniq,
-        CAST(list_sum([length(x) for x in string_split(lower(text), ' ')])
-          AS DOUBLE) / len(string_split(lower(text), ' ')) AS avg_token_len,
-        CAST(len(list_filter(string_split(lower(text), ' '),
+        CAST(list_sum([length(x) for x in ${toksDuck("text")}])
+          AS DOUBLE) / len(${toksDuck("text")}) AS avg_token_len,
+        CAST(len(list_filter(${toksDuck("text")},
                   x -> list_contains(${sqlList(Stop)}, x))) AS DOUBLE)
-          / len(string_split(lower(text), ' ')) AS stop_ratio,
+          / len(${toksDuck("text")}) AS stop_ratio,
         least(CAST(1 AS DOUBLE),
-            len(string_split(lower(text), ' ')) / CAST(50 AS DOUBLE))
-          * (CAST(len(list_distinct(string_split(lower(text), ' '))) AS DOUBLE)
-             / len(string_split(lower(text), ' '))) AS quality
+            len(${toksDuck("text")}) / CAST(50 AS DOUBLE))
+          * (CAST(len(list_distinct(${toksDuck("text")})) AS DOUBLE)
+             / len(${toksDuck("text")})) AS quality
         FROM documents"""),
       (s, d) =>
         t(s, d, "documents")
-          .withColumn("toks", split(lower(col("text")), " "))
+          .withColumn("toks", expr(toksSpark("text")))
           .select(
             col("doc_id"),
             length(col("text")).cast("bigint").as("n_chars_m"),
@@ -80,7 +80,7 @@ object TextAnalysis {
     QuerySpec(
       "q31_lang_id", {
         val scores = Markers.map { case (l, ms) =>
-          s"len(list_filter(string_split(lower(text), ' '), x -> list_contains(${sqlList(ms)}, x))) AS s_$l"
+          s"len(list_filter(${toksDuck("text")}, x -> list_contains(${sqlList(ms)}, x))) AS s_$l"
         }.mkString(", ")
         Some(s"""WITH scored AS (SELECT doc_id, lang, $scores FROM documents)
           SELECT doc_id, lang,
@@ -97,7 +97,7 @@ object TextAnalysis {
       (s, d) => {
         val withScores = Markers.foldLeft(
           t(s, d, "documents")
-            .withColumn("toks", split(lower(col("text")), " "))) {
+            .withColumn("toks", expr(toksSpark("text")))) {
           case (df, (l, ms)) =>
             df.withColumn(s"s_$l",
               expr(s"size(filter(toks, x -> array_contains(${sparkList(ms)}, x)))")
@@ -141,34 +141,34 @@ object TextAnalysis {
       "q33_fingerprint",
       Some(s"""SELECT doc_id,
         md5(text) AS fp_content,
-        ${setFpDuck("string_split(lower(text), ' ')")} AS fp_normalized,
-        list_reduce(list_concat([''], string_split(lower(text), ' ')),
+        ${setFpDuck(toksDuck("text"))} AS fp_normalized,
+        list_reduce(list_concat([''], ${toksDuck("text")}),
           (acc, x) -> md5(concat(acc, x))) AS fp_rolling
         FROM documents"""),
       (s, d) =>
         t(s, d, "documents").select(
           col("doc_id"),
           md5(col("text")).as("fp_content"),
-          expr(setFpSpark("split(lower(text), ' ')")).as("fp_normalized"),
-          expr("aggregate(split(lower(text), ' '), '', " +
+          expr(setFpSpark(toksSpark("text"))).as("fp_normalized"),
+          expr(s"aggregate(${toksSpark("text")}, '', " +
             "(acc, x) -> md5(concat(acc, x)))").as("fp_rolling"))),
 
     // ---- array scalar functions over token arrays --------------------------
     QuerySpec(
       "q35_array_fns",
-      Some("""SELECT doc_id,
-        CAST(len(string_split(lower(text), ' ')) AS INT) AS n_toks,
-        list_contains(string_split(lower(text), ' '), 'data') AS has_data,
-        CAST(list_position(string_split(lower(text), ' '), 'data') AS INT)
+      Some(s"""SELECT doc_id,
+        CAST(len(${toksDuck("text")}) AS INT) AS n_toks,
+        list_contains(${toksDuck("text")}, 'data') AS has_data,
+        CAST(list_position(${toksDuck("text")}, 'data') AS INT)
           AS data_pos,
-        array_to_string(string_split(lower(text), ' ')[2:4], '|') AS toks_2_4,
-        list_sort(list_distinct(string_split(lower(text), ' ')))[1]
+        array_to_string(${toksDuck("text")}[2:4], '|') AS toks_2_4,
+        list_sort(list_distinct(${toksDuck("text")}))[1]
           AS first_sorted,
-        array_to_string(string_split(lower(text), ' ')[1:3], '|') AS head3
+        array_to_string(${toksDuck("text")}[1:3], '|') AS head3
         FROM documents"""),
       (s, d) =>
         t(s, d, "documents")
-          .withColumn("toks", split(lower(col("text")), " "))
+          .withColumn("toks", expr(toksSpark("text")))
           .select(
             col("doc_id"),
             size(col("toks")).as("n_toks"),
@@ -185,9 +185,8 @@ object TextAnalysis {
     //      so the oracle recomputes the same scalars from the token list. --
     QuerySpec(
       "q36_map_fns",
-      Some("""WITH d AS (
-          SELECT doc_id, string_split(lower(text), ' ') AS toks
-          FROM documents)
+      Some(s"""WITH d AS (
+          SELECT doc_id, ${toksDuck("text")} AS toks FROM documents)
         SELECT doc_id,
           CAST(len(list_distinct(toks)) AS INT) AS n_keys,
           CASE WHEN list_contains(toks, 'data')
@@ -202,7 +201,7 @@ object TextAnalysis {
         FROM d"""),
       (s, d) =>
         t(s, d, "documents")
-          .withColumn("toks", split(lower(col("text")), " "))
+          .withColumn("toks", expr(toksSpark("text")))
           .select(col("doc_id"),
             expr("""map_from_entries(transform(
                 array_distinct(toks),
@@ -219,8 +218,8 @@ object TextAnalysis {
     // ---- term stats: explode + aggregate + top-k terms per language --------
     QuerySpec(
       "q34_term_stats",
-      Some("""WITH toks AS (
-          SELECT lang, unnest(string_split(lower(text), ' ')) AS token
+      Some(s"""WITH toks AS (
+          SELECT lang, unnest(${toksDuck("text")}) AS token
           FROM documents),
         counts AS (
           SELECT lang, token, COUNT(*) AS n FROM toks GROUP BY lang, token)
@@ -230,8 +229,7 @@ object TextAnalysis {
         WHERE rk <= 5"""),
       (s, d) =>
         t(s, d, "documents")
-          .select(col("lang"),
-            explode(split(lower(col("text")), " ")).as("token"))
+          .select(col("lang"), explode(expr(toksSpark("text"))).as("token"))
           .groupBy(col("lang"), col("token"))
           .agg(count(lit(1)).as("n"))
           .withColumn("rk", row_number().over(

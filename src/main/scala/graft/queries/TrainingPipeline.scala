@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
-import graft.functions.Portable.{h64Duck, setFpDuck, setFpSpark}
+import graft.functions.Portable.{h64Duck, setFpDuck, setFpSpark, toksSpark,
+  toksDuck, ngramsSpark, ngramsDuck}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,9 +46,9 @@ object TrainingPipeline {
     // ---- posexplode_outer: positions + empty-array row preservation -------
     QuerySpec(
       "q80_explode_pos",
-      Some("""WITH d AS (
+      Some(s"""WITH d AS (
           SELECT doc_id,
-            list_filter(string_split(lower(text), ' '), x -> length(x) > 8)
+            list_filter(${toksDuck("text")}, x -> length(x) > 8)
               AS lt
           FROM documents)
         SELECT doc_id,
@@ -65,7 +66,7 @@ object TrainingPipeline {
       (s, d) =>
         t(s, d, "documents")
           .withColumn("lt",
-            expr("filter(split(lower(text), ' '), x -> length(x) > 8)"))
+            expr(s"filter(${toksSpark("text")}, x -> length(x) > 8)"))
           .select(col("doc_id"), posexplode_outer(col("lt")))
           .withColumnRenamed("col", "tok")),
 
@@ -100,8 +101,8 @@ object TrainingPipeline {
       "q82_corpus_filter",
       Some(s"""WITH scored AS (
           SELECT doc_id, lang, n_chars,
-            len(string_split(lower(text), ' ')) AS n_toks,
-            ${setFpDuck("string_split(lower(text), ' ')")} AS fp
+            len(${toksDuck("text")}) AS n_toks,
+            ${setFpDuck(toksDuck("text"))} AS fp
           FROM documents),
         keep AS (
           SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rk
@@ -111,7 +112,7 @@ object TrainingPipeline {
         FROM keep WHERE rk = 1"""),
       (s, d) =>
         t(s, d, "documents")
-          .withColumn("toks", split(lower(col("text")), " "))
+          .withColumn("toks", expr(toksSpark("text")))
           .select(col("doc_id"), col("lang"), col("n_chars"),
             size(col("toks")).cast("bigint").as("n_toks"),
             expr(setFpSpark("toks")).as("fp"))
@@ -125,22 +126,18 @@ object TrainingPipeline {
     // ---- bigram counting (BPE/ngram-LM statistics pass) ---------------------
     QuerySpec(
       "q83_bigrams",
-      Some("""WITH toks AS (
-          SELECT string_split(lower(text), ' ') AS t FROM documents),
+      Some(s"""WITH toks AS (
+          SELECT ${toksDuck("text")} AS t FROM documents),
         bg AS (
-          SELECT unnest([t[i] || ' ' || t[i+1] for i in range(1, len(t))])
-            AS bigram
+          SELECT unnest(${ngramsDuck("t", 2)}) AS bigram
           FROM toks)
         SELECT bigram, COUNT(*) AS n FROM bg GROUP BY bigram
         ORDER BY n DESC, bigram LIMIT 20"""),
       (s, d) =>
         t(s, d, "documents")
-          .withColumn("t", split(lower(col("text")), " "))
-          // zip_with over two offset slices: yields [] for 1-token docs
-          // (sequence(1, size-1) would mis-step to [1,0] there).
-          .select(explode(expr(
-            """zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),
-               (a, b) -> concat(a, ' ', b))""")).as("bigram"))
+          .withColumn("t", expr(toksSpark("text")))
+          .filter(size(col("t")) >= 2) // a 1-token doc has no bigram
+          .select(explode(expr(ngramsSpark("t", 2))).as("bigram"))
           .groupBy(col("bigram")).agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("bigram"))
           .limit(20)),
@@ -148,8 +145,8 @@ object TrainingPipeline {
     // ---- integer-exact TF-IDF, top-3 terms per document ---------------------
     QuerySpec(
       "q84_tfidf",
-      Some("""WITH tf AS (
-          SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+      Some(s"""WITH tf AS (
+          SELECT doc_id, unnest(${toksDuck("text")}) AS tok
           FROM documents),
         tfc AS (SELECT doc_id, tok, COUNT(*) AS tf
           FROM tf GROUP BY doc_id, tok),
@@ -166,8 +163,7 @@ object TrainingPipeline {
         WHERE rk <= 3"""),
       (s, d) => {
         val toks = t(s, d, "documents")
-          .select(col("doc_id"),
-            explode(split(lower(col("text")), " ")).as("tok"))
+          .select(col("doc_id"), explode(expr(toksSpark("text"))).as("tok"))
         val tfc = toks.groupBy(col("doc_id"), col("tok"))
           .agg(count(lit(1)).as("tf"))
         val df = toks.distinct()
@@ -224,12 +220,9 @@ object TrainingPipeline {
     QuerySpec(
       "q86_contamination", {
         Some(s"""WITH docs AS (
-            SELECT doc_id, string_split(lower(text), ' ') AS toks
-            FROM documents),
+            SELECT doc_id, ${toksDuck("text")} AS toks FROM documents),
           sh AS (SELECT doc_id,
-              list_distinct([${h64Duck(
-                "toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]")}
-                for i in range(1, len(toks)-1)]) AS shingles
+              list_distinct(${ngramsDuck("toks", 3, h64Duck)}) AS shingles
             FROM docs WHERE len(toks) >= 3),
           bench AS (SELECT DISTINCT unnest(shingles) AS s FROM sh
             WHERE doc_id < 3),
@@ -293,8 +286,7 @@ object TrainingPipeline {
     QuerySpec(
       "q89_bigram_fluency", {
         Some(s"""WITH toks AS (
-            SELECT doc_id, string_split(lower(text), ' ') AS t
-            FROM documents),
+            SELECT doc_id, ${toksDuck("text")} AS t FROM documents),
           bg AS (SELECT doc_id, u.pa AS pa, u.nb AS nb FROM (
               SELECT doc_id,
                 unnest([{'pa': t[i], 'nb': t[i+1]}
@@ -311,7 +303,7 @@ object TrainingPipeline {
       },
       (s, d) => {
         val bg = t(s, d, "documents")
-          .withColumn("t", split(lower(col("text")), " "))
+          .withColumn("t", expr(toksSpark("text")))
           .select(col("doc_id"), explode(expr(
             """zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),
                (a, b) -> struct(a AS pa, b AS nb))""")).as("u"))
@@ -340,18 +332,16 @@ object TrainingPipeline {
     // of two exact BIGINTs — portable without the decimal grid (cf. q89).
     QuerySpec(
       "q57_repetition",
-      Some("""WITH toks AS (
-          SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+      Some(s"""WITH toks AS (
+          SELECT doc_id, unnest(${toksDuck("text")}) AS tok
           FROM documents),
         tc AS (SELECT doc_id, tok, COUNT(*) AS c
           FROM toks GROUP BY doc_id, tok),
         ta AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_toks,
             COUNT(*) AS n_distinct, MAX(c) AS top_c
           FROM tc GROUP BY doc_id),
-        d2 AS (SELECT doc_id, string_split(lower(text), ' ') AS t
-          FROM documents),
-        bg AS (SELECT doc_id,
-            unnest([t[i] || ' ' || t[i+1] for i in range(1, len(t))]) AS b
+        d2 AS (SELECT doc_id, ${toksDuck("text")} AS t FROM documents),
+        bg AS (SELECT doc_id, unnest(${ngramsDuck("t", 2)}) AS b
           FROM d2 WHERE len(t) >= 2),
         ba AS (SELECT doc_id, COUNT(*) AS n_bg, COUNT(DISTINCT b) AS d_bg
           FROM bg GROUP BY doc_id)
@@ -366,8 +356,7 @@ object TrainingPipeline {
       (s, d) => {
         val docs = t(s, d, "documents")
         val tc = docs
-          .select(col("doc_id"),
-            explode(split(lower(col("text")), " ")).as("tok"))
+          .select(col("doc_id"), explode(expr(toksSpark("text"))).as("tok"))
           .groupBy(col("doc_id"), col("tok"))
           .agg(count(lit(1)).as("c"))
         val ta = tc.groupBy(col("doc_id"))
@@ -375,11 +364,9 @@ object TrainingPipeline {
             count(lit(1)).as("n_distinct"),
             max(col("c")).as("top_c"))
         val ba = docs
-          .withColumn("t", split(lower(col("text")), " "))
+          .withColumn("t", expr(toksSpark("text")))
           .filter(size(col("t")) >= 2)
-          .select(col("doc_id"), explode(expr(
-            """zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),
-               (a, b) -> concat(a, ' ', b))""")).as("b"))
+          .select(col("doc_id"), explode(expr(ngramsSpark("t", 2))).as("b"))
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_bg"), countDistinct(col("b")).as("d_bg"))
         ta.join(ba, Seq("doc_id"), "left")
@@ -416,8 +403,8 @@ object TrainingPipeline {
     // associative), one data shuffle total.
     QuerySpec(
       "q88_shard_pack",
-      Some("""WITH d AS (
-          SELECT doc_id, len(string_split(lower(text), ' ')) AS n_toks
+      Some(s"""WITH d AS (
+          SELECT doc_id, len(${toksDuck("text")}) AS n_toks
           FROM documents),
         c AS (SELECT doc_id, n_toks,
             SUM(n_toks) OVER (ORDER BY doc_id
@@ -432,7 +419,7 @@ object TrainingPipeline {
         val block = 1024L
         val docs = t(s, d, "documents")
           .select(col("doc_id"),
-            size(split(lower(col("text")), " ")).cast("bigint").as("n_toks"))
+            size(expr(toksSpark("text"))).cast("bigint").as("n_toks"))
           .withColumn("g", expr(s"doc_id div $block"))
         val wIn = Window.partitionBy(col("g")).orderBy(col("doc_id"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -793,8 +780,7 @@ object TrainingPipeline {
     QuerySpec(
       "q334_kn_fluency_gate", {
         Some(s"""WITH toks AS (
-            SELECT doc_id, string_split(lower(text), ' ') AS t
-            FROM documents),
+            SELECT doc_id, ${toksDuck("text")} AS t FROM documents),
           bg AS (SELECT doc_id, u.pa AS pa, u.nb AS nb FROM (
               SELECT doc_id,
                 unnest([{'pa': t[i], 'nb': t[i+1]}
@@ -822,7 +808,7 @@ object TrainingPipeline {
       },
       (s, d) => {
         val bg = t(s, d, "documents")
-          .withColumn("t", split(lower(col("text")), " "))
+          .withColumn("t", expr(toksSpark("text")))
           .filter(size(col("t")) >= 2)
           .select(col("doc_id"), explode(expr(
             """zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),

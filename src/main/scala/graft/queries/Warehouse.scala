@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.Exact
+import graft.functions.Portable.{toksSpark, toksDuck, ngramsSpark, ngramsDuck}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -51,8 +52,8 @@ object Warehouse {
     // Dominance is integer comparison; no floats anywhere.
     QuerySpec(
       "q121_skyline",
-      Some("""WITH m AS (SELECT doc_id, n_chars AS m1,
-            CAST(len(list_distinct(string_split(lower(text), ' ')))
+      Some(s"""WITH m AS (SELECT doc_id, n_chars AS m1,
+            CAST(len(list_distinct(${toksDuck("text")}))
               AS BIGINT) AS m2
           FROM documents),
         p AS (SELECT m1, m2, COUNT(*) AS n_docs, MIN(doc_id) AS rep_doc
@@ -65,7 +66,7 @@ object Warehouse {
       (s, d) => {
         val pairs = t(s, d, "documents")
           .select(col("doc_id"), col("n_chars").as("m1"),
-            size(array_distinct(split(lower(col("text")), " ")))
+            size(array_distinct(expr(toksSpark("text"))))
               .cast("long").as("m2"))
           .groupBy(col("m1"), col("m2"))
           .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("rep_doc"))
@@ -287,11 +288,10 @@ object Warehouse {
     // longs.
     QuerySpec(
       "q126_novelty",
-      Some("""WITH tk AS (SELECT doc_id,
-            string_split(lower(text), ' ') AS t FROM documents),
+      Some(s"""WITH tk AS (SELECT doc_id,
+            ${toksDuck("text")} AS t FROM documents),
         tri AS (SELECT DISTINCT doc_id, g FROM (
-            SELECT doc_id, unnest([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-              for i in range(1, len(t) - 1)]) AS g
+            SELECT doc_id, unnest(${ngramsDuck("t", 3)}) AS g
             FROM tk WHERE len(t) >= 3) z),
         pd AS (SELECT doc_id, COUNT(*) AS n_grams FROM tri GROUP BY doc_id),
         fo AS (SELECT g, MIN(doc_id) AS doc_id FROM tri GROUP BY g),
@@ -302,13 +302,9 @@ object Warehouse {
         FROM pd LEFT JOIN nv USING (doc_id)"""),
       (s, d) => {
         val tri = t(s, d, "documents")
-          .withColumn("t", split(lower(col("text")), " "))
+          .withColumn("t", expr(toksSpark("text")))
           .filter(size(col("t")) >= 3)
-          .select(col("doc_id"), explode(expr(
-            """zip_with(slice(t, 1, size(t) - 2),
-                 zip_with(slice(t, 2, size(t) - 2), slice(t, 3, size(t) - 2),
-                   (b, c) -> concat(b, ' ', c)),
-                 (a, bc) -> concat(a, ' ', bc))""")).as("g"))
+          .select(col("doc_id"), explode(expr(ngramsSpark("t", 3))).as("g"))
           .distinct()
         val pd = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
         val nv = tri.groupBy(col("g")).agg(min(col("doc_id")).as("doc_id"))

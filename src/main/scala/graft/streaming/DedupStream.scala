@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.functions.Portable.setFpSpark
+import graft.functions.Portable.{setFpSpark, toksSpark}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
@@ -39,7 +39,7 @@ object DedupStream {
   /** q40/q58 content fingerprint: md5 over the sorted distinct token set. */
   def fingerprinted(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang"), col("n_chars"),
-      expr(setFpSpark("split(lower(text), ' ')")).as("fp"))
+      expr(setFpSpark(toksSpark("text"))).as("fp"))
 
   /** The streaming dedup: `docs` is a streaming frame with
     * (doc_id, text, lang, n_chars); `ledger` a batch frame with one `fp`

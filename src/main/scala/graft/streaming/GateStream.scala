@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.Portable.toksSpark
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -32,7 +33,7 @@ object GateStream {
     */
   def scored(docs: DataFrame, weights: Map[Int, Double]): DataFrame = {
     val wmap: Column = typedlit(weights)
-    val toks = "filter(split(lower(text), ' '), x -> x != '')"
+    val toks = s"filter(${toksSpark("text")}, x -> x != '')"
     val bucket = graft.queries.Selection.gateBucketSpark("t")
     // per-token model lookup, computed once: null = cold bucket
     val ws = s"transform($toks, t -> element_at(wm, cast($bucket as int)))"

@@ -161,4 +161,32 @@ class ExpressionsSpec extends SparkSpec {
         want.map { case (n, _, fp, ln) => (n, fp, ln) }, s"k = $k")
     }
   }
+
+  test("word n-grams match sliding(n) in order, plain and h64-wrapped; " +
+      "tokens keep empty strings") {
+    import spark.implicits._
+    def toks(c: Int) = (0 until c).map(i => s"w$i")
+    def md5Hex(x: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(x.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    for (n <- Seq(2, 3, 5)) {
+      val counts = Seq(n, n + 1, 2 * n + 1)
+      val docs = counts.map(c => (c, toks(c))).toDF("c", "t")
+      val got = docs.select(col("c"),
+          expr(Portable.ngramsSpark("t", n)).as("g"),
+          expr(Portable.ngramsSpark("t", n, Portable.h64Spark)).as("h"))
+        .as[(Int, Seq[String], Seq[Long])].collect()
+        .map { case (c, g, h) => c -> (g, h) }.toMap
+      for (c <- counts) {
+        val want = toks(c).sliding(n).map(_.mkString(" ")).toSeq
+        assert(got(c)._1 == want, s"n = $n, c = $c")
+        assert(got(c)._2 == want.map(g =>
+          java.lang.Long.parseLong(md5Hex(g).take(15), 16)),
+          s"n = $n, c = $c")
+      }
+    }
+    val text = "  The QUICK  brown Fox  "
+    val split = Seq(text).toDF("text")
+      .select(expr(Portable.toksSpark("text"))).as[Seq[String]].head()
+    assert(split == text.toLowerCase.split(" ", -1).toSeq)
+  }
 }

@@ -11,6 +11,7 @@ echo "== gate 1b: doc counts match what the tools emit"
 python3 tools/counts.py "$TEST_LOG"
 
 echo "== gate 2: DuckDB differential correctness (sf0.01)"
+rm -rf /tmp/gate_verify # a stale output must not stand in for a failed query
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_verify" \
   2>&1 | grep -E '\[verify\]' || true
