@@ -16,6 +16,15 @@ package graft.functions
   * Every builder returns a SQL string for one engine; callers interpolate
   * the same Scala constants into both, so the two sides can't drift.
   *
+  * Quantized cosine: the Spark side is the native `qcosine(qa, qb, na,
+  * nb)` expression, the DuckDB side [[qcosDuck]] (its argument order),
+  * built on [[cosDuck]] — the one spelling of "integer numerator over
+  * the product of two square roots", which the Pearson-correlation
+  * oracles also use. The vector-cell twins live next to the Spark
+  * frames in `queries.Similarity`: `celled` / `duckCells4Cte` (the
+  * 4-plane cell) and `adaptiveDepthSpark` / `adaptiveDepthDuck` (the
+  * adaptive depth clamp).
+  *
   * Every text query tokenizes with [[toksSpark]] / [[toksDuck]] and
   * builds word n-grams (shingles, bigrams) with [[ngramsSpark]] /
   * [[ngramsDuck]]. The token-array fingerprints come in the same pairs:
@@ -80,6 +89,22 @@ object Portable {
   /** Exact dot — DuckDB side. */
   def qdotDuck(a: String, b: String, dims: Int): String =
     s"CAST(list_sum([$a[i] * $b[i] for i in range(1, ${dims + 1})]) AS BIGINT)"
+
+  /** Cosine from an exact integer numerator and two exact squared norms
+    * — DuckDB side: one IEEE divide of the double numerator by the
+    * product of the two square roots, the order the native `qcosine`
+    * (Spark side) evaluates in, so both engines give the same double.
+    * Also the Pearson-correlation form (numerator n·Sxy − Sx·Sy).
+    */
+  def cosDuck(num: String, a: String, b: String): String =
+    s"CAST($num AS DOUBLE) / (sqrt(CAST($a AS DOUBLE)) * sqrt(CAST($b AS DOUBLE)))"
+
+  /** Exact-grid cosine of two quantized vectors — DuckDB twin of the
+    * native `qcosine(qa, qb, na, nb)`, in its argument order.
+    */
+  def qcosDuck(qa: String, qb: String, na: String, nb: String,
+      dims: Int): String =
+    cosDuck(qdotDuck(qa, qb, dims), na, nb)
 
   // ---- tokens and word n-grams --------------------------------------------
 

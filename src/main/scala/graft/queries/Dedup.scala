@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.Exact
 import graft.functions.Portable.{h64Spark, h64Duck, P, chunkFpSpark,
   chunkFpDuck, setFpSpark, setFpDuck, toksSpark, toksDuck, ngramsSpark,
-  ngramsDuck}
+  ngramsDuck, qcosDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -699,9 +699,8 @@ object Dedup {
     // q380's n_total pattern, node-counted in PlanSpec
     val n = base.agg(count(lit(1)).as("n_s4"))
     base.crossJoin(broadcast(n))
-      .withColumn("k", greatest(lit(4), least(lit(Similarity.Planes),
-        length(bin(expr(s"n_s4 div ${Similarity.CellOccupancy}")))
-          .cast("int"))))
+      .withColumn("k", Similarity.adaptiveDepthSpark("n_s4",
+        Similarity.CellOccupancy, 4))
       .select(col("vec_id"), col("qv"), col("nsq"),
         expr("sig & (shiftleft(1L, k) - 1)").as("cell")).cache()
   }
@@ -1207,12 +1206,9 @@ object Dedup {
         en AS (SELECT vec_id, label, qv,
             ${graft.functions.Portable.qnsqDuck("qv", 64)} AS nsq FROM e)
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
-          CAST(${graft.functions.Portable.qdotDuck("a.qv", "b.qv", 64)} AS DOUBLE)
-            / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE)))
-            AS cosine
+          ${qcosDuck("a.qv", "b.qv", "a.nsq", "b.nsq", 64)} AS cosine
         FROM en a JOIN en b ON a.label = b.label AND a.vec_id < b.vec_id
-        WHERE CAST(${graft.functions.Portable.qdotDuck("a.qv", "b.qv", 64)} AS DOUBLE)
-            / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) >= 0.4"""),
+        WHERE ${qcosDuck("a.qv", "b.qv", "a.nsq", "b.nsq", 64)} >= 0.4"""),
       (s, d) => {
         import graft.functions.Portable.{qvecSpark, qnsqSpark}
         val e = t(s, d, "embeddings")
@@ -2263,8 +2259,8 @@ object Dedup {
           rm4 AS (SELECT DISTINCT b.vec_id AS doc_id
             FROM g4cells a JOIN g4cells b
             ON a.cell = b.cell AND a.vec_id < b.vec_id
-            WHERE ${Similarity.semCosineDuck("a", "b")}
-              >= ${Similarity.SemThreshold}),
+            WHERE ${qcosDuck("a.qv", "b.qv", "a.nsq", "b.nsq",
+              Similarity.Dims)} >= ${Similarity.SemThreshold}),
           s4 AS (SELECT s3.doc_id FROM s3 WHERE NOT EXISTS (
               SELECT 1 FROM rm4 WHERE rm4.doc_id = s3.doc_id)),
           st AS (
@@ -2375,8 +2371,8 @@ object Dedup {
           g4 AS (SELECT DISTINCT n.vec_id AS doc_id
             FROM cells n JOIN cells o
               ON o.cell = n.cell AND o.vec_id < 250 AND n.vec_id >= 250
-            WHERE ${Similarity.semCosineDuck("n", "o")}
-              >= ${Similarity.SemThreshold}),
+            WHERE ${qcosDuck("n.qv", "o.qv", "n.nsq", "o.nsq",
+              Similarity.Dims)} >= ${Similarity.SemThreshold}),
           sel AS (SELECT newd.doc_id,
               EXISTS (SELECT 1 FROM g1 WHERE g1.doc_id = newd.doc_id)
                 AS exact_dup,

@@ -562,7 +562,7 @@ object Inference {
     // DECIMAL(38,0) (same plan; int64->double stays single-rounded).
     QuerySpec(
       "q244_spearman",
-      Some("""WITH base AS (SELECT o_orderkey,
+      Some(s"""WITH base AS (SELECT o_orderkey,
             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS x,
             y FROM orders JOIN (SELECT l_orderkey,
               CAST(COUNT(*) AS BIGINT) AS y FROM lineitem GROUP BY 1) li
@@ -583,8 +583,7 @@ object Inference {
             CAST(SUM(ex * ex) AS BIGINT) AS sxx,
             CAST(SUM(ey * ey) AS BIGINT) AS syy FROM cc)
         SELECT nn.n AS n,
-          round(CAST(sxy AS DOUBLE) / (sqrt(CAST(sxx AS DOUBLE))
-            * sqrt(CAST(syy AS DOUBLE))), 6) AS rho
+          round(${Portable.cosDuck("sxy", "sxx", "syy")}, 6) AS rho
         FROM st, nn"""),
       (s, d) => {
         // block-decomposed 2*avgRank per distinct value (q226 discipline)

@@ -673,7 +673,6 @@ object Insights {
           FROM pr GROUP BY 1""")
       },
       (s, d) => {
-        import s.implicits._
         val hx = Portable.h64Spark("concat('gx:', cast(c_custkey as string))")
         val hy = Portable.h64Spark("concat('gy:', cast(c_custkey as string))")
         val pt = t(s, d, "customer")
@@ -927,12 +926,11 @@ object Insights {
           FROM r a JOIN r b ON a.w = b.w AND a.source < b.source
           GROUP BY 1, 2)
         SELECT dot.sa, dot.sb,
-          round(CAST(dp AS DOUBLE) / (sqrt(CAST(na.nsq AS DOUBLE))
-            * sqrt(CAST(nb.nsq AS DOUBLE))), 6) AS cosine
+          round(${Portable.cosDuck("dp", "na.nsq", "nb.nsq")}, 6) AS cosine
         FROM dot JOIN nrm na ON dot.sa = na.source
         JOIN nrm nb ON dot.sb = nb.source
-        ORDER BY CAST(dp AS DOUBLE) / (sqrt(CAST(na.nsq AS DOUBLE))
-          * sqrt(CAST(nb.nsq AS DOUBLE))) DESC, dot.sa, dot.sb
+        ORDER BY ${Portable.cosDuck("dp", "na.nsq", "nb.nsq")} DESC,
+          dot.sa, dot.sb
         LIMIT 10"""),
       (s, d) => {
         val t2 = t(s, d, "documents")

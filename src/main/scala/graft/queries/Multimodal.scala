@@ -250,9 +250,7 @@ object Multimodal {
               AS nb
           FROM pr),
         cs AS (SELECT media_id,
-            CAST(dot AS DOUBLE)
-              / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE)))
-              AS c
+            ${Portable.cosDuck("dot", "na", "nb")} AS c
           FROM sc WHERE na > 0 AND nb > 0)
         SELECT media_id, floor(c * 1000000.0) / 1000000.0 AS cosine,
           c < $XmodalFloor AS flagged
@@ -356,8 +354,6 @@ object Multimodal {
     QuerySpec(
       "q381_crossmodal_recall", {
         val qe = Portable.qvecDuck("embedding", 64)
-        val dotMQ = Portable.qdotDuck("q.av", "c.m", 64)
-        val dotQM = Portable.qdotDuck("q.av", "c.qv", 64)
         Some(s"""WITH $towersDuckCte,
         mn AS (SELECT doc_id, m,
             CAST(list_sum([m[i] * m[i] for i in range(1, 65)]) AS BIGINT)
@@ -374,8 +370,8 @@ object Multimodal {
         qs1 AS (SELECT id AS q_id, qv AS av, nq AS an FROM paired
           WHERE id < 100),
         p1 AS (SELECT q.q_id, c.id AS cid,
-            CAST($dotMQ AS DOUBLE) / (sqrt(CAST(q.an AS DOUBLE))
-              * sqrt(CAST(c.nm AS DOUBLE))) AS cosine
+            ${Portable.qcosDuck("q.av", "c.m", "q.an", "c.nm", 64)}
+              AS cosine
           FROM paired c, qs1 q),
         r1 AS (SELECT q_id, cid, row_number() OVER (PARTITION BY q_id
             ORDER BY cosine DESC, cid) AS rk FROM p1),
@@ -389,8 +385,8 @@ object Multimodal {
         qs2 AS (SELECT id AS q_id, m AS av, nm AS an FROM paired
           WHERE id < 100),
         p2 AS (SELECT q.q_id, c.id AS cid,
-            CAST($dotQM AS DOUBLE) / (sqrt(CAST(q.an AS DOUBLE))
-              * sqrt(CAST(c.nq AS DOUBLE))) AS cosine
+            ${Portable.qcosDuck("q.av", "c.qv", "q.an", "c.nq", 64)}
+              AS cosine
           FROM paired c, qs2 q),
         r2 AS (SELECT q_id, cid, row_number() OVER (PARTITION BY q_id
             ORDER BY cosine DESC, cid) AS rk FROM p2),

@@ -27,8 +27,7 @@ object PipelineQueries {
         FROM lineitem WHERE l_orderkey % 4 = 0 AND l_returnflag = 'R'
         GROUP BY l_returnflag, l_linestatus"""),
       (s: SparkSession, d: String) => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft-sink").toString
+        val out = graft.TempDirs.create("graft-sink")
         // A quarter of the table exercises the same layout (all partition
         // values present) at a quarter of the sink IO.
         Tables.load(s, d, "lineitem")
@@ -69,8 +68,7 @@ object PipelineQueries {
           ${sqlDavg("trip_distance")} AS avg_distance
         FROM silver GROUP BY ROLLUP(payment_type, month)"""),
       (s: SparkSession, d: String) => {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-gold").toString
+        val root = graft.TempDirs.create("graft-gold")
         val cat = graft.pipeline.ZoneCatalog(root)
         // A quarter of the table exercises the full build (all rollup
         // groups present) at a quarter of the two-write round-trip IO —
@@ -120,6 +118,10 @@ object PipelineQueries {
           Tables.load(s, d, "customer")
             .select(col("c_custkey"), col("c_mktsegment")),
           tc, "c_custkey", 8)
+        // the managed tables' files go at JVM exit, like any scratch dir
+        val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir"))
+        Seq(to, tc).foreach(n =>
+          graft.TempDirs.deleteOnExit(new java.io.File(wh.getPath, n)))
         s.table(to)
           .join(s.table(tc).hint("merge"),
             col("o_custkey") === col("c_custkey"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.Portable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dataset health operators: distribution drift, membership sketches,

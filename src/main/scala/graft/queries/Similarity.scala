@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.Portable._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,7 +33,7 @@ object Similarity {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
-  private val Dims = 64
+  private[graft] val Dims = 64
 
   /** Top-k depth every recall readout divides by — package-visible so
     * ScaleProbe's recall_ppm computations track a K change instead of
@@ -167,10 +167,11 @@ object Similarity {
          FROM embeddings),
        en AS (SELECT vec_id, qv, ${qnsqDuck("qv", Dims)} AS nsq FROM e)"""
 
-  /** DuckDB CTE chain ending in `cells(vec_id, qv, nsq, cell)` — the
-    * q98/q354 4-plane cell space, exposed for oracles that compose the
-    * semantic-dedup stage across query files (q382's ladder). Also emits
-    * the cross-file cosine condition via [[semCosineDuck]].
+  /** DuckDB twin of [[celled]]: the quantized CTEs, then
+    * `cells(vec_id, qv, nsq, p0, p1, p2, p3, cell, minj)` — the 4-plane
+    * cell space of q47/q98/q351/q353/q354/q398, exposed for oracles that
+    * compose the semantic-dedup stage across query files (q382's
+    * ladder).
     */
   private[graft] def duckCells4Cte: String =
     s"""$duckQuantCte,
@@ -178,20 +179,18 @@ object Similarity {
            ${projDuck(0)} AS p0, ${projDuck(1)} AS p1,
            ${projDuck(2)} AS p2, ${projDuck(3)} AS p3
          FROM en),
-       cells AS (SELECT vec_id, qv, nsq,
+       cells AS (SELECT vec_id, qv, nsq, p0, p1, p2, p3,
            (CASE WHEN p0 >= 0 THEN 1 ELSE 0 END
             + CASE WHEN p1 >= 0 THEN 2 ELSE 0 END
             + CASE WHEN p2 >= 0 THEN 4 ELSE 0 END
-            + CASE WHEN p3 >= 0 THEN 8 ELSE 0 END) AS cell
+            + CASE WHEN p3 >= 0 THEN 8 ELSE 0 END) AS cell,
+           CASE
+             WHEN abs(p0) <= abs(p1) AND abs(p0) <= abs(p2)
+               AND abs(p0) <= abs(p3) THEN 0
+             WHEN abs(p1) <= abs(p2) AND abs(p1) <= abs(p3) THEN 1
+             WHEN abs(p2) <= abs(p3) THEN 2
+             ELSE 3 END AS minj
          FROM pr)"""
-
-  /** Exact-grid cosine between two quantized rows (DuckDB side), for
-    * cross-file oracle fragments; `a`/`b` are row aliases over a frame
-    * carrying qv/nsq.
-    */
-  private[graft] def semCosineDuck(a: String, b: String): String =
-    s"""CAST(${qdotDuck(s"$a.qv", s"$b.qv", Dims)} AS DOUBLE)
-        / (sqrt(CAST($a.nsq AS DOUBLE)) * sqrt(CAST($b.nsq AS DOUBLE)))"""
 
   /** One Lloyd step as shared CTEs (q356 churn + q369 stability read the
     * same two assignments): a0 = exact-integer argmin against the 10
@@ -281,7 +280,7 @@ object Similarity {
   /** Fused native expression (graft.expressions.QCosine): one codegen'd
     * loop, same exact integer semantics as the Portable.qdot formulation.
     */
-  private def cosineCol: org.apache.spark.sql.Column =
+  private def cosineCol: Column =
     expr("qcosine(q_qv, qv, q_nsq, nsq)")
 
   /** Exact cosine + per-query top-k over a pair frame with columns
@@ -351,8 +350,7 @@ object Similarity {
         FROM bl a JOIN bl b ON b.j = a.j AND b.band = a.band
         WHERE a.vec_id = $qId AND b.vec_id <> $qId),
       dsc AS (SELECT c.vec_id AS doc_id,
-          CAST(${qdotDuck("x.qv", "y.qv", Dims)} AS DOUBLE)
-            / (sqrt(CAST(x.nsq AS DOUBLE)) * sqrt(CAST(y.nsq AS DOUBLE)))
+          ${qcosDuck("x.qv", "y.qv", "x.nsq", "y.nsq", Dims)}
             AS cosine
         FROM dcand c JOIN es x ON x.vec_id = $qId
                      JOIN es y ON y.vec_id = c.vec_id),
@@ -444,6 +442,22 @@ object Similarity {
     math.max(floor, math.min(Planes, bl))
   }
 
+  /** In-plan twin of [[adaptiveTrieDepth]] — Spark side: clamp(floor ..
+    * [[Planes]], bitlength(`n` div `cap`)) over the count column `n`
+    * (one value across rows — a broadcast 1-row count).
+    */
+  private[graft] def adaptiveDepthSpark(n: String, cap: Int,
+      floor: Int): Column =
+    greatest(lit(floor), least(lit(Planes),
+      length(bin(expr(s"$n div $cap"))).cast("int")))
+
+  /** In-plan twin of [[adaptiveTrieDepth]] — DuckDB side: the same clamp
+    * over the count expression `n`.
+    */
+  private[graft] def adaptiveDepthDuck(n: String, cap: Int,
+      floor: Int): String =
+    s"GREATEST($floor, LEAST($Planes, length(to_base($n // $cap, 2))))"
+
   /** [[trieLeaf]] body over a frame already carrying its depth ceiling
     * as a `maxd` column (constant across rows) — the single definition
     * the fixed-depth and adaptive-depth entry points share.
@@ -489,9 +503,8 @@ object Similarity {
       floor: Int = TrieDepthFloor): DataFrame = {
     val n = sg.agg(count(lit(1)).as("n_src"))
     trieLeafCore(sg.crossJoin(broadcast(n))
-      .withColumn("maxd", greatest(lit(floor), least(lit(Planes),
-        length(bin(expr(s"n_src div ${math.max(1, cap)}"))).cast("int")))),
-      cap)
+      .withColumn("maxd",
+        adaptiveDepthSpark("n_src", math.max(1, cap), floor)), cap)
   }
 
   /** DuckDB mirror of [[trieLeafAdaptive]] at the q380 grain (cap =
@@ -499,15 +512,14 @@ object Similarity {
     * `leaf(vec_id, depth, cell)`. Shared by the q380/q391/q392/q394
     * oracles so the leaf rule cannot drift between them. Round 14: the
     * depth ceiling is the same adaptive clamp the Spark side computes
-    * (GREATEST(12, LEAST(48, bitlength(n / cap))) — identical to the
-    * floor at every fixture SF), and the integer min-encoding moved from
+    * ([[adaptiveDepthDuck]] — identical to the floor at every fixture
+    * SF), and the integer min-encoding moved from
     * 16-bit to the 48-bit [[CellEncShift]] so cells past depth 16 fit
     * (enc < 2^54, inside BIGINT).
     */
   private def duckTrieLeafCte: String =
-    s"""tmd AS (SELECT GREATEST($TrieDepthFloor, LEAST($Planes,
-          length(to_base(COUNT(*) // $CellOccupancy, 2)))) AS maxd
-        FROM sg),
+    s"""tmd AS (SELECT ${adaptiveDepthDuck("COUNT(*)", CellOccupancy,
+          TrieDepthFloor)} AS maxd FROM sg),
       lvr AS (SELECT vec_id, sig,
           unnest(range(4, maxd + 1)) AS d FROM sg, tmd),
       lv AS (SELECT vec_id, CAST(d AS BIGINT) AS d,
@@ -568,9 +580,7 @@ object Similarity {
     val base = quantized(s, d, withSig = true)
     val n = base.agg(count(lit(1)).as("n_corpus"))
     base.crossJoin(broadcast(n))
-      .withColumn("k",
-        greatest(lit(1), least(lit(Planes),
-          length(bin(expr(s"n_corpus div $CellOccupancy"))).cast("int"))))
+      .withColumn("k", adaptiveDepthSpark("n_corpus", CellOccupancy, 1))
       .withColumn("cell", expr("sig & (shiftleft(1L, k) - 1)"))
       .select(col("vec_id"), col("qv"), col("nsq"), col("cell"))
   }
@@ -587,8 +597,8 @@ object Similarity {
       minK: Int = 1): String =
     s"""${p}sg AS (SELECT vec_id, qv, nsq, ($sigDuck) AS sig FROM $src),
        ${p}cn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM $src),
-       ${p}kp AS (SELECT GREATEST($minK, LEAST($Planes,
-           length(to_base(n // $CellOccupancy, 2)))) AS k FROM ${p}cn),
+       ${p}kp AS (SELECT ${adaptiveDepthDuck("n", CellOccupancy, minK)} AS k
+         FROM ${p}cn),
        ${p}cells AS (SELECT vec_id, qv, nsq,
            sig & ((CAST(1 AS BIGINT) << k) - 1) AS cell
          FROM ${p}sg, ${p}kp)"""
@@ -620,8 +630,7 @@ object Similarity {
           q AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq
             FROM en WHERE vec_id < $NumQueries),
           scored AS (SELECT q_id AS query_id, en.vec_id AS neighbor_id,
-              CAST(${qdotDuck("q_qv", "en.qv", Dims)} AS DOUBLE)
-                / (sqrt(CAST(q_nsq AS DOUBLE)) * sqrt(CAST(en.nsq AS DOUBLE)))
+              ${qcosDuck("q_qv", "en.qv", "q_nsq", "en.nsq", Dims)}
                 AS cosine
             FROM q JOIN en ON en.vec_id <> q_id)
           SELECT query_id, neighbor_id, cosine, CAST(rk AS INT) AS rk FROM (
@@ -650,8 +659,7 @@ object Similarity {
                    JOIN bl b ON b.j = a.j AND b.band = a.band
             WHERE b.vec_id <> q.q_id),
           scored AS (SELECT c.q_id AS query_id, c.vec_id AS neighbor_id,
-              CAST(${qdotDuck("x.qv", "y.qv", Dims)} AS DOUBLE)
-                / (sqrt(CAST(x.nsq AS DOUBLE)) * sqrt(CAST(y.nsq AS DOUBLE)))
+              ${qcosDuck("x.qv", "y.qv", "x.nsq", "y.nsq", Dims)}
                 AS cosine
             FROM cand c JOIN es x ON x.vec_id = c.q_id
                         JOIN es y ON y.vec_id = c.vec_id)
@@ -686,23 +694,7 @@ object Similarity {
     // shuffles.
     QuerySpec(
       "q47_ann_ivf",
-      Some(s"""WITH $duckQuantCte,
-          pr AS (SELECT vec_id, qv, nsq,
-              ${projDuck(0)} AS p0, ${projDuck(1)} AS p1,
-              ${projDuck(2)} AS p2, ${projDuck(3)} AS p3
-            FROM en),
-          cells AS (SELECT vec_id, qv, nsq,
-              (CASE WHEN p0 >= 0 THEN 1 ELSE 0 END
-               + CASE WHEN p1 >= 0 THEN 2 ELSE 0 END
-               + CASE WHEN p2 >= 0 THEN 4 ELSE 0 END
-               + CASE WHEN p3 >= 0 THEN 8 ELSE 0 END) AS cell,
-              CASE
-                WHEN abs(p0) <= abs(p1) AND abs(p0) <= abs(p2)
-                  AND abs(p0) <= abs(p3) THEN 0
-                WHEN abs(p1) <= abs(p2) AND abs(p1) <= abs(p3) THEN 1
-                WHEN abs(p2) <= abs(p3) THEN 2
-                ELSE 3 END AS minj
-            FROM pr),
+      Some(s"""WITH $duckCells4Cte,
           probes AS (SELECT vec_id AS q_id,
               unnest([cell, xor(cell, 1 << minj)]) AS cell
             FROM cells WHERE vec_id < $NumQueries),
@@ -710,8 +702,7 @@ object Similarity {
             FROM probes p JOIN cells c ON c.cell = p.cell
             WHERE c.vec_id <> p.q_id),
           scored AS (SELECT c.q_id AS query_id, c.vec_id AS neighbor_id,
-              CAST(${qdotDuck("q.qv", "c.qv", Dims)} AS DOUBLE)
-                / (sqrt(CAST(q.nsq AS DOUBLE)) * sqrt(CAST(c.nsq AS DOUBLE)))
+              ${qcosDuck("q.qv", "c.qv", "q.nsq", "c.nsq", Dims)}
                 AS cosine
             FROM cand c JOIN cells q ON q.vec_id = c.q_id)
           SELECT query_id, neighbor_id, cosine, CAST(rk AS INT) AS rk FROM (
@@ -774,23 +765,12 @@ object Similarity {
     // of k ≈ √n). ScaleSpec guards the candidate growth empirically.
     QuerySpec(
       "q98_semantic_dedup",
-      Some(s"""WITH $duckQuantCte,
-          pr AS (SELECT vec_id, qv, nsq,
-              ${projDuck(0)} AS p0, ${projDuck(1)} AS p1,
-              ${projDuck(2)} AS p2, ${projDuck(3)} AS p3
-            FROM en),
-          cells AS (SELECT vec_id, qv, nsq,
-              (CASE WHEN p0 >= 0 THEN 1 ELSE 0 END
-               + CASE WHEN p1 >= 0 THEN 2 ELSE 0 END
-               + CASE WHEN p2 >= 0 THEN 4 ELSE 0 END
-               + CASE WHEN p3 >= 0 THEN 8 ELSE 0 END) AS cell
-            FROM pr),
+      Some(s"""WITH $duckCells4Cte,
           pairs AS (SELECT a.vec_id AS kept, b.vec_id AS dropped,
               b.cell AS cell
             FROM cells a JOIN cells b
               ON a.cell = b.cell AND a.vec_id < b.vec_id
-            WHERE CAST(${qdotDuck("a.qv", "b.qv", Dims)} AS DOUBLE)
-                / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE)))
+            WHERE ${qcosDuck("a.qv", "b.qv", "a.nsq", "b.nsq", Dims)}
                 >= $SemThreshold)
           SELECT dropped AS vec_id, CAST(cell AS INT) AS cell,
             MIN(kept) AS dup_of, COUNT(*) AS n_closer
@@ -823,8 +803,7 @@ object Similarity {
             FROM en JOIN lab ON lab.vec_id = en.vec_id
             WHERE en.vec_id < $NumQueries),
           scored AS (SELECT q_id, true_label, en.vec_id AS neighbor_id,
-              CAST(${qdotDuck("q_qv", "en.qv", Dims)} AS DOUBLE)
-                / (sqrt(CAST(q_nsq AS DOUBLE)) * sqrt(CAST(en.nsq AS DOUBLE)))
+              ${qcosDuck("q_qv", "en.qv", "q_nsq", "en.nsq", Dims)}
                 AS cosine
             FROM q JOIN en ON en.vec_id >= $NumQueries),
           top AS (SELECT * FROM (SELECT *, row_number() OVER (
@@ -987,9 +966,7 @@ object Similarity {
           $duckAdaptiveCells,
           nn AS (SELECT * FROM (SELECT a.vec_id, b.vec_id AS nb,
               row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                CAST(${qdotDuck("a.qv", "b.qv", Dims)} AS DOUBLE)
-                  / (sqrt(CAST(a.nsq AS DOUBLE))
-                     * sqrt(CAST(b.nsq AS DOUBLE))) DESC,
+                ${qcosDuck("a.qv", "b.qv", "a.nsq", "b.nsq", Dims)} DESC,
                 b.vec_id) AS rn
             FROM cells a JOIN cells b
               ON b.cell = a.cell AND b.vec_id <> a.vec_id) z
@@ -1034,9 +1011,7 @@ object Similarity {
           $duckAdaptiveCells,
           nn AS (SELECT * FROM (SELECT a.vec_id, b.vec_id AS nb,
               row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                CAST(${qdotDuck("a.qv", "b.qv", Dims)} AS DOUBLE)
-                  / (sqrt(CAST(a.nsq AS DOUBLE))
-                     * sqrt(CAST(b.nsq AS DOUBLE))) DESC,
+                ${qcosDuck("a.qv", "b.qv", "a.nsq", "b.nsq", Dims)} DESC,
                 b.vec_id) AS rn
             FROM cells a JOIN cells b
               ON b.cell = a.cell AND b.vec_id <> a.vec_id) z
@@ -1177,8 +1152,7 @@ object Similarity {
           q AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq
             FROM en WHERE vec_id < $NumQueries),
           xsc AS (SELECT q_id AS query_id, en.vec_id AS neighbor_id,
-              CAST(${qdotDuck("q_qv", "en.qv", Dims)} AS DOUBLE)
-                / (sqrt(CAST(q_nsq AS DOUBLE)) * sqrt(CAST(en.nsq AS DOUBLE)))
+              ${qcosDuck("q_qv", "en.qv", "q_nsq", "en.nsq", Dims)}
                 AS cosine
             FROM q JOIN en ON en.vec_id <> q_id),
           xtop AS (SELECT query_id, neighbor_id FROM (
@@ -1193,8 +1167,7 @@ object Similarity {
                    JOIN bl b ON b.j = a.j AND b.band = a.band
             WHERE b.vec_id <> q.q_id),
           asc2 AS (SELECT c.q_id AS query_id, c.vec_id AS neighbor_id,
-              CAST(${qdotDuck("x.qv", "y.qv", Dims)} AS DOUBLE)
-                / (sqrt(CAST(x.nsq AS DOUBLE)) * sqrt(CAST(y.nsq AS DOUBLE)))
+              ${qcosDuck("x.qv", "y.qv", "x.nsq", "y.nsq", Dims)}
                 AS cosine
             FROM acand c JOIN es x ON x.vec_id = c.q_id
                          JOIN es y ON y.vec_id = c.vec_id),
@@ -1269,9 +1242,7 @@ object Similarity {
               for i in range(1, ${Dims + 1})]) AS BIGINT) AS nb
           FROM e, sg),
         cs AS (SELECT vec_id, vlabel, clabel,
-            CAST(dot AS DOUBLE)
-              / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE)))
-              AS c
+            ${cosDuck("dot", "na", "nb")} AS c
           FROM sc),
         pv AS (SELECT vec_id, ANY_VALUE(vlabel) AS label,
             MAX(CASE WHEN vlabel = clabel THEN c END) AS own_cos,
@@ -1360,8 +1331,7 @@ object Similarity {
             WHERE la.label <> lb.label),
           scored AS (SELECT c.q_id AS query_id, c.vec_id AS neighbor_id,
               c.label_q, c.label_n,
-              CAST(${qdotDuck("x.qv", "y.qv", Dims)} AS DOUBLE)
-                / (sqrt(CAST(x.nsq AS DOUBLE)) * sqrt(CAST(y.nsq AS DOUBLE)))
+              ${qcosDuck("x.qv", "y.qv", "x.nsq", "y.nsq", Dims)}
                 AS cosine
             FROM lc c JOIN es x ON x.vec_id = c.q_id
                       JOIN es y ON y.vec_id = c.vec_id)
@@ -1411,23 +1381,11 @@ object Similarity {
     // aggregate, never data).
     QuerySpec(
       "q351_ivf_nprobe_planning",
-      Some(s"""WITH $duckQuantCte,
-          pr AS (SELECT vec_id, qv, nsq,
-              ${projDuck(0)} AS p0, ${projDuck(1)} AS p1,
-              ${projDuck(2)} AS p2, ${projDuck(3)} AS p3
-            FROM en),
-          cells AS (SELECT vec_id, qv, nsq, p0, p1, p2, p3,
-              (CASE WHEN p0 >= 0 THEN 1 ELSE 0 END
-               + CASE WHEN p1 >= 0 THEN 2 ELSE 0 END
-               + CASE WHEN p2 >= 0 THEN 4 ELSE 0 END
-               + CASE WHEN p3 >= 0 THEN 8 ELSE 0 END) AS cell
-            FROM pr),
+      Some(s"""WITH $duckCells4Cte,
           t1 AS (SELECT q_id, neighbor_id AS top1_id FROM (
               SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
                 row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                  CAST(${qdotDuck("q.qv", "c.qv", Dims)} AS DOUBLE)
-                    / (sqrt(CAST(q.nsq AS DOUBLE))
-                      * sqrt(CAST(c.nsq AS DOUBLE))) DESC,
+                  ${qcosDuck("q.qv", "c.qv", "q.nsq", "c.nsq", Dims)} DESC,
                   c.vec_id) AS rk
               FROM cells q JOIN cells c ON c.vec_id <> q.vec_id
               WHERE q.vec_id < $NumQueries) z
@@ -1504,20 +1462,9 @@ object Similarity {
     // explode on the pair grain, one bounded rollup.
     QuerySpec(
       "q353_semdedup_eps_sweep",
-      Some(s"""WITH $duckQuantCte,
-          pr AS (SELECT vec_id, qv, nsq,
-              ${projDuck(0)} AS p0, ${projDuck(1)} AS p1,
-              ${projDuck(2)} AS p2, ${projDuck(3)} AS p3
-            FROM en),
-          cells AS (SELECT vec_id, qv, nsq,
-              (CASE WHEN p0 >= 0 THEN 1 ELSE 0 END
-               + CASE WHEN p1 >= 0 THEN 2 ELSE 0 END
-               + CASE WHEN p2 >= 0 THEN 4 ELSE 0 END
-               + CASE WHEN p3 >= 0 THEN 8 ELSE 0 END) AS cell
-            FROM pr),
+      Some(s"""WITH $duckCells4Cte,
           pairs AS (SELECT a.vec_id AS kept, b.vec_id AS dropped,
-              CAST(${qdotDuck("a.qv", "b.qv", Dims)} AS DOUBLE)
-                / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE)))
+              ${qcosDuck("a.qv", "b.qv", "a.nsq", "b.nsq", Dims)}
                 AS c
             FROM cells a JOIN cells b
               ON a.cell = b.cell AND a.vec_id < b.vec_id)
@@ -1550,24 +1497,13 @@ object Similarity {
     // on the empty result — same convention as q324.
     QuerySpec(
       "q354_incremental_semdedup",
-      Some(s"""WITH $duckQuantCte,
-          pr AS (SELECT vec_id, qv, nsq,
-              ${projDuck(0)} AS p0, ${projDuck(1)} AS p1,
-              ${projDuck(2)} AS p2, ${projDuck(3)} AS p3
-            FROM en),
-          cells AS (SELECT vec_id, qv, nsq,
-              (CASE WHEN p0 >= 0 THEN 1 ELSE 0 END
-               + CASE WHEN p1 >= 0 THEN 2 ELSE 0 END
-               + CASE WHEN p2 >= 0 THEN 4 ELSE 0 END
-               + CASE WHEN p3 >= 0 THEN 8 ELSE 0 END) AS cell
-            FROM pr),
+      Some(s"""WITH $duckCells4Cte,
           g AS (SELECT n.vec_id, n.cell, MIN(o.vec_id) AS dup_of,
               CAST(COUNT(o.vec_id) AS BIGINT) AS n_matches
             FROM cells n LEFT JOIN cells o
               ON o.cell = n.cell AND o.vec_id < 250
-                AND CAST(${qdotDuck("n.qv", "o.qv", Dims)} AS DOUBLE)
-                  / (sqrt(CAST(n.nsq AS DOUBLE))
-                    * sqrt(CAST(o.nsq AS DOUBLE))) >= $SemThreshold
+                AND ${qcosDuck("n.qv", "o.qv", "n.nsq", "o.nsq", Dims)}
+                  >= $SemThreshold
             WHERE n.vec_id >= 250
             GROUP BY 1, 2)
           SELECT vec_id, CAST(cell AS INT) AS cell,
@@ -1778,8 +1714,7 @@ object Similarity {
           q AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq
             FROM en WHERE vec_id < $NumQueries),
           xsc AS (SELECT q_id, en.vec_id,
-              CAST(${qdotDuck("q_qv", "en.qv", Dims)} AS DOUBLE)
-                / (sqrt(CAST(q_nsq AS DOUBLE)) * sqrt(CAST(en.nsq AS DOUBLE)))
+              ${qcosDuck("q_qv", "en.qv", "q_nsq", "en.nsq", Dims)}
                 AS cosine
             FROM q JOIN en ON en.vec_id <> q_id),
           top AS (SELECT q_id, vec_id, rk AS rk_exact FROM (
@@ -1884,9 +1819,7 @@ object Similarity {
           t0 AS (SELECT q_id, vec_id FROM (
               SELECT q0.q_id, a0.vec_id,
                 row_number() OVER (PARTITION BY q0.q_id ORDER BY
-                  CAST(${qdotDuck("qe.qv", "ne.qv", Dims)} AS DOUBLE)
-                    / (sqrt(CAST(qe.nsq AS DOUBLE))
-                      * sqrt(CAST(ne.nsq AS DOUBLE))) DESC,
+                  ${qcosDuck("qe.qv", "ne.qv", "qe.nsq", "ne.nsq", Dims)} DESC,
                   a0.vec_id) AS rk
               FROM q0 JOIN a0 ON a0.cid = q0.cid
                 AND a0.vec_id <> q0.q_id
@@ -1896,9 +1829,7 @@ object Similarity {
           t1 AS (SELECT q_id, vec_id FROM (
               SELECT q1.q_id, a1.vec_id,
                 row_number() OVER (PARTITION BY q1.q_id ORDER BY
-                  CAST(${qdotDuck("qe.qv", "ne.qv", Dims)} AS DOUBLE)
-                    / (sqrt(CAST(qe.nsq AS DOUBLE))
-                      * sqrt(CAST(ne.nsq AS DOUBLE))) DESC,
+                  ${qcosDuck("qe.qv", "ne.qv", "qe.nsq", "ne.nsq", Dims)} DESC,
                   a1.vec_id) AS rk
               FROM q1 JOIN a1 ON a1.cid = q1.cid
                 AND a1.vec_id <> q1.q_id
@@ -1993,9 +1924,7 @@ object Similarity {
         q AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq
           FROM a WHERE vec_id < 64),
         p1 AS (SELECT q.q_id, b.vec_id,
-            CAST(${qdotDuck("q.q_qv", "b.qv", Dims)} AS DOUBLE)
-              / (sqrt(CAST(q.q_nsq AS DOUBLE))
-                * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
+            ${qcosDuck("q.q_qv", "b.qv", "q.q_nsq", "b.nsq", Dims)} AS cosine
           FROM b, q),
         rk1 AS (SELECT q_id, vec_id, cosine, row_number()
             OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rk
@@ -2008,9 +1937,7 @@ object Similarity {
         bv AS (SELECT DISTINCT r1.b_id, el.qv AS b_qv, el.nsq AS b_nsq
           FROM r1 JOIN el ON el.vec_id = r1.b_id),
         p2 AS (SELECT bv.b_id, a.vec_id,
-            CAST(${qdotDuck("bv.b_qv", "a.qv", Dims)} AS DOUBLE)
-              / (sqrt(CAST(bv.b_nsq AS DOUBLE))
-                * sqrt(CAST(a.nsq AS DOUBLE))) AS cosine
+            ${qcosDuck("bv.b_qv", "a.qv", "bv.b_nsq", "a.nsq", Dims)} AS cosine
           FROM a, bv),
         r2 AS (SELECT b_id, vec_id AS a_top FROM (
             SELECT b_id, vec_id, row_number() OVER (PARTITION BY b_id
@@ -2086,9 +2013,7 @@ object Similarity {
         q AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq
           FROM en WHERE vec_id < $ConsensusIds),
         p AS (SELECT q.q_id, en.vec_id,
-            CAST(${qdotDuck("q.q_qv", "en.qv", Dims)} AS DOUBLE)
-              / (sqrt(CAST(q.q_nsq AS DOUBLE))
-                * sqrt(CAST(en.nsq AS DOUBLE))) AS cosine
+            ${qcosDuck("q.q_qv", "en.qv", "q.q_nsq", "en.nsq", Dims)} AS cosine
           FROM en, q WHERE en.vec_id <> q.q_id),
         tk AS (SELECT q_id, vec_id FROM (
             SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
@@ -2198,12 +2123,10 @@ object Similarity {
     // ScaleSpec pins the shuffle-record bound at K = 20).
     QuerySpec(
       "q386_mmr_select", {
-        val cos = (a: String, b: String) =>
-          s"""CAST(${qdotDuck(s"$a.qv", s"$b.qv", Dims)} AS DOUBLE)
-             / (sqrt(CAST($a.nsq AS DOUBLE)) * sqrt(CAST($b.nsq AS DOUBLE)))"""
         val stages = (2 to MmrK).map { t =>
           s"""ms_$t AS (SELECT r.q_id, r.vec_id, r.cq,
-              MAX(${cos("er", "es")}) AS ms
+              MAX(${qcosDuck("er.qv", "es.qv", "er.nsq", "es.nsq", Dims)})
+                AS ms
             FROM rel r JOIN en er ON er.vec_id = r.vec_id
             JOIN acc_${t - 1} p ON p.q_id = r.q_id
             JOIN en es ON es.vec_id = p.neighbor_id
@@ -2226,9 +2149,7 @@ object Similarity {
           qset AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq
             FROM en WHERE vec_id < $NumQueries),
           rel AS (SELECT q_id, en.vec_id,
-              CAST(${qdotDuck("q_qv", "en.qv", Dims)} AS DOUBLE)
-                / (sqrt(CAST(q_nsq AS DOUBLE))
-                  * sqrt(CAST(en.nsq AS DOUBLE))) AS cq
+              ${qcosDuck("q_qv", "en.qv", "q_nsq", "en.nsq", Dims)} AS cq
             FROM qset, en WHERE en.vec_id <> q_id),
           acc_1 AS (SELECT q_id, vec_id AS neighbor_id, cq AS relevance,
               cq AS mmr_score, CAST(1 AS INT) AS mmr_rank FROM (
@@ -2318,7 +2239,8 @@ object Similarity {
             FROM c a JOIN c b
               ON a.depth = b.depth AND a.cell = b.cell
               AND a.vec_id < b.vec_id
-            WHERE ${semCosineDuck("a", "b")} >= $SemThreshold
+            WHERE ${qcosDuck("a.qv", "b.qv", "a.nsq", "b.nsq", Dims)}
+              >= $SemThreshold
             GROUP BY 1)
           SELECT c.vec_id, c.depth, c.cell,
             m.vec_id IS NULL AS admitted, m.dup_of,
@@ -2470,7 +2392,8 @@ object Similarity {
             FROM c a JOIN c b
               ON a.depth = b.depth AND a.cell = b.cell
               AND a.vec_id < b.vec_id
-            WHERE ${semCosineDuck("a", "b")} >= $SemThreshold),
+            WHERE ${qcosDuck("a.qv", "b.qv", "a.nsq", "b.nsq", Dims)}
+              >= $SemThreshold),
           ${Dedup.minhashCteChain},
           ${Dedup.verifyCteDuck(0.8)},
           sym AS (SELECT doc_a AS u, doc_b AS v FROM verified
@@ -2561,8 +2484,7 @@ object Similarity {
     // (cell-partitioned corpus => the probe join IS partition pruning).
     QuerySpec(
       "q398_ivf_nprobe_elastic",
-      Some(s"""WITH $duckQuantCte,
-          ${duckIvfElasticCtes(IvfQuota, IvfElasticCeiling)}
+      Some(s"""WITH ${duckIvfElasticCtes(IvfQuota, IvfElasticCeiling)}
           SELECT q_id, probes_used, n_cand, n_hit,
             n_hit * 1000000 // $K AS recall_ppm
           FROM grid"""),
@@ -2790,15 +2712,43 @@ object Similarity {
   /** DuckDB mirror of [[elasticStop]], taking the same inputs as CTE
     * names: `probes` (q_id, rk, joinKeys...), `corpusCells` (vec_id,
     * joinKeys...) and the query set `qs` (q_id, q_qv, q_nsq), with the
-    * quantized corpus `en` in scope. Emits the chain firstrk → newat →
-    * cume → chosen → candset → scored → etop → exacttop → hits → nc →
-    * grid, ending in `grid(q_id, probes_used, n_cand, n_hit)`.
-    * `nCells` = (relation, expression) adds an `n_cells` column: the
-    * relation is cross-joined into `grid` and the expression read from
-    * it.
+    * quantized corpus `en` in scope. The quota rule builds the cut
+    * [[duckAnnAudit]] reads (newat → cume → chosen → cut): one row per
+    * query at budget = `ceiling`, cut at the minimal rank meeting the
+    * quota, else at the last rank reached. Ends in `grid(probe_budget,
+    * q_id, [n_cells,] probes_used, n_cand, n_hit)`.
     */
   private def duckElasticStop(probes: String, corpusCells: String,
       joinKeys: Seq[String], qs: String, quota: Int, ceiling: Int,
+      nCells: Option[(String, String)] = None): String =
+    duckAnnAudit(probes, corpusCells, joinKeys, qs,
+      s"""newat AS (SELECT q_id, frk, CAST(COUNT(*) AS BIGINT) AS n_new
+        FROM firstrk GROUP BY 1, 2),
+      cume AS (SELECT q_id, frk, SUM(n_new) OVER (PARTITION BY q_id
+          ORDER BY frk) AS cum FROM newat),
+      chosen AS (SELECT q_id,
+          MIN(CASE WHEN cum >= $quota THEN frk END) AS rmet,
+          MAX(frk) AS rmax
+        FROM cume GROUP BY 1),
+      cut AS (SELECT $ceiling AS probe_budget, q.q_id,
+          COALESCE(ch.rmet, ch.rmax) AS rcut,
+          COALESCE(ch.rmet + 1, $ceiling) AS probes_used
+        FROM $qs q LEFT JOIN chosen ch ON ch.q_id = q.q_id)""",
+      nCells)
+
+  /** The DuckDB ANN audit both probe rules share. `firstrk` is the
+    * lowest rank of `probes` (q_id, rk, joinKeys...) reaching each
+    * candidate of `corpusCells` (vec_id, joinKeys...); `cutCtes` derive
+    * from it `cut(probe_budget, q_id, rcut, probes_used)`, one row per
+    * (budget, query) in `qs` (q_id, q_qv, q_nsq), keeping the
+    * candidates first reached at rank <= rcut. The tail re-ranks them
+    * exactly against the exact top-[[K]] and ends in
+    * `grid(probe_budget, q_id, [n_cells,] probes_used, n_cand, n_hit)`.
+    * `nCells` = (relation, expression) adds `n_cells`: the relation is
+    * cross-joined into `grid` and the expression read from it.
+    */
+  private def duckAnnAudit(probes: String, corpusCells: String,
+      joinKeys: Seq[String], qs: String, cutCtes: String,
       nCells: Option[(String, String)] = None): String = {
     val on = joinKeys.map(k => s"c.$k = p.$k").mkString(" AND ")
     val (cellsCol, cellsJoin) = nCells.fold(("", "")) {
@@ -2807,40 +2757,41 @@ object Similarity {
     s"""firstrk AS (SELECT p.q_id, c.vec_id, MIN(p.rk) AS frk
         FROM $probes p JOIN $corpusCells c ON $on
         WHERE c.vec_id <> p.q_id GROUP BY 1, 2),
-      newat AS (SELECT q_id, frk, CAST(COUNT(*) AS BIGINT) AS n_new
-        FROM firstrk GROUP BY 1, 2),
-      cume AS (SELECT q_id, frk, SUM(n_new) OVER (PARTITION BY q_id
-          ORDER BY frk) AS cum FROM newat),
-      chosen AS (SELECT q_id,
-          MIN(CASE WHEN cum >= $quota THEN frk END) AS rmet,
-          MAX(frk) AS rmax
-        FROM cume GROUP BY 1),
-      candset AS (SELECT f.q_id, f.vec_id FROM firstrk f
-        JOIN chosen ch ON ch.q_id = f.q_id
-          AND f.frk <= COALESCE(ch.rmet, ch.rmax)),
-      scored AS (SELECT cs.q_id, cs.vec_id, $duckAnnCosQ AS c
+      $cutCtes,
+      candset AS (SELECT ct.probe_budget, f.q_id, f.vec_id FROM firstrk f
+        JOIN cut ct ON ct.q_id = f.q_id AND f.frk <= ct.rcut),
+      scored AS (SELECT cs.probe_budget, cs.q_id, cs.vec_id,
+          ${qcosDuck("q.q_qv", "e.qv", "q.q_nsq", "e.nsq", Dims)} AS c
         FROM candset cs JOIN en e ON e.vec_id = cs.vec_id
              JOIN $qs q ON q.q_id = cs.q_id),
-      etop AS (SELECT q_id, vec_id FROM (
-          SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
+      etop AS (SELECT probe_budget, q_id, vec_id FROM (
+          SELECT probe_budget, q_id, vec_id, row_number() OVER (
+              PARTITION BY probe_budget, q_id
               ORDER BY c DESC, vec_id) AS rk FROM scored) z
         WHERE rk <= $K),
-      ${duckExactTop(qs)},
-      hits AS (SELECT t.q_id, CAST(COUNT(*) AS BIGINT) AS n_hit
+      exacttop AS (SELECT q_id, vec_id FROM (
+          SELECT q.q_id, e.vec_id, row_number() OVER (
+              PARTITION BY q.q_id ORDER BY
+                ${qcosDuck("q.q_qv", "e.qv", "q.q_nsq", "e.nsq", Dims)} DESC,
+                e.vec_id) AS rk
+          FROM $qs q, en e WHERE e.vec_id <> q.q_id) z
+        WHERE rk <= $K),
+      hits AS (SELECT t.probe_budget, t.q_id,
+          CAST(COUNT(*) AS BIGINT) AS n_hit
         FROM etop t JOIN exacttop x
-          ON x.q_id = t.q_id AND x.vec_id = t.vec_id GROUP BY 1),
-      nc AS (SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_cand
-        FROM candset GROUP BY 1),
-      grid AS (SELECT q.q_id, $cellsCol
-          CAST(COALESCE(ch.rmet + 1, $ceiling) AS BIGINT)
-            AS probes_used,
+          ON x.q_id = t.q_id AND x.vec_id = t.vec_id GROUP BY 1, 2),
+      nc AS (SELECT probe_budget, q_id, CAST(COUNT(*) AS BIGINT) AS n_cand
+        FROM candset GROUP BY 1, 2),
+      grid AS (SELECT ct.probe_budget, ct.q_id, $cellsCol
+          CAST(ct.probes_used AS BIGINT) AS probes_used,
           COALESCE(nc.n_cand, 0) AS n_cand,
           COALESCE(h.n_hit, 0) AS n_hit
-        FROM $qs q
+        FROM cut ct
         $cellsJoin
-        LEFT JOIN chosen ch ON ch.q_id = q.q_id
-        LEFT JOIN nc ON nc.q_id = q.q_id
-        LEFT JOIN hits h ON h.q_id = q.q_id)"""
+        LEFT JOIN nc ON nc.probe_budget = ct.probe_budget
+          AND nc.q_id = ct.q_id
+        LEFT JOIN hits h ON h.probe_budget = ct.probe_budget
+          AND h.q_id = ct.q_id)"""
   }
 
   /** The adaptive serving grid's frames (q400): the 48-plane signature
@@ -2861,11 +2812,10 @@ object Similarity {
     * the audit's exact leg scans the corpus.
     */
   private def ivfServeFrames(s: SparkSession, d: String,
-      occupancy: Int = IvfServeOccupancy): AnnFrames = {
+      occupancy: Int): AnnFrames = {
     val sg = quantizedSigCut(s, d)
     val n = sg.agg(count(lit(1)).as("n_src"))
-    val maxdCol = greatest(lit(IvfServeFloorDepth), least(lit(Planes),
-      length(bin(expr(s"n_src div $occupancy"))).cast("int")))
+    val maxdCol = adaptiveDepthSpark("n_src", occupancy, IvfServeFloorDepth)
     val corpus = sg.crossJoin(broadcast(n))
       .withColumn("maxd", maxdCol)
       .select(col("vec_id"),
@@ -2936,19 +2886,18 @@ object Similarity {
   }
 
   /** DuckDB mirror of [[ivfElasticAdaptive]] — self-contained after
-    * the quantized CTEs; emits `grid(q_id, n_cells, probes_used,
-    * n_cand, n_hit)`. The depth rule is the [[duckTrieLeafCte]] clamp
-    * at the serving floor/occupancy; the probe order and stop rule are
-    * the shared closed form.
+    * the quantized CTEs; emits `grid(probe_budget, q_id, n_cells,
+    * probes_used, n_cand, n_hit)`. The depth rule is
+    * [[adaptiveDepthDuck]] at the serving floor/occupancy; the probe
+    * order and stop rule are the shared closed form.
     */
   private def duckIvfAdaptiveCtes(quota: Int, ceiling: Int,
       occupancy: Int = IvfServeOccupancy): String = {
     val apList = (0 until Planes).map(p => s"abs(${projDuck(p)})")
       .mkString(", ")
     s"""sgq AS (SELECT vec_id, qv, nsq, ($sigDuck) AS sig FROM en),
-      smd AS (SELECT GREATEST($IvfServeFloorDepth, LEAST($Planes,
-          length(to_base(COUNT(*) // $occupancy, 2)))) AS maxd
-        FROM en),
+      smd AS (SELECT ${adaptiveDepthDuck("COUNT(*)", occupancy,
+          IvfServeFloorDepth)} AS maxd FROM en),
       corpus AS (SELECT vec_id,
           sig & ((CAST(1 AS BIGINT) << maxd) - 1) AS cell
         FROM sgq, smd),
@@ -3061,8 +3010,8 @@ object Similarity {
   }
 
   /** DuckDB mirror of [[ivfCentroidServe]] — self-contained after the
-    * quantized CTEs; emits `grid(q_id, n_cells, probes_used, n_cand,
-    * n_hit)`. The trainer CTEs mirror the Spark stages 1:1 (strided
+    * quantized CTEs; emits `grid(probe_budget, q_id, n_cells,
+    * probes_used, n_cand, n_hit)`. The trainer CTEs mirror the Spark stages 1:1 (strided
     * seeds, exact-integer argmin with cid tie-break, truncating-div
     * component means — DuckDB `//` and Spark `div` both truncate toward
     * zero); the stop tail is the shared closed form.
@@ -3114,22 +3063,14 @@ object Similarity {
       ${duckElasticStop("prk", "assign", Seq("cell"), "qset", quota,
         ceiling, Some(("nk", "CAST(nk.k AS BIGINT)")))}"""
 
-  /** DuckDB mirror of [[ivfElastic]] — self-contained after the
-    * quantized CTEs; emits `grid(q_id, probes_used, n_cand, n_hit)`.
-    * Same ranked probe list as q351 (`pl`/`pls` machinery) and the same
-    * closed-form stop rule as q395's mirror.
+  /** DuckDB mirror of [[ivfElastic]] — self-contained (the cells come
+    * from [[duckCells4Cte]]); emits `grid(probe_budget, q_id,
+    * probes_used, n_cand, n_hit)`. Same ranked probe list as q351
+    * (`pl`/`pls` machinery) and the same closed-form stop rule as
+    * q395's mirror.
     */
   private def duckIvfElasticCtes(quota: Int, ceiling: Int): String =
-    s"""pr AS (SELECT vec_id, qv, nsq,
-          ${projDuck(0)} AS p0, ${projDuck(1)} AS p1,
-          ${projDuck(2)} AS p2, ${projDuck(3)} AS p3
-        FROM en),
-      cells AS (SELECT vec_id, qv, nsq, p0, p1, p2, p3,
-          (CASE WHEN p0 >= 0 THEN 1 ELSE 0 END
-           + CASE WHEN p1 >= 0 THEN 2 ELSE 0 END
-           + CASE WHEN p2 >= 0 THEN 4 ELSE 0 END
-           + CASE WHEN p3 >= 0 THEN 8 ELSE 0 END) AS cell
-        FROM pr),
+    s"""$duckCells4Cte,
       ql AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq, cell,
           list_sort([{'a': abs(p0), 'j': 0}, {'a': abs(p1), 'j': 1},
             {'a': abs(p2), 'j': 2}, {'a': abs(p3), 'j': 3}]) AS ord
@@ -3143,29 +3084,6 @@ object Similarity {
       ${duckElasticStop("prk", "cells", Seq("cell"), "pls", quota,
         ceiling)}"""
 
-  /** Budget-parameterized trie-ANN recall audit, shared by q392 (one
-    * budget) and q394 (the sweep) — and driven by ScaleProbe on the 10x
-    * corpus for the recall-vs-growth table. Probe rule: a query's probe
-    * signatures are its own, plus its signature with the rk-th
-    * least-confident plane flipped (rank = (|projection|, plane index)
-    * ascending over planes 0..maxd-1) for rk < budget — multiprobe in
-    * plane-confidence order, the q47 trick at the trie grain. maxd is
-    * the SAME adaptive ceiling the leaf index used
-    * ([[adaptiveTrieDepth]], computed in-plan from the corpus count),
-    * so probes deepen with the index. Output: one row per
-    * (probe_budget, q_id) with the candidate count and the
-    * exact-top-K hit count. 100 TB plan: ranking/flip frames are
-    * query-set-sized (broadcast); candidates are `budget` leaf lookups
-    * per query; the corpus-scanning exact leg exists only for the
-    * audit.
-    */
-  /** q391/q397's candidate relation — same-adaptive-leaf pairs BEFORE
-    * the cosine verify (the structural twin of q391's `m` join and
-    * q397's `spairs`, kept column-light for counting). Exposed for
-    * ScaleProbe's growth table: the adaptive grain bounds this at
-    * ~cap·n plus the audited remainder's in-cell pairs, and the 10x
-    * row is the empirical check.
-    */
   /** q397's VERIFIED semantic pair relation (same adaptive leaf AND
     * exact-grid cosine >= [[SemThreshold]]) — the q391 `m`-join with
     * the verify applied, factored out so ScaleProbe's q397 stage
@@ -3196,6 +3114,13 @@ object Similarity {
       .select(col("doc_a"), col("doc_b"))
   }
 
+  /** q391/q397's candidate relation — same-adaptive-leaf pairs BEFORE
+    * the cosine verify (the structural twin of q391's `m` join and
+    * q397's `spairs`, kept column-light for counting). Exposed for
+    * ScaleProbe's growth table: the adaptive grain bounds this at
+    * ~cap·n plus the audited remainder's in-cell pairs, and the 10x
+    * row is the empirical check.
+    */
   private[graft] def trieLeafPairCandidates(s: SparkSession,
       d: String): DataFrame = {
     val sg = quantizedSigCut(s, d)
@@ -3228,8 +3153,8 @@ object Similarity {
     val n = sgk.agg(count(lit(1)).as("n_src"))
     val qs = sg.filter(col("vec_id") < NumQueries)
       .crossJoin(broadcast(n))
-      .withColumn("maxd", greatest(lit(TrieDepthFloor), least(lit(Planes),
-        length(bin(expr(s"n_src div $CellOccupancy"))).cast("int"))))
+      .withColumn("maxd",
+        adaptiveDepthSpark("n_src", CellOccupancy, TrieDepthFloor))
       .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
         col("nsq").as("q_nsq"), col("sig"), col("maxd"),
         expr(apArraySql).as("ap")).cache()
@@ -3247,6 +3172,19 @@ object Similarity {
         .join(broadcast(qs.select(col("q_id"), col("maxd"))), "q_id"))
   }
 
+  /** The distinct trie cells a set of probe signatures `sigs` (`keys`...,
+    * psig, maxd) reaches: each signature's prefix cell at every depth
+    * 4..maxd, one row per (`keys`..., depth, cell).
+    */
+  private def trieProbeCells(sigs: DataFrame, keys: String*): DataFrame =
+    sigs.select(keys.map(col) :+ explode(expr(
+        """transform(sequence(4, maxd), dd ->
+           struct(dd AS depth, psig & (shiftleft(1L, dd) - 1) AS cell))"""))
+        .as("x"): _*)
+      .select(keys.map(col) ++ Seq(
+        col("x.depth").as("depth"), col("x.cell").as("cell")): _*)
+      .distinct()
+
   /** The audit's budget-independent ground truth: exact top-[[K]] per
     * query over the whole corpus (id-tiebroken exact-grid cosines).
     */
@@ -3262,6 +3200,25 @@ object Similarity {
       .filter(col("rk") <= K).select(col("q_id"), col("vec_id"))
   }
 
+  /** Budget-parameterized trie-ANN recall audit, shared by q392 (one
+    * budget) and q394 (the sweep) — and driven by ScaleProbe on the 10x
+    * corpus for the recall-vs-growth table. Probe rule: a query's probe
+    * signatures are its own, plus its signature with the rk-th
+    * least-confident plane flipped (rank = (|projection|, plane index)
+    * ascending over planes 0..maxd-1) for rk < budget — multiprobe in
+    * plane-confidence order, the q47 trick at the trie grain. maxd is
+    * the SAME adaptive ceiling the leaf index used
+    * ([[adaptiveTrieDepth]], computed in-plan from the corpus count),
+    * so probes deepen with the index. Output: one row per
+    * (probe_budget, q_id) with the candidate count and the
+    * exact-top-K hit count. 100 TB plan: ranking/flip frames are
+    * query-set-sized (broadcast); candidates are `budget` leaf lookups
+    * per query; the corpus-scanning exact leg exists only for the
+    * audit. Its candidate/re-rank tail stays separate from
+    * [[elasticStop]]'s: q395's QueriesSpec case checks the elastic rule
+    * against this sweep, which a shared tail would reduce to comparing
+    * one path with itself.
+    */
   private[graft] def trieAnnRecall(s: SparkSession, d: String,
       budgets: Seq[Int]): DataFrame = {
     import s.implicits._
@@ -3270,17 +3227,9 @@ object Similarity {
     val corpus = fr.corpus
     val qs = fr.qs
     val budgetDf = budgets.toDF("probe_budget")
-    val probeSigs = fr.sigsRk
+    val probes = trieProbeCells(fr.sigsRk
       .crossJoin(broadcast(budgetDf))
-      .filter(col("rk") < col("probe_budget"))
-    val probes = probeSigs.select(col("probe_budget"), col("q_id"),
-        explode(expr(
-          """transform(sequence(4, maxd), dd ->
-             struct(dd AS depth, psig & (shiftleft(1L, dd) - 1) AS cell))"""))
-          .as("x"))
-      .select(col("probe_budget"), col("q_id"),
-        col("x.depth").as("depth"), col("x.cell").as("cell"))
-      .distinct()
+      .filter(col("rk") < col("probe_budget")), "probe_budget", "q_id")
     val cand = corpus.join(broadcast(probes), Seq("depth", "cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("probe_budget"), col("q_id"), col("vec_id")).distinct()
@@ -3310,26 +3259,15 @@ object Similarity {
         coalesce(col("n_hit"), lit(0L)).as("n_hit"))
   }
 
-  /** DuckDB mirror of [[trieAnnRecall]] — expects the quantized CTEs,
-    * `sg(vec_id, qv, nsq, sig)`, and [[duckTrieLeafCte]]'s `leaf`/`tmd`
-    * in scope; emits `grid(probe_budget, q_id, n_cand, n_hit)`. The
-    * same ranked-flip probe rule, the same adaptive ceiling, so q392
-    * and q394 cannot drift from their Spark twins or each other.
-    */
-  /** The exact-grid query/corpus cosine fragment every ANN oracle
-    * shares (aliases `q` = query-set row, `e` = en row).
-    */
-  private def duckAnnCosQ: String =
-    s"""CAST(${qdotDuck("q.q_qv", "e.qv", Dims)} AS DOUBLE)
-       / (sqrt(CAST(q.q_nsq AS DOUBLE)) * sqrt(CAST(e.nsq AS DOUBLE)))"""
-
   /** The CTEs every trie-ANN oracle shares — the [[trieAnnFrames]]
     * mirror: `corpus` (leaf per vector), `qraw` (query set +
-    * plane-confidence array) and `ranked`/`sigs` (the ranked-flip probe
-    * signatures, rk = 0 the query's own). One definition, so
+    * plane-confidence array), `ranked`/`sigs` (the ranked-flip probe
+    * signatures, rk = 0 the query's own) and `probesrk` (q_id, rk,
+    * depth, cell): each signature of rank < `maxRk` at every depth
+    * 4..maxd, the [[trieProbeCells]] mirror. One definition, so
     * q392/q394/q395 cannot drift on the probe rule.
     */
-  private def duckAnnBaseCtes: String = {
+  private def duckAnnBaseCtes(maxRk: Int): String = {
     val apList = (0 until Planes).map(p => s"abs(${projDuck(p)})")
       .mkString(", ")
     s"""corpus AS (SELECT s.vec_id, l.depth, l.cell
@@ -3345,63 +3283,29 @@ object Similarity {
       sigs AS (SELECT q_id, 0 AS rk, sig AS psig FROM qraw
         UNION ALL
         SELECT q_id, rk, xor(sig, CAST(1 AS BIGINT) << pos) AS psig
-        FROM ranked)"""
-  }
-
-  /** [[exactTopK]]'s mirror: `exacttop(q_id, vec_id)`, the exact top-[[K]]
-    * per query of relation `qs` (q_id, q_qv, q_nsq) over `en` — the
-    * audit's ground truth.
-    */
-  private def duckExactTop(qs: String): String =
-    s"""exacttop AS (SELECT q_id, vec_id FROM (
-          SELECT q.q_id, e.vec_id, row_number() OVER (
-              PARTITION BY q.q_id ORDER BY $duckAnnCosQ DESC, e.vec_id)
-            AS rk
-          FROM $qs q, en e WHERE e.vec_id <> q.q_id) z
-        WHERE rk <= $K)"""
-
-  private def duckTrieAnnCtes(budgets: Seq[Int]): String = {
-    val cosQ = duckAnnCosQ
-    s"""$duckAnnBaseCtes,
-      ${duckExactTop("qraw")},
-      bud AS (SELECT unnest([${budgets.mkString(", ")}])
-          AS probe_budget),
-      probes AS (SELECT DISTINCT probe_budget, q_id, d AS depth,
+        FROM ranked),
+      probesrk AS (SELECT DISTINCT q_id, rk, d AS depth,
           psig & ((CAST(1 AS BIGINT) << d) - 1) AS cell
-        FROM (SELECT b.probe_budget, s.q_id, s.psig,
+        FROM (SELECT s.q_id, s.rk, s.psig,
                 unnest(range(4, tmd.maxd + 1)) AS d
-              FROM sigs s, bud b, tmd WHERE s.rk < b.probe_budget) y),
-      cand AS (SELECT DISTINCT p.probe_budget, p.q_id, c.vec_id
-        FROM probes p JOIN corpus c
-          ON c.depth = p.depth AND c.cell = p.cell
-        WHERE c.vec_id <> p.q_id),
-      scored AS (SELECT cand.probe_budget, cand.q_id, cand.vec_id,
-          $cosQ AS c
-        FROM cand JOIN en e ON e.vec_id = cand.vec_id
-                  JOIN qraw q ON q.q_id = cand.q_id),
-      trietop AS (SELECT probe_budget, q_id, vec_id FROM (
-          SELECT probe_budget, q_id, vec_id, row_number() OVER (
-              PARTITION BY probe_budget, q_id
-              ORDER BY c DESC, vec_id) AS rk FROM scored) z
-        WHERE rk <= $K),
-      hits AS (SELECT t.probe_budget, t.q_id,
-          CAST(COUNT(*) AS BIGINT) AS n_hit
-        FROM trietop t JOIN exacttop x
-          ON x.q_id = t.q_id AND x.vec_id = t.vec_id
-        GROUP BY 1, 2),
-      nc AS (SELECT probe_budget, q_id,
-          CAST(COUNT(*) AS BIGINT) AS n_cand
-        FROM cand GROUP BY 1, 2),
-      gq AS (SELECT b.probe_budget, q.q_id FROM qraw q CROSS JOIN bud b),
-      grid AS (SELECT g.probe_budget, g.q_id,
-          COALESCE(nc.n_cand, 0) AS n_cand,
-          COALESCE(h.n_hit, 0) AS n_hit
-        FROM gq g
-        LEFT JOIN nc ON nc.probe_budget = g.probe_budget
-          AND nc.q_id = g.q_id
-        LEFT JOIN hits h ON h.probe_budget = g.probe_budget
-          AND h.q_id = g.q_id)"""
+              FROM sigs s, tmd WHERE s.rk < $maxRk) y)"""
   }
+
+  /** DuckDB mirror of [[trieAnnRecall]] — expects the quantized CTEs,
+    * `sg(vec_id, qv, nsq, sig)`, and [[duckTrieLeafCte]]'s `leaf`/`tmd`
+    * in scope; emits `grid(probe_budget, q_id, probes_used, n_cand,
+    * n_hit)`. Budget b keeps the candidates first reached below rank b,
+    * so one first-reaching rank at the largest budget serves the whole
+    * sweep through [[duckAnnAudit]] — the tail q395's quota rule reads.
+    */
+  private def duckTrieAnnCtes(budgets: Seq[Int]): String =
+    s"""${duckAnnBaseCtes(budgets.max)},
+      ${duckAnnAudit("probesrk", "corpus", Seq("depth", "cell"), "qraw",
+        s"""bud AS (SELECT unnest([${budgets.mkString(", ")}])
+          AS probe_budget),
+      cut AS (SELECT b.probe_budget, q.q_id, b.probe_budget - 1 AS rcut,
+          b.probe_budget AS probes_used
+        FROM qraw q CROSS JOIN bud b)""")}"""
 
   /** Quota-elastic trie-ANN (q395): q394's sweep shows a FIXED probe
     * budget both starves some queries (the min_q_recall floor) and
@@ -3427,14 +3331,8 @@ object Similarity {
     val qs = fr.qs
     // probes kept rk-grained so the stop rule can pick a per-query
     // prefix of the rank order
-    val probes = fr.sigsRk.filter(col("rk") < ceiling)
-      .select(col("q_id"), col("rk"), explode(expr(
-        """transform(sequence(4, maxd), dd ->
-           struct(dd AS depth, psig & (shiftleft(1L, dd) - 1) AS cell))"""))
-        .as("x"))
-      .select(col("q_id"), col("rk"),
-        col("x.depth").as("depth"), col("x.cell").as("cell"))
-      .distinct()
+    val probes =
+      trieProbeCells(fr.sigsRk.filter(col("rk") < ceiling), "q_id", "rk")
     elasticStop(corpus,
       sg.select(col("vec_id"), col("qv"), col("nsq")),
       qs.select(col("q_id"), col("q_qv"), col("q_nsq")),
@@ -3442,18 +3340,13 @@ object Similarity {
   }
 
   /** DuckDB mirror of [[trieAnnElastic]] — same scope expectations as
-    * [[duckTrieAnnCtes]]; emits `grid(q_id, probes_used, n_cand,
-    * n_hit)`. The stop rule is the same closed form: per-candidate
+    * [[duckTrieAnnCtes]]; emits `grid(probe_budget, q_id, probes_used,
+    * n_cand, n_hit)`. The stop rule is the same closed form: per-candidate
     * first-reaching rank, one cumulative window, per-query minimal
     * rank meeting the quota.
     */
   private def duckTrieAnnElasticCtes(quota: Int, ceiling: Int): String =
-    s"""$duckAnnBaseCtes,
-      probesrk AS (SELECT DISTINCT q_id, rk, d AS depth,
-          psig & ((CAST(1 AS BIGINT) << d) - 1) AS cell
-        FROM (SELECT s.q_id, s.rk, s.psig,
-                unnest(range(4, tmd.maxd + 1)) AS d
-              FROM sigs s, tmd WHERE s.rk < $ceiling) y),
+    s"""${duckAnnBaseCtes(ceiling)},
       ${duckElasticStop("probesrk", "corpus", Seq("depth", "cell"), "qraw",
         quota, ceiling)}"""
 

@@ -20,16 +20,16 @@ object Sources {
     * accumulating one fresh temp dir per execution. The pid segment
     * keeps CONCURRENT processes (a bench and a verify on the same
     * sfDir) from racing on one directory; the sfDir hash keeps scale
-    * factors apart within a session.
+    * factors apart within a session. Each (process, sfDir) dir is
+    * deleted at JVM exit.
     */
   private def scratch(d: String, tag: String): String = {
     val key = java.lang.Integer.toHexString(d.hashCode)
     val pid = ProcessHandle.current().pid()
-    val p = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft-scratch",
-      s"pid$pid-$key", tag)
+    val p = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft-scratch-pid$pid-$key", tag)
     java.nio.file.Files.createDirectories(p)
-    p.toFile.deleteOnExit()
+    graft.TempDirs.deleteOnExit(p.getParent.toFile)
     p.toString
   }
 

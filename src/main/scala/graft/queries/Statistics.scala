@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1268,9 +1268,8 @@ object Statistics {
               CAST(SUM(q[dim_i] * q[dim_j]) AS BIGINT) AS sij
             FROM p, q GROUP BY 1, 2)
           SELECT dim_i, dim_j, n,
-            round(CAST(n * sij - si * sj AS DOUBLE) /
-              (sqrt(CAST(n * sii - si * si AS DOUBLE)) *
-               sqrt(CAST(n * sjj - sj * sj AS DOUBLE))), 4) AS corr
+            round(${Portable.cosDuck("n * sij - si * sj",
+              "n * sii - si * si", "n * sjj - sj * sj")}, 4) AS corr
           FROM s"""),
       (s, d) => {
         val dims = 8
@@ -1313,7 +1312,7 @@ object Statistics {
     // support-sparsified catalog graph).
     QuerySpec(
       "q225_assortativity",
-      Some("""WITH io AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+      Some(s"""WITH io AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
             FROM lineitem),
           pr AS (SELECT a.p AS pa, b.p AS pb
             FROM io a JOIN io b ON a.o = b.o AND a.p < b.p),
@@ -1337,9 +1336,8 @@ object Statistics {
           SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM dg) AS n_nodes,
             (SELECT CAST(COUNT(*) AS BIGINT) FROM e) AS n_edges,
             n AS n_endpoints,
-            round(CAST(n * sxy - sx * sy AS DOUBLE) /
-              (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) *
-               sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 4)
+            round(${Portable.cosDuck("n * sxy - sx * sy",
+              "n * sxx - sx * sx", "n * syy - sy * sy")}, 4)
               AS assortativity
           FROM st"""),
       (s, d) => {

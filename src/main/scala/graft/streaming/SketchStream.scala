@@ -4,8 +4,7 @@ import graft.functions.Portable
 import graft.queries.Quality
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming Count-Min Sketch maintenance — the monitoring shape of
   * q131's batch operator: events arrive in micro-batches and the D x W

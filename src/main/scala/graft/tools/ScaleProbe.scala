@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.GraftSession
 import graft.queries.{Dedup, Multimodal, Registry, Selection, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical scale probe for the candidate-bounded operators (round-3
@@ -256,8 +256,7 @@ object ScaleProbe {
         "| recall_ppm |")
       println("|---|---|---|---|---|---|")
       for (mult <- Seq(1, reps)) {
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"serveclu_$mult").toString
+        val dir = graft.TempDirs.create(s"serveclu_$mult")
         clustered(nBase * mult, dir)
         val r98 = Similarity.ivfElastic(spark, dir, Similarity.IvfQuota,
             Similarity.IvfElasticCeiling)

@@ -4,7 +4,6 @@ import graft.GraftSession
 import graft.queries.Multimodal
 import graft.streaming.{ComponentStream, DedupStream, MediaDedupStream,
   NearDupStream, SemDedupStream}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -197,8 +196,7 @@ object StreamLatencyProbe {
         // stateDir on: the leg times the production path including the
         // per-merging-batch durable remap snapshot (epoch-bounded write)
         val (w, _) = ComponentStream.maintain(spark, memC.toDF(), ledger,
-          stateDir = Some(java.nio.file.Files
-            .createTempDirectory(s"lat_comp_state_$frac").toString))
+          stateDir = Some(graft.TempDirs.create(s"lat_comp_state_$frac")))
         val qC = w.queryName(s"lat_comp_$frac").start()
         drive(qC, triggers,
           i => { memC.addData(edgeBatches(i).toIndexedSeq: _*)
@@ -219,10 +217,8 @@ object StreamLatencyProbe {
         .select(col("doc_id"), col("doc_id").as("label"))
       val corpus = docs.filter(col("doc_id") < maxDoc * 2 / 5)
       val nCorpus = corpus.count()
-      val hand = java.nio.file.Files
-        .createTempDirectory("lat_e2e_edges").toString
-      val ck1 = java.nio.file.Files
-        .createTempDirectory("lat_e2e_ck1").toString
+      val hand = graft.TempDirs.create("lat_e2e_edges")
+      val ck1 = graft.TempDirs.create("lat_e2e_ck1")
       val memE2 = MemoryStream[DedupStream.RawDoc]
       val q1 = NearDupStream.matches(spark, memE2.toDF(), corpus)
         .writeStream.format("parquet")
@@ -271,10 +267,8 @@ object StreamLatencyProbe {
         .select(col("doc_id"), col("doc_id").as("label"))
       val corpus = docs.filter(col("doc_id") < maxDoc * 2 / 5)
       val nCorpus = corpus.count()
-      val hand = java.nio.file.Files
-        .createTempDirectory("lat_e2erot_edges").toString
-      val ck1 = java.nio.file.Files
-        .createTempDirectory("lat_e2erot_ck1").toString
+      val hand = graft.TempDirs.create("lat_e2erot_edges")
+      val ck1 = graft.TempDirs.create("lat_e2erot_ck1")
       val memE3 = MemoryStream[DedupStream.RawDoc]
       val q1 = NearDupStream.matches(spark, memE3.toDF(), corpus)
         .writeStream.format("parquet")

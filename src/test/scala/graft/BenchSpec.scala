@@ -80,7 +80,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("loadPriors parses the full-record line and rejects a record " +
       "measured at a different scale factor") {
-    val dir = java.nio.file.Files.createTempDirectory("benchspec")
+    val dir = java.nio.file.Paths.get(TempDirs.create("benchspec"))
     val f = dir.resolve("prior.json")
     val line = """{"metric":"total","value":2.0,"unit":"sec","failed":0,""" +
       """"iters":3,"stall_retries":0,"suspect":[],""" +
@@ -99,7 +99,7 @@ class BenchSpec extends AnyFunSuite {
   test("loadPriors drops sub-resolution (0.000) priors — a 3-decimal " +
       "record floors sub-0.5ms queries to 0.0, which would make the " +
       ">3x-of-prior guard fire unconditionally forever") {
-    val dir = java.nio.file.Files.createTempDirectory("benchspec")
+    val dir = java.nio.file.Paths.get(TempDirs.create("benchspec"))
     val f = dir.resolve("prior.json")
     val line = """{"metric":"total","value":2.0,"suspect":[],""" +
       """"queries":{"q_fast":0.000,"q_ok":0.613},"sf":"sf0.1"}"""
@@ -109,7 +109,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("loadPriors excludes queries the prior run itself flagged suspect " +
       "— a stall-inflated anchor would silently disable the guard") {
-    val dir = java.nio.file.Files.createTempDirectory("benchspec")
+    val dir = java.nio.file.Paths.get(TempDirs.create("benchspec"))
     val f = dir.resolve("prior.json")
     val line = """{"metric":"total","value":2.0,""" +
       """"suspect":["q350_hard_negatives"],""" +
@@ -121,7 +121,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("loadPriors degrades to empty (guard off) when the queries object " +
       "is not the writer's flat grammar, instead of truncating silently") {
-    val dir = java.nio.file.Files.createTempDirectory("benchspec")
+    val dir = java.nio.file.Paths.get(TempDirs.create("benchspec"))
     val f = dir.resolve("prior.json")
     val line = """{"metric":"total","suspect":[],""" +
       """"queries":{"q_a":{"nested":1.0},"q_b":0.5},"sf":"sf0.1"}"""

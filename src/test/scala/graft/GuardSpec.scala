@@ -2,7 +2,7 @@ package graft
 
 import graft.queries.Registry
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST,
-  GlobalLimit, HintInfo, Join, LocalRelation, LogicalPlan, Window}
+  GlobalLimit, Join, LocalRelation, LogicalPlan, Window}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** Suite-wide plan-shape guards: structural rules that every query in the

@@ -31,7 +31,7 @@ object LawsCheck extends Properties("graft.laws") {
 
   property("multi-file scan is union-commutative") = Prop.forAll(rows) { xs =>
     val (l, r) = xs.splitAt(xs.length / 2)
-    val dir = java.nio.file.Files.createTempDirectory("laws-union").toString
+    val dir = TempDirs.create("laws-union")
     l.toDF("k", "v").write.mode("overwrite").parquet(s"$dir/a")
     r.toDF("k", "v").write.mode("overwrite").parquet(s"$dir/b")
     val ab = spark.read.parquet(s"$dir/a", s"$dir/b")
@@ -159,7 +159,7 @@ object LawsCheck extends Properties("graft.laws") {
 
   property("parquet round-trip preserves the row multiset") =
     Prop.forAll(rows) { xs =>
-      val dir = java.nio.file.Files.createTempDirectory("laws-rt").toString
+      val dir = TempDirs.create("laws-rt")
       val df = xs.toDF("k", "v")
       df.write.mode("overwrite").parquet(s"$dir/t")
       multiset(spark.read.parquet(s"$dir/t")) == multiset(df)

@@ -45,8 +45,7 @@ class LayoutSpec extends SparkSpec {
     // one parquet partition per coarse cell. A top-nprobe read must
     // then touch ONLY the probed cells' files — proven on the scan
     // node's partition count, not just the plan string.
-    val dir = java.nio.file.Files
-      .createTempDirectory("t_cell_layout").toString
+    val dir = TempDirs.create("t_cell_layout")
     import spark.implicits._
     val cells = 16
     (0L until 4096L).map(i => (i, (i % cells).toInt))

@@ -17,7 +17,7 @@ class MultimodalSpec extends SparkSpec {
     assert(media.schema("content").dataType == BinaryType)
     assert(media.schema("meta").dataType.isInstanceOf[StructType])
 
-    val out = tmpDir("graft-media")
+    val out = TempDirs.create("graft-media")
     Media.writePartitioned(media, out)
     // hive layout: one dir per modality
     val kinds = new java.io.File(out).listFiles()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.pipeline._
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Pipeline semantics the reference gets wrong or leaves implicit:
@@ -43,7 +43,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   private def freshPipeline(): (ZoneCatalog, ProcessedLog, Promote) = {
-    val cat = ZoneCatalog(tmpDir("graft-pipe"))
+    val cat = ZoneCatalog(TempDirs.create("graft-pipe"))
     val log = new ProcessedLog(spark, s"${cat.state}/processed_log", clock)
     (cat, log, new Promote(spark, cat, log))
   }
@@ -171,7 +171,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("month ledger: lexicographic string >= gate (fetch_raw_data.py:135)") {
-    val cat = ZoneCatalog(tmpDir("graft-ledger"))
+    val cat = ZoneCatalog(TempDirs.create("graft-ledger"))
     val ledger = new MonthLedger(spark, s"${cat.state}/month_ledger", clock)
     assert(!ledger.shouldSkip("2024-01"), "empty ledger skips nothing")
     ledger.markProcessed("2024-01")
@@ -182,10 +182,10 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("orchestrator: probe window, gate, ingest key layout") {
-    val cat = ZoneCatalog(tmpDir("graft-orch"))
+    val cat = ZoneCatalog(TempDirs.create("graft-orch"))
     val ledger = new MonthLedger(spark, s"${cat.state}/month_ledger", clock)
     val ingest = new Ingest(cat, clock)
-    val src = tmpDir("graft-src") + "/src.parquet"
+    val src = TempDirs.create("graft-src") + "/src.parquet"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(src), "x")
 
     // Clock is 2024-03-15; probe accepts only 2024-01 (2 months back).
@@ -223,11 +223,11 @@ class PipelineSpec extends SparkSpec {
       val port = server.getAddress.getPort
       val http = new HttpSource(
         ym => s"http://127.0.0.1:$port/trip-data/yellow_tripdata_$ym.parquet",
-        java.nio.file.Paths.get(tmpDir("graft-http-tmp")))
+        java.nio.file.Paths.get(TempDirs.create("graft-http-tmp")))
       assert(http.probe("2024-01"), "published month must probe true")
       assert(!http.probe("2024-02"), "unpublished month must probe false")
 
-      val cat = ZoneCatalog(tmpDir("graft-http"))
+      val cat = ZoneCatalog(TempDirs.create("graft-http"))
       val ledger = new MonthLedger(spark, s"${cat.state}/month_ledger", clock)
       val orch = new Orchestrator(new Ingest(cat, clock), ledger)
       val key = orch.runOnce(http.probe, http.download)
@@ -249,7 +249,7 @@ class PipelineSpec extends SparkSpec {
     })
     server.start()
     try {
-      val tmp = java.nio.file.Paths.get(tmpDir("graft-http-err"))
+      val tmp = java.nio.file.Paths.get(TempDirs.create("graft-http-err"))
       val http = new HttpSource(
         ym => s"http://127.0.0.1:${server.getAddress.getPort}/$ym",
         tmp)
@@ -260,9 +260,9 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("ingest: archive moves to dated layout (s3_operations.py:68-69)") {
-    val cat = ZoneCatalog(tmpDir("graft-arch"))
+    val cat = ZoneCatalog(TempDirs.create("graft-arch"))
     val ingest = new Ingest(cat, clock)
-    val src = tmpDir("graft-src2") + "/f.parquet"
+    val src = TempDirs.create("graft-src2") + "/f.parquet"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(src), "x")
     val key = ingest.ingestFile(src, "2024-01")
     val archived = ingest.archiveFile(key)
@@ -272,7 +272,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("processed log: latest status wins, errors truncated to 250") {
-    val cat = ZoneCatalog(tmpDir("graft-log"))
+    val cat = ZoneCatalog(TempDirs.create("graft-log"))
     val log = new ProcessedLog(spark, s"${cat.state}/plog", clock)
     log.mark(Seq("/a"), ProcessedLog.Failed, Some("x" * 500))
     val err = log.currentStatus().filter(org.apache.spark.sql.functions

@@ -67,7 +67,6 @@ class QuantilesSpec extends SparkSpec {
   }
 
   test("negative domains pick a sane block key (floor division)") {
-    import spark.implicits._
     // `div` floors toward negative infinity in Spark, so negative values
     // land in well-ordered blocks; the cuts must still match.
     val vals = Seq.fill(1000)((scala.util.Random.nextInt(2000) - 1000).toLong)

@@ -1413,8 +1413,7 @@ class QueriesSpec extends SparkSpec {
     val mkText = (ts: Seq[String]) => ts.mkString(" ")
     // C = t1..t100; A = t1..t90 (J(A,C) = 88/98 ~ 0.898);
     // B = t11..t100 (J(B,C) ~ 0.898); J(A,B) = 78/98 ~ 0.796 < 0.8
-    val bridgeDir = java.nio.file.Files
-      .createTempDirectory("graft_bridge").toString
+    val bridgeDir = TempDirs.create("graft_bridge")
     Seq(
       (1L, mkText(toks.take(90)), "en", "synth", 0L),
       (2L, mkText(toks.drop(10)), "en", "synth", 0L),
@@ -1550,6 +1549,21 @@ class QueriesSpec extends SparkSpec {
       if (used > 1)
         assert(sweep((used.toInt - 1, q))._1 < quota,
           s"q $q: budget ${used - 1} already met the quota")
+    }
+    // a quota no query can meet: every query probes to the ceiling and
+    // keeps exactly the fixed sweep's candidates at budget = ceiling —
+    // the identity that lets both rules share one audit tail
+    val unmet = queries.Similarity
+      .trieAnnElastic(spark, sfDir, Int.MaxValue, ceiling).collect()
+    assert(unmet.length == el.size)
+    unmet.foreach { r =>
+      val q = r.getLong(0)
+      assert(r.getLong(1) == ceiling,
+        s"q $q probes_used ${r.getLong(1)} != ceiling $ceiling")
+      assert((r.getLong(2), r.getLong(3)) == sweep((ceiling, q)),
+        s"q $q unmet-quota (n_cand, n_hit) " +
+          s"${(r.getLong(2), r.getLong(3))} != sweep@$ceiling " +
+          s"${sweep((ceiling, q))}")
     }
     // recall FLOOR at the deployed quota (round-14 verdict #4): the
     // fixture measures 240,000 ppm (12/50 exact-top-5 hits) — the

@@ -299,8 +299,7 @@ class ScaleSpec extends SparkSpec {
     // bitlength(8192/64) = 8 -> 256 cells
     import spark.implicits._
     val rnd = new scala.util.Random(29)
-    val synDir = java.nio.file.Files
-      .createTempDirectory("t_q400_syn").toString
+    val synDir = TempDirs.create("t_q400_syn")
     (0L until 8192L).map(i =>
         (i, Array.fill(64)(rnd.nextFloat() * 2 - 1)))
       .toDF("vec_id", "embedding")
@@ -348,8 +347,7 @@ class ScaleSpec extends SparkSpec {
     }
     import spark.implicits._
     val rnd = new scala.util.Random(31)
-    val synDir = java.nio.file.Files
-      .createTempDirectory("t_q401_syn").toString
+    val synDir = TempDirs.create("t_q401_syn")
     (0L until 8192L).map(i =>
         (i, Array.fill(64)(rnd.nextFloat() * 2 - 1)))
       .toDF("vec_id", "embedding")

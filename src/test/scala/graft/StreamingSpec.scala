@@ -18,7 +18,7 @@ class StreamingSpec extends SparkSpec {
     * Ingest lands plain files under a prefix).
     */
   private lazy val eventsDir: String = {
-    val d = tmpDir("graft-events")
+    val d = TempDirs.create("graft-events")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       java.nio.file.Paths.get(s"$d/events.parquet"))
@@ -49,7 +49,7 @@ class StreamingSpec extends SparkSpec {
     */
   private def land(cat: graft.pipeline.ZoneCatalog, name: String,
       rows: Seq[Row]): Unit = {
-    val staging = tmpDir("graft-staging")
+    val staging = TempDirs.create("graft-staging")
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1),
       graft.pipeline.TaxiSchema.schema)
@@ -299,8 +299,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming promote: checkpoint processes each file exactly once") {
-    val cat = graft.pipeline.ZoneCatalog(tmpDir("graft-spromote"))
-    val sp = new StreamingPromote(spark, cat, tmpDir("graft-ckpt"))
+    val cat = graft.pipeline.ZoneCatalog(TempDirs.create("graft-spromote"))
+    val sp = new StreamingPromote(spark, cat, TempDirs.create("graft-ckpt"))
     def writeTrips(name: String, n: Int): Unit =
       land(cat, name, (1 to n).map(i => trip((i % 3 + 1).toLong, 10.0)))
 
@@ -315,8 +315,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming promote: maxFilesPerTrigger batches files (debounce analog)") {
-    val cat = graft.pipeline.ZoneCatalog(tmpDir("graft-sbatch"))
-    val ckpt = tmpDir("graft-sbatch-ckpt")
+    val cat = graft.pipeline.ZoneCatalog(TempDirs.create("graft-sbatch"))
+    val ckpt = TempDirs.create("graft-sbatch-ckpt")
     val sp = new StreamingPromote(spark, cat, ckpt)
     def oneTrip(name: String): Unit = land(cat, name, Seq(trip(1L, 10.0)))
     oneTrip("a.parquet"); oneTrip("b.parquet"); oneTrip("c.parquet")
@@ -329,8 +329,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming promote: processing-time daemon bounds every batch") {
-    val cat = graft.pipeline.ZoneCatalog(tmpDir("graft-sdaemon"))
-    val ckpt = tmpDir("graft-sdaemon-ckpt")
+    val cat = graft.pipeline.ZoneCatalog(TempDirs.create("graft-sdaemon"))
+    val ckpt = TempDirs.create("graft-sdaemon-ckpt")
     val sp = new StreamingPromote(spark, cat, ckpt)
     def oneTrip(name: String): Unit = land(cat, name, Seq(trip(1L, 10.0)))
     (1 to 4).foreach(i => oneTrip(s"d$i.parquet"))
@@ -351,7 +351,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming promote applies the batch clean rule") {
-    val cat = graft.pipeline.ZoneCatalog(tmpDir("graft-sclean"))
+    val cat = graft.pipeline.ZoneCatalog(TempDirs.create("graft-sclean"))
     // trip_distance is the row id: 1-3 are valid (a zero fare and a
     // one-second trip sit on the rules' edges), 4-6 each break one rule.
     land(cat, "drop.parquet", Seq(
@@ -361,7 +361,8 @@ class StreamingSpec extends SparkSpec {
       trip(null, 10.0, distance = 4),                      // no payment_type
       trip(1L, -0.5, distance = 5),                        // negative fare
       trip(2L, 10.0, dropoff = "10:00:00", distance = 6))) // zero duration
-    val sp = new StreamingPromote(spark, cat, tmpDir("graft-sclean-ckpt"))
+    val sp = new StreamingPromote(spark, cat,
+      TempDirs.create("graft-sclean-ckpt"))
     sp.runAvailableNow()
     val promote = new graft.pipeline.Promote(spark, cat,
       new graft.pipeline.ProcessedLog(spark, s"${cat.state}/processed_log",
@@ -379,8 +380,8 @@ class StreamingSpec extends SparkSpec {
       "a committed batch is byte-idempotent") {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = tmpDir("graft-snap")
-    val ckpt = tmpDir("graft-snap-ckpt")
+    val dir = TempDirs.create("graft-snap")
+    val ckpt = TempDirs.create("graft-snap-ckpt")
     def ev(id: Long, user: Long, minute: Int, typ: String, v: Double) =
       UserState.Event(id,
         java.sql.Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"),
@@ -1569,8 +1570,7 @@ class StreamingSpec extends SparkSpec {
     val b2 = he((5L, 2L, 5L, 5L), (5L, 2L, 2L, 1L),
       (4L, 2L, 4L, 4L), (4L, 2L, 2L, 1L))
     val b3 = he((6L, 9L, 6L, 6L), (6L, 9L, 9L, 9L))
-    val dir = java.nio.file.Files
-      .createTempDirectory("t_comp_dur").toString
+    val dir = TempDirs.create("t_comp_dur")
     val m1 = new ComponentStream.Maintainer(spark,
       stateDir = Some(dir))
     m1.onBatch(b1, 1L)
@@ -1582,8 +1582,7 @@ class StreamingSpec extends SparkSpec {
       s"batch-2 merges must chain 3,4,5 onto 1: $afterB2")
     // keep a copy of the batch-2 snapshot for the crash-BEFORE-persist
     // order below
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("t_comp_dur2").toString
+    val dir2 = TempDirs.create("t_comp_dur2")
     java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).forEach { p =>
       val t = java.nio.file.Paths.get(dir2)
         .resolve(java.nio.file.Paths.get(dir).relativize(p))
@@ -1678,10 +1677,8 @@ class StreamingSpec extends SparkSpec {
     // (the production shape — two stateful operators cannot share one
     // streaming query, and a file/Kafka handoff is exactly what a real
     // pipeline puts between admission and graph maintenance)
-    val hand = java.nio.file.Files
-      .createTempDirectory("t_e2e_edges").toString
-    val ck1 = java.nio.file.Files
-      .createTempDirectory("t_e2e_ck1").toString
+    val hand = TempDirs.create("t_e2e_edges")
+    val ck1 = TempDirs.create("t_e2e_ck1")
     val mem = MemoryStream[DedupStream.RawDoc]
     val q1 = NearDupStream.matches(spark, mem.toDF(), corpus)
       .writeStream.format("parquet")
@@ -1757,10 +1754,8 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "label")
     // stage 1 (admission) runs UNINTERRUPTED across the comp epoch
     // boundary — only the graph-maintenance epoch rotates
-    val hand = java.nio.file.Files
-      .createTempDirectory("t_rot_e2e_edges").toString
-    val ck1 = java.nio.file.Files
-      .createTempDirectory("t_rot_e2e_ck1").toString
+    val hand = TempDirs.create("t_rot_e2e_edges")
+    val ck1 = TempDirs.create("t_rot_e2e_ck1")
     val mem = MemoryStream[DedupStream.RawDoc]
     val q1 = NearDupStream.matches(spark, mem.toDF(), corpus)
       .writeStream.format("parquet")

@@ -41,7 +41,7 @@ class TypedDatasetSpec extends SparkSpec {
 
   test("encoder round-trips the case class through parquet") {
     import spark.implicits._
-    val dir = tmpDir("typed-rt")
+    val dir = TempDirs.create("typed-rt")
     orders.write.mode("overwrite").parquet(s"$dir/o")
     val back = spark.read.parquet(s"$dir/o").as[Order]
     assert(back.collect().toSet == orders.collect().toSet)
