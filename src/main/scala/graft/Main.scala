@@ -42,8 +42,7 @@ object Main {
           case None => println("skipped (ledger gate or not available)")
         }
       case "promote" =>
-        val log = new ProcessedLog(spark,
-          s"${catalog.state}/processed_log", SystemClock)
+        val log = new ProcessedLog(spark, catalog.processedLog, SystemClock)
         val done = new Promote(spark, catalog, log).run()
         println(s"promoted ${done.size} file(s)")
       case "stream" =>

@@ -70,14 +70,16 @@ final class Promote(
       // Ledger commit AFTER the (idempotent) write: a crash before this
       // line just reruns per-file overwrites next cycle.
       log.mark(todo, ProcessedLog.Processed)
-      notifier.info("promote", s"${todo.size} file(s) promoted")
-      todo
     } catch {
       case e: Exception =>
-        log.mark(todo, ProcessedLog.Failed, Some(e.getMessage))
+        log.mark(todo, ProcessedLog.Failed, Option(e.getMessage))
         notifier.error("promote", s"promote failed: ${e.getMessage}")
         throw e
     }
+    // Outside the try: the files are committed, so a failing notifier
+    // must not mark them Failed.
+    notifier.info("promote", s"${todo.size} file(s) promoted")
+    todo
   }
 
   def readSilver(): DataFrame = spark.read.parquet(silverTable)

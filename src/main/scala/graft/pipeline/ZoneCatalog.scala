@@ -18,6 +18,9 @@ final case class ZoneCatalog(root: String) {
   /** Control-plane state (ledgers, logs) lives beside the data zones. */
   val state: String = s"$root/state"
 
+  /** The batch promote's exactly-once ledger ([[ProcessedLog]]). */
+  val processedLog: String = s"$state/processed_log"
+
   /** Prefix every taxi drop lands under (both promotes read it). */
   val bronzeTaxi: String = s"$bronze/nyc_taxi"
 

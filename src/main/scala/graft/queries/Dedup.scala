@@ -421,7 +421,11 @@ object Dedup {
     val cool = bl.groupBy(col("band_j"), col("band")).count()
       .filter(col("count") <= SimhashBucketCap)
       .select(col("band_j"), col("band"))
+    // EAGER materialization, as in ngramCandidates: one pass instead of
+    // one per self-join side, and a build side that does not depend on
+    // which side's stages finish first (q348).
     val blc = bl.join(broadcast(cool), Seq("band_j", "band"))
+      .localCheckpoint(true)
     blc.as("x").join(blc.as("y"),
         col("x.band_j") === col("y.band_j")
           && col("x.band") === col("y.band")
@@ -437,7 +441,11 @@ object Dedup {
       .filter(col("s") % 8 === 0)
     val rare = samp.groupBy(col("s")).count()
       .filter(col("count") <= 20).select(col("s"))
-    val rareInv = samp.join(rare, "s")
+    // EAGER materialization (the minhashCandidates discipline): both
+    // self-join sides read one relation with one set of statistics, so
+    // the join's build side is the same on every run — computed per
+    // side, it followed whichever side's stages finished first (q348).
+    val rareInv = samp.join(rare, "s").localCheckpoint(true)
     rareInv.as("x").join(rareInv.as("y"),
         col("x.s") === col("y.s")
           && col("x.doc_id") < col("y.doc_id"))

@@ -28,6 +28,16 @@ import org.apache.spark.sql.functions._
   *    come from a shuffle on (band, value) keys — probe cost proportional
   *    to bucket occupancy, not corpus size. Recall is probabilistic but
   *    *identical* across engines because the planes are.
+  *
+  * Builder twins (Spark → DuckDB), so no query spells a shared shape by
+  * hand: [[querySet]] → [[duckQuerySet]] (the `(q_id, q_qv, q_nsq)`
+  * query set), [[topK]] → [[duckTopK]] (id-tiebroken top-k; the cosine
+  * forms [[cosineTopK]] and [[neighbors]] rank through it), [[celled]] →
+  * [[duckCells4Cte]] (4-plane cells), [[probeList4]] → [[duckProbeList4]]
+  * (q351's confidence-ordered probe list), [[adaptiveQueryHead]] →
+  * [[duckAdaptiveQueryHead]] (the adaptive ANN query head),
+  * [[adaptiveDepthSpark]] → [[adaptiveDepthDuck]] (depth clamp) and
+  * [[elasticStop]] → [[duckElasticStop]] (quota stop + recall audit).
   */
 object Similarity {
 
@@ -283,20 +293,56 @@ object Similarity {
   private def cosineCol: Column =
     expr("qcosine(q_qv, qv, q_nsq, nsq)")
 
-  /** Exact cosine + per-query top-k over a pair frame with columns
-    * q_id/q_qv/q_nsq/vec_id/qv/nsq.
+  // ---- query-side builders, one per engine (twins: see the object doc) ---
+
+  /** The query set `(q_id, q_qv, q_nsq)`: the rows of a quantized frame
+    * `(vec_id, qv, nsq, ...)` with vec_id < n. Twin of [[duckQuerySet]].
     */
-  private def topkCosine(pairs: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    pairs
-      .withColumn("cosine", cosineCol)
-      .select(col("q_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        col("cosine"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= K)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rk"))
-  }
+  private def querySet(df: DataFrame, n: Int = NumQueries): DataFrame =
+    df.filter(col("vec_id") < n)
+      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
+        col("nsq").as("q_nsq"))
+
+  /** Twin of [[querySet]]: the query set of relation `src`. */
+  private def duckQuerySet(src: String, n: Int = NumQueries): String =
+    s"""SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq FROM $src
+        WHERE vec_id < $n"""
+
+  /** Id-tiebroken top-k: `rk` = row_number() within `keys` by (`score`
+    * DESC, `tie`), keeping rk <= k. Twin of [[duckTopK]].
+    */
+  private def topK(df: DataFrame, keys: Seq[String], score: String,
+      tie: String, k: Int = K, rk: String = "rk"): DataFrame =
+    df.withColumn(rk, row_number().over(
+        Window.partitionBy(keys.map(col): _*)
+          .orderBy(col(score).desc, col(tie))))
+      .filter(col(rk) <= k)
+
+  /** Twin of [[topK]]: the rows of relation `src` plus their `rk`, ranked
+    * within `keys` (a SQL list) by (`score` DESC, `tie`), rk <= k.
+    */
+  private def duckTopK(src: String, keys: String, score: String,
+      tie: String, k: Int = K): String =
+    s"""SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY $keys
+          ORDER BY $score DESC, $tie) AS rk FROM $src) z
+        WHERE rk <= $k"""
+
+  /** Exact-cosine top-[[K]] per query over a pair frame with columns
+    * q_id/q_qv/q_nsq/vec_id/qv/nsq: [[topK]] on `c` = [[cosineCol]],
+    * ties to the lower vec_id; `(q_id, vec_id, ..., c, rk)`.
+    */
+  private def cosineTopK(pairs: DataFrame): DataFrame =
+    topK(pairs.withColumn("c", cosineCol), Seq("q_id"), "c", "vec_id")
+
+  /** The same ranking as [[cosineTopK]], published as the neighbor list
+    * `(query_id, neighbor_id, cosine, rk)` (renamed before the window,
+    * so the window reads only those three columns).
+    */
+  private def neighbors(pairs: DataFrame): DataFrame =
+    topK(pairs.withColumn("cosine", cosineCol)
+        .select(col("q_id").as("query_id"), col("vec_id").as("neighbor_id"),
+          col("cosine")),
+      Seq("query_id"), "cosine", "neighbor_id")
 
   // ---- candidate generation (shared with tools.ScaleProbe) ---------------
   //
@@ -374,6 +420,33 @@ object Similarity {
           WHEN abs(p1) <= abs(p2) AND abs(p1) <= abs(p3) THEN 1
           WHEN abs(p2) <= abs(p3) THEN 2
           ELSE 3 END"""))
+
+  /** q351's 4-plane confidence-ordered probe list over [[celled]]'s query
+    * rows: `(q_id, carry..., cell, ord, plist)`, plist = the own cell,
+    * then the single-plane flips by ascending |projection| (plane index
+    * breaks ties). Twin of [[duckProbeList4]].
+    */
+  private def probeList4(c: DataFrame, carry: Column*): DataFrame =
+    c.filter(col("vec_id") < NumQueries)
+      .select((col("vec_id").as("q_id") +: carry) ++ Seq(col("cell"),
+        expr("""array_sort(array(
+          struct(abs(p0) AS a, 0 AS j), struct(abs(p1) AS a, 1 AS j),
+          struct(abs(p2) AS a, 2 AS j), struct(abs(p3) AS a, 3 AS j)))
+          """).as("ord")): _*)
+      .withColumn("plist", expr(
+        "concat(array(cell), transform(ord, o -> cell ^ shiftleft(1, o.j)))"))
+
+  /** Twin of [[probeList4]] over [[duckCells4Cte]]'s `cells`: emits `pl`
+    * and `pls(q_id, q_qv, q_nsq, plist)`.
+    */
+  private def duckProbeList4: String =
+    s"""pl AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq, cell,
+          list_sort([{'a': abs(p0), 'j': 0}, {'a': abs(p1), 'j': 1},
+            {'a': abs(p2), 'j': 2}, {'a': abs(p3), 'j': 3}]) AS ord
+        FROM cells WHERE vec_id < $NumQueries),
+      pls AS (SELECT q_id, q_qv, q_nsq,
+          list_concat([cell], [xor(cell, 1 << o.j) for o in ord]) AS plist
+        FROM pl)"""
 
   /** Quantized 4-plane-celled projection of an arbitrary embeddings-shaped
     * frame `(vec_id, embedding)` — q354's coarse-cell assignment as ONE
@@ -627,22 +700,17 @@ object Similarity {
     QuerySpec(
       "q45_cosine_topk",
       Some(s"""WITH $duckQuantCte,
-          q AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq
-            FROM en WHERE vec_id < $NumQueries),
+          q AS (${duckQuerySet("en")}),
           scored AS (SELECT q_id AS query_id, en.vec_id AS neighbor_id,
               ${qcosDuck("q_qv", "en.qv", "q_nsq", "en.nsq", Dims)}
                 AS cosine
             FROM q JOIN en ON en.vec_id <> q_id)
           SELECT query_id, neighbor_id, cosine, CAST(rk AS INT) AS rk FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id) AS rk FROM scored) z
-          WHERE rk <= $K"""),
+            ${duckTopK("scored", "query_id", "cosine", "neighbor_id")}) t"""),
       (s, d) => {
         val e = quantized(s, d, withSig = false)
-        val q = e.filter(col("vec_id") < NumQueries)
-          .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-            col("nsq").as("q_nsq"))
-        topkCosine(e.join(broadcast(q), col("vec_id") =!= col("q_id")))
+        neighbors(e.join(broadcast(querySet(e)),
+          col("vec_id") =!= col("q_id")))
       }),
 
     // ---- ANN: hyperplane-LSH signature buckets + exact re-rank ------------
@@ -664,17 +732,12 @@ object Similarity {
             FROM cand c JOIN es x ON x.vec_id = c.q_id
                         JOIN es y ON y.vec_id = c.vec_id)
           SELECT query_id, neighbor_id, cosine, CAST(rk AS INT) AS rk FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id) AS rk FROM scored) z
-          WHERE rk <= $K"""),
+            ${duckTopK("scored", "query_id", "cosine", "neighbor_id")}) t"""),
       (s, d) => {
         val e = quantized(s, d, withSig = true)
-        val qe = e.filter(col("vec_id") < NumQueries)
-          .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-            col("nsq").as("q_nsq"))
-        topkCosine(lshCandidates(s, d)
+        neighbors(lshCandidates(s, d)
           .join(e, "vec_id")
-          .join(broadcast(qe), "q_id"))
+          .join(broadcast(querySet(e)), "q_id"))
       }),
 
     // ---- ANN: IVF (coarse quantizer cells) + multi-probe exact re-rank -----
@@ -706,15 +769,10 @@ object Similarity {
                 AS cosine
             FROM cand c JOIN cells q ON q.vec_id = c.q_id)
           SELECT query_id, neighbor_id, cosine, CAST(rk AS INT) AS rk FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id) AS rk FROM scored) z
-          WHERE rk <= $K"""),
-      (s, d) => {
-        val qe = celled(s, d).filter(col("vec_id") < NumQueries)
-          .select(col("vec_id").as("q_id"),
-            col("qv").as("q_qv"), col("nsq").as("q_nsq"))
-        topkCosine(ivfCandidates(s, d).join(broadcast(qe), "q_id"))
-      }),
+            ${duckTopK("scored", "query_id", "cosine", "neighbor_id")}) t"""),
+      (s, d) =>
+        neighbors(ivfCandidates(s, d)
+          .join(broadcast(querySet(celled(s, d))), "q_id"))),
 
     // ---- per-label embedding centroids (cluster statistics) ----------------
     // The centroid-computation pass of semantic clustering / IVF training
@@ -806,9 +864,7 @@ object Similarity {
               ${qcosDuck("q_qv", "en.qv", "q_nsq", "en.nsq", Dims)}
                 AS cosine
             FROM q JOIN en ON en.vec_id >= $NumQueries),
-          top AS (SELECT * FROM (SELECT *, row_number() OVER (
-                PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rk
-              FROM scored) z WHERE rk <= $K),
+          top AS (${duckTopK("scored", "q_id", "cosine", "neighbor_id")}),
           votes AS (SELECT top.q_id, MAX(top.true_label) AS true_label,
               lab.label AS pred_label, CAST(COUNT(*) AS BIGINT) AS votes
             FROM top JOIN lab ON lab.vec_id = top.neighbor_id
@@ -824,15 +880,12 @@ object Similarity {
           .join(lab, "vec_id")
           .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
             col("nsq").as("q_nsq"), col("label").as("true_label"))
-        val wTop = Window.partitionBy(col("q_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        val top = e.filter(col("vec_id") >= NumQueries)
+        val top = topK(e.filter(col("vec_id") >= NumQueries)
           .join(broadcast(q))
           .withColumn("cosine", cosineCol)
           .select(col("q_id"), col("true_label"),
-            col("vec_id").as("neighbor_id"), col("cosine"))
-          .withColumn("rk", row_number().over(wTop))
-          .filter(col("rk") <= K)
+            col("vec_id").as("neighbor_id"), col("cosine")),
+          Seq("q_id"), "cosine", "neighbor_id")
         val wVote = Window.partitionBy(col("q_id"))
           .orderBy(col("votes").desc, col("pred_label"))
         top.join(lab.withColumnRenamed("vec_id", "neighbor_id")
@@ -1149,16 +1202,13 @@ object Similarity {
     QuerySpec(
       "q322_ann_recall",
       Some(s"""WITH $duckQuantCte,
-          q AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq
-            FROM en WHERE vec_id < $NumQueries),
+          q AS (${duckQuerySet("en")}),
           xsc AS (SELECT q_id AS query_id, en.vec_id AS neighbor_id,
               ${qcosDuck("q_qv", "en.qv", "q_nsq", "en.nsq", Dims)}
                 AS cosine
             FROM q JOIN en ON en.vec_id <> q_id),
           xtop AS (SELECT query_id, neighbor_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id) AS rk FROM xsc) z
-            WHERE rk <= $K),
+            ${duckTopK("xsc", "query_id", "cosine", "neighbor_id")}) t),
           es AS (SELECT vec_id, qv, nsq, ($sigDuck) AS sig FROM en),
           bl AS (SELECT vec_id, j, (sig >> (4*j)) & 15 AS band
             FROM es, (SELECT unnest(range(0, 4)) AS j) z),
@@ -1172,9 +1222,7 @@ object Similarity {
             FROM acand c JOIN es x ON x.vec_id = c.q_id
                          JOIN es y ON y.vec_id = c.vec_id),
           atop AS (SELECT query_id, neighbor_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id) AS rk FROM asc2) z
-            WHERE rk <= $K),
+            ${duckTopK("asc2", "query_id", "cosine", "neighbor_id")}) t),
           hits AS (SELECT x.query_id, CAST(COUNT(*) AS BIGINT) AS n
             FROM xtop x JOIN atop a ON a.query_id = x.query_id
               AND a.neighbor_id = x.neighbor_id
@@ -1185,13 +1233,11 @@ object Similarity {
           FROM q LEFT JOIN hits ON hits.query_id = q.q_id"""),
       (s, d) => {
         val e = quantized(s, d, withSig = true).cache()
-        val q = e.filter(col("vec_id") < NumQueries)
-          .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-            col("nsq").as("q_nsq"))
-        val exact = topkCosine(
+        val q = querySet(e)
+        val exact = neighbors(
           e.join(broadcast(q), col("vec_id") =!= col("q_id")))
           .select(col("query_id"), col("neighbor_id"))
-        val approx = topkCosine(lshCandidates(s, d)
+        val approx = neighbors(lshCandidates(s, d)
           .join(e, "vec_id")
           .join(broadcast(q), "q_id"))
           .select(col("query_id"), col("neighbor_id"))
@@ -1336,30 +1382,23 @@ object Similarity {
             FROM lc c JOIN es x ON x.vec_id = c.q_id
                       JOIN es y ON y.vec_id = c.vec_id)
           SELECT query_id, neighbor_id, label_q, label_n, cosine,
-            CAST(rk AS INT) AS rk FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id) AS rk FROM scored) z
-          WHERE rk <= $HardNegK"""),
+            CAST(rk AS INT) AS rk FROM (${duckTopK("scored", "query_id",
+              "cosine", "neighbor_id", HardNegK)}) t"""),
       (s, d) => {
         val e = quantized(s, d, withSig = true)
         val lab = t(s, d, "embeddings").select(col("vec_id"), col("label"))
-        val qe = e.filter(col("vec_id") < NumQueries)
-          .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-            col("nsq").as("q_nsq"))
         val labQ = lab.select(col("vec_id").as("q_id"),
           col("label").as("label_q"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        lshCandidates(s, d)
+        topK(lshCandidates(s, d)
           .join(e, "vec_id").join(lab, "vec_id")
-          .join(broadcast(qe), "q_id").join(broadcast(labQ), "q_id")
+          .join(broadcast(querySet(e)), "q_id")
+          .join(broadcast(labQ), "q_id")
           .filter(col("label") =!= col("label_q"))
           .withColumn("cosine", cosineCol)
           .select(col("q_id").as("query_id"),
             col("vec_id").as("neighbor_id"),
-            col("label_q"), col("label").as("label_n"), col("cosine"))
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= HardNegK)
+            col("label_q"), col("label").as("label_n"), col("cosine")),
+          Seq("query_id"), "cosine", "neighbor_id", HardNegK)
       }),
 
     // ---- IVF nprobe planning (recall-vs-probes curve) ----------------------
@@ -1382,24 +1421,15 @@ object Similarity {
     QuerySpec(
       "q351_ivf_nprobe_planning",
       Some(s"""WITH $duckCells4Cte,
+          $duckProbeList4,
+          t1sc AS (SELECT q.q_id, c.vec_id AS neighbor_id,
+              ${qcosDuck("q.q_qv", "c.qv", "q.q_nsq", "c.nsq", Dims)}
+                AS cosine
+            FROM pl q JOIN cells c ON c.vec_id <> q.q_id),
           t1 AS (SELECT q_id, neighbor_id AS top1_id FROM (
-              SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-                row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                  ${qcosDuck("q.qv", "c.qv", "q.nsq", "c.nsq", Dims)} DESC,
-                  c.vec_id) AS rk
-              FROM cells q JOIN cells c ON c.vec_id <> q.vec_id
-              WHERE q.vec_id < $NumQueries) z
-            WHERE rk = 1),
+            ${duckTopK("t1sc", "q_id", "cosine", "neighbor_id", 1)}) t),
           tc AS (SELECT t1.q_id, cells.cell AS t_cell
             FROM t1 JOIN cells ON cells.vec_id = t1.top1_id),
-          pl AS (SELECT vec_id AS q_id, cell,
-              list_sort([{'a': abs(p0), 'j': 0}, {'a': abs(p1), 'j': 1},
-                {'a': abs(p2), 'j': 2}, {'a': abs(p3), 'j': 3}]) AS ord
-            FROM cells WHERE vec_id < $NumQueries),
-          pls AS (SELECT q_id,
-              list_concat([cell], [xor(cell, 1 << o.j) for o in ord])
-                AS plist
-            FROM pl),
           rk AS (SELECT pls.q_id,
               CASE WHEN COALESCE(list_position(plist, t_cell), 0) = 0
                 THEN 5 ELSE list_position(plist, t_cell) - 1 END AS rank
@@ -1413,29 +1443,15 @@ object Similarity {
           FROM br, tt"""),
       (s, d) => {
         val c = celled(s, d).cache()
-        val qe = c.filter(col("vec_id") < NumQueries)
-          .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-            col("nsq").as("q_nsq"))
-        val top1 = c.select(col("vec_id"), col("qv"), col("nsq"))
-          .join(broadcast(qe), col("vec_id") =!= col("q_id"))
-          .withColumn("cosine", cosineCol)
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("q_id"))
-              .orderBy(col("cosine").desc, col("vec_id"))))
-          .filter(col("rk") === 1)
+        val top1 = topK(c.select(col("vec_id"), col("qv"), col("nsq"))
+            .join(broadcast(querySet(c)), col("vec_id") =!= col("q_id"))
+            .withColumn("cosine", cosineCol),
+          Seq("q_id"), "cosine", "vec_id", 1)
           .select(col("q_id"), col("vec_id").as("top1_id"))
         val tc = top1.join(
           c.select(col("vec_id").as("top1_id"), col("cell").as("t_cell")),
           "top1_id")
-        val pls = c.filter(col("vec_id") < NumQueries)
-          .select(col("vec_id").as("q_id"), col("cell"),
-            expr("""array_sort(array(
-              struct(abs(p0) AS a, 0 AS j), struct(abs(p1) AS a, 1 AS j),
-              struct(abs(p2) AS a, 2 AS j), struct(abs(p3) AS a, 3 AS j)))
-              """).as("ord"))
-          .withColumn("plist", expr(
-            "concat(array(cell), transform(ord, o -> cell ^ shiftleft(1, o.j)))"))
-        val br = pls.join(tc, "q_id")
+        val br = probeList4(c).join(tc, "q_id")
           .withColumn("pos", expr("array_position(plist, t_cell)"))
           .withColumn("rank",
             when(col("pos") === 0, lit(5)).otherwise(col("pos") - 1)
@@ -1711,16 +1727,13 @@ object Similarity {
             FROM ex JOIN st ON st.i = ex.i),
           carr AS (SELECT vec_id, list(code ORDER BY i) AS ca
             FROM cd GROUP BY 1),
-          q AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq
-            FROM en WHERE vec_id < $NumQueries),
+          q AS (${duckQuerySet("en")}),
           xsc AS (SELECT q_id, en.vec_id,
               ${qcosDuck("q_qv", "en.qv", "q_nsq", "en.nsq", Dims)}
                 AS cosine
             FROM q JOIN en ON en.vec_id <> q_id),
           top AS (SELECT q_id, vec_id, rk AS rk_exact FROM (
-              SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-                ORDER BY cosine DESC, vec_id) AS rk FROM xsc) z
-            WHERE rk <= 20),
+            ${duckTopK("xsc", "q_id", "cosine", "vec_id", 20)}) t),
           sc8 AS (SELECT t.q_id, t.vec_id, t.rk_exact,
               list_sum([a.ca[i] * b.ca[i]
                 for i in range(1, ${Dims + 1})]) AS c8
@@ -1756,15 +1769,10 @@ object Similarity {
           .groupBy(col("vec_id"))
           .agg(expr("transform(array_sort(collect_list(struct(i, code)))," +
             " x -> x.code)").as("ca"))
-        val q = en.filter(col("vec_id") < NumQueries)
-          .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-            col("nsq").as("q_nsq"))
-        val wE = Window.partitionBy(col("q_id"))
-          .orderBy(col("cosine").desc, col("vec_id"))
-        val top = en.join(broadcast(q), col("vec_id") =!= col("q_id"))
-          .withColumn("cosine", expr("qcosine(q_qv, qv, q_nsq, nsq)"))
-          .withColumn("rk_exact", row_number().over(wE))
-          .filter(col("rk_exact") <= 20)
+        val top = topK(en.join(broadcast(querySet(en)),
+            col("vec_id") =!= col("q_id"))
+          .withColumn("cosine", cosineCol),
+          Seq("q_id"), "cosine", "vec_id", 20, "rk_exact")
           .select(col("q_id"), col("vec_id"), col("rk_exact"))
         val sc8 = top
           .join(carr.select(col("vec_id").as("q_id"), col("ca").as("qa")),
@@ -1816,26 +1824,20 @@ object Similarity {
             WHERE a0.vec_id < $NumQueries),
           q1 AS (SELECT a1.vec_id AS q_id, a1.cid FROM a1
             WHERE a1.vec_id < $NumQueries),
-          t0 AS (SELECT q_id, vec_id FROM (
-              SELECT q0.q_id, a0.vec_id,
-                row_number() OVER (PARTITION BY q0.q_id ORDER BY
-                  ${qcosDuck("qe.qv", "ne.qv", "qe.nsq", "ne.nsq", Dims)} DESC,
-                  a0.vec_id) AS rk
-              FROM q0 JOIN a0 ON a0.cid = q0.cid
-                AND a0.vec_id <> q0.q_id
+          s0 AS (SELECT q0.q_id, a0.vec_id,
+              ${qcosDuck("qe.qv", "ne.qv", "qe.nsq", "ne.nsq", Dims)} AS c
+            FROM q0 JOIN a0 ON a0.cid = q0.cid AND a0.vec_id <> q0.q_id
               JOIN en qe ON qe.vec_id = q0.q_id
-              JOIN en ne ON ne.vec_id = a0.vec_id) z
-            WHERE rk <= $K),
-          t1 AS (SELECT q_id, vec_id FROM (
-              SELECT q1.q_id, a1.vec_id,
-                row_number() OVER (PARTITION BY q1.q_id ORDER BY
-                  ${qcosDuck("qe.qv", "ne.qv", "qe.nsq", "ne.nsq", Dims)} DESC,
-                  a1.vec_id) AS rk
-              FROM q1 JOIN a1 ON a1.cid = q1.cid
-                AND a1.vec_id <> q1.q_id
+              JOIN en ne ON ne.vec_id = a0.vec_id),
+          s1 AS (SELECT q1.q_id, a1.vec_id,
+              ${qcosDuck("qe.qv", "ne.qv", "qe.nsq", "ne.nsq", Dims)} AS c
+            FROM q1 JOIN a1 ON a1.cid = q1.cid AND a1.vec_id <> q1.q_id
               JOIN en qe ON qe.vec_id = q1.q_id
-              JOIN en ne ON ne.vec_id = a1.vec_id) z
-            WHERE rk <= $K),
+              JOIN en ne ON ne.vec_id = a1.vec_id),
+          t0 AS (SELECT q_id, vec_id FROM (
+            ${duckTopK("s0", "q_id", "c", "vec_id")}) t),
+          t1 AS (SELECT q_id, vec_id FROM (
+            ${duckTopK("s1", "q_id", "c", "vec_id")}) t),
           k0 AS (SELECT q_id, CAST(COUNT(*) AS BIGINT) AS k0
             FROM t0 GROUP BY 1),
           k1 AS (SELECT q_id, CAST(COUNT(*) AS BIGINT) AS k1
@@ -1862,17 +1864,14 @@ object Similarity {
           val cells = asg.select(col("vec_id"), col(cidCol).as("cell"))
           val qc = cells.filter(col("vec_id") < NumQueries)
             .select(col("vec_id").as("q_id"), col("cell"))
-          val w = Window.partitionBy(col("q_id"))
-            .orderBy(col("cosine").desc, col("vec_id"))
-          cells.join(broadcast(qc), Seq("cell"))
+          topK(cells.join(broadcast(qc), Seq("cell"))
             .filter(col("vec_id") =!= col("q_id"))
             .join(en.select(col("vec_id").as("q_id"),
               col("qv").as("q_qv"), col("nsq").as("q_nsq")), "q_id")
             .join(en.select(col("vec_id"), col("qv"), col("nsq")),
               "vec_id")
-            .withColumn("cosine", expr("qcosine(q_qv, qv, q_nsq, nsq)"))
-            .withColumn("rk", row_number().over(w))
-            .filter(col("rk") <= K)
+            .withColumn("cosine", cosineCol),
+            Seq("q_id"), "cosine", "vec_id")
             .select(col("q_id"), col("vec_id"))
         }
         val t0 = leg(a0, "cid")
@@ -1921,29 +1920,23 @@ object Similarity {
           FROM en JOIN embeddings e2 ON e2.vec_id = en.vec_id),
         a AS (SELECT * FROM el WHERE label < 5),
         b AS (SELECT * FROM el WHERE label >= 5),
-        q AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq
-          FROM a WHERE vec_id < 64),
+        q AS (${duckQuerySet("a", 64)}),
         p1 AS (SELECT q.q_id, b.vec_id,
             ${qcosDuck("q.q_qv", "b.qv", "q.q_nsq", "b.nsq", Dims)} AS cosine
           FROM b, q),
-        rk1 AS (SELECT q_id, vec_id, cosine, row_number()
-            OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rk
-          FROM p1),
         r1 AS (SELECT q_id,
             MAX(CASE WHEN rk = 1 THEN vec_id END) AS b_id,
             MAX(CASE WHEN rk = 1 THEN cosine END) AS best,
             MAX(CASE WHEN rk = 2 THEN cosine END) AS second
-          FROM rk1 WHERE rk <= 2 GROUP BY 1),
+          FROM (${duckTopK("p1", "q_id", "cosine", "vec_id", 2)}) t
+          GROUP BY 1),
         bv AS (SELECT DISTINCT r1.b_id, el.qv AS b_qv, el.nsq AS b_nsq
           FROM r1 JOIN el ON el.vec_id = r1.b_id),
         p2 AS (SELECT bv.b_id, a.vec_id,
             ${qcosDuck("bv.b_qv", "a.qv", "bv.b_nsq", "a.nsq", Dims)} AS cosine
           FROM a, bv),
         r2 AS (SELECT b_id, vec_id AS a_top FROM (
-            SELECT b_id, vec_id, row_number() OVER (PARTITION BY b_id
-              ORDER BY cosine DESC, vec_id) AS rk
-            FROM p2) z
-          WHERE rk = 1)
+            ${duckTopK("p2", "b_id", "cosine", "vec_id", 1)}) t)
         SELECT r1.q_id AS a_id, r1.b_id, r1.best AS cosine,
           CAST(floor((r1.best - r1.second) * 1000000) AS BIGINT)
             AS margin_micro
@@ -1957,15 +1950,10 @@ object Similarity {
           .cache() // A scan, B scan, and the hit-vector lookup
         val aSide = el.filter(col("label") < 5)
         val bSide = el.filter(col("label") >= 5)
-        val qs = aSide.filter(col("vec_id") < 64)
-          .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-            col("nsq").as("q_nsq"))
-        val w1 = Window.partitionBy(col("q_id"))
-          .orderBy(col("cosine").desc, col("vec_id"))
-        val r1 = bSide.crossJoin(broadcast(qs)) // bounded query set
-          .withColumn("cosine", cosineCol)
-          .withColumn("rk", row_number().over(w1))
-          .filter(col("rk") <= 2)
+        val qs = querySet(aSide, 64) // bounded query set
+        val r1 = topK(bSide.crossJoin(broadcast(qs))
+            .withColumn("cosine", cosineCol),
+          Seq("q_id"), "cosine", "vec_id", 2)
           .groupBy(col("q_id"))
           .agg(max(when(col("rk") === 1, col("vec_id"))).as("b_id"),
             max(when(col("rk") === 1, col("cosine"))).as("best"),
@@ -1975,12 +1963,9 @@ object Similarity {
             col("vec_id") === col("b_id"))
           .select(col("b_id"), col("qv").as("q_qv"),
             col("nsq").as("q_nsq"))
-        val w2 = Window.partitionBy(col("b_id"))
-          .orderBy(col("cosine").desc, col("vec_id"))
-        val r2 = aSide.crossJoin(broadcast(bv)) // <= |Q| hit vectors
-          .withColumn("cosine", cosineCol)
-          .withColumn("rk", row_number().over(w2))
-          .filter(col("rk") === 1)
+        val r2 = topK(aSide.crossJoin(broadcast(bv)) // <= |Q| hit vectors
+            .withColumn("cosine", cosineCol),
+          Seq("b_id"), "cosine", "vec_id", 1)
           .select(col("b_id"), col("vec_id").as("a_top"))
         r1.join(broadcast(r2), "b_id")
           .filter(col("a_top") === col("q_id"))
@@ -2010,16 +1995,12 @@ object Similarity {
     QuerySpec(
       "q376_label_consensus",
       Some(s"""WITH $duckQuantCte,
-        q AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq
-          FROM en WHERE vec_id < $ConsensusIds),
+        q AS (${duckQuerySet("en", ConsensusIds)}),
         p AS (SELECT q.q_id, en.vec_id,
             ${qcosDuck("q.q_qv", "en.qv", "q.q_nsq", "en.nsq", Dims)} AS cosine
           FROM en, q WHERE en.vec_id <> q.q_id),
         tk AS (SELECT q_id, vec_id FROM (
-            SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-              ORDER BY cosine DESC, vec_id) AS rk
-            FROM p) z
-          WHERE rk <= $K),
+          ${duckTopK("p", "q_id", "cosine", "vec_id")}) t),
         ag AS (SELECT tk.q_id, lq.label,
             CAST(SUM(CASE WHEN ln.label = lq.label THEN 1 ELSE 0 END)
               AS BIGINT) AS n_agree
@@ -2032,10 +2013,8 @@ object Similarity {
       (s, d) => {
         val en = quantized(s, d, withSig = false)
         val lab = t(s, d, "embeddings").select(col("vec_id"), col("label"))
-        val qs = en.filter(col("vec_id") < ConsensusIds)
-          .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-            col("nsq").as("q_nsq"))
-        val top = topkCosine(en.crossJoin(broadcast(qs))
+        val top = neighbors(en
+            .crossJoin(broadcast(querySet(en, ConsensusIds)))
             .filter(col("vec_id") =!= col("q_id")))
           .select(col("query_id"), col("neighbor_id"))
         val ag = lab.select(col("vec_id").as("neighbor_id"),
@@ -2146,15 +2125,13 @@ object Similarity {
             UNION ALL SELECT * FROM sel_$t)"""
         }.mkString(",\n          ")
         Some(s"""WITH $duckQuantCte,
-          qset AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq
-            FROM en WHERE vec_id < $NumQueries),
+          qset AS (${duckQuerySet("en")}),
           rel AS (SELECT q_id, en.vec_id,
               ${qcosDuck("q_qv", "en.qv", "q_nsq", "en.nsq", Dims)} AS cq
             FROM qset, en WHERE en.vec_id <> q_id),
           acc_1 AS (SELECT q_id, vec_id AS neighbor_id, cq AS relevance,
               cq AS mmr_score, CAST(1 AS INT) AS mmr_rank FROM (
-              SELECT q_id, vec_id, cq, row_number() OVER (PARTITION BY q_id
-                ORDER BY cq DESC, vec_id) AS rk FROM rel) z WHERE rk = 1),
+              ${duckTopK("rel", "q_id", "cq", "vec_id", 1)}) t),
           $stages
           SELECT q_id AS query_id, mmr_rank, neighbor_id, relevance,
             mmr_score
@@ -2638,15 +2615,7 @@ object Similarity {
   private[graft] def ivfElastic(s: SparkSession, d: String,
       quota: Int, ceiling: Int): DataFrame = {
     val c = celled(s, d).cache()
-    val qs = c.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-        col("nsq").as("q_nsq"), col("cell"),
-        expr("""array_sort(array(
-          struct(abs(p0) AS a, 0 AS j), struct(abs(p1) AS a, 1 AS j),
-          struct(abs(p2) AS a, 2 AS j), struct(abs(p3) AS a, 3 AS j)))
-          """).as("ord"))
-      .withColumn("plist", expr(
-        "concat(array(cell), transform(ord, o -> cell ^ shiftleft(1, o.j)))"))
+    val qs = probeList4(c, col("qv").as("q_qv"), col("nsq").as("q_nsq"))
     val probes = qs.select(col("q_id"), posexplode(col("plist")))
       .select(col("q_id"), col("pos").as("rk"), col("col").as("cell"))
       .filter(col("rk") < ceiling)
@@ -2665,11 +2634,14 @@ object Similarity {
     * reaching the candidate decides membership; one cumulative window
     * picks the per-query minimal rank meeting `quota` — no iteration,
     * mirrored closed-form in every oracle. Returns one row per query:
-    * (q_id, probes_used, n_cand, n_hit).
+    * (q_id, [n_cells,] probes_used, n_cand, n_hit). `nCells` is a
+    * broadcast frame carrying `n_cells`: joined on q_id when it has that
+    * column, else a one-row frame cross-joined in.
     */
   private def elasticStop(corpusCells: DataFrame, scored: DataFrame,
       qsB: DataFrame, probes: DataFrame, joinKeys: Seq[String],
-      quota: Int, ceiling: Int): DataFrame = {
+      quota: Int, ceiling: Int,
+      nCells: Option[DataFrame] = None): DataFrame = {
     val firstRk = corpusCells
       .join(broadcast(probes), joinKeys)
       .filter(col("vec_id") =!= col("q_id"))
@@ -2686,19 +2658,15 @@ object Similarity {
     val candSet = firstRk.join(broadcast(chosen), "q_id")
       .filter(col("frk") <= coalesce(col("rmet"), col("rmax")))
       .select(col("q_id"), col("vec_id"))
-    val wB = Window.partitionBy(col("q_id"))
-      .orderBy(col("c").desc, col("vec_id"))
-    val top = candSet
-      .join(scored, "vec_id")
-      .join(broadcast(qsB), "q_id")
-      .withColumn("c", expr("qcosine(q_qv, qv, q_nsq, nsq)"))
-      .withColumn("rk", row_number().over(wB))
-      .filter(col("rk") <= K).select(col("q_id"), col("vec_id"))
+    val top = cosineTopK(candSet
+        .join(scored, "vec_id")
+        .join(broadcast(qsB), "q_id"))
+      .select(col("q_id"), col("vec_id"))
     val hits = top
       .join(exactTopK(scored, qsB), Seq("q_id", "vec_id"))
       .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
     val nc = candSet.groupBy(col("q_id")).agg(count(lit(1)).as("n_cand"))
-    qsB.select(col("q_id"))
+    val grid = qsB.select(col("q_id"))
       .join(chosen, Seq("q_id"), "left")
       .join(nc, Seq("q_id"), "left")
       .join(hits, Seq("q_id"), "left")
@@ -2707,6 +2675,12 @@ object Similarity {
           .as("probes_used"),
         coalesce(col("n_cand"), lit(0L)).as("n_cand"),
         coalesce(col("n_hit"), lit(0L)).as("n_hit"))
+    nCells.fold(grid) { cells =>
+      (if (cells.columns.contains("q_id")) grid.join(broadcast(cells), "q_id")
+       else grid.crossJoin(broadcast(cells)))
+        .select(col("q_id"), col("n_cells"), col("probes_used"),
+          col("n_cand"), col("n_hit"))
+    }
   }
 
   /** DuckDB mirror of [[elasticStop]], taking the same inputs as CTE
@@ -2765,17 +2739,12 @@ object Similarity {
         FROM candset cs JOIN en e ON e.vec_id = cs.vec_id
              JOIN $qs q ON q.q_id = cs.q_id),
       etop AS (SELECT probe_budget, q_id, vec_id FROM (
-          SELECT probe_budget, q_id, vec_id, row_number() OVER (
-              PARTITION BY probe_budget, q_id
-              ORDER BY c DESC, vec_id) AS rk FROM scored) z
-        WHERE rk <= $K),
+          ${duckTopK("scored", "probe_budget, q_id", "c", "vec_id")}) t),
+      exactsc AS (SELECT q.q_id, e.vec_id,
+          ${qcosDuck("q.q_qv", "e.qv", "q.q_nsq", "e.nsq", Dims)} AS c
+        FROM $qs q, en e WHERE e.vec_id <> q.q_id),
       exacttop AS (SELECT q_id, vec_id FROM (
-          SELECT q.q_id, e.vec_id, row_number() OVER (
-              PARTITION BY q.q_id ORDER BY
-                ${qcosDuck("q.q_qv", "e.qv", "q.q_nsq", "e.nsq", Dims)} DESC,
-                e.vec_id) AS rk
-          FROM $qs q, en e WHERE e.vec_id <> q.q_id) z
-        WHERE rk <= $K),
+          ${duckTopK("exactsc", "q_id", "c", "vec_id")}) t),
       hits AS (SELECT t.probe_budget, t.q_id,
           CAST(COUNT(*) AS BIGINT) AS n_hit
         FROM etop t JOIN exacttop x
@@ -2792,6 +2761,33 @@ object Similarity {
           AND nc.q_id = ct.q_id
         LEFT JOIN hits h ON h.probe_budget = ct.probe_budget
           AND h.q_id = ct.q_id)"""
+  }
+
+  /** The adaptive ANN query head (q392-q395's trie, q400's grid): the
+    * cached query set of the signature corpus `sg` as `(q_id, q_qv,
+    * q_nsq, sig, maxd, ap)` — maxd the in-plan [[adaptiveDepthSpark]] of
+    * the one-row corpus count `n` (`n_src`) at (occupancy, floor), ap
+    * the |projection| onto every plane. Twin of [[duckAdaptiveQueryHead]].
+    */
+  private def adaptiveQueryHead(sg: DataFrame, n: DataFrame, occupancy: Int,
+      floor: Int): DataFrame =
+    sg.filter(col("vec_id") < NumQueries)
+      .crossJoin(broadcast(n))
+      .withColumn("maxd", adaptiveDepthSpark("n_src", occupancy, floor))
+      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
+        col("nsq").as("q_nsq"), col("sig"), col("maxd"),
+        expr(apArraySql).as("ap")).cache()
+
+  /** Twin of [[adaptiveQueryHead]]: `qraw(q_id, q_qv, q_nsq, sig, maxd,
+    * ap)` over the signature relation `src`, with maxd read from the
+    * one-row relation `depth`.
+    */
+  private def duckAdaptiveQueryHead(src: String, depth: String): String = {
+    val ap = (0 until Planes).map(p => s"abs(${projDuck(p)})")
+      .mkString(", ")
+    s"""qraw AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq, sig, maxd,
+          [$ap] AS ap
+        FROM $src, $depth WHERE vec_id < $NumQueries)"""
   }
 
   /** The adaptive serving grid's frames (q400): the 48-plane signature
@@ -2815,17 +2811,12 @@ object Similarity {
       occupancy: Int): AnnFrames = {
     val sg = quantizedSigCut(s, d)
     val n = sg.agg(count(lit(1)).as("n_src"))
-    val maxdCol = adaptiveDepthSpark("n_src", occupancy, IvfServeFloorDepth)
     val corpus = sg.crossJoin(broadcast(n))
-      .withColumn("maxd", maxdCol)
+      .withColumn("maxd",
+        adaptiveDepthSpark("n_src", occupancy, IvfServeFloorDepth))
       .select(col("vec_id"),
         expr("sig & (shiftleft(1L, maxd) - 1)").as("cell"))
-    val qs = sg.filter(col("vec_id") < NumQueries)
-      .crossJoin(broadcast(n))
-      .withColumn("maxd", maxdCol)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-        col("nsq").as("q_nsq"), col("sig"), col("maxd"),
-        expr(apArraySql).as("ap")).cache()
+    val qs = adaptiveQueryHead(sg, n, occupancy, IvfServeFloorDepth)
     // MULTI-PROBE perturbation SETS, not single flips (Lv et al. 2007,
     // "Multi-Probe LSH"): a true neighbor at serving cosine differs
     // from the query in ~(1 - cos⁻¹-agreement) × maxd sign bits, so on
@@ -2878,11 +2869,9 @@ object Similarity {
     elasticStop(fr.corpus,
       fr.sg.select(col("vec_id"), col("qv"), col("nsq")),
       fr.qs.select(col("q_id"), col("q_qv"), col("q_nsq")),
-      probes, Seq("cell"), quota, ceiling)
-      .join(broadcast(fr.qs.select(col("q_id"),
-        expr("shiftleft(1L, maxd)").as("n_cells"))), "q_id")
-      .select(col("q_id"), col("n_cells"), col("probes_used"),
-        col("n_cand"), col("n_hit"))
+      probes, Seq("cell"), quota, ceiling,
+      Some(fr.qs.select(col("q_id"),
+        expr("shiftleft(1L, maxd)").as("n_cells"))))
   }
 
   /** DuckDB mirror of [[ivfElasticAdaptive]] — self-contained after
@@ -2892,23 +2881,19 @@ object Similarity {
     * order and stop rule are the shared closed form.
     */
   private def duckIvfAdaptiveCtes(quota: Int, ceiling: Int,
-      occupancy: Int = IvfServeOccupancy): String = {
-    val apList = (0 until Planes).map(p => s"abs(${projDuck(p)})")
-      .mkString(", ")
+      occupancy: Int = IvfServeOccupancy): String =
     s"""sgq AS (SELECT vec_id, qv, nsq, ($sigDuck) AS sig FROM en),
       smd AS (SELECT ${adaptiveDepthDuck("COUNT(*)", occupancy,
           IvfServeFloorDepth)} AS maxd FROM en),
       corpus AS (SELECT vec_id,
           sig & ((CAST(1 AS BIGINT) << maxd) - 1) AS cell
         FROM sgq, smd),
-      qraw AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq, sig,
-          [$apList] AS ap
-        FROM sgq WHERE vec_id < $NumQueries),
+      ${duckAdaptiveQueryHead("sgq", "smd")},
       ordm AS (SELECT q_id, sig,
           list_slice(list_sort([{'a': ap[j + 1], 'p': j}
               for j in range(0, maxd)]),
             1, LEAST(maxd, $IvfPerturbPlanes)) AS om
-        FROM qraw, smd),
+        FROM qraw),
       subs AS (SELECT q_id, sig, om, len(om) AS m,
           unnest(range(0, 1 << len(om))) AS sub
         FROM ordm),
@@ -2930,7 +2915,6 @@ object Similarity {
         FROM sigs, smd WHERE rk < $ceiling),
       ${duckElasticStop("probesrk", "corpus", Seq("cell"), "qraw", quota,
         ceiling, Some(("smd", "(CAST(1 AS BIGINT) << smd.maxd)")))}"""
-  }
 
   /** Learned-centroid serving IVF (q401): a deterministic k-means
     * coarse quantizer composed with the shared quota-elastic stop rule.
@@ -2990,9 +2974,7 @@ object Similarity {
       .withColumn("cnsq", expr(qnsqSpark("cqv")))
       .cache()
     val assign = argminCell(cent, "cell")
-    val qsB = en.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-        col("nsq").as("q_nsq"))
+    val qsB = querySet(en)
     val wP = Window.partitionBy(col("q_id"))
       .orderBy(col("d2"), col("cid"))
     val probes = qsB.crossJoin(broadcast(cent))
@@ -3003,10 +2985,8 @@ object Similarity {
       .filter(col("rk") < ceiling)
       .select(col("q_id"), col("rk"), col("cid").as("cell"))
     elasticStop(assign, en.select(col("vec_id"), col("qv"), col("nsq")),
-        qsB, probes, Seq("cell"), quota, ceiling)
-      .crossJoin(broadcast(nk.select(col("k").as("n_cells"))))
-      .select(col("q_id"), col("n_cells"), col("probes_used"),
-        col("n_cand"), col("n_hit"))
+      qsB, probes, Seq("cell"), quota, ceiling,
+      Some(nk.select(col("k").as("n_cells"))))
   }
 
   /** DuckDB mirror of [[ivfCentroidServe]] — self-contained after the
@@ -3050,8 +3030,7 @@ object Similarity {
           SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
               ORDER BY d2, cid) AS rk FROM d2f) z
         WHERE rk = 1),
-      qset AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq FROM en
-        WHERE vec_id < $NumQueries),
+      qset AS (${duckQuerySet("en")}),
       qd AS (SELECT q.q_id, c.cid,
           q.q_nsq - 2 * ${qdotDuck("q.q_qv", "c.cqv", Dims)} + c.cnsq
             AS d2
@@ -3066,19 +3045,12 @@ object Similarity {
   /** DuckDB mirror of [[ivfElastic]] — self-contained (the cells come
     * from [[duckCells4Cte]]); emits `grid(probe_budget, q_id,
     * probes_used, n_cand, n_hit)`. Same ranked probe list as q351
-    * (`pl`/`pls` machinery) and the same closed-form stop rule as
-    * q395's mirror.
+    * ([[duckProbeList4]]) and the same closed-form stop rule as q395's
+    * mirror.
     */
   private def duckIvfElasticCtes(quota: Int, ceiling: Int): String =
     s"""$duckCells4Cte,
-      ql AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq, cell,
-          list_sort([{'a': abs(p0), 'j': 0}, {'a': abs(p1), 'j': 1},
-            {'a': abs(p2), 'j': 2}, {'a': abs(p3), 'j': 3}]) AS ord
-        FROM cells WHERE vec_id < $NumQueries),
-      pls AS (SELECT q_id, q_qv, q_nsq,
-          list_concat([cell], [xor(cell, 1 << o.j) for o in ord])
-            AS plist
-        FROM ql),
+      $duckProbeList4,
       prk AS (SELECT q_id, i - 1 AS rk, plist[i] AS cell
         FROM pls, (SELECT unnest(range(1, $ceiling + 1)) AS i) z),
       ${duckElasticStop("prk", "cells", Seq("cell"), "pls", quota,
@@ -3150,14 +3122,8 @@ object Similarity {
     val sgk = sg.select(col("vec_id"), col("sig"))
     val leaves = trieLeafAdaptive(sgk, CellOccupancy)
     val corpus = sg.select(col("vec_id")).join(leaves, "vec_id")
-    val n = sgk.agg(count(lit(1)).as("n_src"))
-    val qs = sg.filter(col("vec_id") < NumQueries)
-      .crossJoin(broadcast(n))
-      .withColumn("maxd",
-        adaptiveDepthSpark("n_src", CellOccupancy, TrieDepthFloor))
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-        col("nsq").as("q_nsq"), col("sig"), col("maxd"),
-        expr(apArraySql).as("ap")).cache()
+    val qs = adaptiveQueryHead(sg, sgk.agg(count(lit(1)).as("n_src")),
+      CellOccupancy, TrieDepthFloor)
     // flip candidates ranked by confidence: (|proj|, plane) ascending
     // over the deployed planes — a query-set-sized frame
     val wR = Window.partitionBy(col("q_id")).orderBy(col("apv"), col("pos"))
@@ -3188,17 +3154,12 @@ object Similarity {
   /** The audit's budget-independent ground truth: exact top-[[K]] per
     * query over the whole corpus (id-tiebroken exact-grid cosines).
     */
-  private def exactTopK(sg: DataFrame, qs: DataFrame): DataFrame = {
-    val wQ = Window.partitionBy(col("q_id"))
-      .orderBy(col("c").desc, col("vec_id"))
-    sg.select(col("vec_id"), col("qv"), col("nsq"))
-      .crossJoin(broadcast(qs.select(col("q_id"), col("q_qv"),
-        col("q_nsq"))))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("c", expr("qcosine(q_qv, qv, q_nsq, nsq)"))
-      .withColumn("rk", row_number().over(wQ))
-      .filter(col("rk") <= K).select(col("q_id"), col("vec_id"))
-  }
+  private def exactTopK(sg: DataFrame, qs: DataFrame): DataFrame =
+    cosineTopK(sg.select(col("vec_id"), col("qv"), col("nsq"))
+        .crossJoin(broadcast(qs.select(col("q_id"), col("q_qv"),
+          col("q_nsq"))))
+        .filter(col("vec_id") =!= col("q_id")))
+      .select(col("q_id"), col("vec_id"))
 
   /** Budget-parameterized trie-ANN recall audit, shared by q392 (one
     * budget) and q394 (the sweep) — and driven by ScaleProbe on the 10x
@@ -3267,19 +3228,15 @@ object Similarity {
     * 4..maxd, the [[trieProbeCells]] mirror. One definition, so
     * q392/q394/q395 cannot drift on the probe rule.
     */
-  private def duckAnnBaseCtes(maxRk: Int): String = {
-    val apList = (0 until Planes).map(p => s"abs(${projDuck(p)})")
-      .mkString(", ")
+  private def duckAnnBaseCtes(maxRk: Int): String =
     s"""corpus AS (SELECT s.vec_id, l.depth, l.cell
         FROM sg s JOIN leaf l ON l.vec_id = s.vec_id),
-      qraw AS (SELECT vec_id AS q_id, qv AS q_qv, nsq AS q_nsq, sig,
-          [$apList] AS ap
-        FROM sg WHERE vec_id < $NumQueries),
+      ${duckAdaptiveQueryHead("sg", "tmd")},
       ranked AS (SELECT q_id, sig, pos, ap[pos + 1] AS apv,
           row_number() OVER (PARTITION BY q_id
             ORDER BY ap[pos + 1], pos) AS rk
-        FROM qraw, tmd, (SELECT unnest(range(0, $Planes)) AS pos) z
-        WHERE pos < tmd.maxd),
+        FROM qraw, (SELECT unnest(range(0, $Planes)) AS pos) z
+        WHERE pos < maxd),
       sigs AS (SELECT q_id, 0 AS rk, sig AS psig FROM qraw
         UNION ALL
         SELECT q_id, rk, xor(sig, CAST(1 AS BIGINT) << pos) AS psig
@@ -3289,7 +3246,6 @@ object Similarity {
         FROM (SELECT s.q_id, s.rk, s.psig,
                 unnest(range(4, tmd.maxd + 1)) AS d
               FROM sigs s, tmd WHERE s.rk < $maxRk) y)"""
-  }
 
   /** DuckDB mirror of [[trieAnnRecall]] — expects the quantized CTEs,
     * `sg(vec_id, qv, nsq, sig)`, and [[duckTrieLeafCte]]'s `leaf`/`tmd`
@@ -3370,10 +3326,7 @@ object Similarity {
   private[graft] def mmrSelect(s: SparkSession, d: String,
       k: Int): DataFrame = {
     val en = quantized(s, d, withSig = false)
-    val qs = en.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-        col("nsq").as("q_nsq"))
-    val rel = en.crossJoin(broadcast(qs))
+    val rel = en.crossJoin(broadcast(querySet(en)))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cq", expr("qcosine(q_qv, qv, q_nsq, nsq)"))
       .select(col("q_id"), col("vec_id"), col("cq"), col("qv"),

@@ -44,7 +44,7 @@ class PipelineSpec extends SparkSpec {
 
   private def freshPipeline(): (ZoneCatalog, ProcessedLog, Promote) = {
     val cat = ZoneCatalog(TempDirs.create("graft-pipe"))
-    val log = new ProcessedLog(spark, s"${cat.state}/processed_log", clock)
+    val log = new ProcessedLog(spark, cat.processedLog, clock)
     (cat, log, new Promote(spark, cat, log))
   }
 
@@ -151,6 +151,21 @@ class PipelineSpec extends SparkSpec {
     // the failed file stays discoverable for retry
     import spark.implicits._
     assert(log.unprocessed(promote.listBronze().toDF("path")).count() == 1)
+  }
+
+  test("promote: a failing notifier leaves committed files Processed") {
+    val cat = ZoneCatalog(TempDirs.create("graft-pipe"))
+    val log = new ProcessedLog(spark, cat.processedLog, clock)
+    val boom = new RuntimeException() // null message
+    val promote = new Promote(spark, cat, log, new Notify {
+      def info(subject: String, message: String): Unit = throw boom
+      def error(subject: String, message: String): Unit = ()
+    })
+    writeTrips(s"${cat.bronze}/nyc_taxi", "n.parquet", Seq((1, 1L, 10.0)))
+    val thrown = intercept[RuntimeException](promote.run())
+    assert(thrown eq boom, s"the notifier's exception must escape, got $thrown")
+    val status = log.currentStatus().select("status").head().getString(0)
+    assert(status == ProcessedLog.Processed)
   }
 
   test("gold: summaries build from silver and rebuild idempotently") {

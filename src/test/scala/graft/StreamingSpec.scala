@@ -365,7 +365,7 @@ class StreamingSpec extends SparkSpec {
       TempDirs.create("graft-sclean-ckpt"))
     sp.runAvailableNow()
     val promote = new graft.pipeline.Promote(spark, cat,
-      new graft.pipeline.ProcessedLog(spark, s"${cat.state}/processed_log",
+      new graft.pipeline.ProcessedLog(spark, cat.processedLog,
         graft.pipeline.SystemClock))
     assert(promote.run().size == 1)
     def ids(table: String): Seq[Double] =

@@ -15,13 +15,11 @@ compare equal:
     and Scala source line numbers;
   - q184's per-run table suffix (`graft_q184_orders_<hex>`).
 
-Two run-order effects survive normalization even on identical code and
-are not reported:
-  - the column order of a distinct-aggregate Expand follows expression-id
-    allocation, so q13, q140, q147, q196 and q367 may differ on lines
-    that carry the `gid` grouping column (only those lines are ignored);
-  - q348's adaptive plan picks its broadcast build side by which query
-    stage finishes first, so q348 is not compared.
+One run-order effect survives normalization even on identical code and
+is not reported: the column order of a distinct-aggregate Expand follows
+expression-id allocation, so q13, q140, q147, q196 and q367 may differ on
+lines that carry the `gid` grouping column (only those lines are
+ignored).
 
 Prints every query whose plan differs (with its first differing lines),
 every query present on one side only, and each skip; exits 1 if any
@@ -35,7 +33,6 @@ import re
 import sys
 
 EXPAND_ORDER = ("q13_", "q140_", "q147_", "q196_", "q367_")
-UNSTABLE = ("q348_",)
 
 RULES = [
     (re.compile(r"#\d+L?\b"), "#N"),
@@ -74,10 +71,6 @@ def main(a_dir: str, b_dir: str) -> int:
         bad += 1
     same = skipped = 0
     for name in sorted(set(a) & set(b)):
-        if name.startswith(UNSTABLE):
-            print(f"SKIP {name}: AQE build side is not stable")
-            skipped += 1
-            continue
         la = normalize(open(a[name]).read())
         lb = normalize(open(b[name]).read())
         if la == lb:
