@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact distributed quantiles over an integer-valued column.
@@ -20,10 +19,9 @@ import org.apache.spark.sql.functions._
   *     whose output is bounded by the DISTINCT-VALUE count (for fixed-range
   *     integer domains like cents, bounded by the range — corpus-size
   *     independent);
-  *  2. rank-before-value via block prefix sums: per-block cumsum windows
-  *     partition on `value div 2^blockBits`; only the block-totals table
-  *     (range / 2^blockBits rows) crosses a global window — the same
-  *     two-level discipline as the shard-pack prefix sum;
+  *  2. rank-before-value via [[BlockScan.runningSums]] on the block key
+  *     `value div 2^blockBits`: only the block-totals table
+  *     (range / 2^blockBits rows) crosses a global window;
   *  3. each requested quantile's floor/ceil ranks locate their values via
   *     a |ps|-row broadcast containment join; interpolation is one IEEE
   *     expression on the two bracketing values.
@@ -41,22 +39,14 @@ object Quantiles {
     // 1. distributed value histogram
     val vc = values.select(value.cast("long").as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-      .withColumn("g", expr(s"v div ${1L << blockBits}"))
     // 2. rank-before-value via block prefix sums; cached — consumed by the
-    // block totals and both rank lookups
-    val wIn = Window.partitionBy(col("g")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = vc.withColumn("cum_in", sum(col("cnt")).over(wIn)).cache()
-    val blockTot = within.groupBy(col("g")).agg(max(col("cum_in")).as("btot"))
-    val wBlocks = Window.orderBy(col("g"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val blockOff = blockTot.withColumn("boff",
-      coalesce(sum(col("btot")).over(wBlocks), lit(0L)))
-    val ranked = within
-      .join(broadcast(blockOff.select(col("g"), col("boff"))), "g")
-      .withColumn("cum_before", col("boff") + col("cum_in") - col("cnt"))
+    // total count and both rank lookups
+    val ranked = BlockScan.runningSums(vc, expr(s"v div ${1L << blockBits}"),
+        Seq(col("v")), Seq("cum" -> col("cnt")))
+      .withColumn("cum_before", col("cum") - col("cnt"))
+      .cache()
     // 3. quantile ranks → floor/ceil value lookup → interpolated cuts
-    val nRow = blockTot.agg(sum(col("btot")).as("n"))
+    val nRow = ranked.agg(sum(col("cnt")).as("n"))
     val qs = s.createDataFrame(ps.zipWithIndex.map { case (p, i) => (i, p) })
       .toDF("i", "p")
       .crossJoin(broadcast(nRow))
@@ -80,9 +70,9 @@ object Quantiles {
   /** Grouped form: exact quantiles of `value` per `group`, one output row
     * per (group, quantile index) — `(grp, i, cut)`. Same distributed plan
     * as [[exactQuantiles]] with every stage keyed by the group:
-    * histogram on (grp, v); in-block cumsums partition on (grp, block);
-    * per-group block offsets partition on grp and order over ≤
-    * range/2^blockBits block rows; rank lookups join on (grp, i)
+    * histogram on (grp, v); [[BlockScan.runningSums]] `by` grp, so the
+    * block offsets partition on grp and order over ≤ range/2^blockBits
+    * block rows; rank lookups join on (grp, i)
     * containment against the broadcast |groups|·|ps| rank table. No
     * single-buffer aggregate anywhere, so group cardinality and group SIZE
     * are both unbounded — the scale path for per-group exact percentiles
@@ -94,21 +84,11 @@ object Quantiles {
     val s = values.sparkSession
     val vc = values.select(group.as("grp"), value.cast("long").as("v"))
       .groupBy(col("grp"), col("v")).agg(count(lit(1)).as("cnt"))
-      .withColumn("g", expr(s"v div ${1L << blockBits}"))
-    val wIn = Window.partitionBy(col("grp"), col("g")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = vc.withColumn("cum_in", sum(col("cnt")).over(wIn)).cache()
-    val blockTot = within.groupBy(col("grp"), col("g"))
-      .agg(max(col("cum_in")).as("btot"))
-    val wBlocks = Window.partitionBy(col("grp")).orderBy(col("g"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val blockOff = blockTot.withColumn("boff",
-      coalesce(sum(col("btot")).over(wBlocks), lit(0L)))
-    val ranked = within
-      .join(blockOff.select(col("grp"), col("g"), col("boff")),
-        Seq("grp", "g"))
-      .withColumn("cum_before", col("boff") + col("cum_in") - col("cnt"))
-    val nPerGrp = blockTot.groupBy(col("grp")).agg(sum(col("btot")).as("n"))
+    val ranked = BlockScan.runningSums(vc, expr(s"v div ${1L << blockBits}"),
+        Seq(col("v")), Seq("cum" -> col("cnt")), by = Seq(col("grp")))
+      .withColumn("cum_before", col("cum") - col("cnt"))
+      .cache()
+    val nPerGrp = ranked.groupBy(col("grp")).agg(sum(col("cnt")).as("n"))
     val pdf = s.createDataFrame(ps.zipWithIndex.map { case (p, i) => (i, p) })
       .toDF("i", "p")
     val qs = nPerGrp.crossJoin(broadcast(pdf))

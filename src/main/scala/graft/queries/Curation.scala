@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
+import graft.operators.BlockScan
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1470,11 +1471,9 @@ object Curation {
 
     // ---- systematic sampling ------------------------------------------------
     // Every K-th record of the keyed stream — the audit/QA sample with
-    // guaranteed even coverage that Bernoulli sampling can't give. The
-    // global position comes from block prefix COUNTS partitioned on the
-    // key block (the q183/Quantiles rank discipline — no single-task
-    // window); the only unpartitioned ordering runs over the bounded
-    // block-counts table. Row-local modulus picks ranks 1, K+1, 2K+1, …
+    // guaranteed even coverage that Bernoulli sampling can't give. The global
+    // position is an operators.BlockScan running count on the key block — no
+    // single-task window. Row-local modulus picks ranks 1, K+1, 2K+1, …
     QuerySpec(
       "q192_systematic_sample",
       Some(s"""WITH r AS (SELECT o_orderkey,
@@ -1488,18 +1487,9 @@ object Curation {
         val o = t(s, d, "orders")
           .select(col("o_orderkey"),
             round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-          .withColumn("g", expr(s"o_orderkey div ${1L << blockBits}"))
-          .cache() // feeds block counts AND the in-block ranks
-        val wIn = Window.partitionBy(col("g")).orderBy(col("o_orderkey"))
-        val within = o.withColumn("rn", row_number().over(wIn))
-        val bc = o.groupBy(col("g")).agg(count(lit(1)).as("bn"))
-        val wB = Window.orderBy(col("g"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val boff = bc.withColumn("boff",
-          coalesce(sum(col("bn")).over(wB), lit(0L)))
-        within
-          .join(broadcast(boff.select(col("g"), col("boff"))), "g")
-          .withColumn("rk", col("boff") + col("rn"))
+          .cache() // feeds BlockScan's window AND its block totals
+        BlockScan.runningSums(o, expr(s"o_orderkey div ${1L << blockBits}"),
+            Seq(col("o_orderkey")), Seq("rk" -> lit(1L)))
           .filter(col("rk") % SysSampleK === 1)
           .select(col("rk"), col("o_orderkey"), col("cents"))
       }),

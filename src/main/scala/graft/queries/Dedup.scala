@@ -2,10 +2,11 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.Exact
+import graft.operators.BlockScan
 import graft.functions.Portable.{h64Spark, h64Duck, P, chunkFpSpark,
   chunkFpDuck, setFpSpark, setFpDuck, toksSpark, toksDuck, ngramsSpark,
   ngramsDuck, qcosDuck}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -401,6 +402,14 @@ object Dedup {
   private[graft] def simhashCandidates(sim: DataFrame): DataFrame =
     simhashBandCandidates(sim, nBands = 4, width = 15)
 
+  /** The band split of a 60-bit signature column: an array of `nBands`
+    * bigint bands of `width` bits, band j = bits [width·j, width·(j+1)).
+    */
+  private[graft] def bandSplit(sig: String, nBands: Int, width: Int)
+      : Column =
+    expr(s"transform(sequence(0, ${nBands - 1}), " +
+      s"j -> (shiftright($sig, $width*j) & ${(1L << width) - 1}L))")
+
   /** Generalized band-bucket candidates over the 60-bit signature:
     * `nBands` bands of `width` bits (nBands*width <= 60), occupancy cap
     * as in [[simhashCandidates]]. Fewer, WIDER bands is the corpus-scale
@@ -409,29 +418,63 @@ object Dedup {
     * pigeonhole price of guaranteeing hamming <= nBands-1 instead of <= 3.
     */
   private[graft] def simhashBandCandidates(sim: DataFrame, nBands: Int,
-      width: Int): DataFrame = {
-    require(nBands * width <= 60, s"bands $nBands x $width exceed 60 bits")
-    val mask = (1L << width) - 1
-    val bl = sim.select(col("doc_id"), col("sig"),
-        posexplode(expr(s"transform(sequence(0, ${nBands - 1}), " +
-          s"j -> (shiftright(sig, $width*j) & ${mask}L))")))
-      .toDF("doc_id", "sig", "band_j", "band")
-    // Band-stats table: at most nBands * 2^width rows — always
-    // broadcastable at the widths in use (<= 3 * 2^20).
-    val cool = bl.groupBy(col("band_j"), col("band")).count()
-      .filter(col("count") <= SimhashBucketCap)
-      .select(col("band_j"), col("band"))
+      width: Int): DataFrame =
     // EAGER materialization, as in ngramCandidates: one pass instead of
     // one per self-join side, and a build side that does not depend on
     // which side's stages finish first (q348).
-    val blc = bl.join(broadcast(cool), Seq("band_j", "band"))
-      .localCheckpoint(true)
+    bandPairs(coolBands(sim, nBands, width).localCheckpoint(true))
+
+  /** The band rows `(band_j, band, id, sig)` of a 60-bit signature frame
+    * `(id, sig)`, split by [[bandSplit]], in buckets of at most `cap`
+    * members — the input of [[bandPairs]]. The media near-dup families
+    * (q352, q378) use it over their fingerprints.
+    */
+  private[graft] def coolBands(sim: DataFrame, nBands: Int, width: Int,
+      id: String = "doc_id", cap: Int = SimhashBucketCap): DataFrame = {
+    require(nBands * width <= 60, s"bands $nBands x $width exceed 60 bits")
+    val bl = sim.select(col(id), col("sig"),
+        posexplode(bandSplit("sig", nBands, width)))
+      .toDF(id, "sig", "band_j", "band")
+    // Band-stats table: at most nBands * 2^width rows — always
+    // broadcastable at the widths in use (<= 3 * 2^20).
+    val cool = bl.groupBy(col("band_j"), col("band")).count()
+      .filter(col("count") <= cap)
+      .select(col("band_j"), col("band"))
+    bl.join(broadcast(cool), Seq("band_j", "band"))
+  }
+
+  /** Candidate pairs `(x_a, x_b)`, x_a < x_b, that share a bucket of
+    * [[coolBands]]' output, where x is `id` without its `_id` suffix.
+    */
+  private[graft] def bandPairs(blc: DataFrame, id: String = "doc_id")
+      : DataFrame = {
+    val pair = id.stripSuffix("_id")
     blc.as("x").join(blc.as("y"),
         col("x.band_j") === col("y.band_j")
           && col("x.band") === col("y.band")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+          && col(s"x.$id") < col(s"y.$id"))
+      .select(col(s"x.$id").as(s"${pair}_a"), col(s"y.$id").as(s"${pair}_b"))
       .distinct()
+  }
+
+  /** DuckDB twin of [[coolBands]] + [[bandPairs]]: the CTE chain
+    * `bl/cool/blc/cand` (each name + `sfx`) over `src(id, sig)`, ending in
+    * `cand(x_a, x_b)`.
+    */
+  private[graft] def duckBandCandidates(src: String, nBands: Int,
+      width: Int, id: String = "doc_id", sig: String = "sig",
+      cap: Int = SimhashBucketCap, sfx: String = ""): String = {
+    val pair = id.stripSuffix("_id")
+    s"""bl$sfx AS (SELECT $id, j, ($sig >> ($width*j)) & ${(1L << width) - 1}
+          AS band FROM $src, (SELECT unnest(range(0, $nBands)) AS j) z),
+        cool$sfx AS (SELECT j, band FROM bl$sfx GROUP BY j, band
+          HAVING COUNT(*) <= $cap),
+        blc$sfx AS (SELECT bl$sfx.$id, bl$sfx.j, bl$sfx.band
+          FROM bl$sfx JOIN cool$sfx
+            ON cool$sfx.j = bl$sfx.j AND cool$sfx.band = bl$sfx.band),
+        cand$sfx AS (SELECT DISTINCT a.$id AS ${pair}_a, b.$id AS ${pair}_b
+          FROM blc$sfx a JOIN blc$sfx b ON a.j = b.j AND a.band = b.band
+            AND a.$id < b.$id)"""
   }
 
   /** Sampled, df-capped inverted-index candidate pairs (doc_a < doc_b). */
@@ -985,15 +1028,7 @@ object Dedup {
     QuerySpec(
       "q42_simhash",
       Some(s"""WITH $simhashSigDuckCte,
-        bl AS (SELECT doc_id, j, (sig >> (15*j)) & 32767 AS band
-          FROM sim, (SELECT unnest(range(0, 4)) AS j) z),
-        cool AS (SELECT j, band FROM bl GROUP BY j, band
-          HAVING COUNT(*) <= $SimhashBucketCap),
-        blc AS (SELECT bl.doc_id, bl.j, bl.band
-          FROM bl JOIN cool ON cool.j = bl.j AND cool.band = bl.band),
-        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM blc a JOIN blc b ON a.j = b.j AND a.band = b.band
-            AND a.doc_id < b.doc_id)
+        ${duckBandCandidates("sim", 4, 15)}
         SELECT doc_a, doc_b,
           CAST(bit_count(xor(x.sig, y.sig)) AS INT) AS hamming
         FROM cand JOIN sim x ON x.doc_id = doc_a
@@ -1026,15 +1061,7 @@ object Dedup {
     QuerySpec(
       "q317_simhash_wide",
       Some(s"""WITH $simhashSigDuckCte,
-        bl AS (SELECT doc_id, j, (sig >> (20*j)) & 1048575 AS band
-          FROM sim, (SELECT unnest(range(0, 3)) AS j) z),
-        cool AS (SELECT j, band FROM bl GROUP BY j, band
-          HAVING COUNT(*) <= $SimhashBucketCap),
-        blc AS (SELECT bl.doc_id, bl.j, bl.band
-          FROM bl JOIN cool ON cool.j = bl.j AND cool.band = bl.band),
-        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM blc a JOIN blc b ON a.j = b.j AND a.band = b.band
-            AND a.doc_id < b.doc_id)
+        ${duckBandCandidates("sim", 3, 20)}
         SELECT doc_a, doc_b,
           CAST(bit_count(xor(x.sig, y.sig)) AS INT) AS hamming
         FROM cand JOIN sim x ON x.doc_id = doc_a
@@ -1285,18 +1312,15 @@ object Dedup {
     // text prefix, doc_id tiebreak for a total order), slide a W-record
     // window over the sorted sequence, and emit every pair within the
     // window — O(W·n) candidates with guaranteed coverage of near-ties
-    // that hash-based blocking can split. The global sort RANK comes from
-    // the block prefix-sum discipline (q183/q192): within-block
-    // row_number partitioned on the 4-char key prefix + a prefix-summed
-    // block-offsets table (≤ |alphabet|^4 rows, corpus-independent)
-    // broadcast back — the one unpartitioned window reads only that
-    // bounded aggregate, never the corpus. Hot prefixes (natural-language
-    // skew) widen individual blocks linearly with the corpus; the fix at
-    // scale is a deeper prefix (the block key is a knob, not a shape
-    // change). Pair generation is an EQUI-join: each record explodes into
-    // W−1 (rank + offset) probes — fan-out bounded by W, no range join,
-    // no BNL. Pair scoring (same source / same language / exact-dup
-    // fingerprint) is row-local; output collapses to one audit row.
+    // that hash-based blocking can split. The global sort RANK is an
+    // operators.BlockScan running count blocked on the 4-char key prefix (≤
+    // |alphabet|^4 blocks, corpus-independent). Hot prefixes
+    // (natural-language skew) widen individual blocks linearly with the
+    // corpus; the fix at scale is a deeper prefix (the block key is a knob,
+    // not a shape change). Pair generation is an EQUI-join: each record
+    // explodes into W−1 (rank + offset) probes — fan-out bounded by W, no
+    // range join, no BNL. Pair scoring (same source / same language /
+    // exact-dup fingerprint) is row-local; output collapses to one audit row.
     QuerySpec(
       "q194_sorted_neighborhood",
       Some(s"""WITH k AS (SELECT doc_id, source, lang,
@@ -1318,17 +1342,8 @@ object Dedup {
         val k = t(s, d, "documents").select(col("doc_id"), col("source"),
             col("lang"), md5(lower(col("text"))).as("fp"),
             substring(lower(col("text")), 1, 24).as("key"))
-          .withColumn("g", substring(col("key"), 1, 4))
-        val wIn = Window.partitionBy(col("g"))
-          .orderBy(col("key"), col("doc_id"))
-        val within = k.withColumn("rn", row_number().over(wIn).cast("long"))
-        val wB = Window.orderBy(col("g"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val boff = within.groupBy(col("g")).agg(count(lit(1)).as("bn"))
-          .withColumn("boff", coalesce(sum(col("bn")).over(wB), lit(0L)))
-        val r = within
-          .join(broadcast(boff.select(col("g"), col("boff"))), "g")
-          .withColumn("rk", col("boff") + col("rn"))
+        val r = BlockScan.runningSums(k, substring(col("key"), 1, 4),
+            Seq(col("key"), col("doc_id")), Seq("rk" -> lit(1L)))
           .select(col("rk"), col("source"), col("lang"), col("fp"))
         val probes = r
           .withColumn("off",
@@ -1874,15 +1889,7 @@ object Dedup {
                 THEN (CAST(1 AS BIGINT) << i) ELSE 0 END
               for i in range(0, 60)]) AS sig
           FROM ths3),
-        bl3 AS (SELECT doc_id, j, (sig >> (15*j)) & 32767 AS band
-          FROM sim3, (SELECT unnest(range(0, 4)) AS j) z),
-        cool3 AS (SELECT j, band FROM bl3 GROUP BY j, band
-          HAVING COUNT(*) <= $SimhashBucketCap),
-        blc3 AS (SELECT bl3.doc_id, bl3.j, bl3.band
-          FROM bl3 JOIN cool3 ON cool3.j = bl3.j AND cool3.band = bl3.band),
-        cand3 AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM blc3 a JOIN blc3 b ON a.j = b.j AND a.band = b.band
-            AND a.doc_id < b.doc_id),
+        ${duckBandCandidates("sim3", 4, 15, sfx = "3")},
         v3 AS (SELECT doc_a, doc_b
           FROM cand3 JOIN sim3 x ON x.doc_id = doc_a
                      JOIN sim3 y ON y.doc_id = doc_b

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
+import graft.operators.BlockScan
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,10 +51,9 @@ object Inference {
     // sums to exactly 2*U_a in int64. The tie-corrected normal
     // approximation's z is one pinned expression over five int64 stats.
     // 100 TB plan: one value-grain partial-agg shuffle; the cumulative
-    // "B-count before v" is the q162 block prefix sum (per-block window
-    // keyed on v div 2^16 + a broadcast |blocks|-row offset table) — no
-    // data-sized single-task window. Headroom: 2*U_a <= 2*na*nb caps
-    // int64 through ~2.1e9 rows per arm; past that, switch the u2/tc
+    // "B-count before v" is an operators.BlockScan running sum keyed on v div
+    // 2^16 — no data-sized single-task window. Headroom: 2*U_a <= 2*na*nb
+    // caps int64 through ~2.1e9 rows per arm; past that, switch the u2/tc
     // sums to DECIMAL(38,0) (same plan shape).
     QuerySpec(
       "q226_mann_whitney",
@@ -85,19 +85,11 @@ object Inference {
             when(col("event_type") === "click", 1L).otherwise(0L).as("a"))
         val c = t0.groupBy(col("v"))
           .agg(sum(col("a")).as("na"), sum(lit(1L) - col("a")).as("nb"))
-          .withColumn("g", expr(s"v div ${1L << BlockBits}"))
-          .cache() // feeds the per-block windows AND the offsets table
-        val wIn = Window.partitionBy(col("g")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val within = c.withColumn("cb_in", sum(col("nb")).over(wIn))
-        val offs = c.groupBy(col("g")).agg(sum(col("nb")).as("gb"))
-          .withColumn("offb", coalesce(sum(col("gb")).over(
-            Window.orderBy(col("g"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("g"), col("offb"))
+          .cache() // feeds BlockScan's window AND its block totals
         val tg = col("na") + col("nb")
-        val st = within.join(broadcast(offs), "g")
-          .withColumn("cb", col("offb") + col("cb_in") - col("nb"))
+        val st = BlockScan.runningSums(c, expr(s"v div ${1L << BlockBits}"),
+            Seq(col("v")), Seq("cb" -> col("nb")))
+          .withColumn("cb", col("cb") - col("nb"))
           .agg(sum(col("na")).as("na_t"), sum(col("nb")).as("nb_t"),
             sum(col("na") * (lit(2L) * col("cb") + col("nb"))).as("u2"),
             sum(tg * tg * tg - tg).as("tc"))
@@ -553,7 +545,7 @@ object Inference {
     // count) — Pearson on tie-averaged ranks, robust to the heavy price
     // tails that distort q152's raw correlation. Ranks never materialize
     // as floats: 2*avgRank = 2*cntBefore + tied + 1 is exact int64 per
-    // DISTINCT value (the q226 block prefix-sum discipline), joined back
+    // DISTINCT value (an operators.BlockScan running count), joined back
     // to the fact on the value key; centering uses the EXACT integer
     // mean of 2*rank, which is n+1. rho is one divide over three int64
     // sums. 100 TB plan: two value-grain prefix passes + two value-keyed
@@ -586,23 +578,14 @@ object Inference {
           round(${Portable.cosDuck("sxy", "sxx", "syy")}, 6) AS rho
         FROM st, nn"""),
       (s, d) => {
-        // block-decomposed 2*avgRank per distinct value (q226 discipline)
-        def ranks2(hist: DataFrame): DataFrame = {
-          val c = hist.withColumn("g", expr(s"v div ${1L << BlockBits}"))
-            .cache()
-          val wIn = Window.partitionBy(col("g")).orderBy(col("v"))
-            .rowsBetween(Window.unboundedPreceding, 0)
-          val within = c.withColumn("cum_in", sum(col("cnt")).over(wIn))
-          val offs = c.groupBy(col("g")).agg(sum(col("cnt")).as("gc"))
-            .withColumn("off", coalesce(sum(col("gc")).over(
-              Window.orderBy(col("g"))
-                .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-            .select(col("g"), col("off"))
-          within.join(broadcast(offs), "g")
+        // block-decomposed 2*avgRank per distinct value
+        def ranks2(hist: DataFrame): DataFrame =
+          BlockScan.runningSums(hist.cache(),
+              expr(s"v div ${1L << BlockBits}"), Seq(col("v")),
+              Seq("cum" -> col("cnt")))
             .select(col("v"),
-              (lit(2L) * (col("off") + col("cum_in") - col("cnt"))
-                + col("cnt") + 1).as("r2"))
-        }
+              (lit(2L) * (col("cum") - col("cnt")) + col("cnt") + 1)
+                .as("r2"))
         val li = t(s, d, "lineitem").groupBy(col("l_orderkey"))
           .agg(count(lit(1)).as("y"))
         val base = t(s, d, "orders")
@@ -696,10 +679,10 @@ object Inference {
     // every rank assignment sum-equivalent, so both weights collapse to
     // CLOSED FORMS on the distinct-value grain (S1 = sum of (r-1),
     // S2 = sum of (r-1)(r-2) over the block — exact integer arithmetic,
-    // the divisions by 2 and 6 always exact). Ranks come from the q226
-    // block prefix sum; each per-value term normalizes by n(n-1)(n-2)
-    // BEFORE the decimal-grid fold so magnitudes stay inside the 1e17
-    // headroom. Headroom: c*rank^2 must fit int64 — fine for any
+    // the divisions by 2 and 6 always exact). Ranks come from an
+    // operators.BlockScan running count; each per-value term normalizes by
+    // n(n-1)(n-2) BEFORE the decimal-grid fold so magnitudes stay inside the
+    // 1e17 headroom. Headroom: c*rank^2 must fit int64 — fine for any
     // near-distinct value column; an all-equal column is degenerate for
     // L-moments anyway.
     QuerySpec(
@@ -731,19 +714,11 @@ object Inference {
         val h = t(s, d, "orders")
           .select(round(col("o_totalprice") * 100, 0).cast("long").as("v"))
           .groupBy(col("v")).agg(count(lit(1)).as("c"))
-          .withColumn("g", expr(s"v div ${1L << BlockBits}"))
           .cache()
         val tot = h.agg(sum(col("c")).as("n"))
-        val wIn = Window.partitionBy(col("g")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val within = h.withColumn("cum_in", sum(col("c")).over(wIn))
-        val offs = h.groupBy(col("g")).agg(sum(col("c")).as("gc"))
-          .withColumn("off", coalesce(sum(col("gc")).over(
-            Window.orderBy(col("g"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("g"), col("off"))
-        val w = within.join(broadcast(offs), "g")
-          .withColumn("m", col("off") + col("cum_in") - col("c"))
+        val w = BlockScan.runningSums(h, expr(s"v div ${1L << BlockBits}"),
+            Seq(col("v")), Seq("m" -> col("c")))
+          .withColumn("m", col("m") - col("c"))
           .select((col("v").cast("double") / lit(100.0)).as("x"),
             col("c"), col("m"),
             expr("c * m + (c * (c - 1)) div 2").as("s1"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
+import graft.operators.BlockScan
 import graft.functions.Portable.{toksSpark, toksDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -360,12 +361,11 @@ object Insights {
     // ---- customer percentile rank (block-decomposed cume_dist) -------------
     // Every customer's revenue percentile — the score a lifecycle/
     // segmentation system attaches to each account. cume_dist over a
-    // customer-grain frame is the classic data-sized global window; here
-    // the rank is the q226/q162 block prefix sum on the cents-value
-    // grain (per-block cumsum + broadcast block offsets), joined back on
-    // the value — no single-task window at any scale. The oracle mirrors
-    // the SAME explicit arithmetic (inclusive count / n), not the
-    // engine's cume_dist builtin, so both sides share one divide tree.
+    // customer-grain frame is the classic data-sized global window; here the
+    // rank is an operators.BlockScan running count on the cents-value grain,
+    // joined back on the value — no single-task window at any scale. The
+    // oracle mirrors the SAME explicit arithmetic (inclusive count / n), not
+    // the engine's cume_dist builtin, so both sides share one divide tree.
     QuerySpec(
       "q264_percentile_rank",
       Some("""WITH cust AS (SELECT o_custkey,
@@ -389,22 +389,11 @@ object Insights {
           .cache() // customer grain; feeds the histogram AND the join back
         val h = cust.groupBy(col("cents").as("v"))
           .agg(count(lit(1)).as("cnt"))
-          .withColumn("g", expr(s"v div ${1L << 16}"))
           .cache()
-        val wIn = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("g")).orderBy(col("v"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding, 0)
-        val within = h.withColumn("cum_in", sum(col("cnt")).over(wIn))
-        val offs = h.groupBy(col("g")).agg(sum(col("cnt")).as("gc"))
-          .withColumn("off", coalesce(sum(col("gc")).over(
-            org.apache.spark.sql.expressions.Window.orderBy(col("g"))
-              .rowsBetween(org.apache.spark.sql.expressions.Window
-                .unboundedPreceding, -1)), lit(0L)))
-          .select(col("g"), col("off"))
         val tot = h.agg(sum(col("cnt")).as("n"))
-        val cum = within.join(broadcast(offs), "g")
-          .select(col("v"), (col("off") + col("cum_in")).as("le"))
+        val cum = BlockScan.runningSums(h, expr(s"v div ${1L << 16}"),
+            Seq(col("v")), Seq("le" -> col("cnt")))
+          .select(col("v"), col("le"))
         cust.join(cum, col("cents") === col("v"))
           .crossJoin(broadcast(tot)) // 1-row count
           .select(col("o_custkey"), col("cents"),
@@ -518,10 +507,10 @@ object Insights {
     // The curve behind q183's Gini number: customers ranked by revenue,
     // cut into deciles, each reporting its cumulative share of total
     // revenue — "the top 10% hold X%" chart. Decile assignment uses the
-    // block-decomposed inclusive rank (q264's discipline — no
-    // data-sized window); shares are exact-cents ratios; the 10-row
-    // cumulative is group-grain. Ties share a rank and therefore a
-    // decile, so the cut is deterministic without a row_number.
+    // operators.BlockScan inclusive rank (no data-sized window); shares are
+    // exact-cents ratios; the 10-row cumulative is group-grain. Ties share a
+    // rank and therefore a decile, so the cut is deterministic without a
+    // row_number.
     QuerySpec(
       "q269_lorenz_curve",
       Some("""WITH cust AS (SELECT o_custkey,
@@ -550,20 +539,12 @@ object Insights {
             .cast("long").as("cents"))
         val h = cust.groupBy(col("cents").as("v"))
           .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("vsum"))
-          .withColumn("g", expr(s"v div ${1L << 16}"))
           .cache()
         val tot = h.agg(sum(col("cnt")).as("n"), sum(col("vsum")).as("tc"))
-        val wIn = Window.partitionBy(col("g")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val within = h.withColumn("cum_in", sum(col("cnt")).over(wIn))
-        val offs = h.groupBy(col("g")).agg(sum(col("cnt")).as("gc"))
-          .withColumn("off", coalesce(sum(col("gc")).over(
-            Window.orderBy(col("g"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("g"), col("off"))
-        val dec = within.join(broadcast(offs), "g")
+        val dec = BlockScan.runningSums(h, expr(s"v div ${1L << 16}"),
+            Seq(col("v")), Seq("le" -> col("cnt")))
           .crossJoin(broadcast(tot)) // 1-row totals
-          .select(expr("(10 * (off + cum_in - 1)) div n").as("decile"),
+          .select(expr("(10 * (le - 1)) div n").as("decile"),
             col("cnt"), col("vsum"))
         val gdf = dec.groupBy(col("decile"))
           .agg(sum(col("cnt")).as("n_cust"), sum(col("vsum")).as("cents"))

@@ -134,36 +134,26 @@ object Multimodal {
            acc + IF(element_at(m, i + 2) >= element_at(m, i + 1),
              shiftleft(1L, i), 0L))""").as("fp"))
 
+  /** The candidate stage of [[bandedHammingPairs]] alone — q42's band
+    * builders with the media id, fingerprint and cap. Unlike q42 the
+    * band rows are not checkpointed: PlanSpec's q352 case reads the
+    * band-count aggregate in this plan. Exposed so ScaleProbe and
+    * ScaleSpec can measure candidate-count growth across corpus sizes
+    * without scoring the pairs.
+    */
+  private[graft] def bandedCandidates(ph: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    Dedup.bandPairs(Dedup.coolBands(
+      ph.select(col("media_id"), col("fp").as("sig")), nBands = 4,
+      width = 15, id = "media_id", cap = PhashBucketCap), id = "media_id")
+
   /** 4x15-bit band-bucketed candidate pairs over a 60-bit fingerprint
     * frame `ph(media_id, fp)` (cache it in the caller — it feeds the
     * bands and both pair sides), hamming-scored against `threshold` —
-    * the q42 occupancy-cap linearity discipline, shared by q352 (image
-    * aHash) and q378 (audio sign-delta fingerprint) so the two media
-    * near-dup families can't drift apart.
+    * q42's candidate builders ([[Dedup.coolBands]]), shared
+    * by q352 (image aHash) and q378 (audio sign-delta fingerprint) so
+    * the two media near-dup families can't drift apart.
     */
-  /** The candidate stage of [[bandedHammingPairs]] alone — exposed so
-    * ScaleProbe can measure candidate-count growth across corpus decades
-    * (the 100 TB linearity evidence) without scoring the pairs.
-    */
-  private[graft] def bandedCandidates(ph: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val bl = ph.select(col("media_id"), posexplode(expr(
-        "transform(sequence(0, 3), j -> (shiftright(fp, 15*j) & 32767))")))
-      .toDF("media_id", "band_j", "band")
-    val cool = bl.groupBy(col("band_j"), col("band")).count()
-      .filter(col("count") <= PhashBucketCap)
-      .select(col("band_j"), col("band"))
-    // bounded by the 15-bit key space (<= 4 x 32768 rows), not by data
-    val blc = bl.join(broadcast(cool), Seq("band_j", "band"))
-    blc.as("x").join(blc.as("y"),
-        col("x.band_j") === col("y.band_j")
-          && col("x.band") === col("y.band")
-          && col("x.media_id") < col("y.media_id"))
-      .select(col("x.media_id").as("media_a"),
-        col("y.media_id").as("media_b"))
-      .distinct()
-  }
-
   private def bandedHammingPairs(ph: org.apache.spark.sql.DataFrame,
       threshold: Int): org.apache.spark.sql.DataFrame = {
     bandedCandidates(ph)
@@ -181,16 +171,8 @@ object Multimodal {
     * SELECT; expects `ph(media_id, fp)` in scope.
     */
   private def bandedHammingDuck(threshold: Int): String =
-    s"""bl AS (SELECT media_id, j, (fp >> (15*j)) & 32767 AS band
-        FROM ph, (SELECT unnest(range(0, 4)) AS j) zz),
-      cool AS (SELECT j, band FROM bl GROUP BY j, band
-        HAVING COUNT(*) <= $PhashBucketCap),
-      blc AS (SELECT bl.media_id, bl.j, bl.band
-        FROM bl JOIN cool ON cool.j = bl.j AND cool.band = bl.band),
-      cand AS (SELECT DISTINCT a.media_id AS media_a,
-          b.media_id AS media_b
-        FROM blc a JOIN blc b ON a.j = b.j AND a.band = b.band
-          AND a.media_id < b.media_id)
+    s"""${Dedup.duckBandCandidates("ph", 4, 15, id = "media_id", sig = "fp",
+          cap = PhashBucketCap)}
       SELECT media_a, media_b,
         CAST(bit_count(xor(x.fp, y.fp)) AS INT) AS hamming,
         bit_count(xor(x.fp, y.fp)) <= $threshold AS near_dup

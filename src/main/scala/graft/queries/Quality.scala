@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.Portable
+import graft.operators.BlockScan
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -108,12 +109,10 @@ object Quality {
     // "How many observations are simultaneously open?" — each event holds
     // for 15 minutes; +1/-1 boundary points under a STRICT total order
     // (t, delta, event_id — closes sort before opens at the same instant)
-    // feed a running sum whose per-day max is the concurrency profile.
-    // The global prefix sum is block-distributed exactly like q76/q88:
-    // within-block cumsums partition on a 6-hour block key, only the
-    // |blocks|-row totals table crosses a global window, and offsets
-    // broadcast back. DuckDB runs the same total order single-threaded —
-    // identical running values, no float anywhere.
+    // feed a running sum whose per-day max is the concurrency profile. The
+    // global prefix sum is operators.BlockScan on a 6-hour block key. DuckDB
+    // runs the same total order single-threaded — identical running values,
+    // no float anywhere.
     QuerySpec(
       "q132_concurrency",
       Some(s"""WITH b AS (
@@ -136,20 +135,10 @@ object Quality {
           .unionByName(ev.select(
             (col("ts") + expr(s"INTERVAL $HoldMinutes MINUTES")).as("t"),
             lit(-1).as("delta"), col("event_id")))
-          .withColumn("g",
-            expr(s"unix_millis(cast(t as timestamp)) div $SweepBlockMs"))
-        val wIn = Window.partitionBy(col("g"))
-          .orderBy(col("t"), col("delta"), col("event_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val within = b.withColumn("cum_in", sum(col("delta")).over(wIn))
-        val offs = b.groupBy(col("g"))
-          .agg(sum(col("delta")).as("btot"))
-          .withColumn("off", coalesce(sum(col("btot")).over(
-            Window.orderBy(col("g"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("g"), col("off"))
-        within.join(broadcast(offs), "g")
-          .withColumn("conc", (col("off") + col("cum_in")).cast("long"))
+        BlockScan.runningSums(b,
+            expr(s"unix_millis(cast(t as timestamp)) div $SweepBlockMs"),
+            Seq(col("t"), col("delta"), col("event_id")),
+            Seq("conc" -> col("delta")))
           .groupBy(to_date(col("t")).as("day"))
           .agg(count(lit(1)).as("n_boundaries"),
             max(col("conc")).as("peak_concurrency"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
+import graft.operators.BlockScan
 import graft.functions.Portable.{toksSpark, toksDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -650,12 +651,10 @@ object Selection {
     // chunk into fixed context windows, and report what falls out — chunk
     // count, how many documents straddle a boundary (the cross-doc
     // attention contamination a packer trades off), the straddle rate,
-    // and the densest chunk. Doc offsets are a corpus-grain PREFIX SUM,
-    // so the cumsum is block-decomposed exactly as q176/q264: per-block
-    // cumsums partition on g = doc_id div 4096; only the bounded
-    // block-totals table crosses an unpartitioned window; offsets
-    // broadcast back (GuardSpec-compliant by construction). Everything
-    // else is exact integer floor division.
+    // and the densest chunk. Doc offsets are a corpus-grain PREFIX SUM, so
+    // the cumsum is operators.BlockScan on g = doc_id div 4096
+    // (GuardSpec-compliant by construction). Everything else is exact integer
+    // floor division.
     QuerySpec(
       "q321_chunk_packing",
       Some(s"""WITH dt AS (SELECT doc_id,
@@ -688,20 +687,10 @@ object Selection {
             size(filter(expr(toksSpark("text")),
               x => x =!= "")).cast("long").as("nt"))
           .filter(col("nt") > 0)
-          .withColumn("g", expr("doc_id div 4096"))
-          .cache() // feeds the per-block cumsum AND the block totals
-        val wb = Window.partitionBy(col("g")).orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val bc = dt.withColumn("bcum", sum(col("nt")).over(wb))
-        // bounded block-totals table: the ONLY unpartitioned window
-        val wg = Window.orderBy(col("g"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val off = dt.groupBy(col("g")).agg(sum(col("nt")).as("bt"))
-          .withColumn("off", coalesce(sum(col("bt")).over(wg), lit(0L)))
-          .select(col("g"), col("off"))
-        val pp = bc.join(broadcast(off), "g")
-          .select(col("doc_id"), col("nt"),
-            (col("off") + col("bcum")).as("e"))
+          .cache() // feeds BlockScan's window AND its block totals
+        val pp = BlockScan.runningSums(dt, expr("doc_id div 4096"),
+            Seq(col("doc_id")), Seq("e" -> col("nt")))
+          .select(col("doc_id"), col("nt"), col("e"))
           .withColumn("st", col("e") - col("nt"))
         val base = pp.agg(count(lit(1)).as("total_docs"),
           sum(col("nt")).as("total_tokens"),
@@ -1337,10 +1326,10 @@ object Selection {
     // int64 without ever materializing ranks — per distinct value,
     // na*(2*cumNegBefore + nb) (the q226 discipline). AUC publishes as a
     // floored micro rational. 100 TB plan: gateScores' two keyed shuffles,
-    // then ONE value-grain partial agg; the cumulative neg-count is the
-    // q162/q226 block prefix sum (per-block window + broadcast block-offset
-    // table — the value grain is bounded by the milli weight range, not
-    // the corpus, and no data-sized single-task window exists). Headroom:
+    // then ONE value-grain partial agg; the cumulative neg-count is an
+    // operators.BlockScan running sum (the value grain is bounded by the
+    // milli weight range, not the corpus, and no data-sized single-task
+    // window exists). Headroom:
     // u2 <= 2*n_pos*n_neg, so u2*1e6 stays in int64 through ~2e6 docs per
     // class; past that, lift the publish step to DECIMAL(38,0) (same plan).
     QuerySpec(
@@ -1369,18 +1358,10 @@ object Selection {
             when(col("pos"), 1L).otherwise(0L).as("a"))
         val c = sv.groupBy(col("v"))
           .agg(sum(col("a")).as("na"), sum(lit(1L) - col("a")).as("nb"))
-          .withColumn("g", expr("v div 65536"))
-          .cache() // feeds the per-block windows AND the offsets table
-        val wIn = Window.partitionBy(col("g")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val within = c.withColumn("cb_in", sum(col("nb")).over(wIn))
-        val offs = c.groupBy(col("g")).agg(sum(col("nb")).as("gb"))
-          .withColumn("offb", coalesce(sum(col("gb")).over(
-            Window.orderBy(col("g"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("g"), col("offb"))
-        within.join(broadcast(offs), "g")
-          .withColumn("cb", col("offb") + col("cb_in") - col("nb"))
+          .cache() // feeds BlockScan's window AND its block totals
+        BlockScan.runningSums(c, expr("v div 65536"), Seq(col("v")),
+            Seq("cb" -> col("nb")))
+          .withColumn("cb", col("cb") - col("nb"))
           .agg(sum(col("na")).as("na_t"), sum(col("nb")).as("nb_t"),
             sum(col("na") * (lit(2L) * col("cb") + col("nb"))).as("u2"))
           .select(col("na_t").as("n_pos"), col("nb_t").as("n_neg"),

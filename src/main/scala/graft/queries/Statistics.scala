@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
+import graft.operators.BlockScan
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,10 +45,8 @@ object Statistics {
     */
   private val AbBigTicket = 400000
 
-  /** AUC prefix-sum block width in price units (the q76/q132 trick: a
-    * global running sum is decomposed into per-block windows plus a
-    * tiny per-block offsets table, so no data-sized input ever crosses
-    * a single-partition window).
+  /** AUC prefix-sum block width in price units (the block key of
+    * operators.BlockScan).
     */
   private val AucBlock = 65536.0
 
@@ -266,14 +265,11 @@ object Statistics {
     // pair-count identity AUC = (#{pos>neg} + #{pos=neg}/2)/(pos*neg),
     // computed WITHOUT the O(n^2) pair join: group to one row per
     // distinct score, run a prefix sum of negatives over the score order,
-    // and the pair counts are two exact long dot products. The prefix sum
-    // is block-distributed exactly like q76/q132: per-block windows
-    // partition on a price-range block key, only the |blocks|-row totals
-    // table crosses a global window, offsets broadcast back — no
-    // data-sized single-partition window. DuckDB (single-threaded) runs
-    // the plain global window: same values. Pair-count products fit int64
-    // through ~3e9 rows per side; past that the one final ratio moves to
-    // the decimal grid.
+    // and the pair counts are two exact long dot products. The prefix sum is
+    // operators.BlockScan on a price-range block key — no data-sized
+    // single-partition window. DuckDB (single-threaded) runs the plain global
+    // window: same values. Pair-count products fit int64 through ~3e9 rows
+    // per side; past that the one final ratio moves to the decimal grid.
     QuerySpec(
       "q137_auc",
       // Same BIGINT-before-DOUBLE discipline as q136: DuckDB's HUGEINT
@@ -303,19 +299,10 @@ object Statistics {
           .groupBy(col("o_totalprice").as("s"))
           .agg(sum(when(isPos, 1L).otherwise(0L)).as("np"),
             sum(when(isPos, 0L).otherwise(1L)).as("nn"))
-          .withColumn("g", floor(col("s") / AucBlock).cast("long"))
-          .cache() // feeds both the per-block windows and the offsets table
-        val wIn = Window.partitionBy(col("g")).orderBy(col("s"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val within = sc.withColumn("cnb_in",
-          coalesce(sum(col("nn")).over(wIn), lit(0L)))
-        val offs = sc.groupBy(col("g")).agg(sum(col("nn")).as("gtot"))
-          .withColumn("off", coalesce(sum(col("gtot")).over(
-            Window.orderBy(col("g"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("g"), col("off"))
-        within.join(broadcast(offs), "g")
-          .withColumn("cnb", col("off") + col("cnb_in"))
+          .cache() // feeds BlockScan's window AND its block totals
+        BlockScan.runningSums(sc, floor(col("s") / AucBlock).cast("long"),
+            Seq(col("s")), Seq("cnb" -> col("nn")))
+          .withColumn("cnb", col("cnb") - col("nn"))
           .agg(sum(col("np")).cast("long").as("n_pos"),
             sum(col("nn")).cast("long").as("n_neg"),
             sum(col("np") * col("cnb")).cast("long").as("pairs_gt"),
@@ -592,8 +579,7 @@ object Statistics {
     // ---- two-sample Kolmogorov-Smirnov statistic ----------------------------
     // Distribution-shift audit between two cohorts (complements q138's
     // binned PSI with the exact sup-norm CDF distance). The cumulative
-    // count is the q137/q76 block decomposition: per-block windows over
-    // distinct values plus a |blocks|-row offsets table — no data-sized
+    // count is operators.BlockScan over distinct values — no data-sized
     // single-partition window at any scale. Counts are exact int64; each
     // CDF value is ONE int64->double convert + ONE divide; the sup is a
     // max over doubles (order-free). Inclusive cumulative = CDF at v.
@@ -622,32 +608,17 @@ object Statistics {
               .as("a"))
         val c = t0.groupBy(col("v"))
           .agg(sum(col("a")).as("na"), sum(lit(1L) - col("a")).as("nb"))
-          .withColumn("g", floor(col("v").cast("double") / lit(AucBlock)
-            / lit(100.0)).cast("long"))
-          .cache() // feeds the per-block windows AND the offsets table
-        val wIn = Window.partitionBy(col("g")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val within = c
-          .withColumn("ca_in", sum(col("na")).over(wIn))
-          .withColumn("cb_in", sum(col("nb")).over(wIn))
-        val offs = c.groupBy(col("g"))
-          .agg(sum(col("na")).as("ga"), sum(col("nb")).as("gb"))
-          .withColumn("offa", coalesce(sum(col("ga")).over(
-            Window.orderBy(col("g"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .withColumn("offb", coalesce(sum(col("gb")).over(
-            Window.orderBy(col("g"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("g"), col("offa"), col("offb"))
+          .cache() // feeds the running sums AND the totals
         val tot = c.agg(sum(col("na")).as("ta"), sum(col("nb")).as("tb"))
-        within.join(broadcast(offs), "g")
+        BlockScan.runningSums(c, floor(col("v").cast("double")
+              / lit(AucBlock) / lit(100.0)).cast("long"),
+            Seq(col("v")), Seq("ca" -> col("na"), "cb" -> col("nb")))
           .crossJoin(broadcast(tot)) // 1-row scalar totals
           .agg(max(col("ta")).cast("long").as("n_a"),
             max(col("tb")).cast("long").as("n_b"),
-            max(abs((col("offa") + col("ca_in")).cast("double")
-                / col("ta").cast("double")
-              - (col("offb") + col("cb_in")).cast("double")
-                / col("tb").cast("double"))).as("ks"))
+            max(abs(col("ca").cast("double") / col("ta").cast("double")
+              - col("cb").cast("double") / col("tb").cast("double")))
+              .as("ks"))
       }),
 
     // ---- Neyman optimal stratified allocation -------------------------------
@@ -831,11 +802,9 @@ object Statistics {
     // ---- Gini coefficient of revenue concentration --------------------------
     // "How concentrated is revenue across customers?" — the classic
     // Lorenz-curve summary G = (2·Σi·xᵢ − (n+1)·Σxᵢ) / (n·Σxᵢ) with xᵢ
-    // ascending. The global rank i is the q176/Quantiles block
-    // discipline, NOT a single-task window: block the cents axis
-    // (g = cents div 2^20, monotone in cents so block order is total
-    // order), row_number within each block, and only the bounded
-    // block-counts table crosses a global ordering for the offsets.
+    // ascending. The global rank i is an operators.BlockScan running
+    // count, NOT a single-task window: block the cents axis (g = cents
+    // div 2^20, monotone in cents so block order is total order).
     // Σi·xᵢ accumulates on DECIMAL(38,0)/HUGEINT (i·x overflows int64 at
     // 1e9+ customers); scale-0 decimal→double is a single int→double
     // convert — correctly rounded in both engines (no fraction to
@@ -865,20 +834,11 @@ object Statistics {
           .groupBy(col("o_custkey").as("k"))
           .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
             .cast("long").as("cents"))
-          .withColumn("g", expr(s"cents div ${1L << blockBits}"))
-          .cache() // |customers| rows; feeds block counts AND the ranks
-        val wIn = Window.partitionBy(col("g"))
-          .orderBy(col("cents"), col("k"))
-        val within = r.withColumn("rn", row_number().over(wIn))
-        val blockCnt = r.groupBy(col("g")).agg(count(lit(1)).as("bn"))
-        val wBlocks = Window.orderBy(col("g"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val blockOff = blockCnt.withColumn("boff",
-          coalesce(sum(col("bn")).over(wBlocks), lit(0L)))
+          .cache() // feeds BlockScan's window AND its block totals
         val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val agg = within
-          .join(broadcast(blockOff.select(col("g"), col("boff"))), "g")
-          .withColumn("i", col("boff") + col("rn"))
+        val agg = BlockScan.runningSums(r,
+            expr(s"cents div ${1L << blockBits}"),
+            Seq(col("cents"), col("k")), Seq("i" -> lit(1L)))
           .agg(count(lit(1)).as("n"),
             sum(col("cents")).cast("long").as("s0"),
             sum(col("i").cast(dec38) * col("cents")).cast(dec38).as("s1"))

@@ -178,6 +178,7 @@ object Temporal {
     // partitions on the 6-hour block, only the |blocks|-row totals
     // cross a global window, offsets broadcast back; the 3-way sweep
     // explode is row-local.
+    // Not operators.BlockScan: a running max, and BlockScan sums only.
     QuerySpec(
       "q368_watermark_planning", {
         val dly = graft.functions.Portable

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Exact, Portable}
+import graft.operators.BlockScan
 import graft.functions.Portable.{h64Duck, setFpDuck, setFpSpark, toksSpark,
   toksDuck, ngramsSpark, ngramsDuck}
 import org.apache.spark.sql.SparkSession
@@ -401,6 +402,7 @@ object TrainingPipeline {
     //       the table is actually small.
     // Bit-identical to the global cumsum at any scale (integer sums are
     // associative), one data shuffle total.
+    // Not operators.BlockScan: its one level would leave (2) global.
     QuerySpec(
       "q88_shard_pack",
       Some(s"""WITH d AS (
@@ -463,8 +465,8 @@ object TrainingPipeline {
     // data collapses to the (group, value) HISTOGRAM grain (one
     // partial-agg shuffle; grain bounded by |groups|×|distinct cents|,
     // corpus-size independent for fixed-range integer domains); the
-    // within-group mid-rank comes from block prefix sums partitioned on
-    // (group, cents-block) — NEVER a per-group single-task window (3
+    // within-group mid-rank comes from operators.BlockScan by group on
+    // the cents block — NEVER a per-group single-task window (3
     // fact-sized partitions is the q176 cliff with a different hat); the
     // 101-point global quantile grid comes from operators.Quantiles and
     // broadcasts. The mapped value is two element_at lookups + one
@@ -512,21 +514,9 @@ object TrainingPipeline {
           .exactQuantiles(c, col("cents"), (0 to 100).map(_ / 100.0))
         val hc = c.groupBy(col("flag"), col("cents"))
           .agg(count(lit(1)).as("cnt"))
-          .withColumn("g", expr(s"cents div ${1L << blockBits}"))
-          .cache() // (flag, value) histogram feeds counts AND both cums
+          .cache() // (flag, value) histogram feeds counts AND the cum
         val nn = hc.groupBy(col("flag")).agg(sum(col("cnt")).cast("long")
           .as("n"))
-        val wIn = Window.partitionBy(col("flag"), col("g"))
-          .orderBy(col("cents"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val within = hc.withColumn("cb_in",
-          coalesce(sum(col("cnt")).over(wIn), lit(0L)))
-        val bt = hc.groupBy(col("flag"), col("g"))
-          .agg(sum(col("cnt")).as("btot"))
-        val wB = Window.partitionBy(col("flag")).orderBy(col("g"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val boff = bt.withColumn("boff",
-          coalesce(sum(col("btot")).over(wB), lit(0L)))
         val pr = ((col("cb").cast("double")
           + lit(0.5) * (col("cnt") - 1).cast("double"))
           / (col("n") - 1).cast("double"))
@@ -537,10 +527,9 @@ object TrainingPipeline {
           .otherwise((lit(1.0) - frac)
               * element_at(col("cuts"), k.cast("int") + 1)
             + frac * element_at(col("cuts"), k.cast("int") + 2))
-        within
-          .join(broadcast(boff.select(col("flag"), col("g"), col("boff"))),
-            Seq("flag", "g"))
-          .withColumn("cb", col("boff") + col("cb_in"))
+        BlockScan.runningSums(hc, expr(s"cents div ${1L << blockBits}"),
+            Seq(col("cents")), Seq("cb" -> col("cnt")), by = Seq(col("flag")))
+          .withColumn("cb", col("cb") - col("cnt"))
           .join(broadcast(nn), "flag")
           .withColumn("pr", pr)
           .crossJoin(broadcast(cuts)) // 1-row 101-cut grid

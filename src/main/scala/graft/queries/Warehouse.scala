@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.Exact
+import graft.operators.BlockScan
 import graft.functions.Portable.{toksSpark, toksDuck, ngramsSpark, ngramsDuck}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -742,17 +743,13 @@ object Warehouse {
     // The classic Pareto split of a catalog by revenue: A = parts
     // covering the top 80% of cumulative revenue, B = next 15%, C = the
     // tail. Revenue is exact cents per part (one partial-agg shuffle).
-    // The catalog scales with data, so the Pareto prefix sum must NOT be
-    // a single-task global window: it is block-decomposed exactly like
-    // operators/Quantiles — block the revenue axis (g = rev div 2^20;
-    // block id is monotone in rev, so (g desc, rev desc, partkey) is the
-    // same total order as (rev desc, partkey)), per-block cumsums
-    // PARTITIONED BY block, and only the bounded block-totals table
-    // (value-range / 2^20 rows, data-size-independent) crosses a global
-    // ordering for the block offsets, which broadcast back. Class shares
-    // are int64->double divides against a broadcast total. Cut order is
-    // total (revenue desc, partkey) so the classes are a deterministic
-    // function of the data.
+    // The catalog scales with data, so the Pareto prefix sum must NOT be a
+    // single-task global window: it is operators.BlockScan on the negated
+    // revenue block (g = -(rev div 2^20), so (g, rev desc, partkey) is the
+    // same total order as (rev desc, partkey)). Class shares are
+    // int64->double divides against a broadcast total. Cut order is total
+    // (revenue desc, partkey) so the classes are a deterministic function of
+    // the data.
     QuerySpec(
       "q176_abc_class",
       Some("""WITH r AS (SELECT l_partkey,
@@ -779,24 +776,12 @@ object Warehouse {
           .groupBy(col("l_partkey"))
           .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
             .cast("long").as("rev"))
-          .withColumn("g", expr(s"rev div ${1L << blockBits}"))
-          .cache() // |catalog| rows; feeds the total AND both cum stages
+          .cache() // |catalog| rows; feeds the total AND the running sum
         val tot = r.agg(sum(col("rev")).cast("long").as("tot"))
-        // per-block cumulative revenue — partitioned, never single-task
-        val wIn = Window.partitionBy(col("g"))
-          .orderBy(col("rev").desc, col("l_partkey"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val within = r.withColumn("cum_in", sum(col("rev")).over(wIn))
-        // block offsets over the bounded block-totals table only
-        val blockTot = r.groupBy(col("g")).agg(sum(col("rev")).as("btot"))
-        val wBlocks = Window.orderBy(col("g").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val blockOff = blockTot.withColumn("boff",
-          coalesce(sum(col("btot")).over(wBlocks), lit(0L)))
         val share = col("cum").cast("double") / col("tot").cast("double")
-        within
-          .join(broadcast(blockOff.select(col("g"), col("boff"))), "g")
-          .withColumn("cum", (col("boff") + col("cum_in")).cast("long"))
+        // the negated block key turns descending revenue into ascending g
+        BlockScan.runningSums(r, -expr(s"rev div ${1L << blockBits}"),
+            Seq(col("rev").desc, col("l_partkey")), Seq("cum" -> col("rev")))
           .crossJoin(broadcast(tot)) // 1-row scalar total
           .withColumn("abc_class",
             when(share <= 0.80, "A").when(share <= 0.95, "B")

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import graft.queries.Dedup
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
@@ -91,6 +93,24 @@ object ComponentStream {
     */
   private[graft] val RemapBroadcastCap = 1000000L
 
+  /** A state-dir marker's value (a batch or generation id), if the
+    * marker exists.
+    */
+  private def readMarker(m: Path): Option[String] =
+    if (Files.exists(m)) Some(new String(Files.readAllBytes(m), UTF_8).trim)
+    else None
+
+  /** Point marker `m` at `value`: write a sibling tmp file, then move it
+    * over `m` atomically, so a reader sees the old value or the new one.
+    */
+  private def writeMarker(m: Path, value: String): Unit = {
+    val tmp = m.resolveSibling(s".${m.getFileName}.tmp")
+    Files.createDirectories(tmp.getParent)
+    Files.write(tmp, value.getBytes(UTF_8))
+    Files.move(tmp, m, StandardCopyOption.REPLACE_EXISTING,
+      StandardCopyOption.ATOMIC_MOVE)
+  }
+
   /** One verified near-dup edge. */
   final case class Edge(doc_a: Long, doc_b: Long)
 
@@ -160,20 +180,15 @@ object ComponentStream {
       Seq.empty[(Long, Long)].toDF("label", "canon").localCheckpoint(true)
     }
 
-    private def marker = stateDir.map(d =>
-      java.nio.file.Paths.get(d, "REMAP_LATEST"))
+    private def marker = stateDir.map(Paths.get(_, "REMAP_LATEST"))
 
-    private def ledgerMarker = stateDir.map(d =>
-      java.nio.file.Paths.get(d, "LEDGER_LATEST"))
+    private def ledgerMarker = stateDir.map(Paths.get(_, "LEDGER_LATEST"))
 
     /** Epoch generation — continues from the durable ledger marker so a
       * restarted driver's rotations keep numbering forward.
       */
-    private var gen: Long = ledgerMarker
-      .filter(java.nio.file.Files.exists(_))
-      .map(m => new String(java.nio.file.Files.readAllBytes(m),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      .getOrElse(0L)
+    private var gen: Long =
+      ledgerMarker.flatMap(readMarker).map(_.toLong).getOrElse(0L)
 
     /** Set by [[rotate]]: this maintainer's epoch is OVER. Any further
       * [[onBatch]] (a stale foreachBatch the caller failed to stop
@@ -184,11 +199,8 @@ object ComponentStream {
     private var closed = false
 
     private def restored(): Option[DataFrame] =
-      marker.filter(java.nio.file.Files.exists(_)).map { m =>
-        val b = new String(java.nio.file.Files.readAllBytes(m),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        spark.read.parquet(s"${stateDir.get}/remap_b$b")
-      }
+      marker.flatMap(readMarker)
+        .map(b => spark.read.parquet(s"${stateDir.get}/remap_b$b"))
 
     /** Cumulative merge events this epoch — the remap's exact row
       * count, maintained on the already-materialized checkpoint (a
@@ -288,14 +300,8 @@ object ComponentStream {
       // 1. make the rotated ledger durable before anything is deleted
       for (d <- stateDir; m <- ledgerMarker) {
         folded.write.mode("overwrite").parquet(s"$d/ledger_g${gen + 1}")
-        val tmp = java.nio.file.Paths.get(d, ".LEDGER_LATEST.tmp")
-        java.nio.file.Files.createDirectories(tmp.getParent)
-        java.nio.file.Files.write(tmp, (gen + 1).toString.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        java.nio.file.Files.move(tmp, m,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        if (gen > 0) deleteRec(java.nio.file.Paths.get(d, s"ledger_g$gen"))
+        writeMarker(m, (gen + 1).toString)
+        if (gen > 0) deleteRec(Paths.get(d, s"ledger_g$gen"))
       }
       gen += 1
       remapDf = emptyRemap()
@@ -305,9 +311,9 @@ object ComponentStream {
       // epoch's snapshots so a restart cannot restore stale merges
       for (d <- stateDir) {
         marker.foreach(deleteRec)
-        val dir = java.nio.file.Paths.get(d)
-        if (java.nio.file.Files.exists(dir)) {
-          val it = java.nio.file.Files.list(dir)
+        val dir = Paths.get(d)
+        if (Files.exists(dir)) {
+          val it = Files.list(dir)
             .filter(_.getFileName.toString.startsWith("remap_b"))
           it.forEach(p => deleteRec(p))
           it.close()
@@ -316,11 +322,11 @@ object ComponentStream {
       folded
     }
 
-    private def deleteRec(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p)) {
-        val s = java.nio.file.Files.walk(p)
+    private def deleteRec(p: Path): Unit =
+      if (Files.exists(p)) {
+        val s = Files.walk(p)
         s.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.delete(f))
+          .forEach(f => Files.delete(f))
         s.close()
       }
 
@@ -331,20 +337,11 @@ object ComponentStream {
       */
     private def persist(batchId: Long): Unit =
       for (d <- stateDir; m <- marker) {
-        val prev = if (java.nio.file.Files.exists(m))
-          Some(new String(java.nio.file.Files.readAllBytes(m),
-            java.nio.charset.StandardCharsets.UTF_8).trim)
-        else None
+        val prev = readMarker(m)
         remapDf.write.mode("overwrite").parquet(s"$d/remap_b$batchId")
-        val tmp = java.nio.file.Paths.get(d, ".REMAP_LATEST.tmp")
-        java.nio.file.Files.createDirectories(tmp.getParent)
-        java.nio.file.Files.write(tmp, batchId.toString.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        java.nio.file.Files.move(tmp, m,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        writeMarker(m, batchId.toString)
         prev.filter(_ != batchId.toString).foreach(b =>
-          deleteRec(java.nio.file.Paths.get(d, s"remap_b$b")))
+          deleteRec(Paths.get(d, s"remap_b$b")))
       }
 
     /** One micro-batch of stage-1 output: pair half-edges, resolve
@@ -405,15 +402,9 @@ object ComponentStream {
     * remap snapshots).
     */
   def rotatedLedger(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val m = java.nio.file.Paths.get(stateDir, "LEDGER_LATEST")
-    if (!java.nio.file.Files.exists(m)) None
-    else {
-      val g = new String(java.nio.file.Files.readAllBytes(m),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      Some(spark.read.parquet(s"$stateDir/ledger_g$g"))
-    }
-  }
+      stateDir: String): Option[DataFrame] =
+    readMarker(Paths.get(stateDir, "LEDGER_LATEST"))
+      .map(g => spark.read.parquet(s"$stateDir/ledger_g$g"))
 
   /** Wire the full leg: stage-1 lookup on `edges` against `ledger`,
     * stage-2 maintenance in foreachBatch. Returns the writer (caller

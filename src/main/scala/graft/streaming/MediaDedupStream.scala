@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.queries.Multimodal
+import graft.queries.{Dedup, Multimodal}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, posexplode}
+import org.apache.spark.sql.functions.{col, posexplode}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
 
@@ -67,14 +67,13 @@ object MediaDedupStream {
   final case class RawFp(media_id: Long, fp: Long)
 
   /** 4 x 15-bit band rows of a fingerprint frame — the identical band
-    * split `Multimodal.bandedCandidates` self-joins on.
+    * split the batch candidates (`Dedup.coolBands`) self-join on.
     */
   private def banded(df: DataFrame): DataFrame =
-    df.select(col("media_id"), col("fp"), posexplode(expr(
-        "transform(sequence(0, 3), j -> " +
-          "cast(shiftright(fp, 15*j) & 32767 as int))")))
-      .select(col("pos").cast("int").as("band_j"), col("col").as("band"),
-        col("media_id"), col("fp"))
+    df.select(col("media_id"), col("fp"),
+        posexplode(Dedup.bandSplit("fp", 4, 15)))
+      .select(col("pos").cast("int").as("band_j"),
+        col("col").cast("int").as("band"), col("media_id"), col("fp"))
 
   /** The streaming collision evidence: `fps` is a streaming frame with
     * (media_id, fp); `corpus` a batch frame of the same shape (the

@@ -178,11 +178,6 @@ object SemDedupStream {
     dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
   }
 
-  /** The corpus index's (vec_id, depth, cell) leaf assignment — exposed
-    * so specs (and ops triage) can audit the state-key space the stream
-    * will run with: distinct (depth, cell) count IS the key cardinality,
-    * and every depth < maxDepth leaf holds <= cap members.
-    */
   /** Resolve the [[AdaptiveDepth]] sentinel against the corpus count
     * (one control-plane count at build time); explicit depths pass
     * through.
@@ -193,6 +188,11 @@ object SemDedupStream {
       Similarity.adaptiveTrieDepth(corpus.count(), cap)
     else maxDepth
 
+  /** The corpus index's (vec_id, depth, cell) leaf assignment — exposed
+    * so specs (and ops triage) can audit the state-key space the stream
+    * will run with: distinct (depth, cell) count IS the key cardinality,
+    * and every depth < maxDepth leaf holds <= cap members.
+    */
   def corpusLeaves(corpus: DataFrame, cap: Int = DefaultCap,
       maxDepth: Int = AdaptiveDepth): DataFrame =
     Similarity.trieLeaf(

@@ -56,8 +56,8 @@ object Plans {
         + "user_id — exactly one exchange per input."),
     "q102_equidepth_bins" ->
       ("Exact deciles WITHOUT a single-buffer percentile: value histogram "
-        + "+ block prefix sums + 9-row broadcast rank lookup; binning is "
-        + "row-local against broadcast cutpoints."),
+        + "+ operators.BlockScan ranks + 9-row broadcast rank lookup; "
+        + "binning is row-local against broadcast cutpoints."),
     "q104_zorder" ->
       ("Native morton2 interleave inside whole-stage codegen; rollup is "
         + "one partial+final aggregate."),
@@ -93,8 +93,8 @@ object Plans {
       ("Count-min sketch as relational algebra: DxW bounded-key partial "
         + "aggregate; |keys|xD probe rows broadcast against the grid."),
     "q132_concurrency" ->
-      ("Sweep line: within-block cumsum windows partition on the 6-hour "
-        + "block; only the |blocks|-row totals cross a global window."),
+      ("Sweep line: operators.BlockScan on the 6-hour block; only the "
+        + "|blocks|-row totals cross a global window."),
     "q134_hll" ->
       ("HLL registers: one partial-max shuffle to |groups|x64 rows; "
         + "integer register sums; estimate bound in the projection."),
@@ -110,7 +110,7 @@ object Plans {
         + "on the exact decimal grid with a loud int64 overflow guard."),
     "q137_auc" ->
       ("Mann-Whitney AUC without the O(n^2) pair join: per-score rollup "
-        + "+ block-distributed prefix sum + two exact dot products."),
+        + "+ operators.BlockScan prefix sum + two exact dot products."),
     "q141_interval_union" ->
       ("Sweep: +1/-1 deltas, block-partitioned cumsum detects cover "
         + "starts; only block totals cross a global window."),
@@ -135,8 +135,8 @@ object Plans {
       ("Version delta: ONE co-partitioned full-outer join; "
         + "classification is row-local after it."),
     "q162_ks_test" ->
-      ("Exact KS: per-block CDF cumsums partition on g; only the "
-        + "|blocks|-row offsets window is global."),
+      ("Exact KS: operators.BlockScan CDF cumsums partition on g; only "
+        + "the |blocks|-row offsets window is global."),
     "q163_cdc_apply" ->
       ("CDC compaction: one keyed ranking window, tombstone filter, "
         + "2-group rollup."),
@@ -148,17 +148,16 @@ object Plans {
         + "share ONE user_id exchange; the interpolation itself is "
         + "row-local arithmetic."),
     "q176_abc_class" ->
-      ("Pareto ABC classes: per-block revenue cumsums partition on the "
-        + "revenue block g; only the bounded block-totals table crosses "
-        + "a global ordering; the 1-row total broadcasts."),
+      ("Pareto ABC classes: operators.BlockScan on the (negated) revenue "
+        + "block g; only the bounded block-totals table crosses a global "
+        + "ordering; the 1-row total broadcasts."),
     "q179_pct_of_parent" ->
       ("Percent-of-parent: orders pre-aggregate to customer grain, then "
         + "SMJ on custkey (customer is fact-scaled — never broadcast); "
         + "only nation/region broadcast; the parent subtotal windows "
         + "over |nations| group-grain rows."),
     "q192_systematic_sample" ->
-      ("Global rank via block prefix sums (the q183/q189/q194 shape): "
-        + "within-block row_number partitions on the block key; the one "
+      ("Global rank as an operators.BlockScan running count: the one "
         + "unpartitioned ordering reads the block-counts aggregate; "
         + "offsets broadcast back."),
     "q194_sorted_neighborhood" ->
@@ -175,11 +174,10 @@ object Plans {
         + "exact integer L2 in a codegen'd lambda, min-then-min argmin, "
         + "32-row occupancy aggregate."),
     "q226_mann_whitney" ->
-      ("Rank-sum WITHOUT ranks: value-grain histogram, per-block cumsum "
-        + "(partitioned on v div 2^16), broadcast block offsets, one "
-        + "reduction to five int64 sufficient stats."),
+      ("Rank-sum WITHOUT ranks: value-grain histogram, operators.BlockScan "
+        + "on v div 2^16, one reduction to five int64 sufficient stats."),
     "q244_spearman" ->
-      ("Two block-decomposed 2*avgRank passes, value-keyed rank joins "
+      ("Two operators.BlockScan 2*avgRank passes, value-keyed rank joins "
         + "back onto the fact, single (ex,ey) product reduction — "
         + "Pearson-on-ranks with zero float ranks."),
     "q233_kcore" ->
@@ -235,10 +233,9 @@ object Plans {
         + "per-round TakeOrdered(1) argmax, single-center broadcast "
         + "update — k linear passes, no pairwise join ever exists."),
     "q321_chunk_packing" ->
-      ("Corpus-grain prefix sum, block-decomposed: per-block cumsums "
-        + "partition on g = doc_id div 4096; only the bounded "
-        + "block-totals table crosses an unpartitioned window; offsets "
-        + "broadcast back (the q176/q264 discipline)."),
+      ("Corpus-grain prefix sum via operators.BlockScan on g = doc_id "
+        + "div 4096; only the bounded block-totals table crosses an "
+        + "unpartitioned window; offsets broadcast back."),
     "q323_holt_trend" ->
       ("Bounded-grain recursion as a group-grain HOF fold: one fact "
         + "pass to the month grain, sorted struct array collected on a "
@@ -287,8 +284,9 @@ object Plans {
         + "reads the 6-row rank aggregate, never data."),
     "q352_media_phash_dedup" ->
       ("Decode once via mapPartitions; 8-byte phash per asset; 15-bit "
-        + "band buckets with the occupancy cap and a broadcast cool "
-        + "table — pair candidates bucket-bounded, never all-pairs."),
+        + "band buckets (q42's builder) with the occupancy cap and a "
+        + "broadcast cool table, materialized once for both join sides — "
+        + "pair candidates bucket-bounded, never all-pairs."),
     "q354_incremental_semdedup" ->
       ("New-batch vectors probe the corpus index on the cell equi key "
         + "only (old x old never pairs); LEFT join keeps admitted "
@@ -311,9 +309,9 @@ object Plans {
         + "discipline) — no single-partition window over the events; "
         + "the 3-point lateness sweep reads the bounded block table."),
     "q372_gate_auc" ->
-      ("Mann-Whitney rank-sum over block-ranked scores: ranks form "
-        + "from per-block counts + prefix offsets, never one global "
-        + "sort partition; the AUC is a 1-row exact rational."),
+      ("Mann-Whitney rank-sum over operators.BlockScan-ranked scores, "
+        + "never one global sort partition; the AUC is a 1-row exact "
+        + "rational."),
     "q373_prefix_filter_join" ->
       ("Lossless SSJoin: prefix tokens explode per doc, candidates "
         + "come from the prefix-token equi self-join (df-bounded), "

@@ -437,9 +437,7 @@ object ScaleProbe {
     // vs the ceiling, at both scales.
     for ((dir, label) <- Seq(base -> "base", out -> s"${reps}x")) {
       val sig = Dedup.simhashSignatures(spark, dir)
-      val bl = sig.select(
-        posexplode(expr(
-          "transform(sequence(0, 3), j -> (shiftright(sig, 15*j) & 32767))")))
+      val bl = sig.select(posexplode(Dedup.bandSplit("sig", 4, 15)))
         .toDF("band_j", "band")
       val occ = bl.groupBy(col("band_j"), col("band")).count()
       val tot = occ.agg(sum(col("count")).as("entries"),
@@ -456,8 +454,7 @@ object ScaleProbe {
          (fam, fp) <- Seq(
            "q352" -> Multimodal.imagePhash(spark, dir),
            "q378" -> Multimodal.audioFingerprint(spark, dir))) {
-      val bl = fp.select(posexplode(expr(
-          "transform(sequence(0, 3), j -> (shiftright(fp, 15*j) & 32767))")))
+      val bl = fp.select(posexplode(Dedup.bandSplit("fp", 4, 15)))
         .toDF("band_j", "band")
       val occ = bl.groupBy(col("band_j"), col("band")).count()
       val tot = occ.agg(sum(col("count")).as("entries"),

@@ -157,6 +157,33 @@ object LawsCheck extends Properties("graft.laws") {
       got == expected
     }
 
+  // operators.BlockScan: the two-level running sum must equal a plain
+  // driver-side running sum over the same total order, for negative and
+  // duplicate values, one block holding every row, one block per row,
+  // a few rows per block, and with or without a `by` key. The block key
+  // is monotone in id, so the total order is (by, id).
+  property("BlockScan.runningSums equals a driver-side running sum") =
+    Prop.forAll(Gen.listOfN(30, Gen.zip(Gen.chooseNum(0L, 2L),
+        Gen.chooseNum(-5L, 5L))),
+        Gen.oneOf("0L", "id", "id div 4"), Gen.oneOf(true, false)) {
+      (xs, block, grouped) =>
+        val rows = xs.zipWithIndex.map { case ((k, v), i) =>
+          (if (grouped) k else 0L, 3L * i, v)
+        }
+        val got = graft.operators.BlockScan.runningSums(
+            rows.toDF("k", "id", "v"), expr(block), Seq(col("id")),
+            Seq("s" -> col("v"), "n" -> lit(1L)),
+            by = if (grouped) Seq(col("k")) else Nil)
+          .select(col("id"), col("s"), col("n")).collect()
+          .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+        val expected = rows.groupBy(_._1).values.flatMap { rs =>
+          val ordered = rs.sortBy(_._2)
+          ordered.map(_._2).zip(ordered.map(_._3).scanLeft(0L)(_ + _).tail
+            .zip(1L to ordered.length.toLong))
+        }.toMap
+        got == expected
+    }
+
   property("parquet round-trip preserves the row multiset") =
     Prop.forAll(rows) { xs =>
       val dir = TempDirs.create("laws-rt")

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Compare two `graft.tools.Prof plan` dumps query by query.
 
-Usage: python3 tools/plandiff.py <dirA> <dirB>
+Usage: python3 tools/plandiff.py <dirA> <dirB> [--expect q1,q2,...]
 
 Each dir holds one `<query>.txt` per query (`explain("formatted")`).
 Both sides are normalized first, so that two dumps of the same code
@@ -24,6 +24,13 @@ ignored).
 Prints every query whose plan differs (with its first differing lines),
 every query present on one side only, and each skip; exits 1 if any
 query differs or is missing.
+
+With `--expect`, the comma-separated queries (full names, or the `qN`
+prefix) are the ones a change is meant to re-plan: a difference in a
+listed query is reported as EXPECTED and does not fail the run, while a
+listed query whose plan did NOT change (or that matches no query) is
+reported as UNCHANGED and does. Differences outside the list fail as
+without `--expect`.
 
 Dev tool only — not part of the shipped Scala library.
 """
@@ -63,13 +70,18 @@ def load(d: str) -> dict:
             if f.endswith(".txt")}
 
 
-def main(a_dir: str, b_dir: str) -> int:
+def listed(name: str, expect: list) -> bool:
+    return any(name == e or name.startswith(e + "_") for e in expect)
+
+
+def main(a_dir: str, b_dir: str, expect=None) -> int:
     a, b = load(a_dir), load(b_dir)
     bad = 0
     for name in sorted(set(a) ^ set(b)):
         print(f"ONLY-IN-{'A' if name in a else 'B'} {name}")
         bad += 1
-    same = skipped = 0
+    same = skipped = expected = 0
+    changed = set()
     for name in sorted(set(a) & set(b)):
         la = normalize(open(a[name]).read())
         lb = normalize(open(b[name]).read())
@@ -82,16 +94,34 @@ def main(a_dir: str, b_dir: str) -> int:
             print(f"SKIP {name}: only the Expand column order differs")
             skipped += 1
             continue
+        changed.add(name)
+        if expect is not None and listed(name, expect):
+            expected += 1
+            print(f"EXPECTED {name}")
+            continue
         bad += 1
         print(f"DIFF {name}")
         for line in diff[:6]:
             print(f"  {line[:160]}")
+    for e in expect or []:
+        if not any(listed(n, [e]) for n in changed):
+            print(f"UNCHANGED {e}: listed in --expect, plan did not change")
+            bad += 1
+    exp = "" if expect is None else f"{expected} expected, "
     print(f"== {same} identical, {skipped} skipped (run-order cases), "
-          f"{bad} differ")
+          f"{exp}{bad} differ")
     return 1 if bad else 0
 
 
 if __name__ == "__main__":
-    if len(sys.argv) != 3:
+    args = sys.argv[1:]
+    expect = None
+    if "--expect" in args:
+        i = args.index("--expect")
+        if i + 1 >= len(args):
+            sys.exit(__doc__)
+        expect = [e for e in args[i + 1].split(",") if e]
+        del args[i:i + 2]
+    if len(args) != 2:
         sys.exit(__doc__)
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(args[0], args[1], expect))
