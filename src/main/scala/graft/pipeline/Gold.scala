@@ -15,18 +15,25 @@ import org.apache.spark.sql.functions._
   * Scale posture: both summaries are partial-agg-friendly rollups over the
   * silver scan — one shuffle each, output partitioned for consumer-side
   * pruning. At 100 TB the silver scan dominates; the gold write is
-  * O(groups).
+  * O(groups). Every read names its schema — silver's owned
+  * [[Promote.silverSchema]], and each gold table the schema of the frame
+  * just written — so no build pays a schema-inference job, and
+  * `payment_type` keeps silver's BIGINT instead of the type a directory
+  * name infers to.
   */
 final class Gold(spark: SparkSession, catalog: ZoneCatalog) {
 
   def revenueTable: String = s"${catalog.gold}/revenue_by_payment_month"
   def zoneTable: String = s"${catalog.gold}/trips_by_zone"
 
+  private def silver(): DataFrame =
+    spark.read.schema(Promote.silverSchema).parquet(catalog.silverCleaned)
+
   /** Revenue/trip-count rollup by payment_type x pickup month (the summary
     * the silver partitioning exists to serve).
     */
   def buildRevenueSummary(): DataFrame = {
-    val df = Gold.revenueRollup(spark.read.parquet(catalog.silverCleaned))
+    val df = Gold.revenueRollup(silver())
     // One writer task per partition value: without this the rollup's N
     // shuffle partitions each open a file in every payment_type dir —
     // N x |values| tiny files at any scale (the small-file problem the
@@ -34,16 +41,16 @@ final class Gold(spark: SparkSession, catalog: ZoneCatalog) {
     df.repartition(col("payment_type"))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("payment_type").parquet(revenueTable)
-    spark.read.parquet(revenueTable)
+    spark.read.schema(df.schema).parquet(revenueTable)
   }
 
   /** Pickup-zone demand summary (zone lookup joins are the dim-join
     * consumers' entry point).
     */
   def buildZoneSummary(): DataFrame = {
-    val df = Gold.zoneRollup(spark.read.parquet(catalog.silverCleaned))
+    val df = Gold.zoneRollup(silver())
     df.write.mode(SaveMode.Overwrite).parquet(zoneTable)
-    spark.read.parquet(zoneTable)
+    spark.read.schema(df.schema).parquet(zoneTable)
   }
 }
 

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Bronze→silver promotion: the reference's Glue job
   * (reference src/glue_scripts/bronze_to_silver.py:30-47,84-89) rebuilt
@@ -18,10 +19,11 @@ import org.apache.spark.sql.functions._
   * batch contains a different file set than the crashed run (a batch-level
   * id would orphan the crashed batch's partitions in that case).
   *
-  * Scale posture: the only driver-side collect is the *file listing*
+  * Scale posture: the driver holds the *file listing* and the ledger
   * (bounded by file count, as in any table-format commit protocol — never
-  * row data); the write is a straight scan→filter→partitioned-write with no
-  * shuffle beyond the partitioning of the sink.
+  * row data) and diffs them without a Spark job; the write is a straight
+  * scan→filter→partitioned-write with no shuffle beyond the partitioning
+  * of the sink.
   */
 final class Promote(
     spark: SparkSession,
@@ -50,9 +52,7 @@ final class Promote(
 
   /** One promote cycle. Returns the files processed this run. */
   def run(): Seq[String] = {
-    import spark.implicits._
-    val listing = listBronze().toDF("path")
-    val todo = log.unprocessed(listing).as[String].collect().toSeq.sorted
+    val todo = log.unprocessed(listBronze())
     if (todo.isEmpty) return Seq.empty
 
     try {
@@ -82,10 +82,16 @@ final class Promote(
     todo
   }
 
-  def readSilver(): DataFrame = spark.read.parquet(silverTable)
+  def readSilver(): DataFrame =
+    spark.read.schema(Promote.silverSchema).parquet(silverTable)
 }
 
 object Promote {
+
+  /** The silver table's schema, owned here rather than inferred from its
+    * files: the canonical trip columns plus the `src_id` commit partition.
+    */
+  val silverSchema: StructType = TaxiSchema.schema.add("src_id", StringType)
 
   /** The realized cleaning transform (the reference leaves a placeholder at
     * bronze_to_silver.py:46): canonical-typed rows with valid fares, real

@@ -52,25 +52,26 @@ object TaxiSchema {
   /** Group paths by their footer schema: files sharing a schema read as
     * ONE multi-path scan, so the union plan is O(distinct schemas) — a
     * handful across TLC vintages — instead of O(files). The per-file
-    * footer probe is a driver-side metadata read (the same footers the
-    * scan needs anyway).
+    * footer probe runs one Spark job per file (the same footers the scan
+    * needs anyway); a driver-side footer read would make it job-free.
     */
   private def groupBySchema(spark: SparkSession,
-      paths: Seq[String]): Seq[Seq[String]] =
-    paths.groupBy(p => spark.read.parquet(p).schema)
-      .values.map(_.toSeq).toSeq
+      paths: Seq[String]): Seq[(StructType, Seq[String])] =
+    paths.groupBy(p => spark.read.parquet(p).schema).toSeq
 
   /** Multi-file scan with cast-on-read: per-schema-group scan + normalize
     * + union-by-name, every row tagged with a deterministic id of its
     * source file — the per-file partition key the promote commit protocol
-    * overwrites by. `input_file_name()` is stable per file across reruns,
-    * which is all the overwrite-by-src_id protocol needs.
+    * overwrites by. Each group is read with the schema its probe already
+    * found, so no group pays a second schema-inference job.
+    * `input_file_name()` is stable per file across reruns, which is all
+    * the overwrite-by-src_id protocol needs.
     */
   def readTagged(spark: SparkSession, paths: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{input_file_name, md5}
     groupBySchema(spark, paths)
-      .map(g => normalize(spark.read.parquet(g: _*))
-        .withColumn("src_id", md5(input_file_name())))
+      .map { case (s, g) => normalize(spark.read.schema(s).parquet(g: _*))
+        .withColumn("src_id", md5(input_file_name())) }
       .reduce(_.unionByName(_))
   }
 }

@@ -57,7 +57,7 @@ object PipelineQueries {
     QuerySpec(
       "q56_gold_revenue",
       Some(s"""WITH silver AS (
-          SELECT l_returnflag AS payment_type,
+          SELECT CAST(ASCII(l_returnflag) AS BIGINT) AS payment_type,
             strftime(l_shipdate, '%Y-%m') AS month,
             l_extendedprice AS fare_amount, l_tax AS tip_amount,
             l_quantity AS trip_distance
@@ -72,12 +72,14 @@ object PipelineQueries {
         val cat = graft.pipeline.ZoneCatalog(root)
         // A quarter of the table exercises the full build (all rollup
         // groups present) at a quarter of the two-write round-trip IO —
-        // same trade q50 makes.
+        // same trade q50 makes. Gold reads silver with its owned schema
+        // (Promote.silverSchema), so the columns take its types: the
+        // return flag's code point stands in for the BIGINT payment_type.
         Tables.load(s, d, "lineitem")
           .filter(col("l_orderkey") % 4 === 0)
           .select(
-            col("l_shipdate").as("tpep_pickup_datetime"),
-            col("l_returnflag").as("payment_type"),
+            col("l_shipdate").cast("timestamp").as("tpep_pickup_datetime"),
+            ascii(col("l_returnflag")).cast("long").as("payment_type"),
             col("l_extendedprice").as("fare_amount"),
             col("l_tax").as("tip_amount"),
             col("l_quantity").as("trip_distance"))

@@ -12,7 +12,11 @@ import scala.collection.mutable
   * warm-up, then each query in name order, caches cleared after each:
   *   - `time`: Bench's own sampling policy ([[Bench.measure]]); prints
   *     the reported seconds and the suspect flag.
-  *   - `plan`: writes `explain("formatted")` to `<outDir>/<query>.txt`.
+  *   - `plan`: writes `explain("formatted")` to `<outDir>/<query>.txt`,
+  *     and `<outDir>/_meta.txt` with the settings partition counts in the
+  *     plans follow (`spark.sql.shuffle.partitions`, the local cores), so
+  *     `tools/plandiff.py` refuses to compare dumps made under different
+  *     ones.
   *   - `stages`: a warm run with caches kept (as Bench's repeat iters
   *     keep them), then the measured run: per-job wall time with call
   *     site, and per-stage executor task time, shuffle read/write bytes,
@@ -33,7 +37,9 @@ object Prof {
       spark.catalog.clearCache()
       val profile: QuerySpec => Unit = mode match {
         case "time" => time(spark, sfDir)
-        case "plan" => plan(spark, sfDir, args(3))
+        case "plan" =>
+          writeMeta(spark, args(3))
+          plan(spark, sfDir, args(3))
         case "stages" => stages(spark, sfDir)
       }
       Registry.all.filter(q => pattern.r.findFirstIn(q.name).isDefined)
@@ -53,6 +59,14 @@ object Prof {
       () => seconds(q.run(spark, sfDir).count()), 3, 2.0, None,
       () => System.gc())
     println(f"[prof] ${q.name} $sec%.3f s" + (if (suspect) " suspect" else ""))
+  }
+
+  private def writeMeta(spark: SparkSession, outDir: String): Unit = {
+    val out = java.nio.file.Paths.get(outDir, "_meta.txt")
+    java.nio.file.Files.createDirectories(out.getParent)
+    java.nio.file.Files.writeString(out,
+      s"spark.sql.shuffle.partitions=${spark.conf.get("spark.sql.shuffle.partitions")}\n" +
+        s"local.cores=${spark.sparkContext.defaultParallelism}\n")
   }
 
   private def plan(spark: SparkSession, sfDir: String,

@@ -145,12 +145,10 @@ class PipelineSpec extends SparkSpec {
     java.nio.file.Files.createDirectories(dir)
     java.nio.file.Files.writeString(dir.resolve("bad.parquet"), "not parquet")
     intercept[Exception](promote.run())
-    val status = log.currentStatus()
-      .select("status").head().getString(0)
+    val status = log.currentStatus().values.head.status
     assert(status == ProcessedLog.Failed)
     // the failed file stays discoverable for retry
-    import spark.implicits._
-    assert(log.unprocessed(promote.listBronze().toDF("path")).count() == 1)
+    assert(log.unprocessed(promote.listBronze()).size == 1)
   }
 
   test("promote: a failing notifier leaves committed files Processed") {
@@ -164,7 +162,7 @@ class PipelineSpec extends SparkSpec {
     writeTrips(s"${cat.bronze}/nyc_taxi", "n.parquet", Seq((1, 1L, 10.0)))
     val thrown = intercept[RuntimeException](promote.run())
     assert(thrown eq boom, s"the notifier's exception must escape, got $thrown")
-    val status = log.currentStatus().select("status").head().getString(0)
+    val status = log.currentStatus().values.head.status
     assert(status == ProcessedLog.Processed)
   }
 
@@ -179,8 +177,18 @@ class PipelineSpec extends SparkSpec {
     val grand = rev.filter(org.apache.spark.sql.functions.col("payment_type")
       .isNull).select("total_fare").head().getDouble(0)
     assert(grand == 35.0)
+    // Both tables carry the types their builds wrote: payment_type stays
+    // silver's BIGINT instead of what its directory names infer to.
+    assert(rev.schema.map(f => f.name -> f.dataType) == Seq(
+      "month" -> StringType, "n_trips" -> LongType,
+      "total_fare" -> DoubleType, "total_tips" -> DoubleType,
+      "avg_distance" -> DoubleType, "payment_type" -> LongType))
+    val zone = gold.buildZoneSummary()
+    assert(zone.schema.map(f => f.name -> f.dataType) == Seq(
+      "PULocationID" -> IntegerType, "n_trips" -> LongType,
+      "total_revenue" -> DoubleType))
     val revCount = rev.count() // materialize before overwrite invalidates it
-    assert(gold.buildZoneSummary().count() == 1)
+    assert(zone.count() == 1)
     // idempotent rebuild (full overwrite)
     assert(gold.buildRevenueSummary().count() == revCount)
   }
@@ -290,13 +298,108 @@ class PipelineSpec extends SparkSpec {
     val cat = ZoneCatalog(TempDirs.create("graft-log"))
     val log = new ProcessedLog(spark, s"${cat.state}/plog", clock)
     log.mark(Seq("/a"), ProcessedLog.Failed, Some("x" * 500))
-    val err = log.currentStatus().filter(org.apache.spark.sql.functions
-      .col("path") === "/a").select("error").head().getString(0)
+    val err = log.currentStatus()("/a").error.get
     assert(err.length == 250)
     log.mark(Seq("/a"), ProcessedLog.Processed)
-    import spark.implicits._
-    val un = log.unprocessed(Seq("/a", "/b").toDF("path"))
-      .as[String].collect().toSet
+    val un = log.unprocessed(Seq("/a", "/b")).toSet
     assert(un == Set("/b"))
+  }
+
+  test("ledgers: Spark-written logs still read; a crashed append is ignored") {
+    import spark.implicits._
+    val cat = ZoneCatalog(TempDirs.create("graft-ledger-compat"))
+    val logDir = s"${cat.state}/plog"
+    val monthDir = s"${cat.state}/month_ledger"
+    // One part file per ledger in the format DataFrame.write produced.
+    val (t0, t1, t2) = ("2024-03-15T10:00:00.000Z", "2024-03-15T10:30:00.000Z",
+      "2024-03-15T11:00:00.000Z")
+    Seq(("/a", "Failed", t0, "boom"), ("/a", "Processed", t1, null),
+        ("/b", "Processed", t0, null),
+        ("/c", "Processed", t1, null), ("/c", "Failed", t1, "tie"),
+        ("/d", "Processed", t0, null), ("/d", "Failed", t1, "retry"))
+      .toDF("path", "status", "logged_at", "error")
+      .write.mode("append").parquet(logDir)
+    Seq(("2024-01", t0), ("2023-12", t1)).toDF("year_month", "updated_at")
+      .write.mode("append").parquet(monthDir)
+    // What a crash mid-append leaves behind: a temp file of garbage.
+    val junk = Array.tabulate[Byte](100)(i => (i * 37).toByte)
+    Seq(logDir, monthDir).foreach(d => java.nio.file.Files.write(
+      java.nio.file.Paths.get(d, "_tmp-0123.parquet"), junk))
+
+    val log = new ProcessedLog(spark, logDir, clock)
+    log.mark(Seq("/e"), ProcessedLog.Processed) // through the driver store
+    // The DataFrame form this log replaced, over the same directory: it
+    // reads the Spark-written file and the new one alike.
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number}
+    val w = Window.partitionBy(col("path")).orderBy(col("logged_at").desc,
+      (col("status") === ProcessedLog.Processed).desc)
+    val viaSpark = spark.read.parquet(logDir)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .collect().map(r => r.getString(0) -> ProcessedLog.Status(
+        r.getString(1), r.getString(2), Option(r.getString(3)))).toMap
+    assert(log.currentStatus() == viaSpark)
+    assert(viaSpark.keySet == Set("/a", "/b", "/c", "/d", "/e"))
+    assert(viaSpark("/c").status == ProcessedLog.Processed,
+      "Processed wins a timestamp tie")
+    assert(log.unprocessed(Seq("/a", "/b", "/c", "/d", "/e", "/f")) ==
+      Seq("/d", "/f"))
+
+    val ledger = new MonthLedger(spark, monthDir, clock)
+    assert(ledger.lastProcessed().contains("2024-01"))
+    ledger.markProcessed("2024-02")
+    assert(ledger.lastProcessed().contains("2024-02"))
+    assert(spark.read.parquet(monthDir).as[(String, String)].collect().toSet ==
+      Set(("2024-01", t0), ("2023-12", t1), ("2024-02", t2)))
+  }
+
+  /** Spark jobs started while `body` runs (drains the listener bus on both
+    * sides, so every job `body` started is counted).
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerBusDrain(sc); n.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("job guard: ledgers start no Spark job; promote and gold do not " +
+      "grow with the file count but for the footer probe") {
+    val cat = ZoneCatalog(TempDirs.create("graft-jobs-ledger"))
+    val ledger = new MonthLedger(spark, s"${cat.state}/month_ledger", clock)
+    val log = new ProcessedLog(spark, cat.processedLog, clock)
+    assert(jobsDuring {
+      ledger.markProcessed("2024-01")
+      assert(ledger.shouldSkip("2024-01"))
+      log.mark(Seq("/a"), ProcessedLog.Processed)
+      log.mark(Seq("/b"), ProcessedLog.Failed)
+      assert(log.unprocessed(Seq("/a", "/b", "/c")) == Seq("/b", "/c"))
+    } == 0, "ledger reads and appends must run on the driver")
+
+    // promote and gold over 1 and over 3 same-schema files
+    def pipeline(files: Int): (Int, Int, Int) = {
+      val (cat, _, promote) = freshPipeline()
+      (1 to files).foreach(i => writeTrips(s"${cat.bronze}/nyc_taxi",
+        s"m$i.parquet", Seq((1, 1L, 10.0 * i), (1, 2L, 5.0))))
+      val promoteJobs = jobsDuring(assert(promote.run().size == files))
+      val gold = new Gold(spark, cat)
+      (promoteJobs, jobsDuring(gold.buildRevenueSummary()),
+        jobsDuring(gold.buildZoneSummary()))
+    }
+    val (p1, r1, z1) = pipeline(1)
+    val (p3, r3, z3) = pipeline(3)
+    info(s"jobs over 1 / 3 files: promote $p1 / $p3, revenue $r1 / $r3, " +
+      s"zone $z1 / $z3")
+    assert(p3 - p1 == 2, s"promote: $p1 jobs for 1 file, $p3 for 3 — only " +
+      "the per-file footer probe may grow")
+    assert(r3 == r1, s"revenue build: $r1 jobs over 1 silver file, $r3 over 3")
+    assert(z3 == z1, s"zone build: $z1 jobs over 1 silver file, $z3 over 3")
   }
 }

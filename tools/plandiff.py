@@ -3,7 +3,11 @@
 
 Usage: python3 tools/plandiff.py <dirA> <dirB> [--expect q1,q2,...]
 
-Each dir holds one `<query>.txt` per query (`explain("formatted")`).
+Each dir holds one `<query>.txt` per query (`explain("formatted")`) and
+the `_meta.txt` that `Prof plan` writes: the shuffle partitions and local
+cores the dump ran under. Partition counts appear in the plans, so when
+the two `_meta.txt` differ, or one is missing, the dumps are not
+comparable and the script exits 2 without diffing.
 Both sides are normalized first, so that two dumps of the same code
 compare equal:
   - expression ids (`#123`, `#123L`), exchange ids (`plan_id=N`,
@@ -23,7 +27,7 @@ ignored).
 
 Prints every query whose plan differs (with its first differing lines),
 every query present on one side only, and each skip; exits 1 if any
-query differs or is missing.
+query differs or is missing, and 2 if the dumps are not comparable.
 
 With `--expect`, the comma-separated queries (full names, or the `qN`
 prefix) are the ones a change is meant to re-plan: a difference in a
@@ -65,9 +69,26 @@ def normalize(text: str) -> list:
     return lines
 
 
+META = "_meta.txt"
+
+
 def load(d: str) -> dict:
     return {f[:-4]: os.path.join(d, f) for f in os.listdir(d)
-            if f.endswith(".txt")}
+            if f.endswith(".txt") and f != META}
+
+
+def meta_mismatch(a_dir: str, b_dir: str):
+    """Why the two dumps cannot be compared, or None if they can."""
+    metas = []
+    for d in (a_dir, b_dir):
+        p = os.path.join(d, META)
+        if not os.path.exists(p):
+            return f"{p} is missing (dump it again with `Prof plan`)"
+        metas.append(open(p).read().strip())
+    if metas[0] != metas[1]:
+        return (f"the dumps ran under different settings: "
+                f"{a_dir}: {metas[0].splitlines()} vs {b_dir}: {metas[1].splitlines()}")
+    return None
 
 
 def listed(name: str, expect: list) -> bool:
@@ -75,6 +96,10 @@ def listed(name: str, expect: list) -> bool:
 
 
 def main(a_dir: str, b_dir: str, expect=None) -> int:
+    why = meta_mismatch(a_dir, b_dir)
+    if why:
+        print(f"plandiff: not comparable: {why}", file=sys.stderr)
+        return 2
     a, b = load(a_dir), load(b_dir)
     bad = 0
     for name in sorted(set(a) ^ set(b)):
