@@ -174,15 +174,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Per-query medians over N runs: a single sample per round made a GC
     // hiccup look like a 2x operator regression (q42, round 2). Three runs
     // is enough for the median to shed one outlier; override with
     // SPARK_GRAFT_BENCH_ITERS=1 for a quick smoke pass.
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val spark = GraftSession.builder(Some(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JVM/codegen/session startup otherwise lands on
     // whichever query happens to run first (~4 s artifact).

@@ -11,12 +11,10 @@ object Verify {
     val only = args.lift(2).map(_.r)
     def selected(name: String): Boolean =
       only.forall(_.findFirstIn(name).isDefined)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // GraftSession carries the conf the queries depend on (nanosAsLong for
-    // the events fixture, UTC, NTZ-friendly parquet output, AQE).
-    val spark = GraftSession.builder(Some(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    // the events fixture, UTC, NTZ-friendly parquet output, AQE) and the
+    // core count (SPARK_GRAFT_CPUS, else the machine's cores).
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>

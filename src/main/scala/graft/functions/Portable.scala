@@ -36,6 +36,11 @@ package graft.functions
   *    consecutive `k`-token chunk (the last chunk may be short), optionally
   *    with the chunk's token count `ln` — the keep-first/span key of q49
   *    and its descendants.
+  *
+  * Set similarity comes as one pair too: [[jaccardSpark]] /
+  * [[jaccardDuck]] turn an intersection count and two set sizes into the
+  * Jaccard double, and [[interDuck]] is the DuckDB intersection count
+  * (twin of the native `sorted_intersect_count`).
   */
 object Portable {
 
@@ -180,4 +185,26 @@ object Portable {
         'fp': md5(array_to_string($t[(i*$k+1):(i*$k+$k)], ' ')),
         'ln': least($k, len($t) - i*$k)}
       for i in range(0, CAST(ceil(len($t) / ($k * 1.0)) AS INT))]"""
+
+  // ---- set similarity -----------------------------------------------------
+
+  /** Jaccard from an intersection count `i` and the set sizes `la`, `lb`:
+    * `i / (la + lb - i)`, the count cast to double first — Spark side.
+    */
+  def jaccardSpark(i: String, la: String, lb: String): String =
+    s"cast($i as double) / ($la + $lb - $i)"
+
+  /** DuckDB twin of [[jaccardSpark]]. */
+  def jaccardDuck(i: String, la: String, lb: String): String =
+    s"CAST($i AS DOUBLE) / ($la + $lb - $i)"
+
+  /** Jaccard of two duplicate-free lists — DuckDB side. */
+  def jaccardDuck(a: String, b: String): String =
+    jaccardDuck(interDuck(a, b), s"len($a)", s"len($b)")
+
+  /** |a ∩ b| of two duplicate-free lists — DuckDB twin of the native
+    * `sorted_intersect_count`.
+    */
+  def interDuck(a: String, b: String): String =
+    s"len(list_intersect($a, $b))"
 }

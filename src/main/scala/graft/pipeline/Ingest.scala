@@ -36,13 +36,17 @@ final class Ingest(catalog: ZoneCatalog, clock: Clock) {
     * comes from the injected clock, so keys are deterministic under test;
     * like the reference, keys never collide across retries, which is what
     * makes the overall pipeline at-least-once upstream of the batch-
-    * idempotent promote.
+    * idempotent promote. The copy lands under a `_tmp-` sibling name that
+    * [[Promote.listBronze]] skips and is renamed to the key atomically, so
+    * a crash mid-copy never leaves a truncated drop to promote.
     */
   def ingestFile(source: String, yearMonth: String): String = {
     val key = catalog.bronzeKey(yearMonth, stampFmt.format(clock.now()))
     val dst = Paths.get(key)
     Files.createDirectories(dst.getParent)
-    Files.copy(Paths.get(source), dst, StandardCopyOption.REPLACE_EXISTING)
+    val tmp = dst.resolveSibling(s"_tmp-${dst.getFileName}")
+    Files.copy(Paths.get(source), tmp, StandardCopyOption.REPLACE_EXISTING)
+    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
     key
   }
 

@@ -94,11 +94,7 @@ private[pipeline] final class LedgerFiles(conf: Configuration, dir: String,
     val listed =
       try fs.listStatus(root).toSeq
       catch { case _: java.io.FileNotFoundException => Seq.empty }
-    listed.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
+    listed.map(_.getPath).filter(p => LedgerFiles.committed(p.getName))
       .flatMap(read)
   }
 
@@ -135,6 +131,15 @@ private[pipeline] final class LedgerFiles(conf: Configuration, dir: String,
     if (!fs.rename(tmp, part))
       throw new java.io.IOException(s"ledger append: cannot rename $tmp to $part")
   }
+}
+
+private[pipeline] object LedgerFiles {
+
+  /** Whether a file name is a committed parquet file: names starting with
+    * `_` or `.` are in-flight or hidden (Spark's rule too).
+    */
+  def committed(name: String): Boolean =
+    name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
 }
 
 /** Per-file processing log.

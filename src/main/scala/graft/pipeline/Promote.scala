@@ -35,6 +35,8 @@ final class Promote(
 
   /** List bronze parquet files (Hadoop FS — works for file:// and s3a://;
     * full URIs are preserved so object-store paths resolve correctly).
+    * In-flight copies (`_tmp-…`, see [[Ingest.ingestFile]]) and hidden
+    * files are skipped.
     */
   def listBronze(): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(catalog.bronzeTaxi)
@@ -44,7 +46,7 @@ final class Promote(
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     while (it.hasNext) {
       val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet"))
+      if (LedgerFiles.committed(f.getPath.getName))
         buf += f.getPath.toString
     }
     buf.toSeq.sorted
@@ -72,8 +74,12 @@ final class Promote(
       log.mark(todo, ProcessedLog.Processed)
     } catch {
       case e: Exception =>
-        log.mark(todo, ProcessedLog.Failed, Option(e.getMessage))
-        notifier.error("promote", s"promote failed: ${e.getMessage}")
+        // The write's error is what surfaces: a failing Failed-mark or
+        // alert rides along as suppressed, and one does not stop the other.
+        def attempt(f: => Unit): Unit =
+          try f catch { case e2: Exception => e.addSuppressed(e2) }
+        attempt(log.mark(todo, ProcessedLog.Failed, Option(e.getMessage)))
+        attempt(notifier.error("promote", s"promote failed: ${e.getMessage}"))
         throw e
     }
     // Outside the try: the files are committed, so a failing notifier

@@ -5,7 +5,7 @@ import graft.functions.Exact
 import graft.operators.BlockScan
 import graft.functions.Portable.{h64Spark, h64Duck, P, chunkFpSpark,
   chunkFpDuck, setFpSpark, setFpDuck, toksSpark, toksDuck, ngramsSpark,
-  ngramsDuck, qcosDuck}
+  ngramsDuck, qcosDuck, jaccardSpark, jaccardDuck, interDuck}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -145,16 +145,16 @@ object Dedup {
   /** Same verify tail but ending as a CTE (`verified`), for oracles that
     * keep composing (q48's component closure).
     */
-  private[graft] def verifyCteDuck(threshold: Double): String =
+  private def verifyCteDuck(threshold: Double): String =
     s"""sized AS (SELECT doc_a, doc_b, sh_a, sh_b,
           len(sh_a) AS la, len(sh_b) AS lb FROM pairs
         WHERE least(len(sh_a), len(sh_b))
           >= $threshold * greatest(len(sh_a), len(sh_b))),
       inter AS (SELECT doc_a, doc_b, la, lb,
-          len(list_intersect(sh_a, sh_b)) AS i FROM sized),
+          ${interDuck("sh_a", "sh_b")} AS i FROM sized),
       verified AS (SELECT doc_a, doc_b,
-          CAST(i AS DOUBLE) / (la + lb - i) AS jaccard
-        FROM inter WHERE CAST(i AS DOUBLE) / (la + lb - i) >= $threshold)"""
+          ${jaccardDuck("i", "la", "lb")} AS jaccard
+        FROM inter WHERE ${jaccardDuck("i", "la", "lb")} >= $threshold)"""
 
   /** DuckDB signature chain shared by q42/q317: emits `sim(doc_id, sig)`
     * (the 60-bit simhash per doc). One definition — band layouts differ
@@ -171,6 +171,20 @@ object Dedup {
               THEN (CAST(1 AS BIGINT) << i) ELSE 0 END
             for i in range(0, 60)]) AS sig
         FROM ths)"""
+
+  /** Recursive-closure labeling (the q48/q128/q210 oracles, under WITH
+    * RECURSIVE): each node reaches its whole component and takes the
+    * minimum it reaches as its label. Expects `sym(u, v)` in scope; emits
+    * `roots(doc_id, component)`. O(Σ component²) rows —
+    * [[minLabelRootsDuck]] is the bounded labeling.
+    */
+  private val reachRootsDuck: String =
+    """reach AS (
+            SELECT u, u AS v FROM (SELECT DISTINCT u FROM sym) z
+            UNION
+            SELECT r.u, s.v FROM reach r JOIN sym s ON s.u = r.v),
+          roots AS (SELECT u AS doc_id, MIN(v) AS component
+            FROM reach GROUP BY u)"""
 
   /** Unrolled min-label propagation (the Spark star rounds' oracle twin,
     * q261's MATERIALIZED-chain discipline): each round every node takes
@@ -211,14 +225,10 @@ object Dedup {
                 AS BIGINT) END AS component FROM ${p}l$rounds)"""
   }
 
-  /** The full MinHash candidate+pair CTE chain (shingles → minhashes →
-    * band keys → bucket self-join → shingle-joined pairs), shared by the
-    * q41 and q48 oracles.
-    */
   /** MinHash band CTE block (expects `sh` in scope): emits mh/bands/bl
     * and `cand(doc_a, doc_b)`; `candWhere` optionally restricts the
-    * probe side (q324's incremental filter). ONE definition — q41/q48/
-    * q324/q328 all draw their band logic from here.
+    * probe side (q324's incremental filter). ONE definition — every
+    * MinHash oracle draws its band logic from here.
     */
   private def minhashBandCandDuck(candWhere: String = ""): String = {
     val mhs = (0 until NumHashes)
@@ -238,20 +248,55 @@ object Dedup {
         $candWhere)"""
   }
 
-  private[graft] def minhashCteChain: String =
-    s"""$shingledDuckCte,
-      ${minhashBandCandDuck()},
-      pairs AS (SELECT doc_a, doc_b,
+  /** `pairs(doc_a, doc_b, sh_a, sh_b)`: the candidate pairs `cand` with
+    * both shingle sets of `sh` — the input of [[verifyCteDuck]].
+    */
+  private val pairsDuck =
+    """pairs AS (SELECT doc_a, doc_b,
           x.shingles AS sh_a, y.shingles AS sh_b
         FROM cand JOIN sh x ON x.doc_id = doc_a
                   JOIN sh y ON y.doc_id = doc_b)"""
 
-  /** documents → (doc_id, shingles) with the token/shingle prep shared by
-    * the near-dup queries.
+  /** The full MinHash candidate+pair CTE chain over `documents`
+    * (shingles → minhashes → band keys → bucket self-join, probe side
+    * restricted by `candWhere` → shingle-joined `pairs`).
+    */
+  private def minhashCteChain(candWhere: String = ""): String =
+    s"""$shingledDuckCte,
+      ${minhashBandCandDuck(candWhere)},
+      $pairsDuck"""
+
+  /** The verified (J >= 0.8) MinHash near-dup graph as CTEs over
+    * `documents`: [[minhashCteChain]], `verified` and its symmetric edges
+    * `sym(u, v)` — what both labelings ([[reachRootsDuck]],
+    * [[minLabelRootsDuck]]) read.
+    */
+  private[graft] def minhashSymDuck: String =
+    s"""${minhashCteChain()},
+          ${verifyCteDuck(0.8)},
+          ${symDuck()}"""
+
+  /** `{p}sym(u, v)`: the `verified` edges that pass `where`, in both
+    * directions.
+    */
+  private def symDuck(p: String = "", where: String = ""): String =
+    s"""${p}sym AS (SELECT doc_a AS u, doc_b AS v FROM verified $where
+            UNION ALL SELECT doc_b AS u, doc_a AS v FROM verified $where)"""
+
+  /** documents → (doc_id, shingles, …) with the token/shingle prep shared
+    * by the near-dup queries.
     */
   private[graft] def shingled(s: SparkSession, d: String): DataFrame = {
     withShingles(t(s, d, "documents"))
   }
+
+  /** The cached (doc_id, shingles) frame of `documents` — the input of
+    * every near-dup chain. The cache is decided here, not by callers: the
+    * band index and both verify join sides read it, and a caller that
+    * left it out ran the shingle+md5 chain up to 3x per run.
+    */
+  private[graft] def shingleSets(s: SparkSession, d: String): DataFrame =
+    shingled(s, d).select(col("doc_id"), col("shingles")).cache()
 
   /** Shingle any frame with a `text` column (streaming-safe: row-local
     * expressions only) — the one definition of the near-dup token/shingle
@@ -263,19 +308,28 @@ object Dedup {
       .filter(size(col("toks")) >= 3)
       .withColumn("shingles", expr(shinglesSpark))
 
-  /** (doc_id, shingles, …) → one row per band with its bucket key —
-    * the LSH index rows q41/q324 self-join on, exposed so the streaming
-    * admission operator keys its state on the identical (band, bkey)
-    * space. Row-local (minhash + band md5), streaming-safe.
-    */
-  private[graft] def bandIndex(sh: DataFrame): DataFrame = {
-    val mh = (0 until NumHashes).foldLeft(sh) { (df, k) =>
+  /** `sh` with its 16 minhash columns `mh0`…`mh15` (row-local). */
+  private def minhashed(sh: DataFrame): DataFrame =
+    (0 until NumHashes).foldLeft(sh) { (df, k) =>
       df.withColumn(s"mh$k", expr(minhashSpark(k)))
     }
+
+  /** One row per (doc, band) of `sh`: the `keep` columns, then `band` and
+    * its bucket key `bkey`. Row-local (minhash + band md5).
+    */
+  private def bandRows(sh: DataFrame, keep: String*): DataFrame = {
     val bandKeys = (0 until Bands).map(j => expr(bandKeySpark(j)))
-    mh.select(col("doc_id"), col("shingles"),
-      posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
+    minhashed(sh).select(keep.map(col) :+ posexplode(array(bandKeys: _*)): _*)
+      .toDF(keep :+ "band" :+ "bkey": _*)
   }
+
+  /** (doc_id, shingles, …) → one row per band with its bucket key —
+    * the LSH index rows [[minhashCandidates]] self-joins on, exposed so
+    * the streaming admission operator keys its state on the identical
+    * (band, bkey) space. Streaming-safe.
+    */
+  private[graft] def bandIndex(sh: DataFrame): DataFrame =
+    bandRows(sh, "doc_id", "shingles")
 
   private val shingledDuckCte =
     s"""docs AS (
@@ -340,15 +394,14 @@ object Dedup {
       sel AS (SELECT DISTINCT doc_id, h, i AS pos
         FROM pick WHERE rk = 1)"""
 
-  /** MinHash band-bucket candidate pairs (doc_a < doc_b). */
-  private[graft] def minhashCandidates(sh: DataFrame): DataFrame = {
-    val mh = (0 until NumHashes).foldLeft(sh) { (df, k) =>
-      df.withColumn(s"mh$k", expr(minhashSpark(k)))
-    }
-    val bandKeys = (0 until Bands).map(j => expr(bandKeySpark(j)))
-    val bl = mh
-      .select(col("doc_id"), posexplode(array(bandKeys: _*)))
-      .toDF("doc_id", "band", "bkey")
+  /** MinHash band-bucket candidate pairs (doc_a < doc_b) with the probe
+    * side restricted to `doc_b >= from`: a new batch probing the whole
+    * index (q324's shape), where old x old pairs never materialize. The
+    * default 0 probes every doc (ids are non-negative).
+    */
+  private[graft] def minhashCandidates(sh: DataFrame,
+      from: Long = 0L): DataFrame = {
+    val bl = bandRows(sh, "doc_id")
       // EAGER materialization: both self-join sides below otherwise
       // recompute the 16 minhash passes + band md5s from the shingle
       // table — the family's dominant warm-path CPU, paid twice per run
@@ -356,13 +409,20 @@ object Dedup {
       // this subtree in q128/q390). The checkpointed frame is 4 rows/doc
       // (band keys only), far smaller than the shingle sets.
       .localCheckpoint(true)
-    bl.as("x").join(bl.as("y"),
+    val probe = if (from > 0L) bl.filter(col("doc_id") >= from) else bl
+    bl.as("x").join(probe.as("y"),
         col("x.band") === col("y.band")
           && col("x.bkey") === col("y.bkey")
           && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
   }
+
+  /** The verified near-dup edges of `sh`: MinHash candidates whose exact
+    * Jaccard is at least 0.8, as (doc_a, doc_b, jaccard).
+    */
+  private[graft] def minhashEdges(sh: DataFrame): DataFrame =
+    verifyJaccard(sh, minhashCandidates(sh), 0.8)
 
   /** documents → (doc_id, sig): the 60-bit simhash signature table.
     *
@@ -625,8 +685,7 @@ object Dedup {
         >= lit(threshold) * greatest(col("la"), col("lb")))
       // fused merge-scan intersect (arrays are sorted by construction)
       .withColumn("i", expr("sorted_intersect_count(sh_a, sh_b)"))
-      .withColumn("jaccard",
-        col("i").cast("double") / (col("la") + col("lb") - col("i")))
+      .withColumn("jaccard", expr(jaccardSpark("i", "la", "lb")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
@@ -724,8 +783,7 @@ object Dedup {
     */
   private[graft] def ladderS3(s: SparkSession, d: String,
       sh3: DataFrame): DataFrame = {
-    val rm3 = verifyJaccard(sh3, minhashCandidates(sh3), 0.8)
-      .select(col("doc_b").as("doc_id")).distinct()
+    val rm3 = minhashEdges(sh3).select(col("doc_b").as("doc_id")).distinct()
     sh3.select(col("doc_id")).join(rm3, Seq("doc_id"), "left_anti")
       .cache() // consumed by the output ladder AND stage 4 (see s1)
   }
@@ -773,10 +831,8 @@ object Dedup {
     */
   private[graft] def fullComponents(s: SparkSession, d: String,
       sh: DataFrame): DataFrame = {
-    val edges = verifyJaccard(sh, minhashCandidates(sh), 0.8)
-      .select(col("doc_a"), col("doc_b"))
     t(s, d, "documents").select(col("doc_id"))
-      .join(connectedComponents(edges), Seq("doc_id"), "left")
+      .join(connectedComponents(minhashEdges(sh)), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("component"))
   }
@@ -808,12 +864,11 @@ object Dedup {
     */
   private[graft] def bandPlanHists(s: SparkSession,
       d: String): (DataFrame, DataFrame) = {
-    val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
-      .cache() // feeds the bg pair sample AND both candidate strata
+    val sh = shingleSets(s, d)
     val a = sh.select(col("doc_id").as("ida"), col("shingles").as("sh_a"))
     val b = sh.select(col("doc_id").as("idb"), col("shingles").as("sh_b"))
-    val bucketed = least(lit(19), floor(col("i").cast("double")
-      / (col("la") + col("lb") - col("i")) * 20).cast("int"))
+    val bucketed = least(lit(19),
+      floor(expr(jaccardSpark("i", "la", "lb")) * 20).cast("int"))
     val bg = a
       .select(col("ida"), col("sh_a"),
         explode(lit(BandPlanOffsets.toArray)).as("off"))
@@ -829,8 +884,7 @@ object Dedup {
       .withColumn("la", size(col("sh_a")))
       .withColumn("lb", size(col("sh_b")))
       .withColumn("i", expr("sorted_intersect_count(sh_a, sh_b)"))
-      .withColumn("j", col("i").cast("double")
-        / (col("la") + col("lb") - col("i")))
+      .withColumn("j", expr(jaccardSpark("i", "la", "lb")))
       .filter(col("j") >= 0.8)
     def hist(pr: DataFrame) = pr.select(bucketed.as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
@@ -878,15 +932,9 @@ object Dedup {
     // engines because the hash family is.
     QuerySpec(
       "q41_minhash_lsh",
-      Some(s"""WITH $minhashCteChain,
+      Some(s"""WITH ${minhashCteChain()},
           ${verifyDuck(0.8)}"""),
-      (s, d) => {
-        // Cached: the shingle table feeds the minhash branch AND both
-        // sides of the verify join — without it the md5-heavy shingling
-        // subtree is recomputed three times.
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles")).cache()
-        verifyJaccard(sh, minhashCandidates(sh), 0.8)
-      }),
+      (s, d) => minhashEdges(shingleSets(s, d))),
 
     // ---- near-dup components (canonical-representative selection) ----------
     // The step AFTER pair verification in a real dedup pipeline: group the
@@ -898,27 +946,15 @@ object Dedup {
     // exact agreement because the q41 edges themselves are bit-identical.
     QuerySpec(
       "q48_dedup_components",
-      Some(s"""WITH RECURSIVE $minhashCteChain,
-          ${verifyCteDuck(0.8)},
-          sym AS (SELECT doc_a AS u, doc_b AS v FROM verified
-            UNION ALL SELECT doc_b AS u, doc_a AS v FROM verified),
-          reach AS (
-            SELECT u, u AS v FROM (SELECT DISTINCT u FROM sym) z
-            UNION
-            SELECT r.u, s.v FROM reach r JOIN sym s ON s.u = r.v),
-          roots AS (SELECT u AS doc_id, MIN(v) AS component
-            FROM reach GROUP BY u)
+      Some(s"""WITH RECURSIVE $minhashSymDuck,
+          $reachRootsDuck
         SELECT doc_id, component,
           COUNT(*) OVER (PARTITION BY component) AS n_members
         FROM roots"""),
-      (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles")).cache()
-        val edges = verifyJaccard(sh, minhashCandidates(sh), 0.8)
-          .select(col("doc_a"), col("doc_b"))
-        connectedComponents(edges)
+      (s, d) =>
+        connectedComponents(minhashEdges(shingleSets(s, d)))
           .withColumn("n_members",
-            count(lit(1)).over(Window.partitionBy(col("component"))))
-      }),
+            count(lit(1)).over(Window.partitionBy(col("component"))))),
 
     // ---- canonical representative per near-dup cluster ----------------------
     // The step a dedup pipeline actually ships: q48's components tell you
@@ -932,16 +968,8 @@ object Dedup {
     // the same join + rank.
     QuerySpec(
       "q128_cluster_rep",
-      Some(s"""WITH RECURSIVE $minhashCteChain,
-          ${verifyCteDuck(0.8)},
-          sym AS (SELECT doc_a AS u, doc_b AS v FROM verified
-            UNION ALL SELECT doc_b AS u, doc_a AS v FROM verified),
-          reach AS (
-            SELECT u, u AS v FROM (SELECT DISTINCT u FROM sym) z
-            UNION
-            SELECT r.u, s.v FROM reach r JOIN sym s ON s.u = r.v),
-          roots AS (SELECT u AS doc_id, MIN(v) AS component
-            FROM reach GROUP BY u),
+      Some(s"""WITH RECURSIVE $minhashSymDuck,
+          $reachRootsDuck,
           rk AS (SELECT component, r.doc_id, d.n_chars,
               row_number() OVER (PARTITION BY component
                 ORDER BY d.n_chars DESC, r.doc_id) AS rk,
@@ -951,13 +979,11 @@ object Dedup {
           n_members
         FROM rk WHERE rk = 1"""),
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles")).cache()
-        val edges = verifyJaccard(sh, minhashCandidates(sh), 0.8)
-          .select(col("doc_a"), col("doc_b"))
         val docs = t(s, d, "documents").select(col("doc_id"), col("n_chars"))
         val wC = Window.partitionBy(col("component"))
         val wR = wC.orderBy(col("n_chars").desc, col("doc_id"))
-        connectedComponents(edges).join(docs, "doc_id")
+        connectedComponents(minhashEdges(shingleSets(s, d)))
+          .join(docs, "doc_id")
           .withColumn("rk", row_number().over(wR))
           .withColumn("n_members", count(lit(1)).over(wC))
           .filter(col("rk") === 1)
@@ -1094,38 +1120,17 @@ object Dedup {
     // out from the BATCH side — per-day work scales with the batch, not
     // the corpus.
     QuerySpec(
-      "q324_incremental_neardup", {
-        Some(s"""WITH $shingledDuckCte,
-          ${minhashBandCandDuck("WHERE b.doc_id >= 250")},
-          pairs AS (SELECT doc_a, doc_b,
-              x.shingles AS sh_a, y.shingles AS sh_b
-            FROM cand JOIN sh x ON x.doc_id = doc_a
-                      JOIN sh y ON y.doc_id = doc_b),
+      "q324_incremental_neardup",
+      Some(s"""WITH ${minhashCteChain("WHERE b.doc_id >= 250")},
           ${verifyCteDuck(0.8)}
           SELECT doc_b AS new_doc, doc_a AS matched_doc, jaccard,
             CASE WHEN doc_a < 250 THEN 'corpus' ELSE 'batch' END
               AS match_src
-          FROM verified""")
-      },
+          FROM verified"""),
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
-          .cache() // band index + both verify sides
-        val mh = (0 until NumHashes).foldLeft(sh) { (df, k) =>
-          df.withColumn(s"mh$k", expr(minhashSpark(k)))
-        }
-        val bandKeys = (0 until Bands).map(j => expr(bandKeySpark(j)))
-        val bl = mh
-          .select(col("doc_id"), posexplode(array(bandKeys: _*)))
-          .toDF("doc_id", "band", "bkey")
+        val sh = shingleSets(s, d)
         // probe side pre-filtered to the NEW batch before the band join
-        val cand = bl.filter(col("doc_id") >= 250).as("y")
-          .join(bl.as("x"),
-            col("x.band") === col("y.band")
-              && col("x.bkey") === col("y.bkey")
-              && col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-          .distinct()
-        verifyJaccard(sh, cand, 0.8)
+        verifyJaccard(sh, minhashCandidates(sh, 250L), 0.8)
           .select(col("doc_b").as("new_doc"), col("doc_a").as("matched_doc"),
             col("jaccard"),
             when(col("doc_a") < 250, "corpus").otherwise("batch")
@@ -1157,10 +1162,7 @@ object Dedup {
                       JOIN ml y ON y.doc_id = doc_b
                       JOIN sh sx ON sx.doc_id = doc_a
                       JOIN sh sy ON sy.doc_id = doc_b),
-          jx AS (SELECT n_match,
-              CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-                / (len(sh_a) + len(sh_b)
-                   - len(list_intersect(sh_a, sh_b))) AS j
+          jx AS (SELECT n_match, ${jaccardDuck("sh_a", "sh_b")} AS j
             FROM pr)
           SELECT n_match, CAST(COUNT(*) AS BIGINT) AS n_pairs,
             floor(${graft.functions.Exact.sqlDsum("j")} / COUNT(*) * 1000000.0)
@@ -1168,12 +1170,8 @@ object Dedup {
           FROM jx GROUP BY 1""")
       },
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
-          .cache()
-        val mh = (0 until NumHashes).foldLeft(sh) { (df, k) =>
-          df.withColumn(s"mh$k", expr(minhashSpark(k)))
-        }
-        val ml = mh.select(col("doc_id"),
+        val sh = shingleSets(s, d)
+        val ml = minhashed(sh).select(col("doc_id"),
           array((0 until NumHashes).map(k => col(s"mh$k")): _*).as("ma"))
         val cand = minhashCandidates(sh)
         val pr = cand
@@ -1189,9 +1187,7 @@ object Dedup {
               "b -> b))").cast("long").as("n_match"),
             expr("sorted_intersect_count(sh_a, sh_b)").as("i"),
             size(col("sh_a")).as("la"), size(col("sh_b")).as("lb"))
-          .select(col("n_match"),
-            (col("i").cast("double")
-              / (col("la") + col("lb") - col("i"))).as("j"))
+          .select(col("n_match"), expr(jaccardSpark("i", "la", "lb")).as("j"))
         pr.groupBy(col("n_match"))
           .agg(count(lit(1)).as("n_pairs"),
             (floor(graft.functions.Exact.dsum(col("j"))
@@ -1217,12 +1213,10 @@ object Dedup {
         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
           FROM samp a JOIN samp b ON a.s = b.s AND a.doc_id < b.doc_id
           WHERE a.s IN (SELECT s FROM rare)),
-        pairs AS (SELECT doc_a, doc_b, x.shingles AS sh_a, y.shingles AS sh_b
-          FROM cand JOIN sh x ON x.doc_id = doc_a
-                    JOIN sh y ON y.doc_id = doc_b),
+        $pairsDuck,
         ${verifyDuck(0.7)}"""),
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles")).cache()
+        val sh = shingleSets(s, d)
         verifyJaccard(sh, ngramCandidates(sh), 0.7)
       }),
 
@@ -1276,18 +1270,18 @@ object Dedup {
     // delta is the verify predicate, so the 100 TB posture carries over.
     QuerySpec(
       "q153_containment",
-      Some(s"""WITH $minhashCteChain,
+      Some(s"""WITH ${minhashCteChain()},
           m AS (SELECT doc_a, doc_b,
               len(sh_a) AS la, len(sh_b) AS lb,
-              len(list_intersect(sh_a, sh_b)) AS i
+              ${interDuck("sh_a", "sh_b")} AS i
             FROM pairs)
         SELECT doc_a, doc_b, CAST(la AS BIGINT) AS la,
           CAST(lb AS BIGINT) AS lb, CAST(i AS BIGINT) AS i,
           CAST(i AS DOUBLE) / least(la, lb) AS containment,
-          CAST(i AS DOUBLE) / (la + lb - i) AS jaccard
+          ${jaccardDuck("i", "la", "lb")} AS jaccard
         FROM m WHERE CAST(i AS DOUBLE) / least(la, lb) >= 0.9"""),
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles")).cache()
+        val sh = shingleSets(s, d)
         val a = sh.select(col("doc_id").as("doc_a"),
           col("shingles").as("sh_a"))
         val b = sh.select(col("doc_id").as("doc_b"),
@@ -1302,8 +1296,7 @@ object Dedup {
           .filter(col("containment") >= 0.9)
           .select(col("doc_a"), col("doc_b"), col("la"), col("lb"), col("i"),
             col("containment"),
-            (col("i").cast("double") / (col("la") + col("lb") - col("i")))
-              .as("jaccard"))
+            expr(jaccardSpark("i", "la", "lb")).as("jaccard"))
       }),
 
     // ---- sorted-neighborhood dedup blocking ---------------------------------
@@ -1342,6 +1335,7 @@ object Dedup {
         val k = t(s, d, "documents").select(col("doc_id"), col("source"),
             col("lang"), md5(lower(col("text"))).as("fp"),
             substring(lower(col("text")), 1, 24).as("key"))
+          .cache() // the running sums read it twice, and `r` is used twice
         val r = BlockScan.runningSums(k, substring(col("key"), 1, 4),
             Seq(col("key"), col("doc_id")), Seq("rk" -> lit(1L)))
           .select(col("rk"), col("source"), col("lang"), col("fp"))
@@ -1372,16 +1366,8 @@ object Dedup {
     // and two corpus COUNTs — nothing new crosses a global window.
     QuerySpec(
       "q210_cluster_size_dist",
-      Some(s"""WITH RECURSIVE $minhashCteChain,
-          ${verifyCteDuck(0.8)},
-          sym AS (SELECT doc_a AS u, doc_b AS v FROM verified
-            UNION ALL SELECT doc_b AS u, doc_a AS v FROM verified),
-          reach AS (
-            SELECT u, u AS v FROM (SELECT DISTINCT u FROM sym) z
-            UNION
-            SELECT r.u, s.v FROM reach r JOIN sym s ON s.u = r.v),
-          roots AS (SELECT u AS doc_id, MIN(v) AS component
-            FROM reach GROUP BY u),
+      Some(s"""WITH RECURSIVE $minhashSymDuck,
+          $reachRootsDuck,
           sizes AS (SELECT component, CAST(COUNT(*) AS BIGINT) AS sz
             FROM roots GROUP BY 1),
           hist AS (SELECT CAST(length(to_base(sz, 2)) AS BIGINT) AS bits,
@@ -1399,10 +1385,8 @@ object Dedup {
             CAST(1 AS BIGINT), CAST(1 AS BIGINT)
           FROM singles WHERE n1 > 0"""),
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles")).cache()
-        val edges = verifyJaccard(sh, minhashCandidates(sh), 0.8)
-          .select(col("doc_a"), col("doc_b"))
-        val comps = connectedComponents(edges).cache()
+        val comps = connectedComponents(minhashEdges(shingleSets(s, d)))
+          .cache()
         val sizes = comps.groupBy(col("component"))
           .agg(count(lit(1)).as("sz"))
         val hist = sizes
@@ -1642,23 +1626,22 @@ object Dedup {
     // threshold fan-out multiplies only the tiny verified stream.
     QuerySpec(
       "q336_threshold_sweep",
-      Some(s"""WITH $minhashCteChain,
+      Some(s"""WITH ${minhashCteChain()},
         sized AS (SELECT doc_a, doc_b, sh_a, sh_b,
             len(sh_a) AS la, len(sh_b) AS lb FROM pairs
           WHERE least(len(sh_a), len(sh_b))
             >= 0.5 * greatest(len(sh_a), len(sh_b))),
         inter AS (SELECT doc_a, doc_b, la, lb,
-            len(list_intersect(sh_a, sh_b)) AS i FROM sized),
+            ${interDuck("sh_a", "sh_b")} AS i FROM sized),
         jx AS (SELECT doc_a, doc_b,
-            CAST(i AS DOUBLE) / (la + lb - i) AS j FROM inter),
+            ${jaccardDuck("i", "la", "lb")} AS j FROM inter),
         th AS (SELECT unnest([50, 60, 70, 80, 90]) AS t)
         SELECT t AS threshold_pct, CAST(COUNT(*) AS BIGINT) AS n_pairs,
           CAST(COUNT(DISTINCT doc_b) AS BIGINT) AS n_removed
         FROM jx, th WHERE j >= CAST(t AS DOUBLE) / 100
         GROUP BY t"""),
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
-          .cache() // band index + both verify sides
+        val sh = shingleSets(s, d)
         val pr = minhashCandidates(sh)
           .join(sh.select(col("doc_id").as("doc_a"),
             col("shingles").as("sh_a")), "doc_a")
@@ -1669,8 +1652,7 @@ object Dedup {
           .filter(least(col("la"), col("lb"))
             >= lit(0.5) * greatest(col("la"), col("lb")))
           .withColumn("i", expr("sorted_intersect_count(sh_a, sh_b)"))
-          .withColumn("j",
-            col("i").cast("double") / (col("la") + col("lb") - col("i")))
+          .withColumn("j", expr(jaccardSpark("i", "la", "lb")))
         pr.select(col("doc_a"), col("doc_b"), col("j"),
             explode(lit(Array(50, 60, 70, 80, 90))).as("t"))
           .filter(col("j") >= col("t").cast("double") / 100)
@@ -1770,15 +1752,11 @@ object Dedup {
           cu AS (SELECT doc_a, doc_b FROM cand
             UNION SELECT doc_a, doc_b FROM cand6),
           hi AS (SELECT least(19, CAST(floor(
-              CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-              / (len(x.shingles) + len(y.shingles)
-                - len(list_intersect(x.shingles, y.shingles)))
+              ${jaccardDuck("x.shingles", "y.shingles")}
               * 20) AS INT)) AS bucket
             FROM cu JOIN sh x ON x.doc_id = doc_a
                     JOIN sh y ON y.doc_id = doc_b
-            WHERE CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-              / (len(x.shingles) + len(y.shingles)
-                - len(list_intersect(x.shingles, y.shingles))) >= 0.8),
+            WHERE ${jaccardDuck("x.shingles", "y.shingles")} >= 0.8),
           hist_hi AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n
             FROM hi GROUP BY 1),
           po AS (SELECT a.shingles AS sh_a, b.shingles AS sh_b
@@ -1787,8 +1765,7 @@ object Dedup {
               AS off) o
             JOIN sh b ON b.doc_id = a.doc_id + o.off),
           jm AS (SELECT least(19, CAST(floor(
-              CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-              / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b)))
+              ${jaccardDuck("sh_a", "sh_b")}
               * 20) AS INT)) AS bucket
             FROM po),
           hist_bg AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n
@@ -1851,19 +1828,9 @@ object Dedup {
     // equi-joins over verdict sets that are tiny relative to the corpus.
     QuerySpec(
       "q348_dedup_family_agreement",
-      Some(s"""WITH $shingledDuckCte,
-        ${minhashBandCandDuck()},
-        pairs1 AS (SELECT doc_a, doc_b,
-            x.shingles AS sh_a, y.shingles AS sh_b
-          FROM cand JOIN sh x ON x.doc_id = doc_a
-                    JOIN sh y ON y.doc_id = doc_b),
-        v1 AS (SELECT doc_a, doc_b FROM (
-            SELECT doc_a, doc_b, len(sh_a) AS la, len(sh_b) AS lb,
-              len(list_intersect(sh_a, sh_b)) AS i
-            FROM pairs1
-            WHERE least(len(sh_a), len(sh_b))
-              >= 0.8 * greatest(len(sh_a), len(sh_b))) z
-          WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.8),
+      Some(s"""WITH ${minhashCteChain()},
+        ${verifyCteDuck(0.8)},
+        v1 AS (SELECT doc_a, doc_b FROM verified),
         inv2 AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
         samp2 AS (SELECT doc_id, s FROM inv2 WHERE s % 8 = 0),
         rare2 AS (SELECT s FROM samp2 GROUP BY s HAVING COUNT(*) <= 20),
@@ -1876,11 +1843,11 @@ object Dedup {
                      JOIN sh y ON y.doc_id = doc_b),
         v2 AS (SELECT doc_a, doc_b FROM (
             SELECT doc_a, doc_b, len(sh_a) AS la, len(sh_b) AS lb,
-              len(list_intersect(sh_a, sh_b)) AS i
+              ${interDuck("sh_a", "sh_b")} AS i
             FROM pairs2
             WHERE least(len(sh_a), len(sh_b))
               >= 0.7 * greatest(len(sh_a), len(sh_b))) z
-          WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.7),
+          WHERE ${jaccardDuck("i", "la", "lb")} >= 0.7),
         ths3 AS (SELECT doc_id, [${h64Duck("t")} for t in toks] AS ths
           FROM docs),
         sim3 AS (SELECT doc_id,
@@ -1922,9 +1889,8 @@ object Dedup {
             ELSE CAST(0 AS BIGINT) END
         FROM c2 a, c3 b, i23 i"""),
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles")).cache()
-        val mh = verifyJaccard(sh, minhashCandidates(sh), 0.8)
-          .select(col("doc_a"), col("doc_b")).cache()
+        val sh = shingleSets(s, d)
+        val mh = minhashEdges(sh).select(col("doc_a"), col("doc_b")).cache()
         val ng = verifyJaccard(sh, ngramCandidates(sh), 0.7)
           .select(col("doc_a"), col("doc_b")).cache()
         val sim = simhashSignatures(s, d).cache()
@@ -2026,10 +1992,7 @@ object Dedup {
     // diameter <= 12, far past a 0.8-Jaccard near-dup chain's reach).
     QuerySpec(
       "q370_cluster_cap_sample",
-      Some(s"""WITH $minhashCteChain,
-          ${verifyCteDuck(0.8)},
-          sym AS (SELECT doc_a AS u, doc_b AS v FROM verified
-            UNION ALL SELECT doc_b AS u, doc_a AS v FROM verified),
+      Some(s"""WITH $minhashSymDuck,
           ${minLabelRootsDuck(12)},
           ranked AS (SELECT doc_id, component,
               row_number() OVER (PARTITION BY component
@@ -2053,11 +2016,7 @@ object Dedup {
             n_docs - n_kept AS n_dropped
           FROM (SELECT * FROM buck UNION ALL SELECT * FROM single) u"""),
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
-          .cache()
-        val edges = verifyJaccard(sh, minhashCandidates(sh), 0.8)
-          .select(col("doc_a"), col("doc_b"))
-        val roots = connectedComponents(edges)
+        val roots = connectedComponents(minhashEdges(shingleSets(s, d)))
         val ranked = roots.withColumn("rk", row_number().over(
           Window.partitionBy(col("component")).orderBy(col("doc_id"))))
         val buck = ranked.groupBy(col("component"))
@@ -2087,7 +2046,7 @@ object Dedup {
     // one bounded |sources|² rollup.
     QuerySpec(
       "q371_copy_matrix",
-      Some(s"""WITH $minhashCteChain,
+      Some(s"""WITH ${minhashCteChain()},
           ${verifyCteDuck(0.8)},
           sp AS (SELECT least(da.source, db.source) AS source_a,
               greatest(da.source, db.source) AS source_b
@@ -2098,10 +2057,8 @@ object Dedup {
             (source_a = source_b) AS within_source
           FROM sp GROUP BY 1, 2"""),
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
-          .cache()
         val src = t(s, d, "documents").select(col("doc_id"), col("source"))
-        verifyJaccard(sh, minhashCandidates(sh), 0.8)
+        minhashEdges(shingleSets(s, d))
           .select(col("doc_a"), col("doc_b"))
           .join(src.select(col("doc_id").as("doc_a"),
             col("source").as("src_a")), "doc_a")
@@ -2149,12 +2106,10 @@ object Dedup {
           FROM ord),
         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
           FROM pre a JOIN pre b ON a.s = b.s AND a.doc_id < b.doc_id),
-        pairs AS (SELECT doc_a, doc_b, x.shingles AS sh_a, y.shingles AS sh_b
-          FROM cand JOIN sh x ON x.doc_id = doc_a
-                    JOIN sh y ON y.doc_id = doc_b),
+        $pairsDuck,
         ${verifyDuck(0.7)}"""),
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles")).cache()
+        val sh = shingleSets(s, d)
         verifyJaccard(sh, prefixCandidates(sh), 0.7)
       }),
 
@@ -2260,10 +2215,7 @@ object Dedup {
           sh AS (SELECT doc_id, $shinglesDuck AS shingles
             FROM docs WHERE len(toks) >= 3),
           ${minhashBandCandDuck()},
-          pairs AS (SELECT doc_a, doc_b,
-              x.shingles AS sh_a, y.shingles AS sh_b
-            FROM cand JOIN sh x ON x.doc_id = doc_a
-                      JOIN sh y ON y.doc_id = doc_b),
+          $pairsDuck,
           ${verifyCteDuck(0.8)},
           s3 AS (SELECT s2.doc_id FROM s2 WHERE NOT EXISTS (
               SELECT 1 FROM verified v WHERE v.doc_b = s2.doc_id)),
@@ -2373,13 +2325,7 @@ object Dedup {
               FROM cn2 LEFT JOIN co2 ON co2.cfp = cn2.cfp
               GROUP BY 1) z
             WHERE n_hit * 2 > n_chunks),
-          $shingledDuckCte,
-          ${minhashBandCandDuck(
-            "WHERE b.doc_id >= 250 AND a.doc_id < 250")},
-          pairs AS (SELECT doc_a, doc_b,
-              x.shingles AS sh_a, y.shingles AS sh_b
-            FROM cand JOIN sh x ON x.doc_id = doc_a
-                      JOIN sh y ON y.doc_id = doc_b),
+          ${minhashCteChain("WHERE b.doc_id >= 250 AND a.doc_id < 250")},
           ${verifyCteDuck(0.8)},
           g3 AS (SELECT DISTINCT doc_b AS doc_id FROM verified),
           ${Similarity.duckCells4Cte},
@@ -2433,22 +2379,9 @@ object Dedup {
           .select(col("doc_id")).withColumn("chunk_dup", lit(true))
         // gate 3 — verified MinHash near-dup vs corpus (q324, corpus-only
         // match side)
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
-          .cache()
-        val mh = (0 until NumHashes).foldLeft(sh) { (df, k) =>
-          df.withColumn(s"mh$k", expr(minhashSpark(k)))
-        }
-        val bandKeys = (0 until Bands).map(j => expr(bandKeySpark(j)))
-        val bl = mh
-          .select(col("doc_id"), posexplode(array(bandKeys: _*)))
-          .toDF("doc_id", "band", "bkey")
-        val cand = bl.filter(col("doc_id") >= 250).as("y")
-          .join(bl.filter(col("doc_id") < 250).as("x"),
-            col("x.band") === col("y.band")
-              && col("x.bkey") === col("y.bkey"))
-          .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-          .distinct()
-        val g3 = verifyJaccard(sh, cand, 0.8)
+        val sh = shingleSets(s, d)
+        val g3 = verifyJaccard(sh,
+            minhashCandidates(sh, 250L).filter(col("doc_a") < 250), 0.8)
           .select(col("doc_b").as("doc_id")).distinct()
           .withColumn("near_dup", lit(true))
         // gate 4 — same-cell semantic match vs corpus (q354's condition)
@@ -2620,10 +2553,7 @@ object Dedup {
     // beyond the component machinery.
     QuerySpec(
       "q389_component_split",
-      Some(s"""WITH $minhashCteChain,
-          ${verifyCteDuck(0.8)},
-          sym AS (SELECT doc_a AS u, doc_b AS v FROM verified
-            UNION ALL SELECT doc_b AS u, doc_a AS v FROM verified),
+      Some(s"""WITH $minhashSymDuck,
           ${minLabelRootsDuck(12)},
           lab AS (SELECT d.doc_id,
               COALESCE(r.component, d.doc_id) AS component
@@ -2643,9 +2573,7 @@ object Dedup {
               AS naive_leak
           FROM sided"""),
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
-          .cache()
-        val lab = fullComponents(s, d, sh)
+        val lab = fullComponents(s, d, shingleSets(s, d))
         val wC = Window.partitionBy(col("component"))
         lab
           .withColumn("comp_side",
@@ -2683,15 +2611,9 @@ object Dedup {
     // doc_id/label.
     QuerySpec(
       "q390_incremental_components",
-      Some(s"""WITH $minhashCteChain,
-          ${verifyCteDuck(0.8)},
-          sym AS (SELECT doc_a AS u, doc_b AS v FROM verified
-            UNION ALL SELECT doc_b AS u, doc_a AS v FROM verified),
+      Some(s"""WITH $minhashSymDuck,
           ${minLabelRootsDuck(12)},
-          osym AS (SELECT doc_a AS u, doc_b AS v FROM verified
-              WHERE doc_a < 250 AND doc_b < 250
-            UNION ALL SELECT doc_b AS u, doc_a AS v FROM verified
-              WHERE doc_a < 250 AND doc_b < 250),
+          ${symDuck("o", "WHERE doc_a < 250 AND doc_b < 250")},
           ${minLabelRootsDuck(12, "o")},
           lab AS (SELECT d.doc_id,
               COALESCE(r.component, d.doc_id) AS component
@@ -2735,10 +2657,7 @@ object Dedup {
       "q393_split_materialize", {
         val hComp = h64Duck("CAST(component AS VARCHAR)")
         val hDoc = h64Duck("CAST(doc_id AS VARCHAR)")
-        Some(s"""WITH $minhashCteChain,
-          ${verifyCteDuck(0.8)},
-          sym AS (SELECT doc_a AS u, doc_b AS v FROM verified
-            UNION ALL SELECT doc_b AS u, doc_a AS v FROM verified),
+        Some(s"""WITH $minhashSymDuck,
           ${minLabelRootsDuck(12)},
           lab AS (SELECT d.doc_id,
               COALESCE(r.component, d.doc_id) AS component,
@@ -2769,9 +2688,7 @@ object Dedup {
           FROM sided s JOIN st ON st.split = s.split, tot""")
       },
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
-          .cache()
-        val lab = fullComponents(s, d, sh)
+        val lab = fullComponents(s, d, shingleSets(s, d))
           .join(t(s, d, "documents").select(col("doc_id"),
             size(split(col("text"), " ")).cast("long").as("n_tokens")),
             "doc_id")
@@ -2830,15 +2747,9 @@ object Dedup {
     // recompute.
     QuerySpec(
       "q399_split_churn",
-      Some(s"""WITH $minhashCteChain,
-          ${verifyCteDuck(0.8)},
-          sym AS (SELECT doc_a AS u, doc_b AS v FROM verified
-            UNION ALL SELECT doc_b AS u, doc_a AS v FROM verified),
+      Some(s"""WITH $minhashSymDuck,
           ${minLabelRootsDuck(12)},
-          osym AS (SELECT doc_a AS u, doc_b AS v FROM verified
-              WHERE doc_a < 250 AND doc_b < 250
-            UNION ALL SELECT doc_b AS u, doc_a AS v FROM verified
-              WHERE doc_a < 250 AND doc_b < 250),
+          ${symDuck("o", "WHERE doc_a < 250 AND doc_b < 250")},
           ${minLabelRootsDuck(12, "o")},
           lab AS (SELECT d.doc_id,
               COALESCE(r.component, d.doc_id) AS component
@@ -2863,9 +2774,7 @@ object Dedup {
               AS share_ppm
           FROM sided GROUP BY 1, 2"""),
       (s, d) => {
-        val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
-          .cache()
-        val edges = verifyJaccard(sh, minhashCandidates(sh), 0.8)
+        val edges = minhashEdges(shingleSets(s, d))
           .select(col("doc_a"), col("doc_b")).cache()
         val docs = t(s, d, "documents").select(col("doc_id"))
         val newlab = docs
@@ -2908,33 +2817,16 @@ object Dedup {
     */
   private[graft] def incrementalComponents(s: SparkSession, d: String,
       boundary: Long): DataFrame = {
-    val sh = shingled(s, d).select(col("doc_id"), col("shingles"))
-      .cache()
+    val sh = shingleSets(s, d)
     // yesterday's ledger: components over the OLD subgraph only
-    val shOld = sh.filter(col("doc_id") < boundary)
-    val oldEdges = verifyJaccard(shOld, minhashCandidates(shOld), 0.8)
-      .select(col("doc_a"), col("doc_b"))
+    val oldEdges = minhashEdges(sh.filter(col("doc_id") < boundary))
     val oldLab = t(s, d, "documents").select(col("doc_id"))
       .filter(col("doc_id") < boundary)
       .join(connectedComponents(oldEdges), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("label"))
     // today's NEW edges: band probe restricted to the batch (q324)
-    val mh = (0 until NumHashes).foldLeft(sh) { (df, k) =>
-      df.withColumn(s"mh$k", expr(minhashSpark(k)))
-    }
-    val bandKeys = (0 until Bands).map(j => expr(bandKeySpark(j)))
-    val bl = mh
-      .select(col("doc_id"), posexplode(array(bandKeys: _*)))
-      .toDF("doc_id", "band", "bkey")
-    val candNew = bl.filter(col("doc_id") >= boundary).as("y")
-      .join(bl.as("x"),
-        col("x.band") === col("y.band")
-          && col("x.bkey") === col("y.bkey")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val eNew = verifyJaccard(sh, candNew, 0.8)
+    val eNew = verifyJaccard(sh, minhashCandidates(sh, boundary), 0.8)
       .select(col("doc_a"), col("doc_b"))
     // contraction: endpoints -> old labels (new docs label themselves)
     val labAll = t(s, d, "documents").select(col("doc_id"))

@@ -129,7 +129,9 @@ object Quality {
           MAX(conc) AS peak_concurrency
         FROM r GROUP BY 1"""),
       (s, d) => {
-        val ev = t(s, d, "events")
+        // the union reads it twice and the running sums read the union
+        // twice
+        val ev = t(s, d, "events").select(col("ts"), col("event_id")).cache()
         val b = ev.select(col("ts").as("t"), lit(1).as("delta"),
             col("event_id"))
           .unionByName(ev.select(

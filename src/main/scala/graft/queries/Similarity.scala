@@ -2371,10 +2371,7 @@ object Similarity {
               AND a.vec_id < b.vec_id
             WHERE ${qcosDuck("a.qv", "b.qv", "a.nsq", "b.nsq", Dims)}
               >= $SemThreshold),
-          ${Dedup.minhashCteChain},
-          ${Dedup.verifyCteDuck(0.8)},
-          sym AS (SELECT doc_a AS u, doc_b AS v FROM verified
-            UNION ALL SELECT doc_b AS u, doc_a AS v FROM verified),
+          ${Dedup.minhashSymDuck},
           ${Dedup.minLabelRootsDuck(12)},
           sides AS (SELECT z.doc_id,
               CASE WHEN ($hComp) % 10 < 8 THEN 'train' ELSE 'eval' END
@@ -2405,13 +2402,8 @@ object Similarity {
       (s, d) => {
         // q391's semantic pair relation (same leaf, cosine >= threshold)
         val spairs = semLeafPairs(s, d)
-        // q393's component-hash sides, verbatim. Cached: the band join
-        // and both verify sides consume it (every OTHER caller of
-        // fullComponents caches its sh; this one ran the 1-task
-        // shingle+md5 chain up to 3x per run without it).
-        val sh = Dedup.shingled(s, d)
-          .select(col("doc_id"), col("shingles")).cache()
-        val sides = Dedup.fullComponents(s, d, sh)
+        // q393's component-hash sides, verbatim
+        val sides = Dedup.fullComponents(s, d, Dedup.shingleSets(s, d))
           .withColumn("side",
             when(expr(h64Spark("cast(component as string)")) % 10 < 8,
               "train").otherwise("eval"))

@@ -235,11 +235,7 @@ object TrainingPipeline {
           SELECT doc_id, n_shared FROM hits WHERE n_shared >= 3""")
       },
       (s, d) => {
-        // cache: the md5-shingle pipeline feeds BOTH the benchmark side
-        // and the corpus side — without this it runs twice per execution
-        // (and q86 no longer freeloads on a cache some earlier query left)
-        val sh = Dedup.shingled(s, d)
-          .select(col("doc_id"), col("shingles")).cache()
+        val sh = Dedup.shingleSets(s, d)
         val bench = sh.filter(col("doc_id") < 3)
           .select(explode(col("shingles")).as("s")).distinct()
         sh.filter(col("doc_id") >= 3)

@@ -166,6 +166,24 @@ class PipelineSpec extends SparkSpec {
     assert(status == ProcessedLog.Processed)
   }
 
+  test("promote: a throwing alert does not hide the write's error") {
+    val cat = ZoneCatalog(TempDirs.create("graft-pipe"))
+    val log = new ProcessedLog(spark, cat.processedLog, clock)
+    val alert = new RuntimeException("alert sink down")
+    val promote = new Promote(spark, cat, log, new Notify {
+      def info(subject: String, message: String): Unit = ()
+      def error(subject: String, message: String): Unit = throw alert
+    })
+    val dir = java.nio.file.Paths.get(s"${cat.bronze}/nyc_taxi")
+    java.nio.file.Files.createDirectories(dir)
+    java.nio.file.Files.writeString(dir.resolve("bad.parquet"), "not parquet")
+    val thrown = intercept[Exception](promote.run())
+    assert(!(thrown eq alert), "the write's exception must surface")
+    assert(thrown.getSuppressed.exists(_ eq alert),
+      "the alert's exception rides along as suppressed")
+    assert(log.currentStatus().values.head.status == ProcessedLog.Failed)
+  }
+
   test("gold: summaries build from silver and rebuild idempotently") {
     val (cat, _, promote) = freshPipeline()
     writeTrips(s"${cat.bronze}/nyc_taxi", "m.parquet",
@@ -292,6 +310,23 @@ class PipelineSpec extends SparkSpec {
     assert(archived.endsWith("archive/2024/03/15/yellow_taxi_2024-01_20240315_110000.parquet"))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(key)))
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(archived)))
+  }
+
+  test("ingest: the copy lands under a _tmp- name promote does not list") {
+    val cat = ZoneCatalog(TempDirs.create("graft-tmp"))
+    val ingest = new Ingest(cat, clock)
+    val src = TempDirs.create("graft-src3") + "/f.parquet"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(src), "x")
+    val key = ingest.ingestFile(src, "2024-01")
+    assert(key == cat.bronzeKey("2024-01", "20240315_110000"))
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(key)) == "x")
+    // an interrupted copy: its _tmp- sibling stays invisible to promote
+    val tmp = java.nio.file.Paths.get(key).resolveSibling("_tmp-x.parquet")
+    java.nio.file.Files.writeString(tmp, "trunc")
+    val promote = new Promote(spark, cat,
+      new ProcessedLog(spark, cat.processedLog, clock))
+    assert(promote.listBronze().map(p => new java.net.URI(p).getPath) ==
+      Seq(key))
   }
 
   test("processed log: latest status wins, errors truncated to 250") {

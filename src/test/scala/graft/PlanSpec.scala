@@ -19,6 +19,30 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }
 
+  /** Parquet scans of the fixture table `table` in `df`'s executed plan.
+    * A cached relation's scans count once, however often the plan reads
+    * the relation.
+    */
+  private def tableScans(df: DataFrame, table: String): Int = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def walk(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case m: InMemoryTableScanExec =>
+        val cache = m.relation.cacheBuilder
+        if (seen.add(cache)) walk(cache.cachedPlan) else 0
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.count(_.getName == s"$table.parquet")
+      case other => (other.children ++ other.subqueries).map(walk).sum
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
   test("q02: filters are pushed into the parquet scan") {
     val p = plan("q02_filter_project")
     assert(p.contains("PushedFilters:"), p)
@@ -433,6 +457,18 @@ class PlanSpec extends SparkSpec {
     // window is global
     assert(specs.exists(_.contains("windowspecdefinition(g#")),
       specs.mkString("\n"))
+  }
+
+  test("q132/q194: the running-sum input is read from its table once " +
+      "(a cached relation counts once, however often it is read)") {
+    for ((name, table) <- Seq("q132_concurrency" -> "events",
+        "q194_sorted_neighborhood" -> "documents")) {
+      val df = Registry.byName(name).run(spark, sfDir)
+      val n = tableScans(df, table)
+      assert(n == 1, s"$name scans $table $n times:\n" +
+        df.queryExecution.executedPlan)
+      spark.catalog.clearCache()
+    }
   }
 
   test("q133: referential rule is a left-anti join, never a product") {

@@ -1377,6 +1377,23 @@ class QueriesSpec extends SparkSpec {
       "fixture should also have an unleaked multi-doc component")
   }
 
+  test("Dedup.minhashCandidates(sh, from) equals the full candidate set " +
+      "restricted to doc_b >= from (sf0.01)") {
+    import org.apache.spark.sql.functions._
+    val d = sfDir.replace("sf0.001", "sf0.01") // the 250 split needs sf0.01
+    val sh = queries.Dedup.shingleSets(spark, d)
+    def pairs(from: Long) = queries.Dedup.minhashCandidates(sh, from)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val all = queries.Dedup.minhashCandidates(sh)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the 250 boundary splits the probe side on this fixture
+    assert(all.exists(_._2 >= 250) && all.exists(_._2 < 250), all)
+    val maxId = sh.agg(max(col("doc_id"))).head().getLong(0)
+    for (from <- Seq(0L, 250L, maxId + 1))
+      assert(pairs(from) === all.filter(_._2 >= from), s"from = $from")
+    spark.catalog.clearCache()
+  }
+
   test("q390_incremental_components: contraction + merge equals the " +
       "full batch recomputation, and a bridge boundary proves the " +
       "merge path") {
@@ -1387,9 +1404,8 @@ class QueriesSpec extends SparkSpec {
         r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     // full recompute with the BATCH operator over ALL edges — the
     // incremental path must land on identical labels
-    val sh = queries.Dedup.shingled(spark, sfDir)
-      .select(col("doc_id"), col("shingles")).cache()
-    val full = queries.Dedup.fullComponents(spark, sfDir, sh)
+    val full = queries.Dedup.fullComponents(spark, sfDir,
+        queries.Dedup.shingleSets(spark, sfDir))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.keySet === full.keySet)
     got.foreach { case (doc, (comp, _, _, _, _)) =>
@@ -1422,9 +1438,8 @@ class QueriesSpec extends SparkSpec {
       .withColumn("n_chars", org.apache.spark.sql.functions
         .length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$bridgeDir/documents.parquet")
-    val shB = queries.Dedup.shingled(spark, bridgeDir)
-      .select(col("doc_id"), col("shingles")).cache()
-    val fullB = queries.Dedup.fullComponents(spark, bridgeDir, shB)
+    val fullB = queries.Dedup.fullComponents(spark, bridgeDir,
+        queries.Dedup.shingleSets(spark, bridgeDir))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fullB == Map(1L -> 1L, 2L -> 1L, 10L -> 1L),
       s"bridge fixture must form ONE full component, got $fullB")
